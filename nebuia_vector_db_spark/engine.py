@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.functions.vector import dot, normalize_query
+from nebuia_vector_db_spark.operators.topk import topk_search
 from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
 
 
@@ -268,28 +269,32 @@ class VectorEngine:
         over the scored scan; rows are ordered (doc_id, position) for
         deterministic presentation, which is the only exchange in the
         plan."""
+        ch = self._candidates([collection_name], query_vector, where)
+        qn = normalize_query(query_vector)
+        scored = ch.withColumn("similarity", dot(F.col("embedding"), qn))
+        return _search_result(
+            scored.where(F.col("similarity") >= F.lit(float(min_similarity)))
+        ).orderBy("doc_id", "position")
+
+    def _check_query_dim(self, query_vector: Sequence[float]) -> None:
         if self.dim is not None and len(query_vector) != self.dim:
             raise DimensionMismatchError(
                 f"query dim {len(query_vector)} != engine dim {self.dim}"
             )
-        ch = self.chunks([collection_name])
+
+    def _candidates(
+        self,
+        collections: Sequence[str],
+        query_vector: Sequence[float],
+        where: "F.Column | str | None",
+    ) -> DataFrame:
+        """The chunk relation a query scores: dimension-checked query,
+        collection-scoped chunks, caller predicate applied."""
+        self._check_query_dim(query_vector)
+        ch = self.chunks(collections)
         if where is not None:
             ch = ch.where(F.expr(where) if isinstance(where, str) else where)
-        qn = normalize_query(query_vector)
-        return (
-            ch.withColumn("similarity", dot(F.col("embedding"), qn))
-            .where(F.col("similarity") >= F.lit(float(min_similarity)))
-            .select(
-                F.col("doc_name").alias("embedding_id"),
-                "similarity",
-                "position",
-                F.col("chunk_metadata").alias("metadata"),
-                "text",
-                F.col("collection").alias("collection_name"),
-                "doc_id",
-            )
-            .orderBy("doc_id", "position")
-        )
+        return ch
 
     def _search_impl(
         self,
@@ -300,64 +305,24 @@ class VectorEngine:
         where: "F.Column | str | None" = None,
         min_similarity: float | None = None,
     ) -> DataFrame:
-        if self.dim is not None and len(query_vector) != self.dim:
-            raise DimensionMismatchError(
-                f"query dim {len(query_vector)} != engine dim {self.dim}"
-            )
-        ch = self.chunks(collections)
-        if where is not None:
-            ch = ch.where(F.expr(where) if isinstance(where, str) else where)
-        if method == "arrow":
-            from nebuia_vector_db_spark.operators.topk import topk_search
-
-            scored = topk_search(
-                ch,
-                query_vector,
-                top_k,
-                vec_col="embedding",
-                sim_col="similarity",
-                tie_cols=["doc_id", "position"],
-                method="arrow",
-            )
-            if min_similarity is not None:
-                scored = scored.where(
-                    F.col("similarity") >= F.lit(float(min_similarity))
-                )
-            # arrow path drops the vector column; restore result shape
-            return scored.select(
-                F.col("doc_name").alias("embedding_id"),
-                "similarity",
-                "position",
-                F.col("chunk_metadata").alias("metadata"),
-                "text",
-                F.col("collection").alias("collection_name"),
-                "doc_id",
-            )
-        qn = normalize_query(query_vector)  # once per query, main.go:179-183
-        scored = ch.withColumn("similarity", dot(F.col("embedding"), qn))
+        scored = topk_search(
+            self._candidates(collections, query_vector, where),
+            query_vector,
+            top_k,
+            vec_col="embedding",
+            sim_col="similarity",
+            # D-1/D-2: always sorted, deterministic ties
+            tie_cols=["doc_id", "position"],
+            method=method,
+        )
         if min_similarity is not None:
             # radius gate (extension — the reference is top-k-only):
-            # a pure filter ahead of the top-k cut, shuffle-free
+            # the rows at/above the threshold are a prefix of the D-2
+            # order, so filtering after the cut keeps the same rows
             scored = scored.where(
                 F.col("similarity") >= F.lit(float(min_similarity))
             )
-        return (
-            scored.select(
-                # EmbeddingID = doc metadata name (main.go:248)
-                F.col("doc_name").alias("embedding_id"),
-                "similarity",
-                "position",
-                F.col("chunk_metadata").alias("metadata"),  # main.go:251
-                "text",
-                # D-3: real collection (reference bug aliases doc name,
-                # main.go:253)
-                F.col("collection").alias("collection_name"),
-                "doc_id",
-            )
-            # D-1/D-2: always sorted, deterministic ties
-            .orderBy(F.desc("similarity"), "doc_id", "position")
-            .limit(top_k)
-        )
+        return _search_result(scored)
 
     def hybrid_search(
         self,
@@ -382,10 +347,7 @@ class VectorEngine:
         embedding_id, text, rank_vec, rank_kw, rrf_score) — a chunk
         absent from one signal's top-``n_cand`` list carries a null
         rank there and contributes 0 for it."""
-        if self.dim is not None and len(query_vector) != self.dim:
-            raise DimensionMismatchError(
-                f"query dim {len(query_vector)} != engine dim {self.dim}"
-            )
+        self._check_query_dim(query_vector)
         from nebuia_vector_db_spark.operators.hybrid import (
             rrf_search,
             rrf_search_bm25,
@@ -520,9 +482,8 @@ class VectorEngine:
                 f"WHERE collection = '{safe}'"
             )
             return {"status": "Collection deletion started", "deleted": True}
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(self.warehouse_path, f"collection={collection_name}")
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(
+            _collection_dir(self.spark, self.warehouse_path, collection_name)
         )
         fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
         existed = fs.exists(path)
@@ -540,6 +501,42 @@ class VectorEngine:
             )
         except Exception:
             return []
+
+
+def _collection_dir(
+    spark: SparkSession, warehouse_path: str, collection_name: str
+) -> str:
+    """The partition directory Spark's writer stores a collection in.
+
+    Uses Spark's own partition-path escaping (``a/b`` →
+    ``collection=a%2Fb``, empty → the default partition), so the
+    directory is the one ``store`` wrote, and refuses any result whose
+    parent is not the warehouse itself."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    path = os.path.join(
+        warehouse_path, utils.getPartitionPathString("collection", collection_name)
+    )
+    if os.path.dirname(os.path.normpath(path)) != os.path.normpath(warehouse_path):
+        raise ValueError(
+            f"collection name {collection_name!r} maps outside the warehouse"
+        )
+    return path
+
+
+def _search_result(scored: DataFrame) -> DataFrame:
+    """The search result columns, in the reference's response order."""
+    return scored.select(
+        # EmbeddingID = doc metadata name (main.go:248)
+        F.col("doc_name").alias("embedding_id"),
+        "similarity",
+        "position",
+        F.col("chunk_metadata").alias("metadata"),  # main.go:251
+        "text",
+        # D-3: real collection (reference bug aliases doc name,
+        # main.go:253)
+        F.col("collection").alias("collection_name"),
+        "doc_id",
+    )
 
 
 def _as_json_str(value) -> str | None:

@@ -34,7 +34,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.functions.vector import normalize_query
-from nebuia_vector_db_spark.operators.topk import topk_search
+from nebuia_vector_db_spark.operators.topk import (
+    _gemm_topk,
+    _query_matrix,
+    topk_per_group,
+    topk_search,
+)
 
 
 class IVFIndex:
@@ -166,12 +171,13 @@ class IVFIndex:
           (C, B) boolean probe mask;
         - scan side: ONE pass over only the UNION of probed cells
           (``ivf_cell IN (...)`` → partition/stats pruning — the scan
-          fraction is |union| / n_cells, not 1.0); inside the Arrow
-          kernel one (n, d)·(d, B) GEMM scores every candidate against
-          every query, the mask zeroes out pairs whose cell was not
-          probed for that query (a candidate is charged only to the
-          queries that probed its cell), and a per-query local
-          argpartition cuts each batch to ≤ k rows per query;
+          fraction is |union| / n_cells, not 1.0) through the same
+          Arrow kernel as ``knn_join(method='arrow')``
+          (``topk._gemm_topk``) with the probe mask: one (n, d)·(d, B)
+          GEMM per batch, pairs whose cell was not probed for that
+          query score -inf and are dropped (a candidate is charged
+          only to the queries that probed its cell), and a per-query
+          local argpartition cuts each batch to ≤ k rows per query;
         - global cut: the same bounded row_number window as
           ``knn_join`` (Partial WindowGroupLimit — tasks ship ≤ k rows
           per query).
@@ -180,18 +186,7 @@ class IVFIndex:
         pair allowed, full scan) — which is how the oracle checks it
         end-to-end; small ``nprobe`` is the scale path (bench b12).
         """
-        from collections.abc import Iterator
-
-        import pyarrow as pa
-
-        qrows = queries_df.select(query_id_col, query_vec_col).collect()
-        qids = np.array([r[0] for r in qrows])
-        qmat = np.vstack(
-            [
-                np.asarray(normalize_query(r[1]), dtype=np.float64)
-                for r in qrows
-            ]
-        )  # (B, d)
+        qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
         b = qmat.shape[0]
         nprobe = max(1, min(nprobe, self.n_cells))
         mask = np.zeros((self.n_cells, b), dtype=bool)
@@ -210,54 +205,9 @@ class IVFIndex:
         union_cells = [int(c) for c in np.flatnonzero(mask.any(axis=1))]
 
         cand = self.assigned.where(F.col("ivf_cell").isin(union_cells))
-        vec_col = self.vec_col
-        keep = [c for c in cand.columns if c not in (vec_col, "ivf_cell")]
-        out_schema = ", ".join(
-            [
-                f"{n} {t}"
-                for n, t in cand.dtypes
-                if n not in (vec_col, "ivf_cell")
-            ]
-            + [f"{query_id_col} long", f"{sim_col} double"]
+        cut = _gemm_topk(
+            cand, qids, qmat, k, self.vec_col, sim_col, query_id_col, mask
         )
-
-        def _score(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            from nebuia_vector_db_spark.functions.vector import (
-                arrow_list_to_matrix,
-            )
-
-            for rb in batches:
-                mat = arrow_list_to_matrix(rb.column(vec_col))
-                n = mat.shape[0]
-                if n == 0:
-                    continue
-                cells = np.asarray(rb.column("ivf_cell")).astype(np.int64)
-                sims = mat.astype(np.float64, copy=False) @ qmat.T  # (n, B)
-                allowed = mask[cells]  # (n, B)
-                masked = np.where(allowed, sims, -np.inf)
-                kk = min(k, n)
-                idx = np.argpartition(-masked, kk - 1, axis=0)[:kk]  # (kk, B)
-                rows = idx.ravel(order="F")
-                qcol = np.repeat(qids, kk)
-                scol = np.take_along_axis(masked, idx, axis=0).ravel(
-                    order="F"
-                )
-                live = np.isfinite(scol)  # drop not-probed pairs
-                if not live.any():
-                    continue
-                take = pa.array(rows[live])
-                arrays = [rb.column(c).take(take) for c in keep]
-                arrays.append(pa.array(qcol[live]))
-                arrays.append(pa.array(scol[live]))
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=[*keep, query_id_col, sim_col]
-                )
-
-        from nebuia_vector_db_spark.operators.topk import topk_per_group
-
-        cut = cand.mapInArrow(_score, schema=out_schema)
         return topk_per_group(
             cut, [query_id_col], sim_col, k, tie_cols=tie_cols
         )

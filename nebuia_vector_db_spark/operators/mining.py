@@ -21,7 +21,7 @@ repo's existing kNN machinery rather than growing a new kernel:
   single shuffle.
 
 At GEMM scale the same semantics run as a masked variant of
-``topk._arrow_knn_join`` (score matrix + a boolean same-label mask
+``topk._gemm_topk`` (score matrix + a boolean same-label mask
 before the argpartition); the SQL path here is the oracle-exact
 spine that variant would be verified against — same discipline as
 ``topk_search``'s sql/arrow pairing.

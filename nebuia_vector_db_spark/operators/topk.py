@@ -14,9 +14,15 @@ Spark-first design notes (scale):
   still only ``partitions × k`` rows.
 - Batch kNN (many queries at once) broadcasts the small query side
   (never shuffles the corpus) and cuts per query with a bounded-heap
-  window; the corpus-side shuffle for the window is partitioned by
-  query_id — at B queries that is B×N rows, so for large B prefer the
-  pandas_udf path which emits only k rows per (partition, query).
+  window (``topk_per_group``).
+- Every ``method='arrow'`` path runs ONE Arrow kernel,
+  :func:`_gemm_topk`: per Arrow batch one (n, d)·(d, B) GEMM against
+  the normalized query matrix and a per-query argpartition cut to
+  ``min(k, n)`` rows, so a task ships ≤ k rows per (batch, query).
+  ``topk_search`` is its B = 1 case, ``knn_join`` its unmasked case,
+  and ``IVFIndex.search_batch`` (operators/ann.py) passes a (C, B)
+  probe mask keyed on ``ivf_cell``. A query batch becomes that matrix
+  in one place, :func:`_query_matrix`.
 """
 
 from __future__ import annotations
@@ -32,7 +38,6 @@ from nebuia_vector_db_spark.functions.vector import (
     dot,
     l2_normalize,
     normalize_query,
-    numpy_dot_udf,
 )
 
 
@@ -49,62 +54,93 @@ def topk_search(
 
     Deviations D-1/D-2: always sorted desc, deterministic tie-break.
     ``method='sql'`` = codegen'd HOF expression (oracle-exact);
-    ``method='numpy'`` = Arrow/BLAS pandas_udf fast path.
+    ``method='arrow'`` = the GEMM kernel with a single query (the
+    vector column is dropped from the result).
     """
     if method == "arrow":
-        return _arrow_topk(df, qvec, k, vec_col, sim_col, tie_cols)
-    if method == "numpy":
-        sim = numpy_dot_udf(qvec)(F.col(vec_col))
+        qmat = np.asarray(normalize_query(qvec), dtype=np.float64)[None, :]
+        out = _gemm_topk(df, None, qmat, k, vec_col, sim_col)
     else:
-        sim = dot(F.col(vec_col), normalize_query(qvec))
-    out = df.withColumn(sim_col, sim)
+        out = df.withColumn(sim_col, dot(F.col(vec_col), normalize_query(qvec)))
     order: list[Column] = [F.desc(sim_col), *[F.col(c) for c in tie_cols]]
     # orderBy+limit → TakeOrderedAndProject (per-partition heap, no shuffle)
     return out.orderBy(*order).limit(k)
 
 
-def _arrow_topk(
+def _query_matrix(
+    queries_df: DataFrame, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """Collect a query batch to (ids, normalized (B, d) float64 matrix)
+    on the driver — the queries are a parameter of the plan, like a
+    single query vector, and ship to tasks inside the kernel closure."""
+    rows = queries_df.select(id_col, vec_col).collect()
+    qids = np.array([r[0] for r in rows])
+    qmat = np.vstack(
+        [np.asarray(normalize_query(r[1]), dtype=np.float64) for r in rows]
+    )
+    return qids, qmat
+
+
+def _gemm_topk(
     df: DataFrame,
-    qvec: Sequence[float],
+    qids: np.ndarray | None,
+    qmat: np.ndarray,
     k: int,
     vec_col: str,
     sim_col: str,
-    tie_cols: Sequence[str],
+    query_id_col: str | None = None,
+    cell_mask: np.ndarray | None = None,
 ) -> DataFrame:
-    """mapInArrow fast path: per Arrow batch, ONE BLAS matvec over the
-    zero-copy (n, d) view, then a local argpartition cut to ≤ k rows.
+    """The Arrow scoring kernel behind every ``method='arrow'`` path.
 
-    Each task therefore emits at most (batches × k) rows — the final
-    TakeOrderedAndProject merges k-row heads, never the corpus. The
-    vectors themselves never materialize as Python objects.
+    Per Arrow batch: ONE (n, d)·(d, B) BLAS product over the zero-copy
+    view of ``vec_col``, then a per-query ``argpartition`` cut to
+    ``min(k, n)`` rows — a task emits ≤ batches × B × k rows, the
+    corpus never shuffles, and the vectors never materialize as Python
+    objects. ``vec_col`` is dropped from the output; ``query_id_col``
+    (long) is added when given (B = 1 callers pass none).
+
+    ``cell_mask`` is an optional (C, B) boolean allow-mask keyed on the
+    ``ivf_cell`` column: pairs whose cell the query did not probe score
+    ``-inf`` before the cut and are dropped after it, and ``ivf_cell``
+    is dropped from the output. The caller applies the global cut.
     """
     import pyarrow as pa
 
-    qn = np.asarray(normalize_query(qvec), dtype=np.float64)
-    keep = [c for c in df.columns if c != vec_col]
-    out_schema = ", ".join(
-        [f"{name} {dtype}" for name, dtype in df.dtypes if name != vec_col]
-        + [f"{sim_col} double"]
-    )
+    drop = {vec_col, "ivf_cell"} if cell_mask is not None else {vec_col}
+    fields = [(n, t) for n, t in df.dtypes if n not in drop]
+    keep = [n for n, _ in fields]
+    added = ([(query_id_col, "long")] if query_id_col else []) + [
+        (sim_col, "double")
+    ]
+    out_schema = ", ".join(f"{n} {t}" for n, t in fields + added)
+    names = [*keep, *(n for n, _ in added)]
 
     def _score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             mat = arrow_list_to_matrix(rb.column(vec_col))
-            if mat.shape[0] == 0:
+            kk = min(k, mat.shape[0])
+            if kk == 0:
                 continue
-            sims = mat.astype(np.float64, copy=False) @ qn
-            n = len(sims)
-            if n > k:
-                idx = np.argpartition(-sims, k)[:k]
-            else:
-                idx = np.arange(n)
-            arrays = [rb.column(c).take(pa.array(idx)) for c in keep]
-            arrays.append(pa.array(sims[idx]))
-            yield pa.RecordBatch.from_arrays(arrays, names=[*keep, sim_col])
+            sims = mat.astype(np.float64, copy=False) @ qmat.T  # (n, B)
+            if cell_mask is not None:
+                cells = np.asarray(rb.column("ivf_cell")).astype(np.int64)
+                sims = np.where(cell_mask[cells], sims, -np.inf)
+            idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, B)
+            rows = idx.ravel(order="F")
+            scol = np.take_along_axis(sims, idx, axis=0).ravel(order="F")
+            qcol = None if qids is None else np.repeat(qids, kk)
+            if cell_mask is not None:  # drop not-probed pairs
+                live = np.isfinite(scol)
+                rows, scol, qcol = rows[live], scol[live], qcol[live]
+            take = pa.array(rows)
+            arrays = [rb.column(c).take(take) for c in keep]
+            if query_id_col:
+                arrays.append(pa.array(qcol))
+            arrays.append(pa.array(scol))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    cut = df.mapInArrow(_score, schema=out_schema)
-    order = [F.desc(sim_col), *[F.col(c) for c in tie_cols]]
-    return cut.orderBy(*order).limit(k)
+    return df.mapInArrow(_score, schema=out_schema)
 
 
 def topk_per_group(
@@ -144,15 +180,17 @@ def knn_join(
     construction — SURVEY §7.3-2); the corpus is scanned once, never
     shuffled for the join itself; the per-query cut is a row_number
     window (Spark 4 plans a Partial WindowGroupLimit, so tasks ship
-    ≤ k rows per query). ``method='arrow'``: one GEMM per Arrow batch
-    against the whole broadcast query matrix + per-query local
-    argpartition — the amortized fast path for many queries.
+    ≤ k rows per query). ``method='arrow'``: the unmasked case of
+    :func:`_gemm_topk` (one GEMM per Arrow batch against the whole
+    query matrix + per-query local argpartition), then the same window
+    — the amortized fast path for many queries.
     """
     if method == "arrow":
-        return _arrow_knn_join(
-            queries_df, corpus_df, k, query_id_col, query_vec_col,
-            corpus_vec_col, sim_col, tie_cols,
+        qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
+        cut = _gemm_topk(
+            corpus_df, qids, qmat, k, corpus_vec_col, sim_col, query_id_col
         )
+        return topk_per_group(cut, [query_id_col], sim_col, k, tie_cols=tie_cols)
     # reference semantics: the query side is L2-normalized, the stored
     # vector used raw (SURVEY §1.5-1); normalizing the small broadcast
     # side is O(B·d)
@@ -167,58 +205,3 @@ def knn_join(
         scored, [query_id_col], sim_col, k, tie_cols=tie_cols
     ).drop(query_vec_col)
 
-
-def _arrow_knn_join(
-    queries_df: DataFrame,
-    corpus_df: DataFrame,
-    k: int,
-    query_id_col: str,
-    query_vec_col: str,
-    corpus_vec_col: str,
-    sim_col: str,
-    tie_cols: Sequence[str],
-) -> DataFrame:
-    """GEMM batch kNN: queries collected to an (B, d) matrix on the
-    driver (they're a query *parameter*, same as a single query vector),
-    shipped to tasks via closure; each Arrow batch does one
-    (n, d)·(d, B) GEMM and cuts to ≤ k rows *per query* locally, so a
-    task emits ≤ batches × B × k rows and the corpus never shuffles.
-    The final per-query cut is the same bounded-window row_number.
-    """
-    import pyarrow as pa
-
-    qrows = queries_df.select(query_id_col, query_vec_col).collect()
-    qids = np.array([r[0] for r in qrows])
-    qmat = np.vstack(
-        [np.asarray(normalize_query(r[1]), dtype=np.float64) for r in qrows]
-    )  # (B, d)
-
-    keep = [c for c in corpus_df.columns if c != corpus_vec_col]
-    out_schema = ", ".join(
-        [f"{n} {t}" for n, t in corpus_df.dtypes if n != corpus_vec_col]
-        + [f"{query_id_col} long", f"{sim_col} double"]
-    )
-
-    def _score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            mat = arrow_list_to_matrix(rb.column(corpus_vec_col))
-            n = mat.shape[0]
-            if n == 0:
-                continue
-            sims = mat.astype(np.float64, copy=False) @ qmat.T  # (n, B)
-            kk = min(k, n)
-            # per-query local top-k: one argpartition over each column
-            idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, B)
-            rows = idx.ravel(order="F")
-            qcol = np.repeat(qids, kk)
-            scol = np.take_along_axis(sims, idx, axis=0).ravel(order="F")
-            take = pa.array(rows)
-            arrays = [rb.column(c).take(take) for c in keep]
-            arrays.append(pa.array(qcol))
-            arrays.append(pa.array(scol))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[*keep, query_id_col, sim_col]
-            )
-
-    cut = corpus_df.mapInArrow(_score, schema=out_schema)
-    return topk_per_group(cut, [query_id_col], sim_col, k, tie_cols=tie_cols)

@@ -52,8 +52,8 @@ def get_spark(
         # for the mapInArrow/pandas_udf kernels (GEMM per batch)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Python Data Source API: let custom sources (sources/
-        # datasource.py) receive pushed filters for partition pruning
+        # Python Data Source API: let custom sources receive pushed
+        # filters for partition pruning
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")

@@ -23,8 +23,7 @@ Writer design (:func:`write_webdataset`):
   bit-identical — diffable, dedupable, cache-friendly);
 - each shard is staged as ``.{name}.tmp`` in the target directory and
   ``os.replace``d into place — a crashed export never leaves a
-  half-written shard under the final name (the datasource staging
-  discipline, sources/datasource.py);
+  half-written shard under the final name;
 - the writer needs a cluster-shared POSIX path (tarfile writes through
   ``open()``): pass a :func:`~nebuia_vector_db_spark.session.posix_scratch_dir`
   allocation or an NFS/Lustre mount. Object-store output is the
@@ -211,13 +210,12 @@ def write_webdataset(
             )
         payload = buf.getvalue()
         final = os.path.join(out_dir, f"shard-{shard:05d}.tar")
-        # per-ATTEMPT-unique staging name (the datasource.py staging
-        # discipline): with speculative execution two attempts of the
-        # same shard group run concurrently — a shared tmp name would
-        # let the loser truncate the winner's in-progress file. Both
-        # attempts produce byte-identical payloads (the writer is
-        # deterministic), so whichever os.replace lands last is
-        # equivalent.
+        # per-ATTEMPT-unique staging name: with speculative execution
+        # two attempts of the same shard group run concurrently — a
+        # shared tmp name would let the loser truncate the winner's
+        # in-progress file. Both attempts produce byte-identical
+        # payloads (the writer is deterministic), so whichever
+        # os.replace lands last is equivalent.
         tmp = os.path.join(
             out_dir, f".shard-{shard:05d}.{uuid.uuid4().hex}.tmp"
         )

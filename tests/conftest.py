@@ -27,3 +27,16 @@ def sf_smoke():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
+
+
+@pytest.fixture
+def tiny_arrow_batches(spark):
+    """Arrow batches of 3 rows for the duration of one test, so the
+    Arrow kernels see batches smaller than k."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)

@@ -4,6 +4,7 @@ scan-fraction at partial probe."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.operators.ann import build_ivf_index, recall_at_k
@@ -296,6 +297,41 @@ def test_search_batch_partial_probe_respects_mask_and_k(spark, sf_oracle):
     assert all(v <= 4 for v in per_q.values())
     assert set(per_q) == {2, 9}
 
+
+
+@pytest.mark.parametrize("k", [0, 2, 5])
+def test_search_batch_tiny_batches_equal_numpy(spark, sf_oracle, tiny_arrow_batches, k):
+    """nprobe = 1 over Arrow batches of 3 rows: batches are smaller
+    than k (k = 5), cut (k = 2) or empty of any row a given query
+    probed, and k = 0 returns nothing. Each query's answer must be the
+    NumPy top-k over its probed cell in the D-2 order (similarity
+    desc, vec_id)."""
+    from nebuia_vector_db_spark.functions.vector import normalize_query
+
+    emb = _emb(spark, sf_oracle).cache()
+    index = build_ivf_index(emb, n_cells=8)
+    rows = index.assigned.select("vec_id", "embedding", "ivf_cell").collect()
+    qids = [0, 3, 11]
+    qvec_of = {r["vec_id"]: [float(x) for x in r["embedding"]] for r in rows if r["vec_id"] in qids}
+    queries = spark.createDataFrame(
+        [(q, qvec_of[q]) for q in qids], "query_id long, query_vec array<double>"
+    )
+    got = sorted(
+        (r["query_id"], r["rk"], r["vec_id"], r["similarity"])
+        for r in index.search_batch(queries, k, nprobe=1, tie_cols=["vec_id"]).collect()
+    )
+    want = []
+    for q in qids:
+        cell = index.probe_cells(qvec_of[q], 1)[0]
+        qn = np.asarray(normalize_query(qvec_of[q]))
+        scored = sorted(
+            (-float(np.asarray(r["embedding"], dtype=np.float64) @ qn), r["vec_id"])
+            for r in rows
+            if r["ivf_cell"] == cell
+        )
+        want += [(q, rk, vid, -neg) for rk, (neg, vid) in enumerate(scored[:k], 1)]
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
 
 def test_deterministic_ivf_build_is_bit_stable(spark, sf_oracle):
     """Two deterministic builds from the same pinned sample produce

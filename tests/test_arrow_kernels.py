@@ -4,6 +4,7 @@ exact_cosine_pairs — same rows, similarities within float tolerance."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.functions.vector import l2_norm, dot
@@ -67,6 +68,43 @@ def test_arrow_knn_equals_sql(spark, sf_oracle):
     b = _key(knn_join(queries, emb, k=5, tie_cols=["vec_id"], method="arrow"))
     assert a == b
 
+
+
+@pytest.mark.parametrize("k", [0, 2, 5])
+def test_arrow_kernel_tiny_batches_equal_sql(spark, sf_oracle, tiny_arrow_batches, k):
+    """Arrow batches of 3 rows, so with k = 5 every batch is smaller
+    than k, with k = 2 every batch is cut, and k = 0 returns nothing:
+    the single-query and batch paths of the GEMM kernel must still
+    return the SQL rows in the D-2 order (similarity desc, id)."""
+    emb = _emb(spark, sf_oracle)
+    q = _q(spark, sf_oracle, 3)
+
+    def _rows(method):
+        return [
+            (r["vec_id"], r["similarity"])
+            for r in topk_search(emb, q, k, tie_cols=["vec_id"], method=method).collect()
+        ]
+
+    want, got = _rows("sql"), _rows("arrow")
+    assert [i for i, _ in got] == [i for i, _ in want]
+    assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want))
+    assert len(want) == k
+
+    queries = emb.where(F.col("vec_id").isin(0, 1, 7)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("query_vec"),
+    )
+
+    def _knn(method):
+        return sorted(
+            (r["query_id"], r["rk"], r["vec_id"], r["similarity"])
+            for r in knn_join(queries, emb, k=k, tie_cols=["vec_id"], method=method).collect()
+        )
+
+    want, got = _knn("sql"), _knn("arrow")
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
+    assert len(want) == 3 * k
 
 def test_exact_cosine_pairs_equals_join_formula(spark, sf_oracle):
     emb = _emb(spark, sf_oracle)

@@ -3,6 +3,8 @@ semantic-quirk regressions (deviations D-1..D-5)."""
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.engine import DimensionMismatchError, VectorEngine
@@ -117,6 +119,39 @@ def test_delete_collection(spark, tmp_path_factory):
     # idempotent on missing collection (reference lists zero keys)
     assert eng.delete_collection("tmp")["deleted"] is False
 
+
+
+@pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+@settings(max_examples=6, deadline=None)
+@example(name="a/b")
+@example(name="p=q")
+@example(name="50%")
+@example(name="x/../../sibling.txt")
+@given(name=st.text(st.characters(blacklist_categories=("Cs",)), min_size=1, max_size=16))
+def test_any_collection_name_round_trips_through_delete(
+    spark, tmp_path_factory, table_format, name
+):
+    """Any collection name maps to exactly the storage ``store`` wrote:
+    store → search finds it → delete reports it → search is empty, and
+    nothing next to the warehouse is touched (``x/../../sibling.txt``
+    once deleted the sentinel below). A NUL cannot be part of a
+    directory name, so a parquet-mode store of one must fail loudly."""
+    root = tmp_path_factory.mktemp("wh_names")
+    sentinel = root / "sibling.txt"
+    sentinel.write_text("keep")
+    eng = VectorEngine(spark, str(root / "wh"), dim=4, table_format=table_format)
+    docs = _mkdocs(1, 1, 4, seed=8)
+    q = docs[0]["chunks"][0]["embedding"]
+    if table_format == "parquet" and "\x00" in name:
+        with pytest.raises(Exception):
+            eng.store(name, docs)
+    else:
+        eng.store(name, docs)
+        assert eng.search(name, q, 5).count() == 1
+        assert eng.delete_collection(name)["deleted"] is True
+        assert eng.search(name, q, 5).count() == 0
+    assert sentinel.read_text() == "keep"
+    assert sorted(p.name for p in root.iterdir()) == ["sibling.txt", "wh"]
 
 def test_search_arrow_method_equals_sql(engine):
     q = np.random.default_rng(17).normal(size=8).tolist()
@@ -486,3 +521,45 @@ def test_range_search_returns_all_above_threshold(spark, tmp_path_factory):
     assert eng.range_search("r", q, min_similarity=1e9).count() == 0
     with pytest.raises(DimensionMismatchError):
         eng.range_search("r", [1.0, 0.0], min_similarity=0.2)
+
+
+def test_registered_views_serve_full_sql(spark, sf_smoke):
+    """SURVEY §2.2: the engine exposes a full SQL surface via
+    register_views + spark.sql — a join + aggregate + window statement
+    must run and agree with the DataFrame-API equivalent."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from nebuia_vector_db_spark.sources.registry import (
+        load_table,
+        register_views,
+    )
+
+    register_views(spark, sf_smoke)
+    got = spark.sql(
+        """
+        SELECT c_mktsegment,
+               count(*) AS n_orders,
+               rank() OVER (ORDER BY count(*) DESC, c_mktsegment) AS rk
+        FROM orders JOIN customer ON o_custkey = c_custkey
+        GROUP BY c_mktsegment
+        ORDER BY rk
+        """
+    ).collect()
+    cust = load_table(spark, sf_smoke, "customer")
+    orders = load_table(spark, sf_smoke, "orders")
+    want = (
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
+        .groupBy("c_mktsegment")
+        .agg(F.count("*").alias("n_orders"))
+        .withColumn(
+            "rk",
+            F.rank().over(
+                Window.orderBy(F.desc("n_orders"), "c_mktsegment")
+            ),
+        )
+        .orderBy("rk")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert len(got) > 0
