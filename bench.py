@@ -425,7 +425,7 @@ def main() -> None:
     timings["b1_spark_topk"] = round(
         _median_time(
             lambda: topk_search(
-                emb, q_small.tolist(), 10, tie_cols=["vec_id"], method="arrow"
+                emb, q_small.tolist(), 10, tie_cols=["vec_id"]
             ).collect(),
             runs=5,
         ),
@@ -445,7 +445,7 @@ def main() -> None:
     timings["b2_spark_topk_600k"] = round(
         _median_time(
             lambda: topk_search(
-                big, q_big.tolist(), 10, tie_cols=["vec_id"], method="arrow"
+                big, q_big.tolist(), 10, tie_cols=["vec_id"]
             ).collect(),
             runs=5,
         ),
@@ -512,7 +512,7 @@ def main() -> None:
     timings["b5_ivf_topk_nprobe4"] = round(
         _median_time(
             lambda: index.search(
-                q_big.tolist(), 10, nprobe=4, tie_cols=["vec_id"], method="arrow"
+                q_big.tolist(), 10, nprobe=4, tie_cols=["vec_id"]
             ).collect(),
             runs=5,
         ),
@@ -593,7 +593,7 @@ def main() -> None:
     timings["b5c_ivf_topk_nprobe4"] = round(
         _median_time(
             lambda: c_index.search(
-                c_queries[0], 10, nprobe=4, tie_cols=["vec_id"], method="arrow"
+                c_queries[0], 10, nprobe=4, tie_cols=["vec_id"]
             ).collect(),
             runs=5,
         ),

@@ -89,7 +89,12 @@ class VectorEngine:
         ``{text, metadata: {source, name}, chunks: [{text, embedding,
         metadata, semantic_score}]}`` — ``embedding`` is a plain list
         (the reference wraps it as ``{vector: [...]}``; both accepted).
+
+        In parquet mode a name no partition directory can hold raises
+        ``ValueError`` before any Spark job starts.
         """
+        if self.table_format == "parquet":
+            _collection_dir(self.spark, self.warehouse_path, collection_name)
         operation_id = str(uuid.uuid4())
         rows = []
         for doc in documents:
@@ -210,7 +215,6 @@ class VectorEngine:
         collection_name: str,
         query_vector: Sequence[float],
         top_k: int,
-        method: str = "sql",
         where: "F.Column | str | None" = None,
         min_similarity: float | None = None,
     ) -> DataFrame:
@@ -218,10 +222,8 @@ class VectorEngine:
         collection, sim = dot(q/‖q‖, v), top-k desc (D-1/D-2).
         ``min_similarity`` (extension) turns the query into a radius
         search: only chunks at or above the threshold are returned
-        (still capped at ``top_k``) — a shuffle-free filter ahead of
-        the cut.
-        ``method='arrow'`` switches scoring to the GEMM-per-Arrow-batch
-        kernel (same results, BLAS throughput — see operators/topk.py).
+        (still capped at ``top_k``) — a shuffle-free filter after the
+        cut.
 
         ``where`` (extension — the reference has no row predicates,
         SURVEY §2.2 'Filters'): a Column or SQL string evaluated on the
@@ -230,8 +232,7 @@ class VectorEngine:
         can push eligible predicates into the scan and the similarity
         kernel only sees surviving rows."""
         return self._search_impl(
-            [collection_name], query_vector, top_k, method, where,
-            min_similarity,
+            [collection_name], query_vector, top_k, where, min_similarity
         )
 
     def multi_search(
@@ -239,7 +240,6 @@ class VectorEngine:
         collections: Sequence[str],
         query_vector: Sequence[float],
         top_k: int,
-        method: str = "sql",
         where: "F.Column | str | None" = None,
         min_similarity: float | None = None,
     ) -> DataFrame:
@@ -250,8 +250,7 @@ class VectorEngine:
         ``where`` filters chunks before scoring and ``min_similarity``
         adds the radius gate (see ``search``)."""
         return self._search_impl(
-            list(collections), query_vector, top_k, method, where,
-            min_similarity,
+            list(collections), query_vector, top_k, where, min_similarity
         )
 
     def range_search(
@@ -301,7 +300,6 @@ class VectorEngine:
         collections: Sequence[str],
         query_vector: Sequence[float],
         top_k: int,
-        method: str = "sql",
         where: "F.Column | str | None" = None,
         min_similarity: float | None = None,
     ) -> DataFrame:
@@ -313,7 +311,6 @@ class VectorEngine:
             sim_col="similarity",
             # D-1/D-2: always sorted, deterministic ties
             tie_cols=["doc_id", "position"],
-            method=method,
         )
         if min_similarity is not None:
             # radius gate (extension — the reference is top-k-only):
@@ -429,36 +426,18 @@ class VectorEngine:
         )
 
     # --------------------------------------------------------------- delete
-    def _delta_capable(self) -> bool:
-        """True iff Delta Lake classes are on the classpath AND the
-        warehouse is a Delta table (has a ``_delta_log``). Both must
-        hold for the ACID path; this build environment has neither, so
-        the parquet partition-drop fallback runs (deviation D-6)."""
-        try:
-            self.spark._jvm.java.lang.Class.forName(
-                "io.delta.tables.DeltaTable"
-            )
-        except Exception:
-            return False
-        return os.path.isdir(os.path.join(self.warehouse_path, "_delta_log"))
-
     def delete_collection(self, collection_name: str) -> dict:
         """≙ POST /delete_collection (main.go:407-458): drop the
         partition (prefix delete). Synchronous (D-5).
 
-        Capability-gated ACID path: on a Delta warehouse this is
-        ``DELETE FROM delta.`wh` WHERE collection = ?`` — transactional,
-        concurrent-reader-safe, time-travelable. On plain Parquet
-        (this environment) we remove the partition directory, which
-        matches the reference's semantics exactly: its prefix delete
-        (main.go:427-452) removes objects one by one with NO isolation
-        either — a concurrent reader there can also observe a
-        half-deleted collection. Pinned as deviation D-6 in SURVEY §1.5
-        and by tests/test_engine.py::test_delete_capability_gate.
+        With ``table_format="parquet"`` this removes the partition
+        directory, which matches the reference's semantics exactly: its
+        prefix delete (main.go:427-452) removes objects one by one with
+        NO isolation either — a concurrent reader there can also observe
+        a half-deleted collection (deviation D-6 in SURVEY §1.5).
 
-        A Delta-free transactional path ALSO runs here: with
-        ``table_format="snapshot"`` the delete is an atomic
-        copy-on-write SnapshotTable commit (sources/snapshot.py) —
+        With ``table_format="snapshot"`` the delete is transactional: an
+        atomic copy-on-write SnapshotTable commit (sources/snapshot.py) —
         isolated, time-travelable until vacuum — oracle-verified by
         the ``snap_delete_read`` registry row and engine-tested by
         test_engine.py::test_snapshot_engine_transactional_delete."""
@@ -475,13 +454,6 @@ class VectorEngine:
             )
             deleted = tbl._snapshot()["n_rows"] < before
             return {"status": "Collection deletion started", "deleted": deleted}
-        if self._delta_capable():
-            safe = collection_name.replace("'", "''")
-            self.spark.sql(
-                f"DELETE FROM delta.`{self.warehouse_path}` "
-                f"WHERE collection = '{safe}'"
-            )
-            return {"status": "Collection deletion started", "deleted": True}
         path = self.spark._jvm.org.apache.hadoop.fs.Path(
             _collection_dir(self.spark, self.warehouse_path, collection_name)
         )
@@ -510,8 +482,13 @@ def _collection_dir(
 
     Uses Spark's own partition-path escaping (``a/b`` →
     ``collection=a%2Fb``, empty → the default partition), so the
-    directory is the one ``store`` wrote, and refuses any result whose
-    parent is not the warehouse itself."""
+    directory is the one ``store`` wrote, and refuses a name holding a
+    NUL (no directory name can) and any result whose parent is not the
+    warehouse itself."""
+    if "\x00" in collection_name:
+        raise ValueError(
+            f"collection name {collection_name!r} holds a NUL character"
+        )
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     path = os.path.join(
         warehouse_path, utils.getPartitionPathString("collection", collection_name)

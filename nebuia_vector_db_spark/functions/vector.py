@@ -96,11 +96,6 @@ def cosine_sim(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def similarity_to_query(vec: Column | str, q: Sequence[float]) -> Column:
-    """The reference's exact similarity: dot(normalize(q), vec_raw)."""
-    return dot(vec, normalize_query(q))
-
-
 _BLAS_THREADS_SET: int | None = None
 
 

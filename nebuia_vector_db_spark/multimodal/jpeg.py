@@ -68,7 +68,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 _ZIGZAG = _zigzag_order()          # zz index -> raster index
-_UNZIGZAG = np.argsort(_ZIGZAG)    # raster index -> zz index
 
 # Annex K.1 luminance quantization table (raster order)
 _QTABLE_K1 = np.array(

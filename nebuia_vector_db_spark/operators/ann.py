@@ -138,7 +138,6 @@ class IVFIndex:
         k: int,
         nprobe: int,
         tie_cols: Sequence[str] = (),
-        method: str = "sql",
     ) -> DataFrame:
         """Candidate-pruned exact-kernel top-k. ``nprobe == n_cells``
         is exactly the brute-force scan (modulo the extra isin filter,
@@ -146,7 +145,7 @@ class IVFIndex:
         cells = self.probe_cells(qvec, nprobe)
         cand = self.assigned.where(F.col("ivf_cell").isin(cells))
         return topk_search(
-            cand, qvec, k, vec_col=self.vec_col, tie_cols=tie_cols, method=method
+            cand, qvec, k, vec_col=self.vec_col, tie_cols=tie_cols
         ).drop("ivf_cell")
 
     def search_batch(
@@ -177,7 +176,8 @@ class IVFIndex:
           GEMM per batch, pairs whose cell was not probed for that
           query score -inf and are dropped (a candidate is charged
           only to the queries that probed its cell), and a per-query
-          local argpartition cuts each batch to ≤ k rows per query;
+          local cut keeps each batch's ≤ k best rows per query in the
+          D-2 order (ties at the cut go by ``tie_cols``);
         - global cut: the same bounded row_number window as
           ``knn_join`` (Partial WindowGroupLimit — tasks ship ≤ k rows
           per query).
@@ -206,7 +206,8 @@ class IVFIndex:
 
         cand = self.assigned.where(F.col("ivf_cell").isin(union_cells))
         cut = _gemm_topk(
-            cand, qids, qmat, k, self.vec_col, sim_col, query_id_col, mask
+            cand, qids, qmat, k, self.vec_col, sim_col, query_id_col,
+            tie_cols=tie_cols, cell_mask=mask,
         )
         return topk_per_group(
             cut, [query_id_col], sim_col, k, tie_cols=tie_cols
@@ -459,69 +460,3 @@ def recall_at_k(
     }
     return len(exact_ids & approx_ids) / max(1, len(exact_ids))
 
-
-# ------------------------------------------------------- snapshot persistence
-def save_ivf_index_snapshot(index: IVFIndex, path: str):
-    """Persist the index as a :class:`SnapshotTable` — transactional
-    index maintenance: every save/append is an atomic snapshot commit,
-    so a reader mid-search keeps a complete index version (the plain
-    ``save_ivf_index`` overwrite is not reader-safe), old versions
-    time-travel until vacuum, and racing maintenance jobs serialize
-    through the commit CAS.
-
-    Layout: the assigned corpus range-partitioned + sorted on
-    ``ivf_cell`` (each data file covers few cells, so the parquet
-    min/max stats the snapshot records — and the row-group stats
-    Catalyst pushes ``ivf_cell IN (...)`` against — prune probes), and
-    the centroid matrix stored IN the snapshot json (``extra_meta``;
-    json floats round-trip exactly), versioned atomically with the
-    corpus it indexes."""
-    from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
-
-    spark = index.assigned.sparkSession
-    n_cells = int(index.centroids.shape[0])
-    laid_out = index.assigned.repartitionByRange(
-        max(4, n_cells // 4), "ivf_cell"
-    ).sortWithinPartitions("ivf_cell")
-    meta = {
-        "centroids": [[float(x) for x in c] for c in index.centroids],
-        "vec_col": index.vec_col,
-    }
-    return SnapshotTable.create(spark, path, laid_out, extra_meta=meta)
-
-
-def load_ivf_index_snapshot(
-    spark, path: str, version: int | None = None
-) -> IVFIndex:
-    """Reload an index snapshot (optionally a historical version —
-    time travel for indexes: reproduce yesterday's retrieval exactly)."""
-    from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
-
-    tbl = SnapshotTable(spark, path)
-    cents = tbl.meta("centroids", version)
-    vec_col = tbl.meta("vec_col", version) or "embedding"
-    centroids = np.array(cents, dtype=np.float64)
-    return IVFIndex(tbl.read(version), centroids, vec_col)
-
-
-def append_to_ivf_index_snapshot(
-    spark, path: str, new_df: DataFrame
-) -> IVFIndex:
-    """Incremental maintenance with transactional semantics: route new
-    vectors to the frozen centroids (map-side broadcast-GEMM argmin)
-    and land them in ONE atomic commit — concurrent readers see the
-    old or the new index, never a half-appended one. Conflicts with a
-    racing maintenance job retry through the commit CAS."""
-    from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
-
-    tbl = SnapshotTable(spark, path)
-    cents = tbl.meta("centroids")
-    vec_col = tbl.meta("vec_col") or "embedding"
-    centroids = np.array(cents, dtype=np.float64)
-    assigned = assign_to_cells(new_df, centroids, vec_col)
-    tbl.with_retry(
-        "append",
-        assigned,
-        extra_meta={"centroids": cents, "vec_col": vec_col},
-    )
-    return IVFIndex(tbl.read(), centroids, vec_col)

@@ -24,7 +24,7 @@ At GEMM scale the same semantics run as a masked variant of
 ``topk._gemm_topk`` (score matrix + a boolean same-label mask
 before the argpartition); the SQL path here is the oracle-exact
 spine that variant would be verified against — same discipline as
-``topk_search``'s sql/arrow pairing.
+``knn_join``'s sql/arrow pairing.
 
 Reference scope note: the reference engine (main.go) has search only
 (no labels, no exclusions) — extension tier (SURVEY §2.4).

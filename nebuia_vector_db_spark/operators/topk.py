@@ -15,14 +15,16 @@ Spark-first design notes (scale):
 - Batch kNN (many queries at once) broadcasts the small query side
   (never shuffles the corpus) and cuts per query with a bounded-heap
   window (``topk_per_group``).
-- Every ``method='arrow'`` path runs ONE Arrow kernel,
-  :func:`_gemm_topk`: per Arrow batch one (n, d)·(d, B) GEMM against
-  the normalized query matrix and a per-query argpartition cut to
-  ``min(k, n)`` rows, so a task ships ≤ k rows per (batch, query).
-  ``topk_search`` is its B = 1 case, ``knn_join`` its unmasked case,
-  and ``IVFIndex.search_batch`` (operators/ann.py) passes a (C, B)
-  probe mask keyed on ``ivf_cell``. A query batch becomes that matrix
-  in one place, :func:`_query_matrix`.
+- Single-query search (:func:`topk_search`) has one path: the
+  codegen'd ``dot`` expression cut by ``orderBy(desc).limit(k)``.
+- The batch Arrow paths run ONE kernel, :func:`_gemm_topk`: per
+  Arrow batch one (n, d)·(d, B) GEMM against the normalized query
+  matrix and a per-query cut to ``min(k, n)`` rows in the D-2 order
+  (rows tied at the cut are decided by the caller's tie columns), so a
+  task ships ≤ k rows per (batch, query). ``knn_join(method='arrow')``
+  is its unmasked case, and ``IVFIndex.search_batch``
+  (operators/ann.py) passes a (C, B) probe mask keyed on ``ivf_cell``.
+  A query batch becomes that matrix in one place, :func:`_query_matrix`.
 """
 
 from __future__ import annotations
@@ -48,20 +50,13 @@ def topk_search(
     vec_col: str = "embedding",
     sim_col: str = "similarity",
     tie_cols: Sequence[str] = (),
-    method: str = "sql",
 ) -> DataFrame:
-    """Exact brute-force top-k: sim = dot(q/‖q‖, v) (SURVEY §1.5-1).
+    """Exact brute-force top-k: sim = dot(q/‖q‖, v) (SURVEY §1.5-1),
+    a codegen'd HOF expression (oracle-exact).
 
     Deviations D-1/D-2: always sorted desc, deterministic tie-break.
-    ``method='sql'`` = codegen'd HOF expression (oracle-exact);
-    ``method='arrow'`` = the GEMM kernel with a single query (the
-    vector column is dropped from the result).
     """
-    if method == "arrow":
-        qmat = np.asarray(normalize_query(qvec), dtype=np.float64)[None, :]
-        out = _gemm_topk(df, None, qmat, k, vec_col, sim_col)
-    else:
-        out = df.withColumn(sim_col, dot(F.col(vec_col), normalize_query(qvec)))
+    out = df.withColumn(sim_col, dot(F.col(vec_col), normalize_query(qvec)))
     order: list[Column] = [F.desc(sim_col), *[F.col(c) for c in tie_cols]]
     # orderBy+limit → TakeOrderedAndProject (per-partition heap, no shuffle)
     return out.orderBy(*order).limit(k)
@@ -83,22 +78,24 @@ def _query_matrix(
 
 def _gemm_topk(
     df: DataFrame,
-    qids: np.ndarray | None,
+    qids: np.ndarray,
     qmat: np.ndarray,
     k: int,
     vec_col: str,
     sim_col: str,
-    query_id_col: str | None = None,
+    query_id_col: str,
+    tie_cols: Sequence[str] = (),
     cell_mask: np.ndarray | None = None,
 ) -> DataFrame:
-    """The Arrow scoring kernel behind every ``method='arrow'`` path.
+    """The Arrow scoring kernel behind ``knn_join(method='arrow')`` and
+    ``IVFIndex.search_batch``.
 
     Per Arrow batch: ONE (n, d)·(d, B) BLAS product over the zero-copy
-    view of ``vec_col``, then a per-query ``argpartition`` cut to
-    ``min(k, n)`` rows — a task emits ≤ batches × B × k rows, the
-    corpus never shuffles, and the vectors never materialize as Python
-    objects. ``vec_col`` is dropped from the output; ``query_id_col``
-    (long) is added when given (B = 1 callers pass none).
+    view of ``vec_col``, then a per-query cut to ``min(k, n)`` rows in
+    the D-2 order (:func:`_d2_cut`) — a task emits ≤ batches × B × k
+    rows, the corpus never shuffles, and the vectors never materialize
+    as Python objects. ``vec_col`` is dropped from the output and
+    ``query_id_col`` (long) is added.
 
     ``cell_mask`` is an optional (C, B) boolean allow-mask keyed on the
     ``ivf_cell`` column: pairs whose cell the query did not probe score
@@ -110,9 +107,7 @@ def _gemm_topk(
     drop = {vec_col, "ivf_cell"} if cell_mask is not None else {vec_col}
     fields = [(n, t) for n, t in df.dtypes if n not in drop]
     keep = [n for n, _ in fields]
-    added = ([(query_id_col, "long")] if query_id_col else []) + [
-        (sim_col, "double")
-    ]
+    added = [(query_id_col, "long"), (sim_col, "double")]
     out_schema = ", ".join(f"{n} {t}" for n, t in fields + added)
     names = [*keep, *(n for n, _ in added)]
 
@@ -126,21 +121,56 @@ def _gemm_topk(
             if cell_mask is not None:
                 cells = np.asarray(rb.column("ivf_cell")).astype(np.int64)
                 sims = np.where(cell_mask[cells], sims, -np.inf)
-            idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, B)
+            idx = _d2_cut(sims, kk, lambda: _tie_rank(rb, tie_cols))  # (kk, B)
             rows = idx.ravel(order="F")
             scol = np.take_along_axis(sims, idx, axis=0).ravel(order="F")
-            qcol = None if qids is None else np.repeat(qids, kk)
+            qcol = np.repeat(qids, kk)
             if cell_mask is not None:  # drop not-probed pairs
                 live = np.isfinite(scol)
                 rows, scol, qcol = rows[live], scol[live], qcol[live]
             take = pa.array(rows)
             arrays = [rb.column(c).take(take) for c in keep]
-            if query_id_col:
-                arrays.append(pa.array(qcol))
-            arrays.append(pa.array(scol))
+            arrays += [pa.array(qcol), pa.array(scol)]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.mapInArrow(_score, schema=out_schema)
+
+
+def _tie_rank(rb, ties: Sequence[str]) -> np.ndarray:
+    """Each row's place in the Arrow batch ordered by the tie columns
+    (ascending, nulls first — Spark's ORDER BY default)."""
+    import pyarrow.compute as pc
+
+    if not ties:
+        return np.arange(rb.num_rows)
+    order = pc.sort_indices(
+        rb.select(list(ties)),
+        sort_keys=[(c, "ascending") for c in ties],
+        null_placement="at_start",
+    )
+    return np.argsort(np.asarray(order))  # inverse permutation
+
+
+def _d2_cut(sims: np.ndarray, kk: int, tie_rank) -> np.ndarray:
+    """Row indices (kk, B) of each column's top ``kk`` of ``sims`` in
+    the D-2 order: similarity desc, then ``tie_rank()`` asc.
+
+    ``argpartition`` alone keeps arbitrary rows among those tied at the
+    ``kk``-th similarity; a column with more tied rows than fit is
+    re-cut exactly over its rows at or above that value, so
+    ``tie_rank`` (an (n,) rank of the rows by the tie columns) is only
+    built for batches with such a tie. ``-inf`` (masked) ties are left
+    alone: the caller drops those pairs."""
+    idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]
+    kth = np.take_along_axis(sims, idx, axis=0).min(axis=0)  # (B,)
+    over = np.flatnonzero(((sims >= kth).sum(axis=0) > kk) & np.isfinite(kth))
+    if over.size:
+        rank = tie_rank()
+        for q in over:
+            cand = np.flatnonzero(sims[:, q] >= kth[q])
+            order = np.lexsort((rank[cand], -sims[cand, q]))
+            idx[:, q] = cand[order[:kk]]
+    return idx
 
 
 def topk_per_group(
@@ -182,13 +212,14 @@ def knn_join(
     window (Spark 4 plans a Partial WindowGroupLimit, so tasks ship
     ≤ k rows per query). ``method='arrow'``: the unmasked case of
     :func:`_gemm_topk` (one GEMM per Arrow batch against the whole
-    query matrix + per-query local argpartition), then the same window
-    — the amortized fast path for many queries.
+    query matrix + a per-query local cut in the D-2 order), then the
+    same window — the amortized fast path for many queries.
     """
     if method == "arrow":
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
         cut = _gemm_topk(
-            corpus_df, qids, qmat, k, corpus_vec_col, sim_col, query_id_col
+            corpus_df, qids, qmat, k, corpus_vec_col, sim_col, query_id_col,
+            tie_cols=tie_cols,
         )
         return topk_per_group(cut, [query_id_col], sim_col, k, tie_cols=tie_cols)
     # reference semantics: the query side is L2-normalized, the stored

@@ -43,62 +43,3 @@ DOCUMENT_SCHEMA = T.StructType(
         T.StructField("chunks", T.ArrayType(CHUNK_SCHEMA)),
     ]
 )
-
-# JSON-interop schema: the exact reference wire shape (no collection /
-# doc_id inside the object; they live in the object key, main.go:334).
-DOCUMENT_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("text", T.StringType()),
-        T.StructField("metadata", METADATA_SCHEMA),
-        T.StructField(
-            "chunks",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("text", T.StringType()),
-                        T.StructField(
-                            "embedding",
-                            T.StructType(
-                                [T.StructField("vector", T.ArrayType(T.DoubleType()))]
-                            ),
-                        ),
-                        T.StructField("metadata", METADATA_SCHEMA),
-                        T.StructField("semantic_score", T.DoubleType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-# SearchResult — main.go:68-75. Deviations D-1..D-4 (SURVEY.md §1.5):
-# always sorted desc, deterministic tie-break, `collection_name`
-# carries the real collection (the reference aliases it to the doc
-# metadata name, main.go:253 — a bug we do not replicate).
-SEARCH_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("embedding_id", T.StringType()),  # = doc metadata.name, main.go:248
-        T.StructField("similarity", T.DoubleType()),
-        T.StructField("position", T.IntegerType()),  # 1-based chunk index, main.go:252
-        T.StructField("metadata", METADATA_SCHEMA),  # chunk metadata, main.go:251
-        T.StructField("text", T.StringType()),  # chunk text, main.go:250
-        T.StructField("collection_name", T.StringType()),  # D-3: real collection
-        T.StructField("doc_id", T.StringType()),  # extension: stable identity
-    ]
-)
-
-# Multimodal media table (extension surface): opaque binary payload +
-# typed metadata; decode/feature-extract run as Arrow-batched Pandas
-# UDFs over mapInPandas (operators/multimodal.py).
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("modality", T.StringType()),  # image | audio | video | text
-        T.StructField("content", T.BinaryType()),
-        T.StructField("mime_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType())),
-    ]
-)

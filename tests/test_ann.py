@@ -167,70 +167,6 @@ def test_append_equals_full_rebuild(spark, sf_oracle, tmp_path_factory):
     emb.unpersist()
 
 
-def test_snapshot_index_round_trip_append_and_time_travel(
-    spark, sf_oracle, tmp_path_factory
-):
-    """Snapshot-backed index persistence: load ≡ original, append is
-    one atomic commit matching the plain-append layout, and the
-    pre-append index version remains searchable (time travel)."""
-    from nebuia_vector_db_spark.operators.ann import (
-        append_to_ivf_index_snapshot,
-        build_ivf_index,
-        load_ivf_index_snapshot,
-        save_ivf_index_snapshot,
-    )
-
-    emb = _emb(spark, sf_oracle).cache()
-    part_a = emb.where(F.col("vec_id") % 5 != 0)
-    part_b = emb.where(F.col("vec_id") % 5 == 0)
-    base = build_ivf_index(part_a, n_cells=8)
-
-    path = str(tmp_path_factory.mktemp("ivf_snap")) + "/t"
-    tbl = save_ivf_index_snapshot(base, path)
-    loaded = load_ivf_index_snapshot(spark, path)
-    assert (loaded.centroids == base.centroids).all()
-
-    q = [float(x) for x in emb.where(F.col("vec_id") == 7).head()["embedding"]]
-    want = [
-        (r["vec_id"], round(r["similarity"], 9))
-        for r in base.search(q, 10, nprobe=8, tie_cols=["vec_id"]).collect()
-    ]
-    got = [
-        (r["vec_id"], round(r["similarity"], 9))
-        for r in loaded.search(q, 10, nprobe=8, tie_cols=["vec_id"]).collect()
-    ]
-    assert got == want
-
-    appended = append_to_ivf_index_snapshot(spark, path, part_b)
-    assert appended.assigned.count() == emb.count()
-    # one atomic commit landed
-    assert tbl.current_version() == 2
-    assert tbl._snapshot()["op"] == "append"
-    # cell assignment matches routing through the same frozen centroids
-    from nebuia_vector_db_spark.operators.ann import assign_to_cells
-
-    want_cells = sorted(
-        (r["vec_id"], r["ivf_cell"])
-        for r in assign_to_cells(emb, base.centroids)
-        .select("vec_id", "ivf_cell")
-        .collect()
-    )
-    got_cells = sorted(
-        (r["vec_id"], r["ivf_cell"])
-        for r in appended.assigned.select("vec_id", "ivf_cell").collect()
-    )
-    assert got_cells == want_cells
-
-    # time travel: version 1 is still the pre-append index
-    old = load_ivf_index_snapshot(spark, path, version=1)
-    assert old.assigned.count() == part_a.count()
-    old_res = [
-        (r["vec_id"], round(r["similarity"], 9))
-        for r in old.search(q, 10, nprobe=8, tie_cols=["vec_id"]).collect()
-    ]
-    assert old_res == want
-
-
 def test_search_batch_full_probe_equals_knn_join(spark, sf_oracle):
     """nprobe == n_cells: batch ANN must be EXACTLY the exact batch
     kNN (same ids, same sims, same ranks) — the oracle contract the

@@ -127,6 +127,7 @@ def test_delete_collection(spark, tmp_path_factory):
 @example(name="p=q")
 @example(name="50%")
 @example(name="x/../../sibling.txt")
+@example(name="a\x00b")
 @given(name=st.text(st.characters(blacklist_categories=("Cs",)), min_size=1, max_size=16))
 def test_any_collection_name_round_trips_through_delete(
     spark, tmp_path_factory, table_format, name
@@ -135,7 +136,8 @@ def test_any_collection_name_round_trips_through_delete(
     store → search finds it → delete reports it → search is empty, and
     nothing next to the warehouse is touched (``x/../../sibling.txt``
     once deleted the sentinel below). A NUL cannot be part of a
-    directory name, so a parquet-mode store of one must fail loudly."""
+    directory name, so a parquet-mode store of one must raise
+    ``ValueError`` before it writes anything."""
     root = tmp_path_factory.mktemp("wh_names")
     sentinel = root / "sibling.txt"
     sentinel.write_text("keep")
@@ -143,27 +145,16 @@ def test_any_collection_name_round_trips_through_delete(
     docs = _mkdocs(1, 1, 4, seed=8)
     q = docs[0]["chunks"][0]["embedding"]
     if table_format == "parquet" and "\x00" in name:
-        with pytest.raises(Exception):
+        with pytest.raises(ValueError):
             eng.store(name, docs)
+        assert sorted(p.name for p in root.iterdir()) == ["sibling.txt"]
     else:
         eng.store(name, docs)
         assert eng.search(name, q, 5).count() == 1
         assert eng.delete_collection(name)["deleted"] is True
         assert eng.search(name, q, 5).count() == 0
+        assert sorted(p.name for p in root.iterdir()) == ["sibling.txt", "wh"]
     assert sentinel.read_text() == "keep"
-    assert sorted(p.name for p in root.iterdir()) == ["sibling.txt", "wh"]
-
-def test_search_arrow_method_equals_sql(engine):
-    q = np.random.default_rng(17).normal(size=8).tolist()
-    sql_rows = [
-        (r["doc_id"], r["position"], round(r["similarity"], 9))
-        for r in engine.search("alpha", q, 5, method="sql").collect()
-    ]
-    arrow_rows = [
-        (r["doc_id"], r["position"], round(r["similarity"], 9))
-        for r in engine.search("alpha", q, 5, method="arrow").collect()
-    ]
-    assert sql_rows == arrow_rows
 
 
 def test_store_stream_ingest(spark, tmp_path_factory):
@@ -219,26 +210,10 @@ def test_store_reference_wire_shape_embedding(spark, tmp_path_factory):
     assert row["semantic_score"] == pytest.approx(0.1)  # O-13 round-trip
 
 
-def test_delete_capability_gate(spark, tmp_path_factory):
-    """D-6: without Delta on the classpath the parquet partition-drop
-    fallback must run — even if a stray _delta_log directory exists
-    (BOTH capability conditions are required for the ACID path)."""
-    import os
-
-    wh = str(tmp_path_factory.mktemp("wh_gate"))
-    eng = VectorEngine(spark, wh, dim=4)
-    eng.store("tmp", _mkdocs(2, 1, 4, seed=7))
-    assert eng._delta_capable() is False  # no Delta in this env
-    os.makedirs(os.path.join(wh, "_delta_log"), exist_ok=True)
-    assert eng._delta_capable() is False  # classpath check still gates
-    assert eng.delete_collection("tmp")["deleted"] is True
-    assert eng.list_collections() == []
-
-
 def test_search_metadata_filter_restricts_candidates(spark, tmp_path_factory):
     """The `where` extension: a predicate on the chunk relation must
     exclude non-matching chunks from scoring entirely (not post-filter
-    the top-k), on both the sql and arrow paths."""
+    the top-k)."""
     from nebuia_vector_db_spark.engine import VectorEngine
 
     wh = str(tmp_path_factory.mktemp("wh_filter"))
@@ -261,12 +236,9 @@ def test_search_metadata_filter_restricts_candidates(spark, tmp_path_factory):
     ]
     eng.store("c", docs)
     q = [1.0, 0.0, 0.0, 0.0]
-    for method in ("sql", "arrow"):
-        got = eng.search(
-            "c", q, 10, method=method, where="semantic_score >= 3"
-        ).collect()
-        names = {r["embedding_id"] for r in got}
-        assert names == {"doc3", "doc4", "doc5"}, (method, names)
+    got = eng.search("c", q, 10, where="semantic_score >= 3").collect()
+    names = {r["embedding_id"] for r in got}
+    assert names == {"doc3", "doc4", "doc5"}, names
     # unfiltered control still sees everything
     assert len(eng.search("c", q, 10).collect()) == 6
 
@@ -415,13 +387,6 @@ def test_search_min_similarity_radius_gate(spark, tmp_path_factory):
     got = eng.search("r", [1.0, 0, 0, 0], 10, min_similarity=0.5).collect()
     assert all(r["similarity"] >= 0.5 for r in got)
     assert len(got) >= 2
-    # arrow path applies the same gate
-    got_a = eng.search(
-        "r", [1.0, 0, 0, 0], 10, method="arrow", min_similarity=0.5
-    ).collect()
-    assert sorted(r["similarity"] for r in got_a) == sorted(
-        r["similarity"] for r in got
-    )
     # without the gate the negative-direction chunk is present
     assert any(
         r["similarity"] < 0 for r in eng.search("r", [1.0, 0, 0, 0], 10).collect()
