@@ -17,7 +17,9 @@ Two execution strategies:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import contextlib
+import functools
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 from pyspark.sql import Column
@@ -96,27 +98,11 @@ def cosine_sim(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-_BLAS_THREADS_SET: int | None = None
-
-
-def limit_blas_threads(n: int = 1) -> None:
-    """Cap OpenBLAS's internal thread count in THIS process.
-
-    Data-parallel kernels (one GEMM task per core) oversubscribe when
-    every task's BLAS call also spawns threads: with 21-32 concurrent
-    block-GEMM tasks the extra threads only add contention (measured
-    on b9's 40k×40k blocks: 21-task wall 29.0 s → 20.6 s with BLAS
-    pinned to 1). Called at kernel entry in the Python worker, so it
-    caps workers without touching the driver process (whose numpy
-    baselines legitimately use the multithreaded path).
-
-    Best-effort: resolves ``openblas_set_num_threads`` from numpy's
-    bundled OpenBLAS via ctypes; silently a no-op on other BLAS
-    backends. Idempotent per process.
-    """
-    global _BLAS_THREADS_SET
-    if _BLAS_THREADS_SET == n:
-        return
+@functools.cache
+def _openblas_threads() -> tuple | None:
+    """(get, set) thread-count functions of numpy's bundled OpenBLAS,
+    resolved once per process via ctypes; ``None`` on other BLAS
+    backends."""
     import ctypes
     import glob
     import os
@@ -132,13 +118,40 @@ def limit_blas_threads(n: int = 1) -> None:
             lib = ctypes.CDLL(path)  # already loaded: dlopen reuses it
         except OSError:
             continue
-        for sym in ("openblas_set_num_threads64_", "openblas_set_num_threads"):
-            fn = getattr(lib, sym, None)
-            if fn is not None:
-                fn(int(n))
-                _BLAS_THREADS_SET = n
-                return
-    _BLAS_THREADS_SET = n  # searched once; don't rescan every call
+        for suffix in ("64_", ""):
+            get = getattr(lib, f"openblas_get_num_threads{suffix}", None)
+            set_ = getattr(lib, f"openblas_set_num_threads{suffix}", None)
+            if get is not None and set_ is not None:
+                return get, set_
+    return None
+
+
+@contextlib.contextmanager
+def limit_blas_threads(n: int = 1) -> Iterator[None]:
+    """Cap OpenBLAS's internal thread count in THIS process for the
+    duration of the block, then restore the prior count.
+
+    Data-parallel kernels (one GEMM task per core) oversubscribe when
+    every task's BLAS call also spawns threads: with 21-32 concurrent
+    block-GEMM tasks the extra threads only add contention (measured
+    on b9's 40k×40k blocks: 21-task wall 29.0 s → 20.6 s with BLAS
+    pinned to 1). Wrapped around the GEMM inside the Python worker,
+    so other work the same worker runs keeps the multithreaded path.
+
+    Best-effort: a no-op on BLAS backends other than numpy's bundled
+    OpenBLAS.
+    """
+    fns = _openblas_threads()
+    if fns is None:
+        yield
+        return
+    get, set_ = fns
+    prior = get()
+    set_(int(n))
+    try:
+        yield
+    finally:
+        set_(prior)
 
 
 def arrow_list_to_matrix(col) -> np.ndarray:

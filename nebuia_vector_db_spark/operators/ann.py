@@ -8,10 +8,13 @@ index as a *batch* job and keep serving batch-style too:
 
 - **Build**: MLlib KMeans over (a sample of) the corpus → ``n_cells``
   centroids; every vector is assigned its nearest centroid id as an
-  ``ivf_cell`` column. On a cluster you then ``partitionBy("ivf_cell")``
-  (or bucket) the table so a cell is a partition — candidate pruning
-  becomes *partition* pruning, the same mechanism that makes
-  collection-scoped search cheap (SURVEY.md §2.1 O-2).
+  ``ivf_cell`` column.
+- **Persist** (``save_ivf_index``): ``cells/`` holds the corpus
+  partitioned by cell, one parquet file per cell, so a cell is a
+  partition — candidate pruning becomes *partition* pruning, the same
+  mechanism that makes collection-scoped search cheap (SURVEY.md §2.1
+  O-2) — and ``centroids.npy`` the centroid matrix, written and read
+  driver-side through the Hadoop FileSystem API (no Spark job).
 - **Query**: rank centroids by similarity to the query driver-side
   (n_cells is small — this is a NumPy matvec over the centroid matrix),
   take the ``nprobe`` best cells, and brute-force only those cells'
@@ -27,6 +30,8 @@ shuffle). The centroid matrix lives on the driver (n_cells × d floats —
 
 from __future__ import annotations
 
+import io
+import os
 from collections.abc import Sequence
 
 import numpy as np
@@ -248,47 +253,80 @@ def build_ivf_index(
     return IVFIndex(assigned, centroids, vec_col)
 
 
+def _matrix_file(spark, path: str):
+    """(FileSystem, Path) of ``path`` through the Hadoop FileSystem
+    API, so any scheme the cluster can write to (HDFS, S3A, local
+    file) works."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _save_matrix(spark, path: str, mat: np.ndarray) -> None:
+    """Write one driver-side matrix as a ``.npy`` file: no Spark job."""
+    buf = io.BytesIO()
+    np.save(buf, np.ascontiguousarray(mat), allow_pickle=False)
+    fs, jpath = _matrix_file(spark, path)
+    out = fs.create(jpath, True)
+    try:
+        out.write(buf.getvalue())
+    finally:
+        out.close()
+
+
+def _load_matrix(
+    spark, path: str, missing_ok: bool = False
+) -> np.ndarray | None:
+    """Read a :func:`_save_matrix` file; ``None`` when it is absent and
+    ``missing_ok``. A damaged file raises."""
+    fs, jpath = _matrix_file(spark, path)
+    if missing_ok and not fs.exists(jpath):
+        return None
+    stream = fs.open(jpath)
+    try:
+        data = bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+    return np.load(io.BytesIO(data), allow_pickle=False)
+
+
+def _write_cells(assigned: DataFrame, path: str, mode: str) -> None:
+    """Write the corpus under ``path/cells``, partitioned by cell, one
+    file per cell: rows are first shuffled by ``ivf_cell`` so each
+    cell lands in one writer task."""
+    assigned.repartition("ivf_cell").write.partitionBy("ivf_cell").mode(
+        mode
+    ).parquet(os.path.join(path, "cells"))
+
+
 def save_ivf_index(index: IVFIndex, path: str) -> None:
-    """Persist the index with the corpus PHYSICALLY partitioned by
-    cell (``partitionBy('ivf_cell')``) plus a tiny centroid table.
+    """Persist the index: ``cells/`` holds the corpus PHYSICALLY
+    partitioned by cell (``ivf_cell=<c>/``, one parquet file per
+    cell), ``centroids.npy`` the (n_cells, d) float64 centroid matrix,
+    written driver-side (no Spark job).
 
     This is the step that turns cell pruning into *partition* pruning:
     a reloaded index's ``search`` shows the ``ivf_cell IN (...)``
     predicate as a PartitionFilter on the scan — only the probed
-    cells' files are read (test-pinned in tests/test_plans.py). At
+    cells' files are read (test-pinned in tests/test_ann.py). At
     100 TB that is the difference between scanning nprobe/n_cells of
     the corpus and scanning all of it to filter.
     """
-    import os
-
-    spark = index.assigned.sparkSession
-    index.assigned.write.partitionBy("ivf_cell").mode("overwrite").parquet(
-        os.path.join(path, "cells")
+    _write_cells(index.assigned, path, "overwrite")
+    _save_matrix(
+        index.assigned.sparkSession,
+        os.path.join(path, "centroids.npy"),
+        index.centroids,
     )
-    cents = [
-        (i, [float(x) for x in c]) for i, c in enumerate(index.centroids)
-    ]
-    spark.createDataFrame(
-        cents, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 
 
 def load_ivf_index(
     spark, path: str, vec_col: str = "embedding"
 ) -> IVFIndex:
     """Reload a saved index: the cell-partitioned corpus scan (lazy,
-    partition-prunable) + the centroid matrix (driver-side, tiny)."""
-    import os
-
+    partition-prunable) + ``centroids.npy`` read driver-side (no Spark
+    job)."""
     assigned = spark.read.parquet(os.path.join(path, "cells"))
-    rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("cell")
-        .collect()
-    )
-    centroids = np.vstack(
-        [np.asarray(r["centroid"], dtype=np.float64) for r in rows]
-    )
+    centroids = _load_matrix(spark, os.path.join(path, "centroids.npy"))
     return IVFIndex(assigned, centroids, vec_col)
 
 
@@ -341,7 +379,8 @@ def append_to_ivf_index(
 ) -> IVFIndex:
     """Incremental index maintenance (VERDICT r2 #6): route new
     vectors to the EXISTING centroids and append them to the saved
-    cell partitions — no retrain, no rewrite of existing cells. This
+    cell partitions, at most one new file per cell touched — no
+    retrain, no rewrite of existing cells. This
     is the operation a daily ingest pipeline runs; a full
     ``build_ivf_index`` + ``save_ivf_index`` over the grown corpus
     WITH THE SAME centroids produces identical cell contents
@@ -353,13 +392,9 @@ def append_to_ivf_index(
     when the max/median ratio passes ~4× — the retrain is the same
     batch build, swapped in atomically by writing to a fresh path.
     """
-    import os
-
     idx = load_ivf_index(spark, path, vec_col)
-    assigned = assign_to_cells(new_df, idx.centroids, vec_col)
-    assigned.write.partitionBy("ivf_cell").mode("append").parquet(
-        os.path.join(path, "cells")
-    )
+    new_cells = assign_to_cells(new_df, idx.centroids, vec_col)
+    _write_cells(new_cells, path, "append")
     return load_ivf_index(spark, path, vec_col)
 
 

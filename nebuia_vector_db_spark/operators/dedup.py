@@ -674,7 +674,6 @@ def _cosine_pairs_broadcast(
             limit_blas_threads,
         )
 
-        limit_blas_threads(1)  # one GEMM task per core already
         ids_all, mat_all, norms_all, n32_t_all = bc.value
         # bound the (rows, N) screening matrix to 32M cells (128 MB
         # f32) per GEMM — an Arrow batch (10k rows) against a 1M-row
@@ -703,13 +702,15 @@ def _cosine_pairs_broadcast(
                 buf = np.empty((rows, n_all), dtype=np.float32)
             for s in range(0, bmat_full.shape[0], step):
                 m = len(bids_full[s : s + step])
-                cos32 = np.matmul(
-                    b32_full[s : s + m], n32_t_all, out=buf[:m]
-                )
-                ii, jj, cos = _screened_pairs(
-                    cos32, bmat_full, bnorms_full, mat_all, norms_all,
-                    s, threshold,
-                )
+                # one GEMM task per core already
+                with limit_blas_threads(1):
+                    cos32 = np.matmul(
+                        b32_full[s : s + m], n32_t_all, out=buf[:m]
+                    )
+                    ii, jj, cos = _screened_pairs(
+                        cos32, bmat_full, bnorms_full, mat_all, norms_all,
+                        s, threshold,
+                    )
                 # sparse-first: threshold matches are rare, so filter
                 # ids on the match set, never a dense id-compare mask
                 keep = bids_full[ii] < ids_all[jj]
@@ -785,7 +786,6 @@ def _cosine_pairs_blocked(
             limit_blas_threads,
         )
 
-        limit_blas_threads(1)  # one block-pair task per core already
         lmask = pdf["_side"].to_numpy() == 0
         l_ids = pdf["_id"].to_numpy()[lmask]
         l_mat = np.array(list(pdf["_v"][lmask]), dtype=np.float64)
@@ -821,10 +821,12 @@ def _cosine_pairs_blocked(
         out_a, out_b, out_c = [], [], []
         for s in range(0, len(l_ids), step):
             m = len(l_ids[s : s + step])
-            cos32 = np.matmul(l32[s : s + m], r32_t, out=buf[:m])
-            ii, jj, cos = _screened_pairs(
-                cos32, l_mat, l_norms, r_mat, r_norms, s, threshold
-            )
+            # one block-pair task per core already
+            with limit_blas_threads(1):
+                cos32 = np.matmul(l32[s : s + m], r32_t, out=buf[:m])
+                ii, jj, cos = _screened_pairs(
+                    cos32, l_mat, l_norms, r_mat, r_norms, s, threshold
+                )
             lo = l_ids[ii] < r_ids[jj]
             out_a.append(l_ids[ii[lo]])
             out_b.append(r_ids[jj[lo]])

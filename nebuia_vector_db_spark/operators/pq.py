@@ -37,6 +37,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.functions.vector import normalize_query
+from nebuia_vector_db_spark.operators.ann import (
+    _load_matrix,
+    _matrix_file,
+    _save_matrix,
+    assign_to_cells,
+)
 
 
 def _kmeans_np(
@@ -803,49 +809,31 @@ def encode_pq(
 
 
 def save_pq_index(index: PQIndex, path: str) -> None:
-    """Persist the compressed corpus: codes partitioned by IVF cell
-    when present (ADC probing then prunes partitions, same as
-    save_ivf_index) plus the codebooks and optional cell centroids as
-    tiny flattened tables. The raw-vector table is NOT copied — at
-    rest the index is the 16-32× smaller representation; re-rank
-    reads the original corpus by id."""
-    import os
-
+    """Persist the compressed corpus: ``codes/`` partitioned by IVF
+    cell when present (ADC probing then prunes partitions, same as
+    save_ivf_index), plus ``codebooks.npy`` and, when the index has
+    them, ``centroids.npy`` (cell centroids) and ``rotation.npy``
+    (OPQ), written driver-side like the IVF centroid file (no Spark
+    job); a stale optional file from an earlier save at ``path`` is
+    removed. The raw-vector table is NOT copied — at rest the index is
+    the 16-32× smaller representation; re-rank reads the original
+    corpus by id."""
     spark = index.codes.sparkSession
     w = index.codes.write.mode("overwrite")
     if index.cell_centroids is not None:
         w = w.partitionBy(index.cell_col)
     w.parquet(os.path.join(path, "codes"))
-    m, k, dsub = index.codebooks.shape
-    books = [
-        (s, c, [float(x) for x in index.codebooks[s, c]])
-        for s in range(m)
-        for c in range(k)
-    ]
-    spark.createDataFrame(
-        books, "s int, c int, w array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "codebooks")
-    )
-    if index.cell_centroids is not None:
-        cents = [
-            (i, [float(x) for x in v])
-            for i, v in enumerate(index.cell_centroids)
-        ]
-        spark.createDataFrame(
-            cents, "cell int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "centroids")
-        )
-    if index.rotation is not None:
-        rows = [
-            (i, [float(x) for x in v]) for i, v in enumerate(index.rotation)
-        ]
-        spark.createDataFrame(
-            rows, "i int, row array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "rotation")
-        )
+    _save_matrix(spark, os.path.join(path, "codebooks.npy"), index.codebooks)
+    for name, mat in (
+        ("centroids", index.cell_centroids),
+        ("rotation", index.rotation),
+    ):
+        file = os.path.join(path, f"{name}.npy")
+        if mat is not None:
+            _save_matrix(spark, file, mat)
+        else:
+            fs, jpath = _matrix_file(spark, file)
+            fs.delete(jpath, False)
 
 
 def append_to_pq_index(
@@ -869,13 +857,9 @@ def append_to_pq_index(
     degrades. Never retrain in place: old codes are meaningless under
     new codebooks.
     """
-    import os
-
     idx = load_pq_index(spark, path, vec_col, id_col, cell_col)
     src = new_df
     if idx.cell_centroids is not None and cell_col not in new_df.columns:
-        from nebuia_vector_db_spark.operators.ann import assign_to_cells
-
         src = assign_to_cells(new_df, idx.cell_centroids, vec_col)
         # assign_to_cells names the column ivf_cell; align if custom
         if cell_col != "ivf_cell":
@@ -900,41 +884,19 @@ def load_pq_index(
     cell_col: str = "ivf_cell",
 ) -> PQIndex:
     """Reload: lazy (partition-prunable) codes scan + driver-side
-    codebooks/centroids."""
-    import os
-
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    rows = (
-        spark.read.parquet(os.path.join(path, "codebooks"))
-        .orderBy("s", "c")
-        .collect()
-    )
-    m = 1 + max(r["s"] for r in rows)
-    k = 1 + max(r["c"] for r in rows)
-    dsub = len(rows[0]["w"])
-    books = np.empty((m, k, dsub), dtype=np.float64)
-    for r in rows:
-        books[r["s"], r["c"]] = r["w"]
-    cents = None
-    cent_path = os.path.join(path, "centroids")
-    try:
-        crows = spark.read.parquet(cent_path).orderBy("cell").collect()
-        cents = np.vstack(
-            [np.asarray(r["centroid"], dtype=np.float64) for r in crows]
-        )
-    except Exception:
-        cents = None  # flat-PQ index: no centroid table written
-    rot = None
-    try:
-        rrows = spark.read.parquet(
-            os.path.join(path, "rotation")
-        ).orderBy("i").collect()
-        rot = np.vstack(
-            [np.asarray(r["row"], dtype=np.float64) for r in rrows]
-        )
-    except Exception:
-        rot = None  # plain-PQ index: no rotation written
+    codebooks, and the cell centroids and rotation when their files
+    exist (flat and plain-PQ indexes have none). A damaged file
+    raises."""
     return PQIndex(
-        codes, books, vec_col, id_col,
-        cell_centroids=cents, cell_col=cell_col, rotation=rot,
+        spark.read.parquet(os.path.join(path, "codes")),
+        _load_matrix(spark, os.path.join(path, "codebooks.npy")),
+        vec_col,
+        id_col,
+        cell_centroids=_load_matrix(
+            spark, os.path.join(path, "centroids.npy"), missing_ok=True
+        ),
+        cell_col=cell_col,
+        rotation=_load_matrix(
+            spark, os.path.join(path, "rotation.npy"), missing_ok=True
+        ),
     )

@@ -59,6 +59,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Spark keys Python worker daemons on their env vars, and the
+        # SQL Arrow runners (mapInArrow, pandas_udf) add this one while
+        # the RDD runner (createDataFrame of a Python list) does not:
+        # without it every process runs two daemons and 2 × cores
+        # workers. Set for both, they share one pool.
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     )
     if extra_conf:
         for k, v in extra_conf.items():

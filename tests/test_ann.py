@@ -90,6 +90,35 @@ def test_saved_ivf_index_search_prunes_partitions(spark, sf_oracle, tmp_path_fac
     assert {r["vec_id"] for r in got.collect()} == want
 
 
+def test_saved_cells_hold_one_file_per_cell(spark, sf_oracle, tmp_path):
+    """save_ivf_index writes each cell as one parquet file, whatever the
+    corpus partitioning, and append_to_ivf_index adds at most one file
+    to each cell it touches."""
+    from nebuia_vector_db_spark.operators.ann import (
+        append_to_ivf_index,
+        save_ivf_index,
+    )
+
+    emb = _emb(spark, sf_oracle)
+    part_a = emb.where(F.col("vec_id") % 5 != 0).repartition(4)
+    part_b = emb.where(F.col("vec_id") % 5 == 0).repartition(4)
+    path = tmp_path / "ivf"
+
+    def files_per_cell():
+        return {
+            d.name: len(list(d.glob("*.parquet")))
+            for d in (path / "cells").glob("ivf_cell=*")
+        }
+
+    save_ivf_index(build_ivf_index(part_a, n_cells=8), str(path))
+    saved = files_per_cell()
+    assert len(saved) == 8 and set(saved.values()) == {1}, saved
+
+    append_to_ivf_index(spark, str(path), part_b)
+    added = {c: n - saved.get(c, 0) for c, n in files_per_cell().items()}
+    assert set(added.values()) <= {0, 1} and sum(added.values()) > 0, added
+
+
 def test_assign_to_cells_matches_mllib_transform(spark, sf_oracle):
     """Our broadcast-GEMM assignment (the append path) must agree with
     MLlib's model.transform (the build path) — otherwise append and

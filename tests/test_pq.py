@@ -237,6 +237,31 @@ def test_pq_append_equals_full_reencode(spark, sf_oracle, tmp_path_factory):
     emb.unpersist()
 
 
+def test_load_pq_index_raises_on_damaged_centroid_file(spark, sf_oracle, tmp_path):
+    """A damaged saved matrix is an error, never a silent fall back to
+    a flat (centroid-less) index."""
+    from py4j.protocol import Py4JJavaError
+
+    from nebuia_vector_db_spark.operators.ann import build_ivf_index
+    from nebuia_vector_db_spark.operators.pq import load_pq_index, save_pq_index
+
+    emb = load_table(spark, sf_oracle, "embeddings")
+    ivf = build_ivf_index(emb, n_cells=4)
+    books = train_pq(
+        ivf.assigned, m=8, k=16, sample=2_000, cell_centroids=ivf.centroids
+    )
+    path = tmp_path / "pq_ivf"
+    idx = encode_pq(ivf.assigned, books, cell_centroids=ivf.centroids)
+    save_pq_index(idx, str(path))
+    assert np.array_equal(load_pq_index(spark, str(path)).cell_centroids, ivf.centroids)
+
+    cents = path / "centroids.npy"
+    cents.write_bytes(cents.read_bytes()[: cents.stat().st_size // 2])
+    # the Hadoop checksum catches it first; without a .crc, np.load does
+    with pytest.raises((Py4JJavaError, ValueError)):
+        load_pq_index(spark, str(path))
+
+
 def test_pq_search_batch_matches_per_query_search(spark, sf_oracle):
     """Batched ADC == per-query ADC scores/ranks for every query in
     the batch (same tables, same codes, one pass)."""

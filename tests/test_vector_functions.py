@@ -71,3 +71,23 @@ def test_numpy_udf_matches_sql_path(spark):
     }
     for i in sql_vals:
         assert math.isclose(sql_vals[i], np_vals[i], rel_tol=1e-9, abs_tol=1e-9)
+
+
+def test_limit_blas_threads_restores_prior_count():
+    from nebuia_vector_db_spark.functions.vector import (
+        _openblas_threads,
+        limit_blas_threads,
+    )
+
+    fns = _openblas_threads()
+    if fns is None:
+        pytest.skip("numpy is not linked against its bundled OpenBLAS")
+    get, set_ = fns
+    original = get()
+    set_(2)
+    try:
+        with limit_blas_threads(1):
+            assert get() == 1
+        assert get() == 2
+    finally:
+        set_(original)
