@@ -445,14 +445,15 @@ class VectorEngine:
             tbl = self._snapshot_table()
             if not tbl.versions():
                 return {"status": "Collection deletion started", "deleted": False}
-            before = tbl._snapshot()["n_rows"]
             # retried through the commit CAS: a store racing this
             # delete must not surface CommitConflictError to the
-            # caller (parquet mode never fails concurrent mutations)
-            tbl.with_retry(
+            # caller (parquet mode never fails concurrent mutations).
+            # The flag comes from the delete's own commit, so other
+            # writers' commits cannot flip it.
+            v = tbl.with_retry(
                 "delete_where", F.col("collection") == collection_name
             )
-            deleted = tbl._snapshot()["n_rows"] < before
+            deleted = tbl.meta("rewrote_files", v) > 0
             return {"status": "Collection deletion started", "deleted": deleted}
         path = self.spark._jvm.org.apache.hadoop.fs.Path(
             _collection_dir(self.spark, self.warehouse_path, collection_name)

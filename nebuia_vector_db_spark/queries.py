@@ -36,7 +36,11 @@ from nebuia_vector_db_spark.operators.dedup import (
     simhash_pairs,
 )
 from nebuia_vector_db_spark.operators.ann import build_ivf_index
-from nebuia_vector_db_spark.operators.topk import knn_join, topk_per_group
+from nebuia_vector_db_spark.operators.topk import (
+    knn_join,
+    topk_per_group,
+    topk_search,
+)
 from nebuia_vector_db_spark.sources.registry import load_table
 
 SIM6 = "similarity"
@@ -228,18 +232,10 @@ qn AS (
 # --------------------------------------------------------------------------
 # vs_topk — flagship: exact brute-force top-10 (O-2,O-6,O-7,O-9)
 def q_vs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qn = normalize_query(_qvec(spark, sf_dir, 0))
-    return (
-        _emb(spark, sf_dir)
-        .withColumn("sim_raw", dot(F.col("embedding"), qn))
-        .orderBy(F.desc("sim_raw"), "vec_id")
-        .limit(10)
-        .select(
-            "vec_id",
-            "label",
-            F.round("sim_raw", 6).alias(SIM6),
-        )
-    )
+    return topk_search(
+        _emb(spark, sf_dir), _qvec(spark, sf_dir, 0), 10,
+        sim_col="sim_raw", tie_cols=["vec_id"],
+    ).select("vec_id", "label", F.round("sim_raw", 6).alias(SIM6))
 
 
 ORACLE_VS_TOPK = (
@@ -257,14 +253,10 @@ LIMIT 10
 # --------------------------------------------------------------------------
 # vs_topk_fixedq — same, fixed literal query (no data-derived q)
 def q_vs_topk_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qn = normalize_query(FIXED_Q)
-    return (
-        _emb(spark, sf_dir)
-        .withColumn("sim_raw", dot(F.col("embedding"), qn))
-        .orderBy(F.desc("sim_raw"), "vec_id")
-        .limit(10)
-        .select("vec_id", "label", F.round("sim_raw", 6).alias(SIM6))
-    )
+    return topk_search(
+        _emb(spark, sf_dir), FIXED_Q, 10,
+        sim_col="sim_raw", tie_cols=["vec_id"],
+    ).select("vec_id", "label", F.round("sim_raw", 6).alias(SIM6))
 
 
 # [0.125]*64 has exactly unit L2 norm (64 · 0.125² = 1.0, exact in
@@ -285,15 +277,12 @@ LIMIT 10
 # vs_multi_search — O-10: multi-collection (label ≙ collection) union +
 # global top-k (SURVEY §1.5-6 equivalence)
 def q_vs_multi_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qn = normalize_query(_qvec(spark, sf_dir, 1))
-    return (
-        _emb(spark, sf_dir)
-        .where(F.col("label").isin(1, 2, 3))  # partition-prunable predicate
-        .withColumn("sim_raw", dot(F.col("embedding"), qn))
-        .orderBy(F.desc("sim_raw"), "vec_id")
-        .limit(10)
-        .select("vec_id", "label", F.round("sim_raw", 6).alias(SIM6))
-    )
+    return topk_search(
+        # partition-prunable predicate
+        _emb(spark, sf_dir).where(F.col("label").isin(1, 2, 3)),
+        _qvec(spark, sf_dir, 1), 10,
+        sim_col="sim_raw", tie_cols=["vec_id"],
+    ).select("vec_id", "label", F.round("sim_raw", 6).alias(SIM6))
 
 
 ORACLE_VS_MULTI = (
@@ -424,7 +413,6 @@ QUALIFY rk <= 5
 # 1-based position): build documents_nested from embeddings (4 chunks
 # per doc), then search chunk-level.
 def q_vs_nested_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qn = normalize_query(_qvec(spark, sf_dir, 0))
     emb = _emb(spark, sf_dir)
     nested = (
         emb.withColumn("doc_id", (F.col("vec_id") / 4).cast("long"))
@@ -442,12 +430,10 @@ def q_vs_nested_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos0") + 1).cast("long").alias("position"),
         F.col("chunk.embedding").alias("embedding"),
     )
-    return (
-        exploded.withColumn("sim_raw", dot(F.col("embedding"), qn))
-        .orderBy(F.desc("sim_raw"), "doc_id", "position")
-        .limit(10)
-        .select("doc_id", "position", F.round("sim_raw", 6).alias(SIM6))
-    )
+    return topk_search(
+        exploded, _qvec(spark, sf_dir, 0), 10,
+        sim_col="sim_raw", tie_cols=["doc_id", "position"],
+    ).select("doc_id", "position", F.round("sim_raw", 6).alias(SIM6))
 
 
 ORACLE_VS_NESTED = (

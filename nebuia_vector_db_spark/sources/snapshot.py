@@ -42,10 +42,17 @@ tail — at one commit per 5 minutes for a year (~100k versions over
 ~1M data files), version resolution and manifest reads stay
 bounded by the checkpoint interval instead of growing with history.
 
+Every mutating op hands :meth:`SnapshotTable._commit` only its op
+name, schema, new file list and op-specific counters; the commit
+derives ``n_files``/``n_rows`` and carries the parent's application
+metadata forward.
+
 Scale properties:
-- **Copy-on-write delete** rewrites ONLY the files that contain
-  matching rows (found distributedly via ``input_file_name``); the
-  untouched 99.9% of a 100 TB table is carried forward by reference.
+- **Copy-on-write** ``delete_where``, ``delete_matching`` and
+  ``upsert`` rewrite ONLY the files that contain matching rows, found
+  distributedly by one shared probe (``_split_hit_files``, via
+  ``input_file_name``); the untouched 99.9% of a 100 TB table is
+  carried forward by reference.
 - **File-level data skipping**: each snapshot stores per-file min/max
   for leaf columns (harvested from parquet footers, no data read);
   ``read(where=...)`` prunes the file list BEFORE Spark ever plans
@@ -61,6 +68,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -201,10 +209,15 @@ class SnapshotTable:
         }
         snap["files"] = files
         snap["version"] = v
+        self._remember(snap)
+        return dict(snap)
+
+    def _remember(self, state: dict) -> None:
+        """Cache a full snapshot state under its version (the 8 most
+        recently added are kept)."""
         if len(self._cache) >= 8:
             self._cache.pop(next(iter(self._cache)))
-        self._cache[v] = snap
-        return dict(snap)
+        self._cache[state["version"]] = state
 
     def history(self) -> list[dict]:
         """Commit log, oldest first: version, op, file/row deltas."""
@@ -224,33 +237,44 @@ class SnapshotTable:
 
     # -------------------------------------------------------------- commit
     def _commit(self, snap: dict, expected_parent: int | None) -> int:
-        """Publish the next snapshot through the backend CAS. The
-        payload stores the manifest as a DELTA against the parent
-        (``add``/``remove``) so commit size is O(changed files); the
-        full state is checkpointed every ``checkpoint_interval``
-        commits."""
+        """Publish the next snapshot through the backend CAS.
+
+        ``snap`` holds only what the op decides: ``op``, ``schema``,
+        ``files`` and its own keys (``rewrote_files``, caller
+        metadata, ...). The commit derives the rest in this one place:
+        ``n_files``/``n_rows`` from ``files``, ``parent``, and the
+        parent's application metadata (:meth:`_app_meta`), carried
+        forward beneath the op's keys. The payload stores the manifest
+        as a DELTA against the parent (``add``/``remove``) so commit
+        size is O(changed files); the full state is checkpointed every
+        ``checkpoint_interval`` commits."""
         new_version = (0 if expected_parent is None else expected_parent) + 1
-        snap["parent"] = expected_parent
-        payload = {k: v for k, v in snap.items() if k != "files"}
-        files = snap.get("files")
-        parent_files = None
-        if expected_parent is not None and files is not None:
+        parent = None
+        if expected_parent is not None:
             try:
-                parent_files = self._snapshot(expected_parent)["files"]
+                parent = self._snapshot(expected_parent)
             except (FileNotFoundError, OSError):
-                parent_files = None
-        if parent_files is None:
-            if files is not None:
+                pass  # unreadable parent: publish a full manifest
+        files = snap.get("files")
+        snap = {
+            **(self._app_meta(parent) if parent else {}),
+            **snap,
+            "parent": expected_parent,
+        }
+        if files is not None:
+            snap["n_files"] = len(files)
+            snap["n_rows"] = sum(f["rows"] for f in files)
+        payload = {k: v for k, v in snap.items() if k != "files"}
+        if files is not None:
+            if parent is None:
                 payload["files"] = files  # full commit (create / fallback)
-        else:
-            parent_by_path = {f["path"]: f for f in parent_files}
-            new_paths = {f["path"] for f in files}
-            payload["add"] = [
-                f for f in files if f["path"] not in parent_by_path
-            ]
-            payload["remove"] = sorted(
-                p for p in parent_by_path if p not in new_paths
-            )
+            else:
+                parent_paths = {f["path"] for f in parent["files"]}
+                new_paths = {f["path"] for f in files}
+                payload["add"] = [
+                    f for f in files if f["path"] not in parent_paths
+                ]
+                payload["remove"] = sorted(parent_paths - new_paths)
         if not self.backend.try_commit(
             new_version, json.dumps(payload, sort_keys=True)
         ):
@@ -258,12 +282,7 @@ class SnapshotTable:
                 f"version {new_version} already committed at {self.path}"
             )
         if files is not None:
-            state = dict(snap)
-            state["files"] = files
-            state["version"] = new_version
-            if len(self._cache) >= 8:
-                self._cache.pop(next(iter(self._cache)))
-            self._cache[new_version] = state
+            self._remember({**snap, "version": new_version})
             if (
                 self.checkpoint_interval > 0
                 and new_version % self.checkpoint_interval == 0
@@ -300,17 +319,13 @@ class SnapshotTable:
         return [json.loads(s) for s in table.column("entry").to_pylist()]
 
     def _write_files(
-        self,
-        df: DataFrame,
-        stats_cols: list[str],
-        bloom_cols: list[str] | None = None,
+        self, df: DataFrame, stats_cols: list[str] | None = None
     ) -> list[dict]:
         """Write df as a new immutable commit dir; return file entries
-        (relative path, row count, byte size, per-column min/max from
-        the parquet FOOTERS — no data pages are read — and, for
-        ``bloom_cols``, a per-file Bloom filter over the column's
-        distinct values for point-lookup skipping where min/max can't
-        prune)."""
+        (relative path, row count, byte size, and per-column min/max
+        for ``stats_cols`` — default :meth:`_default_stats_cols` —
+        from the parquet FOOTERS; no data pages are read)."""
+        stats_cols = stats_cols or self._default_stats_cols(df)
         commit_id = uuid.uuid4().hex
         out_dir = os.path.join(self._data_dir, commit_id)
         df.write.mode("error").parquet(out_dir)
@@ -321,11 +336,10 @@ class SnapshotTable:
             if not name.endswith(".parquet"):
                 continue
             full = os.path.join(out_dir, name)
-            pf = pq.ParquetFile(full)
-            md = pf.metadata
+            md = pq.ParquetFile(full).metadata
             stats: dict[str, list] = {}
-            schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
-            for ci, col in enumerate(schema_names):
+            for ci in range(md.num_columns):
+                col = md.schema.column(ci).name
                 if col not in stats_cols:
                     continue
                 lo = hi = None
@@ -339,41 +353,24 @@ class SnapshotTable:
                     hi = st.max if hi is None else max(hi, st.max)
                 if ok and lo is not None:
                     stats[col] = [_json_safe(lo), _json_safe(hi)]
-            blooms = {}
-            for col in bloom_cols or []:
-                if col not in schema_names:
-                    continue
-                import pyarrow as pa
-
-                arr = pf.read(columns=[col]).column(col)
-                at = arr.type
-                if not (
-                    pa.types.is_integer(at)
-                    or pa.types.is_floating(at)
-                    or pa.types.is_decimal(at)
-                    or pa.types.is_boolean(at)
-                    or pa.types.is_string(at)
-                    or pa.types.is_large_string(at)
-                ):
-                    # temporal/binary values don't canonicalize the
-                    # same way predicate literals do — a mismatch
-                    # would FALSE-NEGATIVE the bloom and silently
-                    # drop matching files, so refuse loudly instead
-                    raise ValueError(
-                        f"bloom_cols[{col!r}] has type {at}; bloom "
-                        "skipping supports only string/numeric columns"
-                    )
-                blooms[col] = _bloom_build(arr.to_pylist())
             entries.append(
                 {
                     "path": os.path.join("data", commit_id, name),
                     "rows": md.num_rows,
                     "bytes": os.path.getsize(full),
                     "stats": stats,
-                    **({"blooms": blooms} if blooms else {}),
                 }
             )
         return entries
+
+    def _scan_files(self, schema: T.StructType, files: list[dict]) -> DataFrame:
+        """One DataFrame over the given manifest entries (empty when
+        there are none)."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f["path"]) for f in files]
+        )
 
     @staticmethod
     def _default_stats_cols(df: DataFrame) -> list[str]:
@@ -399,7 +396,6 @@ class SnapshotTable:
         df: DataFrame,
         stats_cols: list[str] | None = None,
         extra_meta: dict | None = None,
-        bloom_cols: list[str] | None = None,
         backend: CommitBackend | None = None,
         checkpoint_interval: int = 10,
     ) -> "SnapshotTable":
@@ -409,17 +405,12 @@ class SnapshotTable:
         )
         if tbl.versions():
             raise FileExistsError(f"snapshot table already exists at {path}")
-        files = tbl._write_files(
-            df, stats_cols or cls._default_stats_cols(df), bloom_cols
-        )
         tbl._commit(
             {
                 **(extra_meta or {}),
                 "op": "create",
                 "schema": json.loads(df.schema.json()),
-                "files": files,
-                "n_files": len(files),
-                "n_rows": sum(f["rows"] for f in files),
+                "files": tbl._write_files(df, stats_cols),
             },
             expected_parent=None,
         )
@@ -468,12 +459,7 @@ class SnapshotTable:
         files = snap["files"]
         if where:
             files = [f for f in files if _file_may_match(f, where)]
-        schema = self._schema(snap)
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, f["path"]) for f in files]
-        )
+        df = self._scan_files(self._schema(snap), files)
         for col, op, lit in where or []:
             df = df.where(_predicate(col, op, lit))
         return df
@@ -549,15 +535,8 @@ class SnapshotTable:
         for v in range(v_lo + 1, v_hi + 1):
             added, removed = self._step_delta(v)
             schema = self._schema(self._snapshot(v))
-
-            def _read(fl: list[dict]) -> DataFrame:
-                if not fl:
-                    return self.spark.createDataFrame([], schema)
-                return self.spark.read.schema(schema).parquet(
-                    *[os.path.join(self.path, f["path"]) for f in fl]
-                )
-
-            a_df, r_df = _read(added), _read(removed)
+            a_df = self._scan_files(schema, added)
+            r_df = self._scan_files(schema, removed)
             # short-circuit the one-sided cases (round 12): a pure
             # append has no removed files and a pure delete-all no
             # added ones — exceptAll against an empty side is a
@@ -588,7 +567,6 @@ class SnapshotTable:
         stats_cols: list[str] | None = None,
         extra_meta: dict | None = None,
         merge_schema: bool = False,
-        bloom_cols: list[str] | None = None,
         expected_parent: int | None = None,
     ) -> int:
         """Append ``df`` as new immutable files. With ``merge_schema``,
@@ -620,18 +598,12 @@ class SnapshotTable:
                 + [f for f in df.schema.fields if f.name not in known]
             )
         df = _align(df, schema)
-        new_files = snap["files"] + self._write_files(
-            df, stats_cols or self._default_stats_cols(df), bloom_cols
-        )
         return self._commit(
             {
-                **self._app_meta(snap),
                 **(extra_meta or {}),
                 "op": "append",
                 "schema": json.loads(schema.json()),
-                "files": new_files,
-                "n_files": len(new_files),
-                "n_rows": sum(f["rows"] for f in new_files),
+                "files": snap["files"] + self._write_files(df, stats_cols),
             },
             expected_parent=parent,
         )
@@ -650,17 +622,12 @@ class SnapshotTable:
         for corpora with incremental CDC subscribers."""
         parent = self.current_version()
         snap = self._snapshot(parent)
-        schema = self._schema(snap)
-        df = _align(df, schema)
-        new_files = self._write_files(df, self._default_stats_cols(df))
+        df = _align(df, self._schema(snap))
         return self._commit(
             {
-                **self._app_meta(snap),
                 "op": "overwrite",
                 "schema": snap["schema"],
-                "files": new_files,
-                "n_files": len(new_files),
-                "n_rows": sum(f["rows"] for f in new_files),
+                "files": self._write_files(df),
             },
             expected_parent=parent,
         )
@@ -685,78 +652,87 @@ class SnapshotTable:
         big = [f for f in snap["files"] if f["bytes"] >= small_file_bytes]
         if len(small) <= 1:
             return parent  # nothing to pack
-        schema = self._schema(snap)
         total = sum(f["bytes"] for f in small)
         n_out = target_partitions or max(1, total // small_file_bytes + 1)
-        packed = self.spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, f["path"]) for f in small]
-        ).coalesce(int(n_out))
-        new_files = big + self._write_files(
-            packed, self._default_stats_cols(packed)
+        packed = self._scan_files(self._schema(snap), small).coalesce(
+            int(n_out)
         )
         return self._commit(
             {
-                **self._app_meta(snap),
                 "op": "compact",
                 "schema": snap["schema"],
-                "files": new_files,
-                "n_files": len(new_files),
-                "n_rows": sum(f["rows"] for f in new_files),
+                "files": big + self._write_files(packed),
                 "compacted_files": len(small),
                 "carried_files": len(big),
             },
             expected_parent=parent,
         )
 
-    def delete_where(self, condition: Column | str) -> int:
+    def _split_hit_files(
+        self, snap: dict, matching: Callable[[DataFrame], DataFrame]
+    ) -> tuple[list[dict], list[dict]]:
+        """Copy-on-write phase 1, shared by every row-level rewrite:
+        split the files of snapshot ``snap`` into ``(kept, hit)``,
+        where a hit file holds at least one row of
+        ``matching(scan)``. The file name is bound AT SCAN TIME —
+        ``input_file_name()`` is empty for rows that crossed a
+        shuffle, and is ambiguous after a join whose other side is
+        itself a file source — so the caller may filter the scan with
+        a predicate or a join. One distributed scan; only distinct
+        file names reach the driver, never rows."""
+        scan = self.read(snap["version"]).withColumn(
+            "_hit_file", F.input_file_name()
+        )
+        hit_paths = {
+            _strip_scheme(r[0])
+            for r in matching(scan).select("_hit_file").distinct().collect()
+        }
+        kept, hit = [], []
+        for f in snap["files"]:
+            full = os.path.abspath(os.path.join(self.path, f["path"]))
+            (hit if full in hit_paths else kept).append(f)
+        return kept, hit
+
+    def _cow_delete(
+        self,
+        matching: Callable[[DataFrame], DataFrame],
+        surviving: Callable[[DataFrame], DataFrame],
+    ) -> int:
         """Copy-on-write delete. Three phases, Delta-style:
 
-        1. find the files that contain ≥1 matching row — one
-           distributed scan projecting only ``input_file_name()``
-           (Catalyst pushes the predicate to the parquet readers);
-           the collected result is a FILE list, never rows;
-        2. rewrite ONLY those files with the predicate inverted;
+        1. find the files that hold ≥1 ``matching`` row
+           (:meth:`_split_hit_files`);
+        2. rewrite ONLY those files, keeping their ``surviving`` rows;
         3. commit: carried-forward files + rewritten files.
 
         Unaffected files move by reference — at 100 TB a delete that
-        touches one day's partition rewrites that day, not the table.
-        Old snapshots remain readable (time travel) until vacuum."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
+        touches one day's partition rewrites that day, not the table —
+        and a delete that hits no file writes no data file. Old
+        snapshots remain readable (time travel) until vacuum."""
         parent = self.current_version()
         snap = self._snapshot(parent)
-        current = self.read(parent)
-        hit = (
-            current.where(cond)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        )
-        hit_paths = {_strip_scheme(r["f"]) for r in hit}
-        kept, rewrite = [], []
-        for f in snap["files"]:
-            full = os.path.abspath(os.path.join(self.path, f["path"]))
-            (rewrite if full in hit_paths else kept).append(f)
+        kept, hit = self._split_hit_files(snap, matching)
         new_files = list(kept)
-        if rewrite:
-            schema = self._schema(snap)
-            survivors = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f["path"]) for f in rewrite]
-            ).where(~cond)
-            new_files += self._write_files(
-                survivors, self._default_stats_cols(survivors)
-            )
+        if hit:
+            survivors = surviving(self._scan_files(self._schema(snap), hit))
+            new_files += self._write_files(survivors)
         return self._commit(
             {
-                **self._app_meta(snap),
                 "op": "delete",
                 "schema": snap["schema"],
                 "files": new_files,
-                "n_files": len(new_files),
-                "n_rows": sum(f["rows"] for f in new_files),
-                "rewrote_files": len(rewrite),
+                "rewrote_files": len(hit),
                 "carried_files": len(kept),
             },
             expected_parent=parent,
+        )
+
+    def delete_where(self, condition: Column | str) -> int:
+        """Copy-on-write delete of the rows matching ``condition``
+        (:meth:`_cow_delete`)."""
+        cond = F.expr(condition) if isinstance(condition, str) else condition
+        return self._cow_delete(
+            lambda df: df.where(cond), lambda df: df.where(~cond)
         )
 
     def delete_matching(self, keys: DataFrame) -> int:
@@ -768,62 +744,24 @@ class SnapshotTable:
         while this form keeps the ids distributed end to end — the
         hit-file probe is a LEFT SEMI join and the rewrite a LEFT
         ANTI join, so no id literal ever enters a plan or crosses the
-        driver. Same three COW phases and commit shape as
-        delete_where; unaffected files move by reference.
+        driver. Same COW phases and commit shape as delete_where.
 
         ``keys``' column names must all exist in the table schema
         (the join is on that column set). Join strategy is left to
         Catalyst/AQE — a churn-sized key relation broadcasts itself
         at runtime."""
         cols = list(keys.columns)
-        parent = self.current_version()
-        snap = self._snapshot(parent)
-        missing = [
-            c for c in cols if c not in self.read(parent).columns
-        ]
+        known = set(self._schema(self._snapshot()).fieldNames())
+        missing = [c for c in cols if c not in known]
         if not cols or missing:
             raise ValueError(
                 f"delete_matching: key columns {missing or cols} not "
                 "usable against the table schema"
             )
         keys = keys.select(*cols).distinct()
-        current = self.read(parent)
-        # capture the file name AT SCAN TIME: input_file_name() is
-        # empty for rows that crossed a shuffle, and the semi-join may
-        # shuffle — projecting it first pins it to the scan stage
-        hit = (
-            current.withColumn("_f", F.input_file_name())
-            .join(keys, cols, "left_semi")
-            .select(F.col("_f").alias("f"))
-            .distinct()
-            .collect()
-        )
-        hit_paths = {_strip_scheme(r["f"]) for r in hit}
-        kept, rewrite = [], []
-        for f in snap["files"]:
-            full = os.path.abspath(os.path.join(self.path, f["path"]))
-            (rewrite if full in hit_paths else kept).append(f)
-        new_files = list(kept)
-        if rewrite:
-            schema = self._schema(snap)
-            survivors = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f["path"]) for f in rewrite]
-            ).join(keys, cols, "left_anti")
-            new_files += self._write_files(
-                survivors, self._default_stats_cols(survivors)
-            )
-        return self._commit(
-            {
-                **self._app_meta(snap),
-                "op": "delete",
-                "schema": snap["schema"],
-                "files": new_files,
-                "n_files": len(new_files),
-                "n_rows": sum(f["rows"] for f in new_files),
-                "rewrote_files": len(rewrite),
-                "carried_files": len(kept),
-            },
-            expected_parent=parent,
+        return self._cow_delete(
+            lambda df: df.join(keys, cols, "left_semi"),
+            lambda df: df.join(keys, cols, "left_anti"),
         )
 
     def upsert(
@@ -845,44 +783,19 @@ class SnapshotTable:
         snap = self._snapshot(parent)
         schema = self._schema(snap)
         updates = _align(updates, schema)
-        current = self.read(parent)
-        keys = updates.select(*key_cols).distinct()
-        # input_file_name() must bind to the snapshot scan BEFORE the
-        # join: evaluated after a semi-join whose other side is itself
-        # a file source (updates derived from parquet), it is
-        # ambiguous and Spark rejects the plan (round 15)
-        hit = (
-            current.withColumn("f", F.input_file_name())
-            .join(F.broadcast(keys), key_cols, "left_semi")
-            .select("f")
-            .distinct()
-            .collect()
+        keys = F.broadcast(updates.select(*key_cols).distinct())
+        kept, hit = self._split_hit_files(
+            snap, lambda df: df.join(keys, key_cols, "left_semi")
         )
-        hit_paths = {_strip_scheme(r["f"]) for r in hit}
-        kept, rewrite = [], []
-        for f in snap["files"]:
-            full = os.path.abspath(os.path.join(self.path, f["path"]))
-            (rewrite if full in hit_paths else kept).append(f)
-        if rewrite:
-            affected = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f["path"]) for f in rewrite]
-            )
-        else:
-            affected = self.spark.createDataFrame([], schema)
-        merged = upsert_latest(affected, updates, key_cols, version_col)
-        merged = _align(merged, schema)
-        new_files = kept + self._write_files(
-            merged, self._default_stats_cols(merged)
+        merged = upsert_latest(
+            self._scan_files(schema, hit), updates, key_cols, version_col
         )
         return self._commit(
             {
-                **self._app_meta(snap),
                 "op": "upsert",
                 "schema": snap["schema"],
-                "files": new_files,
-                "n_files": len(new_files),
-                "n_rows": sum(f["rows"] for f in new_files),
-                "rewrote_files": len(rewrite),
+                "files": kept + self._write_files(_align(merged, schema)),
+                "rewrote_files": len(hit),
                 "carried_files": len(kept),
             },
             expected_parent=parent,
@@ -911,18 +824,12 @@ class SnapshotTable:
         clustered = cluster_by_zorder(
             self.read(parent), cols, n_partitions, bits
         )
-        new_files = self._write_files(
-            clustered, self._default_stats_cols(clustered)
-        )
         return self._commit(
             {
-                **self._app_meta(snap),
                 "op": "optimize_zorder",
                 "zorder_cols": cols,
                 "schema": snap["schema"],
-                "files": new_files,
-                "n_files": len(new_files),
-                "n_rows": sum(f["rows"] for f in new_files),
+                "files": self._write_files(clustered),
             },
             expected_parent=parent,
         )
@@ -1016,62 +923,6 @@ class SnapshotTable:
 
 
 # ------------------------------------------------------------------ helpers
-_BLOOM_BITS_PER_KEY = 10  # ~1% false-positive at k=7
-_BLOOM_HASHES = 7
-
-
-def _bloom_hashes(value) -> list[int]:
-    import decimal
-    import hashlib
-
-    out = []
-    # canonicalize numerics so a predicate literal `5` matches a
-    # stored `5.0` or Decimal('5') (both sides — build reads values
-    # via pyarrow to_pylist, which yields Decimal for decimal columns,
-    # while read(where=...) literals are plain int/float; divergent
-    # canon forms would FALSE-NEGATIVE the bloom and wrongly prune a
-    # file that holds the value). bool checked first (int subclass);
-    # types outside {bool,int,float,Decimal,str} are rejected at
-    # _write_files time so no other form can reach a bloom probe.
-    if isinstance(value, bool):
-        canon = repr(value).encode()
-    elif isinstance(value, (int, float, decimal.Decimal)):
-        canon = repr(float(value)).encode()
-    else:
-        canon = repr(value).encode()
-    for i in range(_BLOOM_HASHES):
-        h = hashlib.blake2b(canon, digest_size=8, salt=bytes([i])).digest()
-        out.append(int.from_bytes(h, "big"))
-    return out
-
-
-def _bloom_build(values) -> dict:
-    """Serialize a Bloom filter over the distinct values (base64 bit
-    array + bit count). ~10 bits/key, 7 hashes → ~1% FP."""
-    import base64
-
-    distinct = {v for v in values if v is not None}
-    m = max(64, len(distinct) * _BLOOM_BITS_PER_KEY)
-    bits = bytearray((m + 7) // 8)
-    for v in distinct:
-        for h in _bloom_hashes(v):
-            pos = h % m
-            bits[pos >> 3] |= 1 << (pos & 7)
-    return {"m": m, "b64": base64.b64encode(bytes(bits)).decode()}
-
-
-def _bloom_may_contain(bloom: dict, value) -> bool:
-    import base64
-
-    m = bloom["m"]
-    bits = base64.b64decode(bloom["b64"])
-    for h in _bloom_hashes(value):
-        pos = h % m
-        if not (bits[pos >> 3] >> (pos & 7)) & 1:
-            return False
-    return True
-
-
 def _json_safe(v):
     if isinstance(v, bytes):
         return None  # binary stats are not comparable via JSON; skip
@@ -1099,12 +950,10 @@ def _predicate(col: str, op: str, lit) -> Column:
 
 
 def _file_may_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
-    """Conservative stats check: False only when the file PROVABLY has
-    no matching rows (all predicates are ANDed). Equality predicates
-    additionally consult the file's Bloom filter when one was built —
-    the point-lookup case min/max can't prune on a high-cardinality
-    unsorted column (a needle `k = ?` hits every file's [min, max]
-    range but ~1% of Blooms)."""
+    """Conservative stats check: False only when the file's min/max
+    stats PROVE it has no matching rows (all predicates are ANDed). A
+    column without stats, or a manifest key this check does not read,
+    never prunes."""
     for col, op, lit in where:
         st = f.get("stats", {}).get(col)
         if st and st[0] is not None:
@@ -1118,10 +967,6 @@ def _file_may_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
                     return False
             except TypeError:
                 pass  # mixed types -> range can't prune
-        if op == "=":
-            bloom = f.get("blooms", {}).get(col)
-            if bloom and not _bloom_may_contain(bloom, lit):
-                return False
     return True
 
 

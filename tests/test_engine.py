@@ -308,6 +308,45 @@ def test_snapshot_engine_transactional_delete(spark, tmp_path_factory):
     assert eng.delete_collection("nope")["deleted"] is False
 
 
+@pytest.mark.parametrize(
+    "rival, target, deleted",
+    [
+        ("store_c", "a", True),  # a store of as many rows lands first
+        ("delete_b", "nope", False),  # a delete of "b" lands first
+    ],
+)
+def test_snapshot_delete_flag_ignores_concurrent_commits(
+    spark, tmp_path_factory, monkeypatch, rival, target, deleted
+):
+    """`deleted` reports what THIS delete removed: another writer's
+    commit landing just before it cannot flip the flag."""
+    from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
+
+    wh = str(tmp_path_factory.mktemp("wh_snap_race")) + "/t"
+    eng = VectorEngine(spark, wh, dim=4, table_format="snapshot")
+    eng.store("a", _mkdocs(2, 1, 4, seed=31, name_prefix="a"))
+    eng.store("b", _mkdocs(2, 1, 4, seed=32, name_prefix="b"))
+    delete_where = SnapshotTable.delete_where
+    rivals = {
+        "store_c": lambda: eng.store(
+            "c", _mkdocs(2, 1, 4, seed=33, name_prefix="c")
+        ),
+        "delete_b": lambda: delete_where(
+            SnapshotTable(spark, wh), F.col("collection") == "b"
+        ),
+    }
+    pending = [rivals[rival]]
+
+    def rival_lands_first(self, condition):
+        if pending:
+            pending.pop()()
+        return delete_where(self, condition)
+
+    monkeypatch.setattr(SnapshotTable, "delete_where", rival_lands_first)
+    assert eng.delete_collection(target)["deleted"] is deleted
+    assert target not in eng.list_collections()
+
+
 def test_snapshot_engine_streaming_ingest(spark, tmp_path_factory):
     """store_stream on a snapshot warehouse routes through the
     exactly-once SnapshotTable sink — commits, not loose files."""

@@ -75,6 +75,18 @@ def test_cow_delete_rewrites_only_hit_files(spark, tmp_path):
     assert got.count() == 1500
     # the pre-delete snapshot still reads completely
     assert tbl.read(version=1).count() == 2000
+    _assert_no_hit_delete(tbl, lambda: tbl.delete_where(F.col("bucket") == 7))
+
+
+def _assert_no_hit_delete(tbl, delete):
+    """A delete that matches no row commits the parent's manifest
+    unchanged and writes no data file."""
+    parent = [f["path"] for f in tbl._snapshot()["files"]]
+    data_dirs = set(os.listdir(tbl._data_dir))
+    snap = tbl._snapshot(delete())
+    assert snap["rewrote_files"] == 0
+    assert [f["path"] for f in snap["files"]] == parent
+    assert set(os.listdir(tbl._data_dir)) == data_dirs
 
 
 def test_commit_conflict_is_detected(spark, base_df, tmp_path):
@@ -133,6 +145,11 @@ def test_upsert_matches_global_merge(spark, base_df, tmp_path):
     assert sym_diff == 0
     snap = tbl._snapshot()
     assert snap["carried_files"] >= 1, "upsert must carry unaffected files"
+    # keys that hit no file carry every file and only add the updates
+    fresh = updates.withColumn("k", F.col("k") + 10_000)
+    tbl.upsert(fresh, key_cols=["k"], version_col="ver")
+    assert tbl._snapshot()["carried_files"] == snap["n_files"]
+    assert tbl.read().count() == 1100
 
 
 def test_vacuum_removes_only_unreferenced(spark, base_df, tmp_path):
@@ -202,31 +219,6 @@ def test_compact_packs_small_files(spark, tmp_path):
     assert tbl.read(version=1).count() == 5000
     # compacting an already-compact table is a no-op
     assert tbl.compact(small_file_bytes=1) == v
-
-
-def test_bloom_prunes_point_lookups_where_minmax_cannot(spark, tmp_path):
-    """Hash-distributed high-cardinality key: every file spans the
-    full [min, max] range, so footer stats prune nothing — the
-    per-file Bloom filter is what kills dead files on `k = ?`."""
-    df = spark.range(0, 20_000).select(
-        F.col("id").alias("k"), (F.col("id") % 5).alias("v")
-    ).repartition(8)  # round-robin: all files cover the whole k range
-    tbl = SnapshotTable.create(
-        spark, str(tmp_path / "t"), df, bloom_cols=["k"]
-    )
-    n_all = tbl.n_files()
-    assert n_all >= 8
-    # a present key: exactly one file truly holds it; bloom scans few
-    hit = [("k", "=", 12_345)]
-    assert tbl.pruned_file_count(hit) <= 2
-    assert tbl.read(where=hit).count() == 1
-    # an absent key inside the global range: min/max can't prune, the
-    # blooms almost surely all reject (8 files x 1% FP)
-    miss = [("k", "=", 20_001)]
-    assert tbl.pruned_file_count(miss) <= 1
-    assert tbl.read(where=miss).count() == 0
-    # numeric canonicalization: float literal matches stored int
-    assert tbl.read(where=[("k", "=", 12_345.0)]).count() == 1
 
 
 def test_concurrent_appends_with_retry_lose_nothing(spark, tmp_path):
@@ -353,6 +345,12 @@ def test_cow_delete_matching_rewrites_only_hit_files(spark, tmp_path):
     got2 = tbl.read()
     assert got2.where(F.col("k") == 402).count() == 0
     assert got2.where(F.col("k") == 403).count() == 1  # bucket is 3
+    _assert_no_hit_delete(
+        tbl,
+        lambda: tbl.delete_matching(
+            spark.createDataFrame([(-1,)], "k long")
+        ),
+    )
     with _pt.raises(ValueError, match="delete_matching"):
         tbl.delete_matching(
             spark.createDataFrame([(1,)], "nope long")
