@@ -4419,15 +4419,16 @@ def q_snap_engine_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end VectorEngine lifecycle on the ACID warehouse
     (round 9, VERDICT r8 task #5): store → search → transactional
     delete_collection → multi-collection search, ALL through the
-    engine facade with ``table_format="snapshot"`` (engine.py store/
-    delete seams) — the composition seam SnapshotTable tests pin
+    engine facade (engine.py store/delete seams over its
+    SnapshotTable) — the composition seam SnapshotTable tests pin
     directly but no recorded row drove. The embeddings table is
     ingested as documents (deterministic doc_ids, collection =
     ``col_{label mod 4}``, one chunk per doc) via store_dataframe
     (snapshot CREATE commit); phase ``before`` is the reference-parity
     top-10 over one collection (snapshot stats-pruned read); then
     delete_collection runs the copy-on-write DELETE commit and phase
-    ``after`` multi-searches every collection (union read path). The
+    ``after`` multi-searches every collection (one read pruned by an
+    ``in`` predicate on the collection stats). The
     oracle replays both phases relationally on the raw embeddings
     table, so one hash certifies ingest, snapshot scan, similarity,
     ACID delete visibility, and the multi-collection union. The
@@ -4474,9 +4475,7 @@ def q_snap_engine_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
 
     try:
-        eng = VectorEngine(
-            spark, root, dim=len(q), table_format="snapshot"
-        )
+        eng = VectorEngine(spark, root, dim=len(q))
         eng.store_dataframe(docs)
         rows = _phase(eng.search("col_1", q, 10), "before")
         eng.delete_collection("col_1")
@@ -11945,10 +11944,9 @@ REGISTRY: dict[
     # engine-facade lifecycle on the ACID warehouse (round-9
     # promotion, VERDICT r8 task #5): store → search → transactional
     # delete_collection → multi-search driven END-TO-END through
-    # VectorEngine(table_format="snapshot") — snap_delete_read pins
-    # SnapshotTable directly; this row pins the engine composition
-    # seam on top of it. Takes the slot freed by hybrid_search's
-    # demotion.
+    # VectorEngine — snap_delete_read pins SnapshotTable directly;
+    # this row pins the engine composition seam on top of it. Takes
+    # the slot freed by hybrid_search's demotion.
     "snap_engine_lifecycle": (q_snap_engine_lifecycle, ORACLE_SNAP_ENGINE),
     # retrieval evaluation metrics (round-13 promotion, VERDICT r12
     # task #1): per-query recall@10 / precision@10 / MRR of the exact

@@ -450,9 +450,10 @@ class SnapshotTable:
         where: list[tuple[str, str, object]] | None = None,
     ) -> DataFrame:
         """Read a snapshot. ``where`` is an optional list of simple
-        predicates ``(col, op, literal)`` with op in ``= < <= > >=``
-        used for FILE-LEVEL pruning against the snapshot's min/max
-        stats (planning-time data skipping). Pruning is advisory only
+        predicates ``(col, op, literal)`` with op in ``= < <= > >=``,
+        or ``in`` with a list literal, used for FILE-LEVEL pruning
+        against the snapshot's min/max stats (planning-time data
+        skipping). Pruning is advisory only
         — the predicates are ALSO applied to the rows, so a stats-less
         file degrades to a normal scan, never a wrong answer."""
         snap = self._snapshot(version)
@@ -943,6 +944,8 @@ def _strip_scheme(p: str) -> str:
 
 def _predicate(col: str, op: str, lit) -> Column:
     c = F.col(col)
+    if op == "in":
+        return c.isin(list(lit))
     return {
         "=": c == lit, "<": c < lit, "<=": c <= lit,
         ">": c > lit, ">=": c >= lit,
@@ -960,6 +963,8 @@ def _file_may_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
             lo, hi = st
             try:
                 if op == "=" and not (lo <= lit <= hi):
+                    return False
+                if op == "in" and not any(lo <= v <= hi for v in lit):
                     return False
                 if op in ("<", "<=") and not (lo < lit or (op == "<=" and lo <= lit)):
                     return False

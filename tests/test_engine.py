@@ -121,7 +121,6 @@ def test_delete_collection(spark, tmp_path_factory):
 
 
 
-@pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
 @settings(max_examples=6, deadline=None)
 @example(name="a/b")
 @example(name="p=q")
@@ -130,58 +129,74 @@ def test_delete_collection(spark, tmp_path_factory):
 @example(name="a\x00b")
 @given(name=st.text(st.characters(blacklist_categories=("Cs",)), min_size=1, max_size=16))
 def test_any_collection_name_round_trips_through_delete(
-    spark, tmp_path_factory, table_format, name
+    spark, tmp_path_factory, name
 ):
-    """Any collection name maps to exactly the storage ``store`` wrote:
+    """Any collection name maps to exactly the rows ``store`` wrote:
     store → search finds it → delete reports it → search is empty, and
     nothing next to the warehouse is touched (``x/../../sibling.txt``
-    once deleted the sentinel below). A NUL cannot be part of a
-    directory name, so a parquet-mode store of one must raise
-    ``ValueError`` before it writes anything."""
+    once deleted the sentinel below, when a name was a path)."""
     root = tmp_path_factory.mktemp("wh_names")
     sentinel = root / "sibling.txt"
     sentinel.write_text("keep")
-    eng = VectorEngine(spark, str(root / "wh"), dim=4, table_format=table_format)
+    eng = VectorEngine(spark, str(root / "wh"), dim=4)
     docs = _mkdocs(1, 1, 4, seed=8)
     q = docs[0]["chunks"][0]["embedding"]
-    if table_format == "parquet" and "\x00" in name:
-        with pytest.raises(ValueError):
-            eng.store(name, docs)
-        assert sorted(p.name for p in root.iterdir()) == ["sibling.txt"]
-    else:
-        eng.store(name, docs)
-        assert eng.search(name, q, 5).count() == 1
-        assert eng.delete_collection(name)["deleted"] is True
-        assert eng.search(name, q, 5).count() == 0
-        assert sorted(p.name for p in root.iterdir()) == ["sibling.txt", "wh"]
+    eng.store(name, docs)
+    assert eng.search(name, q, 5).count() == 1
+    assert eng.delete_collection(name)["deleted"] is True
+    assert eng.search(name, q, 5).count() == 0
+    assert sorted(p.name for p in root.iterdir()) == ["sibling.txt", "wh"]
     assert sentinel.read_text() == "keep"
 
 
-def test_store_stream_ingest(spark, tmp_path_factory):
-    """Streaming append lands the same rows batch search sees."""
-    import os
+def test_only_the_snapshot_format_is_accepted(spark, tmp_path):
+    """The parquet-directory format is gone: asking for it fails
+    loudly instead of silently writing the snapshot format."""
+    with pytest.raises(ValueError, match="table_format"):
+        VectorEngine(spark, str(tmp_path / "wh"), dim=4, table_format="parquet")
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4, table_format="snapshot")
+    assert eng.list_collections() == []
 
-    from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
 
-    wh = str(tmp_path_factory.mktemp("wh_stream"))
-    src = str(tmp_path_factory.mktemp("stream_src"))
-    ckpt = str(tmp_path_factory.mktemp("stream_ckpt"))
-
+def test_list_collections_raises_on_corrupt_log(spark, tmp_path):
+    """A corrupt head snapshot is an error for the catalog as for a
+    search — never an empty catalog."""
+    wh = str(tmp_path / "wh")
     eng = VectorEngine(spark, wh, dim=4)
-    batch_eng = VectorEngine(spark, src, dim=4)  # reuse writer for fixtures
-    batch_eng.store("s", _mkdocs(5, 2, 4, seed=21, name_prefix="s"))
+    eng.store("a", _mkdocs(1, 1, 4, seed=41))
+    eng.store("b", _mkdocs(1, 1, 4, seed=42))
+    head = max((tmp_path / "wh" / "_snapshots").glob("v*.json"))
+    head.write_text("{not json")
+    fresh = VectorEngine(spark, wh, dim=4)
+    with pytest.raises(OSError, match="corrupt snapshot"):
+        fresh.list_collections()
+    with pytest.raises(OSError, match="corrupt snapshot"):
+        fresh.search("a", [1.0, 0.0, 0.0, 0.0], 3)
 
-    stream = (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .parquet(os.path.join(src, "collection=s"))
-        .withColumn("collection", F.lit("s"))
+
+def test_requests_do_not_list_the_log(spark, tmp_path, monkeypatch):
+    """Once the log is checkpointed, store, search and delete resolve
+    the head from the checkpoint pointer: no request lists the log."""
+    from nebuia_vector_db_spark.sources.commit_backend import (
+        LocalFSCommitBackend,
     )
-    q = eng.store_stream(stream, checkpoint=ckpt)
-    q.awaitTermination()
 
-    assert eng.list_collections() == ["s"]
-    assert eng.documents(["s"]).count() == 5
-    assert eng.search("s", [1.0, 0.0, 0.0, 0.0], 3).count() == 3
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    for i in range(11):  # past the default checkpoint interval (10)
+        eng.store(f"c{i % 3}", _mkdocs(1, 1, 4, seed=50 + i))
+    listings = []
+    list_versions = LocalFSCommitBackend.list_versions
+
+    def counted(self):
+        listings.append(1)
+        return list_versions(self)
+
+    monkeypatch.setattr(LocalFSCommitBackend, "list_versions", counted)
+    assert eng.search("c1", [1.0, 0.0, 0.0, 0.0], 3).count() == 3
+    eng.store("c1", _mkdocs(1, 1, 4, seed=70))
+    assert eng.delete_collection("c2")["deleted"] is True
+    assert eng.multi_search(["c0", "c1"], [1.0, 0.0, 0.0, 0.0], 10).count() == 9
+    assert listings == []
 
 
 def test_store_reference_wire_shape_embedding(spark, tmp_path_factory):
@@ -258,41 +273,29 @@ def test_search_zero_query_vector_yields_zero_similarity(engine):
     assert rows and all(r["similarity"] == 0.0 for r in rows)
 
 
-def test_snapshot_engine_matches_parquet_engine(spark, tmp_path_factory):
-    """table_format='snapshot' is a drop-in: identical search results,
-    same catalog, and single-collection reads prune dead files at
-    planning time via snapshot stats."""
-    wh_p = str(tmp_path_factory.mktemp("wh_parquet"))
-    wh_s = str(tmp_path_factory.mktemp("wh_snap")) + "/t"
-    docs_a = _mkdocs(5, 2, 8, seed=11, name_prefix="a")
-    docs_b = _mkdocs(3, 2, 8, seed=12, name_prefix="b")
-    eng_p = VectorEngine(spark, wh_p, dim=8)
-    eng_s = VectorEngine(spark, wh_s, dim=8, table_format="snapshot")
-    for eng in (eng_p, eng_s):
-        eng.store("alpha", docs_a)
-        eng.store("beta", docs_b)
-    assert eng_s.list_collections() == ["alpha", "beta"]
+def test_snapshot_engine_prunes_files_by_collection_stats(spark, tmp_path_factory):
+    """Each store commit is single-collection, so a read for one
+    collection drops the other collections' files at planning time
+    via snapshot stats."""
+    wh = str(tmp_path_factory.mktemp("wh_snap")) + "/t"
+    eng = VectorEngine(spark, wh, dim=8)
+    eng.store("alpha", _mkdocs(5, 2, 8, seed=11, name_prefix="a"))
+    eng.store("beta", _mkdocs(3, 2, 8, seed=12, name_prefix="b"))
+    assert eng.list_collections() == ["alpha", "beta"]
 
-    q = list(np.random.default_rng(5).normal(size=8))
-    res_p = eng_p.search("alpha", q, 5).collect()
-    res_s = eng_s.search("alpha", q, 5).collect()
-    got_p = [(r["embedding_id"], round(r["similarity"], 9)) for r in res_p]
-    got_s = [(r["embedding_id"], round(r["similarity"], 9)) for r in res_s]
-    assert got_p == got_s
-
-    # each store commit is single-collection -> stats prune its files
-    tbl = eng_s._snapshot_table()
-    n_all = tbl.n_files()
-    n_alpha = tbl.pruned_file_count([("collection", "=", "alpha")])
+    n_all = eng.table.n_files()
+    n_alpha = eng.table.pruned_file_count([("collection", "=", "alpha")])
     assert 0 < n_alpha < n_all
+    n_in = eng.table.pruned_file_count([("collection", "in", ["alpha"])])
+    assert n_in == n_alpha
 
 
 def test_snapshot_engine_transactional_delete(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh_snap_del")) + "/t"
-    eng = VectorEngine(spark, wh, dim=4, table_format="snapshot")
+    eng = VectorEngine(spark, wh, dim=4)
     eng.store("keep", _mkdocs(4, 1, 4, seed=21, name_prefix="k"))
     eng.store("drop", _mkdocs(3, 1, 4, seed=22, name_prefix="d"))
-    tbl = eng._snapshot_table()
+    tbl = eng.table
     v_before = tbl.current_version()
 
     resp = eng.delete_collection("drop")
@@ -323,7 +326,7 @@ def test_snapshot_delete_flag_ignores_concurrent_commits(
     from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
 
     wh = str(tmp_path_factory.mktemp("wh_snap_race")) + "/t"
-    eng = VectorEngine(spark, wh, dim=4, table_format="snapshot")
+    eng = VectorEngine(spark, wh, dim=4)
     eng.store("a", _mkdocs(2, 1, 4, seed=31, name_prefix="a"))
     eng.store("b", _mkdocs(2, 1, 4, seed=32, name_prefix="b"))
     delete_where = SnapshotTable.delete_where
@@ -345,74 +348,6 @@ def test_snapshot_delete_flag_ignores_concurrent_commits(
     monkeypatch.setattr(SnapshotTable, "delete_where", rival_lands_first)
     assert eng.delete_collection(target)["deleted"] is deleted
     assert target not in eng.list_collections()
-
-
-def test_snapshot_engine_streaming_ingest(spark, tmp_path_factory):
-    """store_stream on a snapshot warehouse routes through the
-    exactly-once SnapshotTable sink — commits, not loose files."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="snap_stream_")
-    wh = base + "/wh"
-    src = base + "/src"
-
-    # stage DOCUMENT_SCHEMA-shaped parquet via a batch engine
-    feeder = VectorEngine(spark, src, dim=4)
-    feeder.store("s", _mkdocs(6, 1, 4, seed=31, name_prefix="s"))
-
-    eng = VectorEngine(spark, wh, dim=4, table_format="snapshot")
-    stream = spark.readStream.schema(
-        eng.documents().schema
-    ).parquet(src)
-    q = eng.store_stream(stream, base + "/ck")
-    q.awaitTermination()
-
-    assert eng.documents().count() == 6
-    tbl = eng._snapshot_table()
-    assert tbl.versions()  # commits landed in the snapshot log
-    assert tbl.meta("stream_watermarks") is not None
-    res = eng.search("s", [1.0, 0.0, 0.0, 0.0], 3)
-    assert res.count() == 3
-
-
-def test_hybrid_search_over_collection_chunks(spark, tmp_path_factory):
-    """Engine-facade hybrid retrieval: a chunk that matches the query
-    terms AND points along the query vector must outrank chunks with
-    only one signal; score decomposes as RRF of the two ranks."""
-    wh = str(tmp_path_factory.mktemp("hybrid_wh"))
-    eng = VectorEngine(spark, wh, dim=4)
-    docs = _mkdocs(5, 2, 4, seed=7)
-    # doc 0 chunk 0: keyword match + exactly the query direction
-    docs[0]["chunks"][0]["text"] = "quantum widget assembly"
-    docs[0]["chunks"][0]["embedding"] = [1.0, 0.0, 0.0, 0.0]
-    # doc 1 chunk 0: keyword match only (opposite vector)
-    docs[1]["chunks"][0]["text"] = "quantum widget manual"
-    docs[1]["chunks"][0]["embedding"] = [-1.0, 0.0, 0.0, 0.0]
-    eng.store("h", docs)
-
-    got = eng.hybrid_search(
-        "h", ["quantum", "widget"], [1.0, 0.0, 0.0, 0.0], top_k=5,
-        n_cand=10,
-    ).collect()
-    assert got[0]["text"] == "quantum widget assembly"
-    assert got[0]["rank_vec"] == 1 and got[0]["rank_kw"] in (1, 2)
-    for r in got:
-        want = 0.0
-        if r["rank_vec"] is not None:
-            want += 1.0 / (60.0 + r["rank_vec"])
-        if r["rank_kw"] is not None:
-            want += 1.0 / (60.0 + r["rank_kw"])
-        assert abs(r["rrf_score"] - want) < 1e-15
-    # tfidf keyword scorer runs through the same facade
-    alt = eng.hybrid_search(
-        "h", ["quantum", "widget"], [1.0, 0.0, 0.0, 0.0], top_k=3,
-        keyword="tfidf", n_cand=10,
-    ).collect()
-    assert alt[0]["text"] == "quantum widget assembly"
-    with pytest.raises(ValueError):
-        eng.hybrid_search("h", ["x"], [1.0, 0, 0, 0], keyword="nope")
-    with pytest.raises(DimensionMismatchError):
-        eng.hybrid_search("h", ["x"], [1.0, 0, 0], top_k=2)
 
 
 def test_search_min_similarity_radius_gate(spark, tmp_path_factory):
@@ -445,86 +380,6 @@ def test_multi_search_min_similarity_gate(spark, tmp_path_factory):
         ["m1", "m2"], [1.0, 0, 0, 0], 10, min_similarity=0.5
     ).collect()
     assert got and all(r["similarity"] >= 0.5 for r in got)
-
-
-def test_hybrid_search_on_snapshot_warehouse(spark, tmp_path_factory):
-    """The hybrid facade composes with the ACID table format: chunks()
-    reads through SnapshotTable, and the fused ranking still works."""
-    wh = str(tmp_path_factory.mktemp("hybrid_snap_wh"))
-    eng = VectorEngine(spark, wh, dim=4, table_format="snapshot")
-    docs = _mkdocs(4, 1, 4, seed=11)
-    docs[0]["chunks"][0]["text"] = "quantum widget assembly"
-    docs[0]["chunks"][0]["embedding"] = [1.0, 0.0, 0.0, 0.0]
-    eng.store("hs", docs)
-    got = eng.hybrid_search(
-        "hs", ["quantum"], [1.0, 0.0, 0.0, 0.0], top_k=4, n_cand=10
-    ).collect()
-    assert got[0]["text"] == "quantum widget assembly"
-    assert got[0]["rank_kw"] == 1 and got[0]["rank_vec"] == 1
-
-
-def test_hybrid_search_doc_ids_with_separator_chars(spark, tmp_path_factory):
-    """ADVICE r9: the hybrid chunk key escapes '#'/'\\' in doc_id, so
-    user-supplied ids containing the separator can never alias two
-    distinct chunks (which would merge ranks / duplicate rows in the
-    post-fusion join). Adversarial ids: 'a#1' pos 2 composes the same
-    raw string as 'a#1#2' pos would prefix."""
-    wh = str(tmp_path_factory.mktemp("hybrid_hash_wh"))
-    eng = VectorEngine(spark, wh, dim=2)
-    rows = []
-    for did, vec in (("a#1", [1.0, 0.0]), ("a#1#2", [0.0, 1.0]),
-                     ("a\\#1", [1.0, 1.0])):
-        rows.append(
-            {
-                "collection": "hh",
-                "doc_id": did,
-                "text": f"doc {did}",
-                "metadata": {"source": None, "name": did},
-                "chunks": [
-                    {
-                        "text": f"term{j} payload",
-                        "embedding": vec,
-                        "metadata": {"source": None, "name": f"{did}c{j}"},
-                        "semantic_score": 0.0,
-                    }
-                    for j in range(2)
-                ],
-            }
-        )
-    from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
-
-    eng.store_dataframe(spark.createDataFrame(rows, DOCUMENT_SCHEMA))
-    got = eng.hybrid_search(
-        "hh", ["payload"], [1.0, 0.0], top_k=10, n_cand=20
-    ).collect()
-    keys = [(r["doc_id"], r["position"]) for r in got]
-    # no aliasing: every (doc_id, position) chunk appears exactly once
-    assert len(keys) == len(set(keys)) == 6
-
-
-def test_range_search_returns_all_above_threshold(spark, tmp_path_factory):
-    """Engine radius query (round 10): every chunk at/above the
-    threshold, no top-k cap, exact agreement with a driver-side
-    recomputation; threshold 1.01 on unit vectors returns nothing,
-    and dimension mismatch raises."""
-    wh = str(tmp_path_factory.mktemp("range_wh"))
-    eng = VectorEngine(spark, wh, dim=4)
-    docs = _mkdocs(8, 3, 4, seed=11)
-    eng.store("r", docs)
-    q = [1.0, 0.0, 0.0, 0.0]
-    got = eng.range_search("r", q, min_similarity=0.2).collect()
-    all_rows = eng.search("r", q, top_k=1000).collect()
-    want = sorted(
-        ((r["doc_id"], r["position"]) for r in all_rows
-         if r["similarity"] >= 0.2)
-    )
-    assert sorted((r["doc_id"], r["position"]) for r in got) == want
-    assert len(got) < len(all_rows)  # threshold actually selects
-    for r in got:
-        assert r["similarity"] >= 0.2
-    assert eng.range_search("r", q, min_similarity=1e9).count() == 0
-    with pytest.raises(DimensionMismatchError):
-        eng.range_search("r", [1.0, 0.0], min_similarity=0.2)
 
 
 def test_registered_views_serve_full_sql(spark, sf_smoke):

@@ -84,9 +84,15 @@ def test_events_hourly_shuffle_budget(spark, sf_oracle):
 
 
 def test_engine_search_prunes_collection_partitions(spark, tmp_path_factory):
-    """A single-collection search must read ONLY that collection's
-    partition (≙ the reference's MinIO prefix listing, main.go:186-189):
-    the scan's PartitionFilters carry the collection predicate."""
+    """A search must read ONLY its collections' files (≙ the
+    reference's MinIO prefix listing, main.go:186-189): each store
+    commit writes one collection, and the snapshot manifest's
+    ``collection`` stats drop every other file before the scan is
+    planned — for one collection and for several."""
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
     from nebuia_vector_db_spark.engine import VectorEngine
 
     wh = str(tmp_path_factory.mktemp("wh_prune"))
@@ -109,14 +115,20 @@ def test_engine_search_prunes_collection_partitions(spark, tmp_path_factory):
                 }
             ],
         )
-    df = eng.search("b", [1.0, 0.0, 0.0, 0.0], 5)
-    from nebuia_vector_db_spark.plans.inspect import explain_str
 
-    text = explain_str(df)
-    import re
+    def data_files(df):
+        """The collections of each scanned file that holds rows (a
+        commit may also write a row-less file, which has no stats)."""
+        out = []
+        for f in df.inputFiles():
+            colls = pq.read_table(urlparse(f).path, columns=["collection"])
+            if colls.num_rows:
+                out.append(sorted(set(colls.column(0).to_pylist())))
+        return sorted(out)
 
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", text)
-    assert m and "collection" in m.group(1), text[:1500]
+    q = [1.0, 0.0, 0.0, 0.0]
+    assert data_files(eng.search("b", q, 5)) == [["b"]]
+    assert data_files(eng.multi_search(["a", "b"], q, 5)) == [["a"], ["b"]]
 
 
 def test_knn_join_partial_topk_before_shuffle(spark, sf_oracle):

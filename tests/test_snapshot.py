@@ -122,6 +122,13 @@ def test_data_skipping_prunes_files(spark, tmp_path):
     # equality predicate outside every file's range scans nothing
     assert tbl.pruned_file_count([("k", "=", -5)]) == 0
     assert tbl.read(where=[("k", "=", -5)]).count() == 0
+    # an in-list prunes to the files holding one of its values
+    where_in = [("k", "in", [9500, 9999])]
+    assert tbl.pruned_file_count(where_in) < n_all
+    got_in = tbl.read(where=where_in).select("k").collect()
+    assert sorted(r[0] for r in got_in) == [9500, 9999]
+    assert tbl.pruned_file_count([("k", "in", [-5, 20_000])]) == 0
+    assert tbl.read(where=[("k", "in", [-5, 20_000])]).count() == 0
 
 
 def test_upsert_matches_global_merge(spark, base_df, tmp_path):
@@ -172,9 +179,13 @@ def test_stats_check_is_conservative():
     assert _file_may_match(f, [("a", ">=", 20)])
     assert not _file_may_match(f, [("a", "<", 10)])
     assert _file_may_match(f, [("a", "<=", 10)])
+    assert _file_may_match(f, [("a", "in", [1, 15])])
+    assert not _file_may_match(f, [("a", "in", [1, 25])])
+    assert not _file_may_match(f, [("a", "in", [])])
     # missing stats or mixed types: never prune
     assert _file_may_match({"stats": {}}, [("a", "=", 1)])
     assert _file_may_match(f, [("a", "=", "zzz")])
+    assert _file_may_match(f, [("a", "in", ["zzz"])])
 
 
 def test_schema_evolution_additive(spark, base_df, tmp_path):
