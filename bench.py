@@ -293,7 +293,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from nebuia_vector_db_spark import queries as Q
-    from nebuia_vector_db_spark.functions.vector import numpy_dot_udf
+    from nebuia_vector_db_spark.functions.vector import dot
     from nebuia_vector_db_spark.operators.topk import knn_join, topk_search
     from nebuia_vector_db_spark.session import get_spark
 
@@ -487,7 +487,7 @@ def main() -> None:
         qn = Q.normalize_query(q_big.tolist())
         (
             big.withColumn("label", (F.col("vec_id") % 10))
-            .withColumn("sim", numpy_dot_udf(q_big.tolist())(F.col("embedding")))
+            .withColumn("sim", dot(F.col("embedding"), qn))
             .orderBy(F.desc("sim"), "vec_id")
             .limit(10)
             .collect()
@@ -499,7 +499,7 @@ def main() -> None:
     # ---- B5: IVF candidate pruning at 600k — the indexed scale path.
     # Build once (amortized across the query stream), probe 4/64 cells:
     # ~1/16 of the corpus scanned per query, recall recorded alongside.
-    from nebuia_vector_db_spark.operators.ann import build_ivf_index, recall_at_k
+    from nebuia_vector_db_spark.operators.ann import build_ivf_index
 
     def _build_b5():
         idx = build_ivf_index(big, n_cells=64)
@@ -1032,18 +1032,13 @@ def main() -> None:
     )
     _steal.mark("b12_fine")
     # ---- B12-FINE (round 9, VERDICT r8 task #3): same diverse
-    # 16-component batch, FINER geometry + two-level router. The
-    # 64-cell union saturation above is pigeonhole (16 disjoint
-    # queries x 8 probes >= 84% of 64 cells), not a routing defect:
-    # at C=512 the same batch unions ~23% of cells at recall 1.0.
-    # The router (16 coarse over the 512 fine centroids, width 4)
-    # keeps driver routing sublinear in C — its fine GEMM touches
-    # ~25% of the centroid matrix per query — so C can track corpus
-    # growth (C ~ sqrt(N)) without the routing matvec becoming the
-    # driver bottleneck.
+    # 16-component batch, FINER geometry. The 64-cell union saturation
+    # above is pigeonhole (16 disjoint queries x 8 probes >= 84% of 64
+    # cells), not a routing defect: at C=512 the same batch unions
+    # ~23% of cells at recall 1.0.
     det_fine_index = build_ivf_index_deterministic(
         clustered, 512, cmat[:100_000], seed=42
-    ).build_router(n_coarse=16, route_width=4)
+    )
     det_fine_index.assigned = det_fine_index.assigned.cache()
     det_fine_index.assigned.count()
     timings["b12_fine_batch_ann_nprobe8_sec"] = round(
@@ -1056,18 +1051,10 @@ def main() -> None:
         4,
     )
     fine_union = set()
-    routed_rows = 0
-    coarse, parent, width = det_fine_index._router
     for q in c_queries:
         fine_union.update(det_fine_index.probe_cells(q, 8))
-        qn = np.asarray(q) / np.linalg.norm(q)
-        topc = np.argsort(-(coarse @ qn), kind="stable")[:width]
-        routed_rows += int(np.isin(parent, topc).sum())
     timings["b12_fine_union_cells_fraction"] = round(
         len(fine_union) / det_fine_index.n_cells, 4
-    )
-    timings["b12_fine_router_rows_fraction"] = round(
-        routed_rows / (len(c_queries) * det_fine_index.n_cells), 4
     )
     timings["b12_fine_candidate_rows_fraction"] = round(
         det_fine_index.assigned.where(

@@ -2,8 +2,9 @@
 
 Everything here returns Column expressions built from
 ``pyspark.sql.functions`` higher-order functions so the hot path stays
-inside whole-stage codegen; the only Python-side kernels are the
-Arrow-batched pandas_udf fast paths, clearly marked.
+inside whole-stage codegen. No Python-side scoring kernel lives here:
+``functions.vector.arrow_list_to_matrix`` is the zero-copy matrix view
+the mapInArrow kernels of ``operators`` score with.
 """
 
 from nebuia_vector_db_spark.functions.vector import (
@@ -12,7 +13,6 @@ from nebuia_vector_db_spark.functions.vector import (
     l2_norm,
     l2_normalize,
     normalize_query,
-    numpy_dot_udf,
 )
 
 __all__ = [
@@ -21,5 +21,4 @@ __all__ = [
     "l2_norm",
     "l2_normalize",
     "normalize_query",
-    "numpy_dot_udf",
 ]

@@ -10,9 +10,10 @@ Two execution strategies:
   (``aggregate(zip_with(...))``): runs inside whole-stage codegen,
   deterministic left-to-right summation (bit-identical to a sequential
   C loop), used for oracle-checked correctness queries.
-- ``numpy_dot_udf(q)`` — Arrow-batched pandas_udf doing one BLAS
-  matrix-vector product per batch: the 10-100× fast path for bench
-  and large scans (SURVEY.md §4 P-4).
+- ``arrow_list_to_matrix(col)`` — the zero-copy (n, d) view of an
+  Arrow batch's vector column that the mapInArrow GEMM kernels of
+  ``operators.topk`` score with one BLAS product per batch: the fast
+  path for batch kNN and large scans (SURVEY.md §4 P-4).
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ from collections.abc import Iterator, Sequence
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def normalize_query(q: Sequence[float]) -> list[float]:
@@ -158,9 +158,9 @@ def arrow_list_to_matrix(col) -> np.ndarray:
     """pyarrow List/FixedSizeList array of floats → (n, d) ndarray with
     zero copies where the layout allows (contiguous values buffer).
 
-    This is THE difference between the pandas_udf path (per-row object
-    arrays, ``np.vstack`` copies every row) and the mapInArrow path:
-    the list array's values buffer is already the row-major matrix.
+    A pandas_udf would see per-row object arrays (``np.vstack`` copies
+    every row); under mapInArrow the list array's values buffer is
+    already the row-major matrix.
     """
     import pyarrow as pa
 
@@ -180,31 +180,3 @@ def arrow_list_to_matrix(col) -> np.ndarray:
             raise ValueError("ragged embedding column; expected fixed dim")
     mat = values.to_numpy(zero_copy_only=False)
     return mat.reshape(-1, d) if d else mat.reshape(0, 0)
-
-
-def numpy_dot_udf(q: Sequence[float], normalize: bool = True):
-    """Arrow-batched pandas_udf: sim(q, v) for a whole batch at once.
-
-    One ``np.vstack`` + one BLAS matvec per Arrow batch — the
-    vectorized fast path (SURVEY.md §4 P-4). Float64 accumulation; may
-    differ from the sequential SQL path in the last ulp (BLAS pairwise
-    summation), hence used for bench/serving, not oracle comparison.
-    """
-    qn = np.asarray(q, dtype=np.float64)
-    if normalize:
-        n = float(np.sqrt(np.sum(qn * qn)))
-        if n != 0.0:
-            qn = qn / n
-
-    @F.pandas_udf(T.DoubleType())
-    def _dot(batch):
-        if len(batch) == 0:
-            import pandas as pd
-
-            return pd.Series([], dtype="float64")
-        mat = np.vstack(batch.to_numpy()).astype(np.float64, copy=False)
-        import pandas as pd
-
-        return pd.Series(mat @ qn)
-
-    return _dot

@@ -15,12 +15,15 @@ index as a *batch* job and keep serving batch-style too:
   mechanism that makes collection-scoped search cheap (SURVEY.md §2.1
   O-2) — and ``centroids.npy`` the centroid matrix, written and read
   driver-side through the Hadoop FileSystem API (no Spark job).
-- **Query**: rank centroids by similarity to the query driver-side
-  (n_cells is small — this is a NumPy matvec over the centroid matrix),
-  take the ``nprobe`` best cells, and brute-force only those cells'
-  vectors with the exact kernel. ``nprobe = n_cells`` degrades to the
-  exact scan, which is how the oracle checks this operator end-to-end;
-  small ``nprobe`` is the scale path (recall measured in tests).
+- **Query**: score the centroids against the query (or query batch)
+  driver-side (n_cells is small — a NumPy product over the centroid
+  matrix), take each query's ``nprobe`` best cells with the one cell
+  selector, :func:`_select_cells` (ties to the lower cell id; the
+  IVF-PQ searches in operators/pq.py use it too), and brute-force
+  only those cells' vectors with the exact kernel. ``nprobe =
+  n_cells`` degrades to the exact scan, which is how the oracle checks
+  this operator end-to-end; small ``nprobe`` is the scale path (recall
+  measured in tests).
 
 Scale notes: the scored candidate set is ``nprobe/n_cells`` of the
 corpus; top-k is still TakeOrderedAndProject (per-partition heap, no
@@ -40,6 +43,7 @@ from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.functions.vector import normalize_query
 from nebuia_vector_db_spark.operators.topk import (
+    _d2_cut,
     _gemm_topk,
     _query_matrix,
     topk_per_group,
@@ -47,95 +51,55 @@ from nebuia_vector_db_spark.operators.topk import (
 )
 
 
+def _select_cells(cell_sims: np.ndarray, nprobe: int) -> np.ndarray:
+    """The one cell router of the IVF and IVF-PQ indexes: (nprobe, B)
+    cell ids, column ``b`` holding query ``b``'s ``nprobe`` best cells
+    of the (C, B) centroid-similarity matrix in rank order (similarity
+    desc, ties to the lower cell id). ``nprobe`` is clamped to [1, C].
+
+    The cut is the kernel's D-2 top-n (:func:`topk._d2_cut`) with the
+    cell id as the tie rank, so every caller — single query or batch,
+    IVF or IVF-PQ — probes the same cells for the same query."""
+    c = cell_sims.shape[0]
+    idx = _d2_cut(cell_sims, max(1, min(nprobe, c)), lambda: np.arange(c))
+    sims = np.take_along_axis(cell_sims, idx, axis=0)
+    return np.take_along_axis(idx, np.lexsort((idx, -sims), axis=0), axis=0)
+
+
+def _probe_mask(
+    cell_sims: np.ndarray, nprobe: int
+) -> tuple[np.ndarray, list[int]]:
+    """(C, B) allow-mask of :func:`_select_cells` and the sorted union
+    of the probed cells — the cells a batch scan reads."""
+    mask = np.zeros(cell_sims.shape, dtype=bool)
+    mask[_select_cells(cell_sims, nprobe), np.arange(cell_sims.shape[1])] = True
+    return mask, [int(c) for c in np.flatnonzero(mask.any(axis=1))]
+
+
 class IVFIndex:
     """A built IVF index: the corpus with an ``ivf_cell`` column plus
-    the centroid matrix (driver-side NumPy)."""
+    the centroid matrix (driver-side NumPy). Cell selection for every
+    search goes through :func:`_select_cells`."""
 
     def __init__(self, assigned: DataFrame, centroids: np.ndarray, vec_col: str):
         self.assigned = assigned
         self.centroids = centroids  # (n_cells, d) float64
         self.vec_col = vec_col
-        # two-level router state (build_router): coarse centroid
-        # matrix, fine-cell -> coarse parent map, default route width
-        self._router: tuple[np.ndarray, np.ndarray, int] | None = None
 
     @property
     def n_cells(self) -> int:
         return int(self.centroids.shape[0])
 
-    def build_router(
-        self, n_coarse: int | None = None, seed: int = 42,
-        route_width: int | None = None,
-    ) -> "IVFIndex":
-        """Two-level centroid router (round 9, VERDICT r8 task #3).
-
-        Clusters the FINE centroid matrix into ``n_coarse`` coarse
-        centroids (seeded driver-side Lloyd's — deterministic) and
-        records each fine cell's coarse parent. ``probe_cells`` then
-        routes a query through two tiny GEMMs: rank the coarse
-        centroids, keep the best ``route_width`` coarse clusters, and
-        run the fine GEMM only over their member cells — ~route_width/
-        n_coarse of the fine matrix instead of all of it. The probed
-        CELL SET this yields is what bounds the scan; at the b12-fine
-        geometry (C=512, n_coarse=16, width=4, nprobe=8) it matches
-        the flat router's recall (1.0) while touching ~25% of the
-        fine centroids per query (bench b12_fine_*).
-
-        Why this matters at scale: the scan-fraction fix for diverse
-        batches is FINER cells (the 64-cell b12 geometry saturates by
-        pigeonhole — 16 disjoint queries × 8 probes ≥ 84% of 64
-        cells; at C=512 the same batch unions 23%). Finer cells grow
-        the routing GEMM linearly with C; this router keeps routing
-        sublinear (√C coarse by default) so C can scale with corpus
-        size (C ≈ √N) without the driver matvec becoming the
-        bottleneck. Defaults: n_coarse = √C, route_width =
-        max(4, n_coarse/4) — width n_coarse degrades to the exact
-        flat router (test-pinned).
-        """
-        from nebuia_vector_db_spark.operators.pq import _kmeans_np
-
-        c = self.n_cells
-        n_coarse = int(n_coarse or max(1, round(c**0.5)))
-        n_coarse = min(n_coarse, c)
-        coarse = _kmeans_np(
-            np.ascontiguousarray(self.centroids, dtype=np.float32),
-            n_coarse,
-            iters=25,
-            seed=seed,
-        )  # (n_coarse, d) float64
-        co_sq = np.einsum("ij,ij->i", coarse, coarse)
-        parent = np.argmin(
-            self.centroids @ coarse.T * -2.0 + co_sq[None, :], axis=1
-        ).astype(np.int32)
-        width = int(route_width or max(4, n_coarse // 4))
-        self._router = (coarse, parent, min(width, n_coarse))
-        return self
-
-    def _probe_one(self, qn: np.ndarray, nprobe: int) -> np.ndarray:
-        """Probed cell ids for one normalized query (router-aware)."""
-        if self._router is None:
-            sims = self.centroids @ qn
-            order = np.argsort(-sims, kind="stable")
-            return order[: max(1, nprobe)]
-        coarse, parent, width = self._router
-        csims = coarse @ qn
-        top_coarse = np.argsort(-csims, kind="stable")[:width]
-        cand = np.flatnonzero(np.isin(parent, top_coarse))
-        if cand.size == 0:  # degenerate coarse clustering
-            cand = np.arange(self.n_cells)
-        fsims = self.centroids[cand] @ qn
-        order = np.argsort(-fsims, kind="stable")
-        return cand[order[: max(1, nprobe)]]
-
     def probe_cells(self, qvec: Sequence[float], nprobe: int) -> list[int]:
-        """Rank cells by dot(q/‖q‖, centroid) — driver-side matvec
-        (two-level when :meth:`build_router` was called).
+        """The ``nprobe`` best cells by dot(q/‖q‖, centroid), best
+        first — a driver-side matvec cut by :func:`_select_cells`.
 
         Uses the same raw-stored-vector similarity as the search kernel
         (SURVEY.md §1.5-1) so cell ranking is consistent with scoring.
         """
         qn = np.asarray(normalize_query(qvec), dtype=np.float64)
-        return [int(c) for c in self._probe_one(qn, nprobe)]
+        sims = (self.centroids @ qn)[:, None]  # (C, 1)
+        return _select_cells(sims, nprobe)[:, 0].tolist()
 
     def search(
         self,
@@ -170,8 +134,10 @@ class IVFIndex:
         per-query ``search`` scans ``nprobe/n_cells`` but runs one job
         per query. This is both at once:
 
-        - driver side: probe the ``nprobe`` best cells per query (a
-          (B, C) matvec over the resident centroid matrix) and build a
+        - driver side: one (C, d)·(d, B) product over the resident
+          centroid matrix, cut by :func:`_select_cells` to each query's
+          ``nprobe`` best cells (ties to the lower cell id — the cells
+          ``probe_cells`` and ``search`` pick for that query) as a
           (C, B) boolean probe mask;
         - scan side: ONE pass over only the UNION of probed cells
           (``ivf_cell IN (...)`` → partition/stats pruning — the scan
@@ -192,23 +158,7 @@ class IVFIndex:
         end-to-end; small ``nprobe`` is the scale path (bench b12).
         """
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
-        b = qmat.shape[0]
-        nprobe = max(1, min(nprobe, self.n_cells))
-        mask = np.zeros((self.n_cells, b), dtype=bool)
-        if self._router is None:
-            cell_sims = self.centroids @ qmat.T  # (C, B)
-            # per-query top-nprobe cells -> (C, B) allow-mask
-            probe_idx = np.argpartition(
-                -cell_sims, nprobe - 1, axis=0
-            )[:nprobe]
-            mask[probe_idx, np.arange(b)[None, :]] = True
-        else:
-            # two-level route per query (B is small; each probe is two
-            # tiny GEMMs over ~width/n_coarse of the fine matrix)
-            for qi in range(b):
-                mask[self._probe_one(qmat[qi], nprobe), qi] = True
-        union_cells = [int(c) for c in np.flatnonzero(mask.any(axis=1))]
-
+        mask, union_cells = _probe_mask(self.centroids @ qmat.T, nprobe)
         cand = self.assigned.where(F.col("ivf_cell").isin(union_cells))
         cut = _gemm_topk(
             cand, qids, qmat, k, self.vec_col, sim_col, query_id_col,
@@ -467,31 +417,3 @@ def recall_at_k_batch(
     return sum(
         len(exact[q] & approx[q]) / max(1, len(exact[q])) for q in exact
     ) / max(1, len(exact))
-
-
-def recall_at_k(
-    index: IVFIndex,
-    exact_corpus: DataFrame,
-    qvec: Sequence[float],
-    k: int,
-    nprobe: int,
-    id_col: str = "vec_id",
-) -> float:
-    """Fraction of the exact top-k the pruned search recovers —
-    the quality metric the nprobe knob trades against scan fraction."""
-    exact_ids = {
-        r[0]
-        for r in topk_search(
-            exact_corpus, qvec, k, vec_col=index.vec_col, tie_cols=[id_col]
-        )
-        .select(id_col)
-        .collect()
-    }
-    approx_ids = {
-        r[0]
-        for r in index.search(qvec, k, nprobe, tie_cols=[id_col])
-        .select(id_col)
-        .collect()
-    }
-    return len(exact_ids & approx_ids) / max(1, len(exact_ids))
-

@@ -40,7 +40,9 @@ from nebuia_vector_db_spark.functions.vector import normalize_query
 from nebuia_vector_db_spark.operators.ann import (
     _load_matrix,
     _matrix_file,
+    _probe_mask,
     _save_matrix,
+    _select_cells,
     assign_to_cells,
 )
 
@@ -171,8 +173,9 @@ class PQIndex:
         that candidate set — the memory-bounded near-exact path.
 
         On an IVF-PQ index, ``nprobe`` additionally restricts the ADC
-        scan to the best cells (centroid ranking driver-side, same as
-        operators/ann.py) — the composed prune-then-score stack.
+        scan to the best cells (the one cell selector of
+        operators/ann.py, ties to the lower cell id) — the composed
+        prune-then-score stack.
 
         One Arrow crossing (r16, guide §4): on an encode_pq-built
         index whose codes are not persisted, the scan fuses encode +
@@ -194,12 +197,7 @@ class PQIndex:
             qn = np.asarray(normalize_query(qvec), dtype=np.float64)
             cell_dots = self.cell_centroids @ qn  # (n_cells,)
             if nprobe is not None:
-                probe = [
-                    int(c)
-                    for c in np.argsort(-cell_dots, kind="stable")[
-                        : max(1, nprobe)
-                    ]
-                ]
+                probe = _select_cells(cell_dots[:, None], nprobe)[:, 0].tolist()
                 codes_src = codes_src.where(
                     F.col(self.cell_col).isin(probe)
                 )
@@ -402,7 +400,8 @@ def pq_search_batch(
     Driver side: one (B, m, k) stack of ADC tables (an einsum over the
     codebooks — ~0.5 MB at B=16/m=16/k=256, closure-shipped) plus,
     on an IVF-PQ index, per-query probed-cell masks whose union
-    bounds the scan. Scan side: per Arrow batch the (n, m) code
+    bounds the scan (``ann._probe_mask``: the cells ``PQIndex.search``
+    probes for the same query). Scan side: per Arrow batch the (n, m) code
     matrix indexes every query's table (m gathers), the cell term is
     added per query, non-probed (row, query) pairs mask to -inf, and
     a per-query local argpartition cuts to ≤ max(topk, rerank) rows
@@ -421,13 +420,12 @@ def pq_search_batch(
         dot,
         l2_normalize,
     )
-    from nebuia_vector_db_spark.operators.topk import topk_per_group
+    from nebuia_vector_db_spark.operators.topk import (
+        _query_matrix,
+        topk_per_group,
+    )
 
-    qrows = queries_df.select(query_id_col, query_vec_col).collect()
-    qids = np.array([r[0] for r in qrows])
-    qmat = np.vstack(
-        [np.asarray(normalize_query(r[1]), dtype=np.float64) for r in qrows]
-    )  # (B, d)
+    qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
     b = qmat.shape[0]
     m, k = index.m, index.k
     dsub = index.codebooks.shape[2]
@@ -444,13 +442,7 @@ def pq_search_batch(
     if index.cell_centroids is not None:
         cell_dots = index.cell_centroids @ qmat.T  # (C, B)
         if nprobe is not None:
-            npb = max(1, min(nprobe, cell_dots.shape[0]))
-            probe_idx = np.argpartition(-cell_dots, npb - 1, axis=0)[:npb]
-            mask = np.zeros(cell_dots.shape, dtype=bool)
-            mask[probe_idx, np.arange(b)[None, :]] = True
-            union_cells = [
-                int(c) for c in np.flatnonzero(mask.any(axis=1))
-            ]
+            mask, union_cells = _probe_mask(cell_dots, nprobe)
             codes_src = codes_src.where(
                 F.col(index.cell_col).isin(union_cells)
             )

@@ -7,7 +7,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from nebuia_vector_db_spark.operators.ann import build_ivf_index, recall_at_k
+from nebuia_vector_db_spark.operators.ann import (
+    IVFIndex,
+    _probe_mask,
+    _select_cells,
+    build_ivf_index,
+    recall_at_k_batch,
+)
 from nebuia_vector_db_spark.operators.topk import topk_search
 from nebuia_vector_db_spark.sources.registry import load_table
 
@@ -43,8 +49,8 @@ def test_partial_probe_recall_and_pruning(spark, sf_oracle):
     assert 0 < n_cand < n_total
 
     # probing more cells can only improve recall; full probe is 1.0
-    r2 = recall_at_k(index, emb, q, k=10, nprobe=2)
-    r_full = recall_at_k(index, emb, q, k=10, nprobe=index.n_cells)
+    r2 = recall_at_k_batch(index, emb, [q], k=10, nprobe=2)
+    r_full = recall_at_k_batch(index, emb, [q], k=10, nprobe=index.n_cells)
     assert 0.0 <= r2 <= r_full == 1.0
     # the query's own cell is probed first → its exact NN (itself) found
     assert r2 >= 0.1
@@ -368,87 +374,48 @@ def test_saved_index_search_batch_prunes_partitions(
     } == want
 
 
-def test_router_full_width_equals_flat_probe(spark, sf_oracle):
-    """Round 9 (VERDICT r8 task #3): the two-level router with
-    route_width == n_coarse degrades to EXACTLY the flat probe — the
-    candidate set is every fine cell, the fine GEMM and stable
-    ordering are identical — so routing is a pure cost optimization,
-    never a silent semantic change."""
-    from nebuia_vector_db_spark.operators.ann import (
-        build_ivf_index_deterministic,
-    )
-
-    emb = _emb(spark, sf_oracle).cache()
-    mat = np.array(
-        [r["embedding"] for r in emb.orderBy("vec_id").collect()],
-        dtype=np.float32,
-    )
-    queries = [mat[i].astype(np.float64).tolist() for i in (1, 5, 13, 42)]
-    flat = build_ivf_index_deterministic(emb, 16, mat, seed=7)
-    routed = build_ivf_index_deterministic(emb, 16, mat, seed=7)
-    routed.build_router(n_coarse=4, route_width=4)
-    for q in queries:
-        for nprobe in (1, 3, 8, 16):
-            assert routed.probe_cells(q, nprobe) == flat.probe_cells(
-                q, nprobe
-            )
+# centroid similarities [1, 0, 0, 0.6] for the query [1, 0]: cells 1
+# and 2 tie at the third place
+_TIE_CENTROIDS = np.array([[1.0, 0.0], [0.0, 1.0], [0.0, -1.0], [0.6, 0.8]])
 
 
-def test_router_build_is_deterministic(spark, sf_oracle):
-    from nebuia_vector_db_spark.operators.ann import (
-        build_ivf_index_deterministic,
-    )
+def test_select_cells_ties_to_lower_cell_id():
+    """The one cell selector (IVF and IVF-PQ, single query and batch)
+    ranks by similarity and gives a tie to the lower cell id, the order
+    a stable argsort gives; nprobe is clamped to [1, C]."""
+    sims = _TIE_CENTROIDS @ np.array([[1.0, 0.0], [-1.0, 0.0]]).T  # (C, B)
+    assert _select_cells(sims, 3).T.tolist() == [[0, 3, 1], [1, 2, 3]]
+    assert _select_cells(sims, 0).T.tolist() == [[0], [1]]
+    assert _select_cells(sims, 9).T.tolist() == [[0, 3, 1, 2], [1, 2, 3, 0]]
+    mask, union = _probe_mask(sims, 3)
+    assert mask.T.tolist() == [[True, True, False, True], [False, True, True, True]]
+    assert union == [0, 1, 2, 3]
 
-    emb = _emb(spark, sf_oracle)
-    mat = np.array(
-        [r["embedding"] for r in emb.orderBy("vec_id").collect()],
-        dtype=np.float32,
-    )
-    a = build_ivf_index_deterministic(emb, 16, mat, seed=7).build_router(
-        n_coarse=4
-    )
-    b = build_ivf_index_deterministic(emb, 16, mat, seed=7).build_router(
-        n_coarse=4
-    )
-    assert np.array_equal(a._router[0], b._router[0])
-    assert np.array_equal(a._router[1], b._router[1])
-    assert a._router[2] == b._router[2]
+    rng = np.random.default_rng(3)
+    tied = rng.integers(0, 4, size=(16, 32)).astype(np.float64)
+    for nprobe in range(1, 17):
+        want = np.argsort(-tied, axis=0, kind="stable")[:nprobe]
+        assert np.array_equal(_select_cells(tied, nprobe), want)
 
 
-def test_router_search_batch_preserves_recall_on_clustered(spark):
-    """On a clustered corpus with fine cells (the b12_fine geometry in
-    miniature): routed batch search keeps the flat probe's recall
-    while the router's fine GEMM touches only the routed coarse
-    clusters' members, and the probed-cell union stays a small
-    fraction of all cells for a diverse batch."""
-    from nebuia_vector_db_spark.operators.ann import (
-        build_ivf_index_deterministic,
-        recall_at_k_batch,
+def test_search_and_search_batch_probe_the_same_tied_cells(spark):
+    """One corpus row per cell, query [1, 0], nprobe=3: the probe is
+    cells {0, 1, 3} (the tie at the cut goes to cell 1), and search
+    and search_batch both return exactly those cells' rows."""
+    corpus = spark.createDataFrame(
+        [(i, i, c.tolist()) for i, c in enumerate(_TIE_CENTROIDS)],
+        "vec_id long, ivf_cell int, embedding array<double>",
     )
-
-    rng = np.random.default_rng(5)
-    centers = rng.normal(size=(16, 16)) * 4.0
-    cid = rng.integers(0, 16, size=8000)
-    mat = centers[cid] + rng.normal(scale=0.5, size=(8000, 16))
-    df = spark.createDataFrame(
-        [(int(i), mat[i].tolist()) for i in range(len(mat))],
-        "vec_id long, embedding array<double>",
-    ).cache()
-    queries = [
-        (centers[c] + rng.normal(scale=0.5, size=16)).tolist()
-        for c in range(8)
-    ]
-    idx = build_ivf_index_deterministic(df, 128, mat[:4000], seed=42)
-    idx.assigned = idx.assigned.cache()
-    flat_rec = recall_at_k_batch(idx, df, queries, k=10, nprobe=8)
-    routed = build_ivf_index_deterministic(df, 128, mat[:4000], seed=42)
-    routed.assigned = routed.assigned.cache()
-    routed.build_router(n_coarse=16, route_width=4)
-    routed_rec = recall_at_k_batch(routed, df, queries, k=10, nprobe=8)
-    assert routed_rec >= flat_rec - 0.05, (flat_rec, routed_rec)
-    assert routed_rec >= 0.9
-    # diverse 8-component batch unions well under half the fine cells
-    union = set()
-    for q in queries:
-        union.update(routed.probe_cells(q, 8))
-    assert len(union) / routed.n_cells < 0.5
+    index = IVFIndex(corpus, _TIE_CENTROIDS, "embedding")
+    q = [1.0, 0.0]
+    probed = set(index.probe_cells(q, 3))
+    assert probed == {0, 1, 3}
+    queries = spark.createDataFrame([(0, q)], "query_id long, query_vec array<double>")
+    batch = {
+        r["vec_id"]
+        for r in index.search_batch(queries, 4, nprobe=3, tie_cols=["vec_id"]).collect()
+    }
+    single = {
+        r["vec_id"] for r in index.search(q, 4, nprobe=3, tie_cols=["vec_id"]).collect()
+    }
+    assert batch == single == probed

@@ -1,8 +1,4 @@
-import math
-
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.functions.vector import (
     cosine_sim,
@@ -10,7 +6,6 @@ from nebuia_vector_db_spark.functions.vector import (
     l2_norm,
     l2_normalize,
     normalize_query,
-    numpy_dot_udf,
 )
 
 
@@ -52,25 +47,6 @@ def test_cosine_sim_pairs(spark):
     vals = [r["c"] for r in df.select(cosine_sim("a", "b").alias("c")).collect()]
     assert vals[0] == pytest.approx(0.0)
     assert vals[1] == pytest.approx(1.0)
-
-
-def test_numpy_udf_matches_sql_path(spark):
-    rng = np.random.default_rng(7)
-    vecs = rng.normal(size=(50, 16)).astype(np.float32)
-    q = rng.normal(size=16).tolist()
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)], "id long, v array<float>"
-    )
-    sql_vals = {
-        r["id"]: r["s"]
-        for r in df.select("id", dot("v", normalize_query(q)).alias("s")).collect()
-    }
-    np_vals = {
-        r["id"]: r["s"]
-        for r in df.select("id", numpy_dot_udf(q)(F.col("v")).alias("s")).collect()
-    }
-    for i in sql_vals:
-        assert math.isclose(sql_vals[i], np_vals[i], rel_tol=1e-9, abs_tol=1e-9)
 
 
 def test_limit_blas_threads_restores_prior_count():
