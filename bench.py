@@ -930,7 +930,7 @@ def main() -> None:
 
     _steal.mark("b12")
     # ---- B12: BATCH ANN (round 4, IVFIndex.search_batch) — 16 queries
-    # through per-query probed cells in ONE masked-GEMM corpus pass,
+    # through per-query probed cells in ONE cell-grouped GEMM corpus pass,
     # vs the exact batch kNN full scan. On the clustered corpus the
     # probed cells concentrate, so the scan fraction (union of probed
     # cells / all cells, and candidate rows / corpus) is the
@@ -1994,7 +1994,7 @@ def main() -> None:
 
     # b21_hardneg: 16 queries x 600k corpus, label-excluded top-10
     # through the codegen'd HOF dot + WindowGroupLimit cut (the
-    # oracle-exact sql path; the masked-GEMM arrow variant would only
+    # oracle-exact sql path; a label-grouped GEMM arrow variant would only
     # be faster). Labels synthesized as vec_id % 16.
     from nebuia_vector_db_spark.operators.mining import hard_negatives
 
@@ -2383,7 +2383,7 @@ def main() -> None:
                     "corpus (2.4 GB payload), where skipping must win "
                     "wall clock, not just file fraction",
                     "b12": "batch ANN (search_batch): 16 queries, one "
-                    "masked-GEMM pass over the union of probed cells "
+                    "cell-grouped GEMM pass over the union of probed cells "
                     "(nprobe 8/64) vs exact batch kNN. The plain rows "
                     "are the 16-component diverse batch (worst case: "
                     "union covers most cells); b12_local_* is a "

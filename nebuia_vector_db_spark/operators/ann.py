@@ -25,10 +25,14 @@ index as a *batch* job and keep serving batch-style too:
   this operator end-to-end; small ``nprobe`` is the scale path (recall
   measured in tests).
 
-Scale notes: the scored candidate set is ``nprobe/n_cells`` of the
-corpus; top-k is still TakeOrderedAndProject (per-partition heap, no
-shuffle). The centroid matrix lives on the driver (n_cells × d floats —
-4 MB at 16k cells × 64 d), never shuffled.
+Scale notes: each query scores ``nprobe/n_cells`` of the corpus. A
+batch scan reads the union of its queries' probed cells, but the
+kernel multiplies each cell's rows only by the queries that probed it
+(:func:`_cell_queries`), so its GEMM work scales with ``nprobe /
+n_cells`` even when the union is every cell. Top-k is still
+TakeOrderedAndProject (per-partition heap, no shuffle). The centroid
+matrix lives on the driver (n_cells × d floats — 4 MB at 16k cells ×
+64 d), never shuffled.
 """
 
 from __future__ import annotations
@@ -74,6 +78,18 @@ def _probe_mask(
     mask = np.zeros(cell_sims.shape, dtype=bool)
     mask[_select_cells(cell_sims, nprobe), np.arange(cell_sims.shape[1])] = True
     return mask, [int(c) for c in np.flatnonzero(mask.any(axis=1))]
+
+
+def _cell_queries(cell_sims: np.ndarray, nprobe: int) -> dict[int, np.ndarray]:
+    """:func:`_select_cells` inverted: each probed cell id mapped to the
+    ascending indices of the queries that probed it. Its keys are the
+    union of probed cells, the cells a batch scan reads."""
+    sel = _select_cells(cell_sims, nprobe)  # (nprobe, B)
+    cells = sel.ravel()
+    queries = np.tile(np.arange(sel.shape[1]), sel.shape[0])
+    order = np.lexsort((queries, cells))
+    ids, starts = np.unique(cells[order], return_index=True)
+    return dict(zip(ids.tolist(), np.split(queries[order], starts[1:])))
 
 
 class IVFIndex:
@@ -137,16 +153,18 @@ class IVFIndex:
         - driver side: one (C, d)·(d, B) product over the resident
           centroid matrix, cut by :func:`_select_cells` to each query's
           ``nprobe`` best cells (ties to the lower cell id — the cells
-          ``probe_cells`` and ``search`` pick for that query) as a
-          (C, B) boolean probe mask;
+          ``probe_cells`` and ``search`` pick for that query) and
+          inverted by :func:`_cell_queries` into a cell → query-index
+          map, which ships in the kernel closure;
         - scan side: ONE pass over only the UNION of probed cells
           (``ivf_cell IN (...)`` → partition/stats pruning — the scan
           fraction is |union| / n_cells, not 1.0) through the same
           Arrow kernel as ``knn_join(method='arrow')``
-          (``topk._gemm_topk``) with the probe mask: one (n, d)·(d, B)
-          GEMM per batch, pairs whose cell was not probed for that
-          query score -inf and are dropped (a candidate is charged
-          only to the queries that probed its cell), and a per-query
+          (``topk._gemm_topk``): per Arrow batch the rows are grouped
+          by cell and each cell's rows are multiplied, in row blocks,
+          only by the queries that probed it (a candidate is charged
+          only to those queries, so the GEMM work is about
+          ``nprobe / n_cells`` of the exact scan's), and a per-query
           local cut keeps each batch's ≤ k best rows per query in the
           D-2 order (ties at the cut go by ``tie_cols``);
         - global cut: the same bounded row_number window as
@@ -158,11 +176,11 @@ class IVFIndex:
         end-to-end; small ``nprobe`` is the scale path (bench b12).
         """
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
-        mask, union_cells = _probe_mask(self.centroids @ qmat.T, nprobe)
-        cand = self.assigned.where(F.col("ivf_cell").isin(union_cells))
+        cell_queries = _cell_queries(self.centroids @ qmat.T, nprobe)
+        cand = self.assigned.where(F.col("ivf_cell").isin(list(cell_queries)))
         cut = _gemm_topk(
             cand, qids, qmat, k, self.vec_col, sim_col, query_id_col,
-            tie_cols=tie_cols, cell_mask=mask,
+            tie_cols=tie_cols, cell_queries=cell_queries,
         )
         return topk_per_group(
             cut, [query_id_col], sim_col, k, tie_cols=tie_cols

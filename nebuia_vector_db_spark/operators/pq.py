@@ -404,8 +404,9 @@ def pq_search_batch(
     probes for the same query). Scan side: per Arrow batch the (n, m) code
     matrix indexes every query's table (m gathers), the cell term is
     added per query, non-probed (row, query) pairs mask to -inf, and
-    a per-query local argpartition cuts to ≤ max(topk, rerank) rows
-    per query; the global cut is the bounded row_number window.
+    a per-query local cut keeps ≤ max(topk, rerank) rows per query in
+    the D-2 order (``topk._d2_cut``, ties at the cut to the lower
+    ``id_col``); the global cut is the bounded row_number window.
 
     With ``rerank > 0`` the per-query shortlists are re-scored
     EXACTLY: one inner join of the (query_id, id) shortlist against
@@ -421,7 +422,9 @@ def pq_search_batch(
         l2_normalize,
     )
     from nebuia_vector_db_spark.operators.topk import (
+        _d2_cut,
         _query_matrix,
+        _tie_rank,
         topk_per_group,
     )
 
@@ -472,7 +475,7 @@ def pq_search_batch(
                 if mask is not None:
                     scores = np.where(mask[cells], scores, -np.inf)
             kk = min(cut, n)
-            idx = np.argpartition(-scores, kk - 1, axis=0)[:kk]  # (kk, B)
+            idx = _d2_cut(scores, kk, lambda: _tie_rank(rb, [id_col]))  # (kk, B)
             rows = idx.ravel(order="F")
             qcol = np.repeat(qids, kk)
             scol = np.take_along_axis(scores, idx, axis=0).ravel(order="F")

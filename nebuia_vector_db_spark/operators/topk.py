@@ -17,19 +17,25 @@ Spark-first design notes (scale):
   window (``topk_per_group``).
 - Single-query search (:func:`topk_search`) has one path: the
   codegen'd ``dot`` expression cut by ``orderBy(desc).limit(k)``.
-- The batch Arrow paths run ONE kernel, :func:`_gemm_topk`: per
-  Arrow batch one (n, d)·(d, B) GEMM against the normalized query
-  matrix and a per-query cut to ``min(k, n)`` rows in the D-2 order
-  (rows tied at the cut are decided by the caller's tie columns), so a
-  task ships ≤ k rows per (batch, query). ``knn_join(method='arrow')``
-  is its unmasked case, and ``IVFIndex.search_batch``
-  (operators/ann.py) passes a (C, B) probe mask keyed on ``ivf_cell``.
-  A query batch becomes that matrix in one place, :func:`_query_matrix`.
+- The batch Arrow paths run ONE kernel, :func:`_gemm_topk`, which
+  hands each Arrow batch to one NumPy function, :func:`_score_batch`.
+  It splits the rows into groups, each scored only against its own
+  queries: ``knn_join(method='arrow')`` is the one-group case (every
+  row with every query), and ``IVFIndex.search_batch``
+  (operators/ann.py) groups the rows by ``ivf_cell`` and scores each
+  cell only against the queries that probed it. A group is multiplied
+  in blocks of ``_BLOCK_ROWS`` rows, each block cut to k rows per
+  query in the D-2 order (rows tied at a cut are decided by the
+  caller's tie columns), so temporaries are O(block × B) whatever the
+  batch size and a task ships ≤ k rows per (batch, query). A query
+  batch becomes the normalized query matrix in one place,
+  :func:`_query_matrix`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+import functools
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -85,26 +91,23 @@ def _gemm_topk(
     sim_col: str,
     query_id_col: str,
     tie_cols: Sequence[str] = (),
-    cell_mask: np.ndarray | None = None,
+    cell_queries: dict[int, np.ndarray] | None = None,
 ) -> DataFrame:
     """The Arrow scoring kernel behind ``knn_join(method='arrow')`` and
-    ``IVFIndex.search_batch``.
+    ``IVFIndex.search_batch``: :func:`_score_batch` over each Arrow
+    batch, on the zero-copy view of ``vec_col``, so a task emits
+    ≤ batches × B × k rows, the corpus never shuffles, and the vectors
+    never materialize as Python objects. ``vec_col`` is dropped from
+    the output and ``query_id_col`` (long) is added.
 
-    Per Arrow batch: ONE (n, d)·(d, B) BLAS product over the zero-copy
-    view of ``vec_col``, then a per-query cut to ``min(k, n)`` rows in
-    the D-2 order (:func:`_d2_cut`) — a task emits ≤ batches × B × k
-    rows, the corpus never shuffles, and the vectors never materialize
-    as Python objects. ``vec_col`` is dropped from the output and
-    ``query_id_col`` (long) is added.
-
-    ``cell_mask`` is an optional (C, B) boolean allow-mask keyed on the
-    ``ivf_cell`` column: pairs whose cell the query did not probe score
-    ``-inf`` before the cut and are dropped after it, and ``ivf_cell``
-    is dropped from the output. The caller applies the global cut.
+    ``cell_queries`` maps an ``ivf_cell`` value to the indices (into
+    ``qids``) of the queries that probed it: a row is scored only
+    against its cell's queries, and ``ivf_cell`` is dropped from the
+    output. The caller applies the global cut.
     """
     import pyarrow as pa
 
-    drop = {vec_col, "ivf_cell"} if cell_mask is not None else {vec_col}
+    drop = {vec_col, "ivf_cell"} if cell_queries is not None else {vec_col}
     fields = [(n, t) for n, t in df.dtypes if n not in drop]
     keep = [n for n, _ in fields]
     added = [(query_id_col, "long"), (sim_col, "double")]
@@ -113,27 +116,98 @@ def _gemm_topk(
 
     def _score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            mat = arrow_list_to_matrix(rb.column(vec_col))
-            kk = min(k, mat.shape[0])
-            if kk == 0:
-                continue
-            sims = mat.astype(np.float64, copy=False) @ qmat.T  # (n, B)
-            if cell_mask is not None:
+            cells = None
+            if cell_queries is not None:
                 cells = np.asarray(rb.column("ivf_cell")).astype(np.int64)
-                sims = np.where(cell_mask[cells], sims, -np.inf)
-            idx = _d2_cut(sims, kk, lambda: _tie_rank(rb, tie_cols))  # (kk, B)
-            rows = idx.ravel(order="F")
-            scol = np.take_along_axis(sims, idx, axis=0).ravel(order="F")
-            qcol = np.repeat(qids, kk)
-            if cell_mask is not None:  # drop not-probed pairs
-                live = np.isfinite(scol)
-                rows, scol, qcol = rows[live], scol[live], qcol[live]
+            rows, qidx, sims = _score_batch(
+                arrow_list_to_matrix(rb.column(vec_col)), qmat, k,
+                lambda: _tie_rank(rb, tie_cols), cells, cell_queries,
+            )
             take = pa.array(rows)
             arrays = [rb.column(c).take(take) for c in keep]
-            arrays += [pa.array(qcol), pa.array(scol)]
+            arrays += [pa.array(qids[qidx]), pa.array(sims)]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.mapInArrow(_score, schema=out_schema)
+
+
+# rows per GEMM block: the kernel's temporaries are O(_BLOCK_ROWS × B)
+# whatever the Arrow batch size
+_BLOCK_ROWS = 1024
+
+
+def _score_batch(
+    mat: np.ndarray,
+    qmat: np.ndarray,
+    k: int,
+    tie_rank: Callable[[], np.ndarray],
+    cells: np.ndarray | None = None,
+    cell_queries: dict[int, np.ndarray] | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each query's best ``k`` rows of one batch, in the D-2 order
+    (similarity ``dot(row, query)`` desc, then ``tie_rank()`` asc — an
+    (n,) rank of the rows, built only if a tie crosses a cut).
+
+    ``mat`` is the (n, d) batch and ``qmat`` the (B, d) normalized
+    queries. Without ``cells`` every row is scored against every query.
+    With them, the rows are stable-sorted by cell and each cell's rows
+    are scored only against ``cell_queries[cell]`` (query indices); a
+    cell absent from the mapping is skipped. Each group is scored in
+    blocks of ``_BLOCK_ROWS`` rows, so temporaries stay O(block × B):
+    every block is cut to ``k`` rows per query (:func:`_d2_cut`) and
+    folded into the group's running top-k, and one merge over the
+    groups (:func:`_d2_merge`) keeps ≤ k rows per query.
+
+    Returns flat ``(rows, queries, sims)``: row indices into ``mat``,
+    query indices into ``qmat`` and the similarities."""
+    rank = functools.cache(tie_rank)
+    if k < 1 or not len(mat):
+        groups = []
+    elif cells is None:
+        groups = [(np.arange(len(mat)), np.arange(len(qmat)))]
+    else:
+        order = np.argsort(cells, kind="stable")
+        ids, starts = np.unique(cells[order], return_index=True)
+        groups = [
+            (rows, cell_queries[c])
+            for c, rows in zip(ids.tolist(), np.split(order, starts[1:]))
+            if c in cell_queries
+        ]
+    parts = [_group_topk(mat, qmat, rows, qs, k, rank) for rows, qs in groups]
+    if not parts:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    return _d2_merge(*(np.concatenate(p) for p in zip(*parts)), k, rank)
+
+
+def _group_topk(mat, qmat, rows, qs, k, rank):
+    """One group's running top-k: ``mat[rows]`` against ``qmat[qs]``
+    in row blocks. Returns flat (rows, queries, sims)."""
+    qt = qmat[qs].T  # (d, Bg)
+    top = None  # (sims, rows), each (≤ k, Bg)
+    for lo in range(0, len(rows), _BLOCK_ROWS):
+        blk = rows[lo : lo + _BLOCK_ROWS]
+        sims = mat[blk].astype(np.float64, copy=False) @ qt  # (block, Bg)
+        idx = _d2_cut(sims, min(k, len(blk)), lambda: rank()[blk])
+        s, r = np.take_along_axis(sims, idx, axis=0), blk[idx]
+        if top is not None:
+            s, r = np.vstack([top[0], s]), np.vstack([top[1], r])
+            idx = _d2_cut(s, min(k, len(s)), lambda: rank()[r])
+            s, r = np.take_along_axis(s, idx, 0), np.take_along_axis(r, idx, 0)
+        top = s, r
+    return top[1].ravel(), np.broadcast_to(qs, top[1].shape).ravel(), top[0].ravel()
+
+
+def _d2_merge(rows, qs, sims, k, rank):
+    """The ≤ ``k`` best of each query's (row, sim) candidates in the
+    D-2 order; ``rank()`` is only built when a tie crosses a cut."""
+    order = np.lexsort((-sims, qs))
+    sq = qs[order]
+    pos = np.arange(len(order)) - np.searchsorted(sq, sq)  # place in query
+    s = sims[order]
+    if ((pos[1:] == k) & (s[1:] == s[:-1])).any():
+        order = np.lexsort((rank()[rows], -sims, qs))
+    keep = order[pos < k]
+    return rows[keep], qs[keep], sims[keep]
 
 
 def _tie_rank(rb, ties: Sequence[str]) -> np.ndarray:
@@ -158,17 +232,18 @@ def _d2_cut(sims: np.ndarray, kk: int, tie_rank) -> np.ndarray:
     ``argpartition`` alone keeps arbitrary rows among those tied at the
     ``kk``-th similarity; a column with more tied rows than fit is
     re-cut exactly over its rows at or above that value, so
-    ``tie_rank`` (an (n,) rank of the rows by the tie columns) is only
-    built for batches with such a tie. ``-inf`` (masked) ties are left
+    ``tie_rank`` (an (n,) rank of the rows by the tie columns, or an
+    (n, B) one when each column holds different rows) is only built
+    for batches with such a tie. ``-inf`` (masked) ties are left
     alone: the caller drops those pairs."""
     idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]
     kth = np.take_along_axis(sims, idx, axis=0).min(axis=0)  # (B,)
     over = np.flatnonzero(((sims >= kth).sum(axis=0) > kk) & np.isfinite(kth))
     if over.size:
-        rank = tie_rank()
+        rank = np.broadcast_to(np.reshape(tie_rank(), (len(sims), -1)), sims.shape)
         for q in over:
             cand = np.flatnonzero(sims[:, q] >= kth[q])
-            order = np.lexsort((rank[cand], -sims[cand, q]))
+            order = np.lexsort((rank[cand, q], -sims[cand, q]))
             idx[:, q] = cand[order[:kk]]
     return idx
 
@@ -210,10 +285,11 @@ def knn_join(
     construction — SURVEY §7.3-2); the corpus is scanned once, never
     shuffled for the join itself; the per-query cut is a row_number
     window (Spark 4 plans a Partial WindowGroupLimit, so tasks ship
-    ≤ k rows per query). ``method='arrow'``: the unmasked case of
-    :func:`_gemm_topk` (one GEMM per Arrow batch against the whole
-    query matrix + a per-query local cut in the D-2 order), then the
-    same window — the amortized fast path for many queries.
+    ≤ k rows per query). ``method='arrow'``: the one-group case of
+    :func:`_gemm_topk` (every row of each Arrow batch against the
+    whole query matrix, in row blocks, + a per-query local cut in the
+    D-2 order), then the same window — the amortized fast path for
+    many queries.
     """
     if method == "arrow":
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)

@@ -479,9 +479,9 @@ LIMIT 10
 
 # --------------------------------------------------------------------------
 # vs_ivf_batch — BATCH ANN through per-query probed cells in one
-# corpus pass (IVFIndex.search_batch, round 4 / VERDICT r3 #5): the
-# probe mask zeroes candidate×query pairs whose cell was not probed
-# for that query, so one masked GEMM scan serves the whole query
+# corpus pass (IVFIndex.search_batch, round 4 / VERDICT r3 #5): each
+# cell's rows are multiplied only by the queries that probed that
+# cell, so one cell-grouped GEMM scan serves the whole query
 # batch. nprobe == n_cells makes every pair allowed — exactly the
 # exact batch kNN — so the oracle is the brute-force batch-kNN SQL.
 # Partial-probe scan-fraction/recall is measured in tests/test_ann.py
@@ -12189,8 +12189,8 @@ REGISTRY: dict[
     "vs_neardup_lsh": (q_vs_neardup_lsh, ORACLE_VS_NEARDUP_LSH),
     # vs_ivf_topk: single-query IVF full-probe — the IVF family's
     #   in-window slot is now held by vs_ivf_batch (same MLlib build,
-    #   same cell pruning, PLUS the per-query probe mask and batched
-    #   GEMM); the single-query TakeOrdered cut stays pinned in-window
+    #   same cell pruning, PLUS per-query probed cells and the
+    #   cell-grouped GEMM); the single-query TakeOrdered cut stays pinned in-window
     #   by vs_topk/vs_pq_topk/vs_sq8_topk; stays locally green;
     "vs_ivf_topk": (q_vs_ivf_topk, ORACLE_VS_IVF_TOPK),
     # vs_opq_topk: OPQ-rotated 16 B/vector ADC + exact re-rank

@@ -304,6 +304,47 @@ def test_search_batch_tiny_batches_equal_numpy(spark, sf_oracle, tiny_arrow_batc
     assert [r[:3] for r in got] == [r[:3] for r in want]
     assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
 
+def test_search_batch_scores_several_cells_in_one_batch(spark):
+    """Default Arrow batch size and one partition, so each batch holds
+    rows of every cell, some cells more than one row block; nprobe = 2
+    and queries that probe different cell sets. Each query's answer
+    must be the NumPy top-k over its probed cells in the D-2 order
+    (similarity desc, vec_id)."""
+    from nebuia_vector_db_spark.functions.vector import normalize_query
+    from nebuia_vector_db_spark.operators.topk import _BLOCK_ROWS
+
+    rng = np.random.default_rng(11)
+    n, d, c, k = 6 * _BLOCK_ROWS, 8, 4, 7
+    mat = rng.normal(size=(n, d))
+    cents = rng.normal(size=(c, d)) * 3
+    cell = np.argmin(((mat[:, None, :] - cents[None]) ** 2).sum(axis=2), axis=1)
+    corpus = spark.createDataFrame(
+        [(i, int(cell[i]), mat[i].tolist()) for i in range(n)],
+        "vec_id long, ivf_cell int, embedding array<double>",
+    ).coalesce(1)
+    index = IVFIndex(corpus, cents, "embedding")
+    qs = [cents[i % c] + rng.normal(size=d) for i in range(12)]
+    probed = [index.probe_cells(q.tolist(), 2) for q in qs]
+    assert len({frozenset(p) for p in probed}) > 1
+    assert np.bincount(cell).max() > _BLOCK_ROWS
+    queries = spark.createDataFrame(
+        [(i, q.tolist()) for i, q in enumerate(qs)],
+        "query_id long, query_vec array<double>",
+    )
+    got = sorted(
+        (r["query_id"], r["rk"], r["vec_id"], r["similarity"])
+        for r in index.search_batch(queries, k, nprobe=2, tie_cols=["vec_id"]).collect()
+    )
+    want = []
+    for i, q in enumerate(qs):
+        rows = np.flatnonzero(np.isin(cell, probed[i]))
+        sims = mat[rows] @ np.asarray(normalize_query(q.tolist()))
+        order = np.lexsort((rows, -sims))[:k]
+        want += [(i, rk, int(rows[j]), sims[j]) for rk, j in enumerate(order, 1)]
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
+
+
 def test_deterministic_ivf_build_is_bit_stable(spark, sf_oracle):
     """Two deterministic builds from the same pinned sample produce
     identical centroids AND identical recall — the property that makes

@@ -395,6 +395,25 @@ def test_pq_search_batch_nprobe_respects_probe_mask(spark, sf_oracle):
         assert cell_of[r["vec_id"]] in probed
 
 
+def test_pq_search_batch_breaks_ties_by_id_at_the_batch_cut(spark, tiny_arrow_batches):
+    """Arrow batches of 3 rows, 12 rows with identical codes stored in
+    descending vec_id order, topk = 2: every ADC score ties, so each
+    batch's local cut must keep its two smallest vec_ids (the D-2 tie
+    order of the global cut), and the answer is vec_ids 1 and 2."""
+    from nebuia_vector_db_spark.operators.pq import pq_search_batch
+
+    codes = spark.createDataFrame(
+        [(i, [0, 0]) for i in range(12, 0, -1)], "vec_id long, codes array<int>"
+    ).coalesce(1)
+    books = np.array([[[1.0]], [[0.5]]])  # (m, k, dsub) = (2, 1, 1)
+    index = PQIndex(codes, books, "embedding", "vec_id")
+    queries = spark.createDataFrame(
+        [(0, [0.6, 0.8])], "query_id long, query_vec array<double>"
+    )
+    got = pq_search_batch(index, codes, queries, topk=2).collect()
+    assert sorted((r["rk"], r["vec_id"]) for r in got) == [(1, 1), (2, 2)]
+
+
 # ---------------------------------------------------------------------------
 # OPQ rotation (round 6, VERDICT r5 task #7)
 # ---------------------------------------------------------------------------

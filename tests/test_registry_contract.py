@@ -57,7 +57,7 @@ def test_every_recorded_query_has_an_oracle():
 _REQUIRED_IN_WINDOW = {
     # reference parity + ANN tiers (vs_ivf_batch supersedes
     # vs_ivf_topk in-window round 4: same build + pruning, plus the
-    # per-query probe mask — single-query cut stays pinned by vs_topk;
+    # per-query probed cells — single-query cut stays pinned by vs_topk;
     # vs_bq_rerank promoted r9: binary-quantization tier — packed
     # XOR+POPCNT Hamming shortlist + exact re-rank, the coarsest
     # compression level, previously unrecorded)

@@ -1,0 +1,159 @@
+"""Per-process memory and GEMM work of perfbench's ``batch_knn``.
+
+    python tools/worker_pss.py [--seed 1] [--batches 4]
+
+Runs the ``batch_knn`` workload of ``perfbench/workloads.py`` (its
+full size, unchanged) in this process: one set-up, including its
+warm-up batch, then ``--batches`` query batches through
+``knn_join(method="arrow")`` and ``IVFIndex.search_batch``, with every
+answer checked against the NumPy oracle. It then prints, for the
+driver, the JVM and each Python worker process, the proportional set
+size (PSS, shared pages split among the processes that map them) and
+the peak resident size (VmHWM), and the Python total.
+
+Last, it prints the GEMM work per batch of each path, in GFLOP
+(2 · rows · d · queries, summed over the products the kernel runs):
+the exact path multiplies every corpus row by every query; the IVF
+path either multiplies every row of the probed-cell union by every
+query and masks the pairs no query probed (the masked kernel), or
+multiplies each cell's rows only by the queries that probed that cell
+(the cell-grouped kernel, ``topk._score_batch``). The line marked
+``*`` is the kernel this checkout runs.
+
+Spark runs as perfbench runs it (``perfbench/run.py``'s configuration);
+scratch files go under ``perfbench/.work/`` and are removed at exit.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import shutil
+import sys
+import tempfile
+
+import numpy as np
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
+
+
+def _status_kb(pid: int, key: str) -> int:
+    with open(f"/proc/{pid}/status") as fh:
+        for line in fh:
+            if line.startswith(key + ":"):
+                return int(line.split()[1])
+    return 0
+
+
+def _cmdline(pid: int) -> str:
+    with open(f"/proc/{pid}/cmdline", "rb") as fh:
+        return fh.read().replace(b"\0", b" ").decode(errors="replace")
+
+
+def _processes() -> list[tuple[str, int]]:
+    """(role, pid) of the driver, the JVM and the JVM's Python
+    processes: the daemon, which the JVM starts, and the workers it
+    forks."""
+    import probes
+
+    me = os.getpid()
+    out = [("driver", me)]
+    for jvm in probes.descendants(me):
+        if "java" not in _cmdline(jvm):
+            continue
+        out.append(("jvm", jvm))
+        for pid in sorted(probes.descendants(jvm)):
+            with open(f"/proc/{pid}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+            out.append(("python daemon" if ppid == jvm else "python worker", pid))
+    return out
+
+
+def print_memory() -> None:
+    import probes
+
+    mb = 2.0**20
+    py_pss = 0.0
+    print(f"{'process':<16}{'pid':>8}{'PSS MB':>10}{'VmHWM MB':>10}")
+    for role, pid in _processes():
+        try:
+            pss = probes._pss_bytes(pid) / mb
+            hwm = _status_kb(pid, "VmHWM") / 1024
+        except OSError:
+            continue  # exited between listing and reading
+        if role.startswith("python"):
+            py_pss += pss
+        print(f"{role:<16}{pid:>8}{pss:>10.1f}{hwm:>10.1f}")
+    print(f"{'python total':<24}{py_pss:>10.1f}")
+
+
+def print_gemm(wl, batches: int) -> None:
+    from nebuia_vector_db_spark.operators import topk
+    from nebuia_vector_db_spark.operators.ann import _select_cells
+
+    rows_of = {
+        int(r[0]): int(r[1])
+        for r in wl.index.assigned.groupBy("ivf_cell").count().collect()
+    }
+    d = wl.index.centroids.shape[1]
+    exact, masked, grouped = [], [], []
+    for b in range(batches):
+        qs = wl.queries(0, b)
+        qmat = qs / np.linalg.norm(qs, axis=1, keepdims=True)
+        sel = _select_cells(wl.index.centroids @ qmat.T, wl.size["nprobe"])
+        exact.append(2.0 * wl.corpus.n_chunks * d * len(qs))
+        masked.append(2.0 * d * len(qs) * sum(rows_of.get(c, 0) for c in np.unique(sel)))
+        grouped.append(2.0 * d * sum(rows_of.get(int(c), 0) for c in sel.ravel()))
+    runs_grouped = hasattr(topk, "_score_batch")
+    print("GEMM GFLOP per batch (mean)")
+    print(f"  exact knn_join              {np.mean(exact) / 1e9:.4f} *")
+    for name, xs, mine in (
+        ("IVF search_batch, masked ", masked, not runs_grouped),
+        ("IVF search_batch, grouped", grouped, runs_grouped),
+    ):
+        print(f"  {name}   {np.mean(xs) / 1e9:.4f}{' *' if mine else ''}")
+
+
+def main(argv=None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--seed", type=int, default=1)
+    p.add_argument("--batches", type=int, default=4)
+    args = p.parse_args(argv)
+
+    import run
+
+    os.makedirs(os.path.join(ROOT, "perfbench", ".work"), exist_ok=True)
+    work = tempfile.mkdtemp(prefix="pss-", dir=os.path.join(ROOT, "perfbench", ".work"))
+    try:
+        extra_conf = run.configure(work)
+        import workloads
+
+        from nebuia_vector_db_spark.session import get_spark
+
+        spark = get_spark("worker-pss", extra_conf=extra_conf)
+        try:
+            spark.sparkContext.setLogLevel("ERROR")
+            ctx = workloads.Ctx(
+                spark=spark, work=work, seed=args.seed, seconds=0.0,
+                size=workloads.SIZES["full"]["batch_knn"],
+            )
+            wl = workloads.BatchKnn(ctx)
+            wl.setup()
+            loop = workloads.Loop(ctx)
+            wl.done = [wl.batch(loop, 0, b) for b in range(args.batches)]
+            print_memory()
+            wl.verify(loop)
+            print(f"batches {args.batches}, failed checks {loop.failed}, "
+                  f"recall@10 {workloads.mean(wl.recalls):.5f}")
+            print_gemm(wl, args.batches)
+            wl.teardown()
+        finally:
+            run.stop_spark(spark)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
