@@ -70,16 +70,6 @@ def _select_cells(cell_sims: np.ndarray, nprobe: int) -> np.ndarray:
     return np.take_along_axis(idx, np.lexsort((idx, -sims), axis=0), axis=0)
 
 
-def _probe_mask(
-    cell_sims: np.ndarray, nprobe: int
-) -> tuple[np.ndarray, list[int]]:
-    """(C, B) allow-mask of :func:`_select_cells` and the sorted union
-    of the probed cells — the cells a batch scan reads."""
-    mask = np.zeros(cell_sims.shape, dtype=bool)
-    mask[_select_cells(cell_sims, nprobe), np.arange(cell_sims.shape[1])] = True
-    return mask, [int(c) for c in np.flatnonzero(mask.any(axis=1))]
-
-
 def _cell_queries(cell_sims: np.ndarray, nprobe: int) -> dict[int, np.ndarray]:
     """:func:`_select_cells` inverted: each probed cell id mapped to the
     ascending indices of the queries that probed it. Its keys are the
@@ -257,13 +247,20 @@ def _load_matrix(
     return np.load(io.BytesIO(data), allow_pickle=False)
 
 
-def _write_cells(assigned: DataFrame, path: str, mode: str) -> None:
-    """Write the corpus under ``path/cells``, partitioned by cell, one
-    file per cell: rows are first shuffled by ``ivf_cell`` so each
-    cell lands in one writer task."""
-    assigned.repartition("ivf_cell").write.partitionBy("ivf_cell").mode(
-        mode
-    ).parquet(os.path.join(path, "cells"))
+def _write_cells(
+    df: DataFrame,
+    path: str,
+    mode: str,
+    subdir: str = "cells",
+    cell_col: str = "ivf_cell",
+) -> None:
+    """Write ``df`` under ``path/subdir``, partitioned by ``cell_col``,
+    one file per cell: rows are first shuffled by the cell so each
+    cell lands in one writer task. The IVF corpus (``cells/``) and the
+    IVF-PQ codes (``codes/``) are both written this way."""
+    df.repartition(cell_col).write.partitionBy(cell_col).mode(mode).parquet(
+        os.path.join(path, subdir)
+    )
 
 
 def save_ivf_index(index: IVFIndex, path: str) -> None:

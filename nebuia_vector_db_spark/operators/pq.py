@@ -13,13 +13,19 @@ Spark mapping:
 - **train**: driver-side vectorized Lloyd's k-means per subspace on a
   bounded sample (≤ ``sample`` rows collected — training is the one
   legitimately driver-sized step; 100k × 64 f64 ≈ 51 MB).
-- **encode**: one Arrow kernel per batch — (b, dsub)·(dsub, k) GEMM
-  per subspace, argmin → codes. Map-side only, no shuffle.
-- **search**: broadcast the tiny table, Arrow kernel does
-  ``table[s, codes[:, s]].sum(axis=1)`` per batch, per-partition
-  top-k cut, global TakeOrderedAndProject. The corpus read is codes
-  only — raw vectors are touched ONLY for the exact re-rank of the
-  ≤ ``rerank`` survivors (a semi-join by id).
+- **encode**: one encoder, :func:`_encode_batch` (residual, then OPQ
+  rotation, then the per-subspace argmin of :func:`_encode_np`), run
+  per Arrow batch by ``encode_pq`` and by the fused search scan.
+  Map-side only, no shuffle.
+- **search**: the tiny table ships in the kernel closure, and one ADC
+  function, :func:`_adc` (``Σ_s table[s][codes[:, s]]``, summed in
+  subspace order), scores each Arrow batch; then a per-partition
+  top-k cut and a global TakeOrderedAndProject.
+  The corpus read is codes only — raw vectors are touched ONLY for
+  the exact re-rank of the ≤ ``rerank`` survivors (a semi-join by id).
+- **batch search**: ``pq_search_batch`` hands each Arrow batch to the
+  cell-grouped kernel of batch kNN, ``topk._score_batch``, with the
+  ADC lookups plus the cell term as its scorer.
 
 Scoring matches the engine's similarity semantics — ``dot(q/‖q‖, x)``
 with the stored vector raw (SURVEY §1.5-1) — approximated by the sum
@@ -32,17 +38,20 @@ import os
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd  # noqa: F401  (pandas_udf type-hint resolution)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nebuia_vector_db_spark.functions.vector import normalize_query
+from nebuia_vector_db_spark.functions.vector import (
+    arrow_list_to_matrix,
+    normalize_query,
+)
 from nebuia_vector_db_spark.operators.ann import (
+    _cell_queries,
     _load_matrix,
     _matrix_file,
-    _probe_mask,
     _save_matrix,
     _select_cells,
+    _write_cells,
     assign_to_cells,
 )
 
@@ -177,33 +186,33 @@ class PQIndex:
         operators/ann.py, ties to the lower cell id) — the composed
         prune-then-score stack.
 
-        One Arrow crossing (r16, guide §4): on an encode_pq-built
-        index whose codes are not persisted, the scan fuses encode +
-        ADC into a single mapInArrow kernel (the two-crossing plan
-        paid JVM→Python→JVM twice per run, and the second crossing
-        re-decoded the codes column from Arrow lists). Stored or
-        cached codes score through a single mapInArrow over the codes
-        table (same math, list-offset decode instead of the old
-        row-pickling pandas_udf). Scores are bit-identical across all
-        paths: same argmin, same per-subspace accumulation order."""
+        ``tie_cols`` order ADC ties and must be columns of the codes
+        relation (``id_col``, and ``cell_col`` on an IVF-PQ index);
+        any other column is a ``ValueError`` before any Spark job.
+
+        One Arrow crossing (guide §4): :meth:`_adc_scored` scores the
+        codes in a single mapInArrow kernel, encoding them on the fly
+        when the index was built by encode_pq in this plan and the
+        codes are not persisted. Scores are bit-identical across both
+        sources: same encoder, same ADC sum."""
+        has_cell = self.cell_centroids is not None
+        avail = {self.id_col, self.cell_col} if has_cell else {self.id_col}
+        if not set(tie_cols) <= avail:
+            raise ValueError(
+                f"tie columns {sorted(set(tie_cols) - avail)} are not in "
+                f"the codes relation (allowed: {sorted(avail)})"
+            )
         table = self.adc_table(qvec)
-        m = self.m
         cut = max(topk, rerank)
 
-        codes_src = self.codes
-        cell_term = None
-        probe = None
-        if self.cell_centroids is not None:
+        cell_term = probe = None
+        if has_cell:
             qn = np.asarray(normalize_query(qvec), dtype=np.float64)
-            cell_dots = self.cell_centroids @ qn  # (n_cells,)
+            cell_term = self.cell_centroids @ qn  # (n_cells,)
             if nprobe is not None:
-                probe = _select_cells(cell_dots[:, None], nprobe)[:, 0].tolist()
-                codes_src = codes_src.where(
-                    F.col(self.cell_col).isin(probe)
-                )
-            cell_term = cell_dots
+                probe = _select_cells(cell_term[:, None], nprobe)[:, 0].tolist()
 
-        scored = self._adc_scored(codes_src, table, cell_term, probe, tie_cols)
+        scored = self._adc_scored(table, cell_term, probe)
         short = scored.orderBy(
             F.desc("adc_score"), *[F.col(c) for c in tie_cols]
         ).limit(cut)
@@ -228,159 +237,96 @@ class PQIndex:
 
     def _adc_scored(
         self,
-        codes_src: DataFrame,
         table: np.ndarray,
         cell_term: np.ndarray | None,
         probe: list[int] | None,
-        tie_cols: Sequence[str],
     ) -> DataFrame:
         """(id[, cell], adc_score) relation behind search()'s top-k
-        cut — one Python crossing on every path (see search's note).
-        The fused encode+ADC kernel fires only when the index was
+        cut, restricted to the ``probe`` cells when given: one
+        mapInArrow kernel that decodes the stored codes, or encodes
+        the raw vectors (:func:`_encode_batch`) when the index was
         built by encode_pq in this plan AND the codes were not
-        persisted by the caller (a cached/stored codes relation is
-        the cheaper scan — re-encoding raw vectors would bypass it)."""
+        persisted by the caller (a cached/stored codes relation is the
+        cheaper scan — re-encoding raw vectors would bypass it), then
+        adds :func:`_adc` and the cell term."""
         from collections.abc import Iterator
 
         import pyarrow as pa
 
-        m = self.m
-        id_col, cell_col = self.id_col, self.cell_col
-        has_cell = self.cell_centroids is not None
-        avail = {id_col, cell_col} if has_cell else {id_col}
-        if not set(tie_cols) <= avail:
-            # exotic tie columns: keep every codes_src column (the
-            # pre-r16 shape) and score via a vectorized UDF
-            from pyspark.sql.functions import pandas_udf
-
-            @pandas_udf("double")
-            def _adc(codes: pd.Series, cells: pd.Series) -> pd.Series:
-                c = np.array(list(codes), dtype=np.int64)  # (b, m)
-                if len(c) == 0:
-                    return pd.Series([], dtype="float64")
-                s = np.zeros(len(c), dtype=np.float64)
-                for j in range(m):
-                    s += table[j][c[:, j]]
-                if cell_term is not None:
-                    s += cell_term[cells.to_numpy(dtype=np.int64)]
-                return pd.Series(s)
-
-            cell_arg = F.col(cell_col) if has_cell else F.lit(0)
-            return codes_src.withColumn(
-                "adc_score", _adc(F.col("codes"), cell_arg)
-            )
-
+        id_col, cell_col, vec_col = self.id_col, self.cell_col, self.vec_col
+        codebooks, centroids, rotation = (
+            self.codebooks, self.cell_centroids, self.rotation
+        )
         stored = (
             self._encode_src is None
             or self.codes.storageLevel.useMemory
             or self.codes.storageLevel.useDisk
         )
-        id_type = dict(
-            (codes_src if stored else self._encode_src).dtypes
-        )[id_col]
-        out_cols = [id_col] + ([cell_col] if has_cell else [])
+        src = self.codes if stored else self._encode_src
+        if probe is not None:
+            src = src.where(F.col(cell_col).isin(probe))
+        out_cols = [id_col] + ([cell_col] if cell_term is not None else [])
         out_schema = ", ".join(
-            [f"{id_col} {id_type}"]
-            + ([f"{cell_col} int"] if has_cell else [])
+            [f"{id_col} {dict(src.dtypes)[id_col]}"]
+            + ([f"{cell_col} int"] if cell_term is not None else [])
             + ["adc_score double"]
         )
 
-        if stored:
-
-            def _scan(
-                batches: Iterator[pa.RecordBatch],
-            ) -> Iterator[pa.RecordBatch]:
-                for rb in batches:
-                    n = rb.num_rows
-                    if n == 0:
-                        continue
-                    codes = (
-                        rb.column("codes")
-                        .flatten()
-                        .to_numpy(zero_copy_only=False)
-                        .astype(np.int64, copy=False)
-                        .reshape(n, m)
-                    )
-                    s = np.zeros(n, dtype=np.float64)
-                    for j in range(m):
-                        s += table[j][codes[:, j]]
-                    arrays = [rb.column(id_col)]
-                    if has_cell:
-                        cells = (
-                            rb.column(cell_col)
-                            .to_numpy(zero_copy_only=False)
-                            .astype(np.int64)
-                        )
-                        if cell_term is not None:
-                            s += cell_term[cells]
-                        arrays.append(rb.column(cell_col))
-                    arrays.append(pa.array(s))
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, names=out_cols + ["adc_score"]
-                    )
-
-            src = codes_src.select(*out_cols, "codes")
-            return src.mapInArrow(_scan, schema=out_schema)
-
-        # fused encode + ADC over the raw-vector source (one crossing)
-        codebooks = self.codebooks
-        dsub = codebooks.shape[2]
-        c_norm2 = np.einsum("skd,skd->sk", codebooks, codebooks)
-        cell_centroids = self.cell_centroids
-        rotation = self.rotation
-        vec_col = self.vec_col
-        src = self._encode_src
-        if probe is not None:
-            src = src.where(F.col(cell_col).isin(probe))
-
-        def _fused(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            from nebuia_vector_db_spark.functions.vector import (
-                arrow_list_to_matrix,
-            )
-
+        def _scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for rb in batches:
-                n = rb.num_rows
-                if n == 0:
+                if rb.num_rows == 0:
                     continue
-                mat = arrow_list_to_matrix(rb.column(vec_col)).astype(
-                    np.float64, copy=False
-                )
                 cells = None
-                if has_cell:
-                    cells = (
-                        rb.column(cell_col)
-                        .to_numpy(zero_copy_only=False)
-                        .astype(np.int64)
+                if cell_term is not None:
+                    cells = np.asarray(rb.column(cell_col)).astype(np.int64)
+                if stored:
+                    codes = arrow_list_to_matrix(rb.column("codes"))
+                else:
+                    codes = _encode_batch(
+                        arrow_list_to_matrix(rb.column(vec_col)),
+                        cells, codebooks, centroids, rotation,
                     )
-                    mat = mat - cell_centroids[cells]
-                if rotation is not None:
-                    mat = mat @ rotation
-                codes = np.empty((n, m), dtype=np.int64)
-                for sub in range(m):
-                    xs = mat[:, sub * dsub : (sub + 1) * dsub]
-                    codes[:, sub] = (
-                        c_norm2[sub][None, :]
-                        - 2.0 * (xs @ codebooks[sub].T)
-                    ).argmin(axis=1)
-                s = np.zeros(n, dtype=np.float64)
-                for j in range(m):
-                    s += table[j][codes[:, j]]
-                arrays = [rb.column(id_col)]
-                if has_cell:
-                    if cell_term is not None:
-                        s += cell_term[cells]
-                    arrays.append(rb.column(cell_col))
-                arrays.append(pa.array(s))
+                s = _adc(codes.astype(np.int64, copy=False), table)
+                if cell_term is not None:
+                    s += cell_term[cells]
+                arrays = [rb.column(c) for c in out_cols] + [pa.array(s)]
                 yield pa.RecordBatch.from_arrays(
                     arrays, names=out_cols + ["adc_score"]
                 )
 
-        src = src.select(
-            *out_cols, vec_col
-        )
-        return src.mapInArrow(_fused, schema=out_schema)
+        src = src.select(*out_cols, "codes" if stored else vec_col)
+        return src.mapInArrow(_scan, schema=out_schema)
+
+
+def _adc(codes: np.ndarray, tables: np.ndarray) -> np.ndarray:
+    """The one ADC sum, ``Σ_s tables[s][codes[:, s]]`` over the (n, m)
+    codes in subspace order: an (m, k) table gives (n,) scores, an
+    (m, k, B) stack (n, B)."""
+    out = np.zeros(codes.shape[:1] + tables.shape[2:])
+    for s in range(tables.shape[0]):
+        out += tables[s][codes[:, s]]
+    return out
+
+
+def _adc_scorer(codes, tables, cells, cell_dots):
+    """The scorer ``pq_search_batch`` hands to ``topk._score_batch``:
+    :func:`_adc` of the (n, m) ``codes`` against the (m, k, B) table
+    stack, plus, on an IVF-PQ index, each row's cell term from the
+    (C, B) ``cell_dots``."""
+
+    def score_for(qs):
+        t = tables[:, :, qs]
+        ct = None if cell_dots is None else cell_dots[:, qs]
+
+        def score(blk):
+            s = _adc(codes[blk], t)
+            if ct is not None:
+                s += ct[cells[blk]]
+            return s
+
+        return score
+
+    return score_for
 
 
 def pq_search_batch(
@@ -397,16 +343,18 @@ def pq_search_batch(
     """Batch IVF-PQ search: ONE pass over the codes serves a whole
     query batch (the PQ tier's twin of ``IVFIndex.search_batch``).
 
-    Driver side: one (B, m, k) stack of ADC tables (an einsum over the
-    codebooks — ~0.5 MB at B=16/m=16/k=256, closure-shipped) plus,
-    on an IVF-PQ index, per-query probed-cell masks whose union
-    bounds the scan (``ann._probe_mask``: the cells ``PQIndex.search``
-    probes for the same query). Scan side: per Arrow batch the (n, m) code
-    matrix indexes every query's table (m gathers), the cell term is
-    added per query, non-probed (row, query) pairs mask to -inf, and
-    a per-query local cut keeps ≤ max(topk, rerank) rows per query in
-    the D-2 order (``topk._d2_cut``, ties at the cut to the lower
-    ``id_col``); the global cut is the bounded row_number window.
+    Driver side: one (m, k, B) stack of ADC tables (an einsum over the
+    codebooks — ~0.5 MB at B=16/m=16/k=256, closure-shipped) plus, on
+    an IVF-PQ index with ``nprobe``, the cell → query-index map of
+    ``ann._cell_queries`` (the cells ``PQIndex.search`` probes for the
+    same query), whose keys bound the scan. Scan side: each Arrow
+    batch goes through the cell-grouped kernel of batch kNN,
+    ``topk._score_batch``: its rows are grouped by cell and each
+    cell's rows are scored (:func:`_adc` plus the cell term) only
+    against the queries that probed it, in row blocks, keeping
+    ≤ max(topk, rerank) rows per query in the D-2 order (ties at the
+    cut to the lower ``id_col``); the global cut is the bounded
+    row_number window.
 
     With ``rerank > 0`` the per-query shortlists are re-scored
     EXACTLY: one inner join of the (query_id, id) shortlist against
@@ -422,37 +370,33 @@ def pq_search_batch(
         l2_normalize,
     )
     from nebuia_vector_db_spark.operators.topk import (
-        _d2_cut,
         _query_matrix,
+        _score_batch,
         _tie_rank,
         topk_per_group,
     )
 
     qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
     b = qmat.shape[0]
-    m, k = index.m, index.k
-    dsub = index.codebooks.shape[2]
+    m, dsub = index.m, index.codebooks.shape[2]
     # OPQ: tables score rotated residuals, so rotate the queries; the
     # cell term below stays in raw space (see PQIndex.adc_table)
     qrot = qmat @ index.rotation if index.rotation is not None else qmat
     tables = np.einsum(
         "skd,bsd->bsk", index.codebooks, qrot.reshape(b, m, dsub)
-    )  # (B, m, k)
+    ).transpose(1, 2, 0)  # (m, k, B)
 
     codes_src = index.codes
-    cell_dots = None
-    mask = None
+    cell_col, id_col = index.cell_col, index.id_col
+    cell_dots = cell_queries = None
     if index.cell_centroids is not None:
         cell_dots = index.cell_centroids @ qmat.T  # (C, B)
         if nprobe is not None:
-            mask, union_cells = _probe_mask(cell_dots, nprobe)
+            cell_queries = _cell_queries(cell_dots, nprobe)
             codes_src = codes_src.where(
-                F.col(index.cell_col).isin(union_cells)
+                F.col(cell_col).isin(list(cell_queries))
             )
     cut = max(topk, rerank)
-    has_cell = index.cell_centroids is not None
-    cell_col = index.cell_col
-    id_col = index.id_col
     id_type = dict(codes_src.dtypes)[id_col]
     out_schema = (
         f"{id_col} {id_type}, {query_id_col} long, adc_score double"
@@ -460,33 +404,22 @@ def pq_search_batch(
 
     def _score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            codes = np.array(
-                rb.column("codes").to_pylist(), dtype=np.int64
-            )  # (n, m)
-            scores = np.zeros((n, b), dtype=np.float64)
-            for s in range(m):
-                scores += tables[:, s, codes[:, s]].T  # (n, B)
-            if has_cell:
+            codes = arrow_list_to_matrix(rb.column("codes"))
+            cells = None
+            if cell_dots is not None:
                 cells = np.asarray(rb.column(cell_col)).astype(np.int64)
-                scores += cell_dots[cells]  # (n, B)
-                if mask is not None:
-                    scores = np.where(mask[cells], scores, -np.inf)
-            kk = min(cut, n)
-            idx = _d2_cut(scores, kk, lambda: _tie_rank(rb, [id_col]))  # (kk, B)
-            rows = idx.ravel(order="F")
-            qcol = np.repeat(qids, kk)
-            scol = np.take_along_axis(scores, idx, axis=0).ravel(order="F")
-            live = np.isfinite(scol)
-            if not live.any():
-                continue
+            rows, qidx, sims = _score_batch(
+                _adc_scorer(
+                    codes.astype(np.int64, copy=False), tables, cells, cell_dots
+                ),
+                rb.num_rows, b, cut, lambda: _tie_rank(rb, [id_col]),
+                cells if cell_queries is not None else None, cell_queries,
+            )
             yield pa.RecordBatch.from_arrays(
                 [
-                    rb.column(id_col).take(pa.array(rows[live])),
-                    pa.array(qcol[live]),
-                    pa.array(scol[live]),
+                    rb.column(id_col).take(pa.array(rows)),
+                    pa.array(qids[qidx]),
+                    pa.array(sims),
                 ],
                 names=[id_col, query_id_col, "adc_score"],
             )
@@ -601,8 +534,10 @@ def _fit_books(
 
 
 def _encode_np(y: np.ndarray, books: np.ndarray) -> np.ndarray:
-    """(n, m) codes for a driver-side matrix — the same argmin the
-    distributed Arrow kernel runs (shared by OPQ training)."""
+    """(n, m) codes of the (n, d) matrix ``y``: per subspace, argmin
+    ||y_s − c||² ≡ argmin (||c||² − 2 y_s·c) over the codewords. The
+    one subspace argmin — OPQ training calls it directly, the Arrow
+    kernels through :func:`_encode_batch`."""
     m, _, dsub = books.shape
     c_norm2 = np.einsum("skd,skd->sk", books, books)
     codes = np.empty((y.shape[0], m), dtype=np.int64)
@@ -612,6 +547,25 @@ def _encode_np(y: np.ndarray, books: np.ndarray) -> np.ndarray:
             axis=1
         )
     return codes
+
+
+def _encode_batch(
+    mat: np.ndarray,
+    cells: np.ndarray | None,
+    codebooks: np.ndarray,
+    cell_centroids: np.ndarray | None,
+    rotation: np.ndarray | None,
+) -> np.ndarray:
+    """(n, m) codes of raw vectors: the residual against each row's
+    cell centroid (IVF-PQ), then the OPQ rotation, then
+    :func:`_encode_np` — the encoder of ``encode_pq`` and of the fused
+    search scan."""
+    mat = mat.astype(np.float64, copy=False)
+    if cell_centroids is not None:
+        mat = mat - cell_centroids[cells]
+    if rotation is not None:
+        mat = mat @ rotation
+    return _encode_np(mat, codebooks)
 
 
 def _reconstruct_np(codes: np.ndarray, books: np.ndarray) -> np.ndarray:
@@ -739,62 +693,43 @@ def encode_pq(
     cell_col: str = "ivf_cell",
     rotation: np.ndarray | None = None,
 ) -> PQIndex:
-    """Map-side Arrow encoding: per batch, one GEMM + argmin per
-    subspace; output is (id[, cell], codes array<int>) — at rest this
-    is the 32× compressed representation (write it partitioned/bucketed
-    like any table; raw vectors are only needed for re-rank). With
-    ``cell_centroids`` the codes quantize residuals (IVF-PQ); with an
-    OPQ ``rotation`` the (residual) vectors are rotated before the
-    subspace split (one extra (b,d)·(d,d) GEMM per batch — still
-    map-side, no shuffle)."""
+    """Map-side Arrow encoding: per batch, :func:`_encode_batch` (one
+    GEMM + argmin per subspace); output is (id[, cell], codes
+    array<long>) — at rest this is the 32× compressed representation
+    (raw vectors are only needed for re-rank). With ``cell_centroids``
+    the codes quantize residuals (IVF-PQ); with an OPQ ``rotation``
+    the (residual) vectors are rotated before the subspace split (one
+    extra (b,d)·(d,d) GEMM per batch — still map-side, no shuffle)."""
     from collections.abc import Iterator
 
     import pyarrow as pa
 
-    m, _, dsub = codebooks.shape
-    # ||c||² per subspace, precomputed once; argmin ||x−c||² ≡
-    # argmin (||c||² − 2x·c)
-    c_norm2 = np.einsum("skd,skd->sk", codebooks, codebooks)
+    m = codebooks.shape[0]
     residual = cell_centroids is not None
+    keep = [id_col, cell_col] if residual else [id_col]
 
     def _encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from nebuia_vector_db_spark.functions.vector import (
-            arrow_list_to_matrix,
-        )
-
         for rb in batches:
-            ids = rb.column(id_col)
-            mat = arrow_list_to_matrix(rb.column(vec_col)).astype(
-                np.float64, copy=False
-            )
-            if mat.shape[0] == 0:
+            if rb.num_rows == 0:
                 continue
+            cells = None
             if residual:
-                cells = rb.column(cell_col).to_numpy(zero_copy_only=False)
-                mat = mat - cell_centroids[cells.astype(np.int64)]
-            if rotation is not None:
-                mat = mat @ rotation
-            codes = np.empty((mat.shape[0], m), dtype=np.int64)
-            for s in range(m):
-                xs = mat[:, s * dsub : (s + 1) * dsub]
-                codes[:, s] = (
-                    c_norm2[s][None, :] - 2.0 * (xs @ codebooks[s].T)
-                ).argmin(axis=1)
-            arrays = [ids]
-            names = [id_col]
-            if residual:
-                arrays.append(rb.column(cell_col))
-                names.append(cell_col)
-            arrays.append(pa.array(list(codes), type=pa.list_(pa.int64())))
-            names.append("codes")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+                cells = np.asarray(rb.column(cell_col)).astype(np.int64)
+            codes = _encode_batch(
+                arrow_list_to_matrix(rb.column(vec_col)),
+                cells, codebooks, cell_centroids, rotation,
+            )
+            offsets = np.arange(0, codes.size + 1, m, dtype=np.int32)
+            arrays = [rb.column(c) for c in keep]
+            arrays.append(pa.ListArray.from_arrays(offsets, codes.ravel()))
+            yield pa.RecordBatch.from_arrays(arrays, names=keep + ["codes"])
 
-    if residual:
-        src = df.select(id_col, cell_col, vec_col)
-        schema = f"{id_col} long, {cell_col} int, codes array<long>"
-    else:
-        src = df.select(id_col, vec_col)
-        schema = f"{id_col} long, codes array<long>"
+    src = df.select(*keep, vec_col)
+    schema = ", ".join(
+        [f"{id_col} long"]
+        + ([f"{cell_col} int"] if residual else [])
+        + ["codes array<long>"]
+    )
     codes_df = src.mapInArrow(_encode, schema=schema)
     return PQIndex(
         codes_df, codebooks, vec_col, id_col,
@@ -805,8 +740,8 @@ def encode_pq(
 
 def save_pq_index(index: PQIndex, path: str) -> None:
     """Persist the compressed corpus: ``codes/`` partitioned by IVF
-    cell when present (ADC probing then prunes partitions, same as
-    save_ivf_index), plus ``codebooks.npy`` and, when the index has
+    cell when present, one parquet file per cell (``ann._write_cells``;
+    ADC probing then prunes partitions, same as save_ivf_index), plus ``codebooks.npy`` and, when the index has
     them, ``centroids.npy`` (cell centroids) and ``rotation.npy``
     (OPQ), written driver-side like the IVF centroid file (no Spark
     job); a stale optional file from an earlier save at ``path`` is
@@ -814,10 +749,10 @@ def save_pq_index(index: PQIndex, path: str) -> None:
     the 16-32× smaller representation; re-rank reads the original
     corpus by id."""
     spark = index.codes.sparkSession
-    w = index.codes.write.mode("overwrite")
     if index.cell_centroids is not None:
-        w = w.partitionBy(index.cell_col)
-    w.parquet(os.path.join(path, "codes"))
+        _write_cells(index.codes, path, "overwrite", "codes", index.cell_col)
+    else:
+        index.codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
     _save_matrix(spark, os.path.join(path, "codebooks.npy"), index.codebooks)
     for name, mat in (
         ("centroids", index.cell_centroids),
@@ -842,8 +777,8 @@ def append_to_pq_index(
     """Incremental PQ maintenance — the compressed-tier twin of
     ann.append_to_ivf_index: new vectors are routed to the EXISTING
     cell centroids (broadcast-GEMM argmin), encoded with the EXISTING
-    codebooks (map-side Arrow, no shuffle), and their codes appended
-    to the saved partitions. A full re-encode of the grown corpus with
+    codebooks (map-side Arrow), and their codes appended to the saved
+    partitions, at most one new file per cell touched. A full re-encode of the grown corpus with
     the same codebooks/centroids yields identical codes (test-pinned).
 
     Codebooks are frozen like centroids: under drift, quantization
@@ -864,10 +799,10 @@ def append_to_pq_index(
         cell_centroids=idx.cell_centroids, cell_col=cell_col,
         rotation=idx.rotation,
     ).codes
-    w = new_codes.write.mode("append")
     if idx.cell_centroids is not None:
-        w = w.partitionBy(cell_col)
-    w.parquet(os.path.join(path, "codes"))
+        _write_cells(new_codes, path, "append", "codes", cell_col)
+    else:
+        new_codes.write.mode("append").parquet(os.path.join(path, "codes"))
     return load_pq_index(spark, path, vec_col, id_col, cell_col)
 
 

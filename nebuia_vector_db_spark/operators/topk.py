@@ -17,19 +17,19 @@ Spark-first design notes (scale):
   window (``topk_per_group``).
 - Single-query search (:func:`topk_search`) has one path: the
   codegen'd ``dot`` expression cut by ``orderBy(desc).limit(k)``.
-- The batch Arrow paths run ONE kernel, :func:`_gemm_topk`, which
-  hands each Arrow batch to one NumPy function, :func:`_score_batch`.
-  It splits the rows into groups, each scored only against its own
-  queries: ``knn_join(method='arrow')`` is the one-group case (every
-  row with every query), and ``IVFIndex.search_batch``
-  (operators/ann.py) groups the rows by ``ivf_cell`` and scores each
-  cell only against the queries that probed it. A group is multiplied
-  in blocks of ``_BLOCK_ROWS`` rows, each block cut to k rows per
-  query in the D-2 order (rows tied at a cut are decided by the
-  caller's tie columns), so temporaries are O(block × B) whatever the
-  batch size and a task ships ≤ k rows per (batch, query). A query
-  batch becomes the normalized query matrix in one place,
-  :func:`_query_matrix`.
+- The batch paths score through ONE per-batch NumPy function,
+  :func:`_score_batch`. It splits a batch's rows into groups, each
+  scored only against its own queries by a caller-supplied scorer:
+  :func:`_gemm_topk` (``knn_join(method='arrow')``, the one-group
+  case, and ``IVFIndex.search_batch`` in operators/ann.py, one group
+  per ``ivf_cell``) passes the GEMM, :func:`_gemm_scorer`, and
+  ``pq_search_batch`` (operators/pq.py) the ADC table lookups plus the
+  cell term. A group is scored in blocks of ``_BLOCK_ROWS`` rows, each
+  block cut to k rows per query in the D-2 order (rows tied at a cut
+  are decided by the caller's tie columns), so temporaries are
+  O(block × B) whatever the batch size and a task ships ≤ k rows per
+  (batch, query). A query batch becomes the normalized query matrix
+  in one place, :func:`_query_matrix`.
 """
 
 from __future__ import annotations
@@ -120,7 +120,8 @@ def _gemm_topk(
             if cell_queries is not None:
                 cells = np.asarray(rb.column("ivf_cell")).astype(np.int64)
             rows, qidx, sims = _score_batch(
-                arrow_list_to_matrix(rb.column(vec_col)), qmat, k,
+                _gemm_scorer(arrow_list_to_matrix(rb.column(vec_col)), qmat),
+                rb.num_rows, len(qmat), k,
                 lambda: _tie_rank(rb, tie_cols), cells, cell_queries,
             )
             take = pa.array(rows)
@@ -131,40 +132,43 @@ def _gemm_topk(
     return df.mapInArrow(_score, schema=out_schema)
 
 
-# rows per GEMM block: the kernel's temporaries are O(_BLOCK_ROWS × B)
+# rows per scoring block: the kernel's temporaries are O(_BLOCK_ROWS × B)
 # whatever the Arrow batch size
 _BLOCK_ROWS = 1024
 
 
 def _score_batch(
-    mat: np.ndarray,
-    qmat: np.ndarray,
+    score_for: Callable[[np.ndarray], Callable[[np.ndarray], np.ndarray]],
+    n: int,
+    n_queries: int,
     k: int,
     tie_rank: Callable[[], np.ndarray],
     cells: np.ndarray | None = None,
     cell_queries: dict[int, np.ndarray] | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Each query's best ``k`` rows of one batch, in the D-2 order
-    (similarity ``dot(row, query)`` desc, then ``tie_rank()`` asc — an
-    (n,) rank of the rows, built only if a tie crosses a cut).
+    """Each query's best ``k`` of a batch's ``n`` rows, in the D-2
+    order (similarity desc, then ``tie_rank()`` asc — an (n,) rank of
+    the rows, built only if a tie crosses a cut).
 
-    ``mat`` is the (n, d) batch and ``qmat`` the (B, d) normalized
-    queries. Without ``cells`` every row is scored against every query.
-    With them, the rows are stable-sorted by cell and each cell's rows
-    are scored only against ``cell_queries[cell]`` (query indices); a
-    cell absent from the mapping is skipped. Each group is scored in
-    blocks of ``_BLOCK_ROWS`` rows, so temporaries stay O(block × B):
-    every block is cut to ``k`` rows per query (:func:`_d2_cut`) and
-    folded into the group's running top-k, and one merge over the
-    groups (:func:`_d2_merge`) keeps ≤ k rows per query.
+    ``score_for(qs)`` is called once per group with the group's query
+    indices (into the ``n_queries`` queries) and returns a scorer
+    ``blk -> (len(blk), len(qs))`` similarities of the rows ``blk``.
+    Without ``cells`` every row is scored against every query. With
+    them, the rows are stable-sorted by cell and each cell's rows are
+    scored only against ``cell_queries[cell]``; a cell absent from the
+    mapping is skipped. Each group is scored in blocks of
+    ``_BLOCK_ROWS`` rows, so temporaries stay O(block × B): every block
+    is cut to ``k`` rows per query (:func:`_d2_cut`) and folded into
+    the group's running top-k, and one merge over the groups
+    (:func:`_d2_merge`) keeps ≤ k rows per query.
 
-    Returns flat ``(rows, queries, sims)``: row indices into ``mat``,
-    query indices into ``qmat`` and the similarities."""
+    Returns flat ``(rows, queries, sims)``: row indices into the batch,
+    query indices and the similarities."""
     rank = functools.cache(tie_rank)
-    if k < 1 or not len(mat):
+    if k < 1 or not n:
         groups = []
     elif cells is None:
-        groups = [(np.arange(len(mat)), np.arange(len(qmat)))]
+        groups = [(np.arange(n), np.arange(n_queries))]
     else:
         order = np.argsort(cells, kind="stable")
         ids, starts = np.unique(cells[order], return_index=True)
@@ -173,20 +177,30 @@ def _score_batch(
             for c, rows in zip(ids.tolist(), np.split(order, starts[1:]))
             if c in cell_queries
         ]
-    parts = [_group_topk(mat, qmat, rows, qs, k, rank) for rows, qs in groups]
+    parts = [_group_topk(score_for(qs), rows, qs, k, rank) for rows, qs in groups]
     if not parts:
         return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
     return _d2_merge(*(np.concatenate(p) for p in zip(*parts)), k, rank)
 
 
-def _group_topk(mat, qmat, rows, qs, k, rank):
-    """One group's running top-k: ``mat[rows]`` against ``qmat[qs]``
-    in row blocks. Returns flat (rows, queries, sims)."""
-    qt = qmat[qs].T  # (d, Bg)
+def _gemm_scorer(mat: np.ndarray, qmat: np.ndarray):
+    """The GEMM scorer of :func:`_score_batch`: ``mat`` (n, d) rows
+    against the (B, d) normalized queries ``qmat``."""
+
+    def score_for(qs):
+        qt = qmat[qs].T  # (d, Bg)
+        return lambda blk: mat[blk].astype(np.float64, copy=False) @ qt
+
+    return score_for
+
+
+def _group_topk(score, rows, qs, k, rank):
+    """One group's running top-k: ``score`` over ``rows`` in row
+    blocks. Returns flat (rows, queries, sims)."""
     top = None  # (sims, rows), each (≤ k, Bg)
     for lo in range(0, len(rows), _BLOCK_ROWS):
         blk = rows[lo : lo + _BLOCK_ROWS]
-        sims = mat[blk].astype(np.float64, copy=False) @ qt  # (block, Bg)
+        sims = score(blk)  # (block, Bg)
         idx = _d2_cut(sims, min(k, len(blk)), lambda: rank()[blk])
         s, r = np.take_along_axis(sims, idx, axis=0), blk[idx]
         if top is not None:
@@ -234,11 +248,10 @@ def _d2_cut(sims: np.ndarray, kk: int, tie_rank) -> np.ndarray:
     re-cut exactly over its rows at or above that value, so
     ``tie_rank`` (an (n,) rank of the rows by the tie columns, or an
     (n, B) one when each column holds different rows) is only built
-    for batches with such a tie. ``-inf`` (masked) ties are left
-    alone: the caller drops those pairs."""
+    for batches with such a tie."""
     idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]
     kth = np.take_along_axis(sims, idx, axis=0).min(axis=0)  # (B,)
-    over = np.flatnonzero(((sims >= kth).sum(axis=0) > kk) & np.isfinite(kth))
+    over = np.flatnonzero((sims >= kth).sum(axis=0) > kk)
     if over.size:
         rank = np.broadcast_to(np.reshape(tie_rank(), (len(sims), -1)), sims.shape)
         for q in over:

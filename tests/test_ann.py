@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.operators.ann import (
     IVFIndex,
-    _probe_mask,
+    _cell_queries,
     _select_cells,
     build_ivf_index,
     recall_at_k_batch,
@@ -428,9 +428,8 @@ def test_select_cells_ties_to_lower_cell_id():
     assert _select_cells(sims, 3).T.tolist() == [[0, 3, 1], [1, 2, 3]]
     assert _select_cells(sims, 0).T.tolist() == [[0], [1]]
     assert _select_cells(sims, 9).T.tolist() == [[0, 3, 1, 2], [1, 2, 3, 0]]
-    mask, union = _probe_mask(sims, 3)
-    assert mask.T.tolist() == [[True, True, False, True], [False, True, True, True]]
-    assert union == [0, 1, 2, 3]
+    got = {c: q.tolist() for c, q in _cell_queries(sims, 3).items()}
+    assert got == {0: [0], 1: [0, 1], 2: [1], 3: [0, 1]}
 
     rng = np.random.default_rng(3)
     tied = rng.integers(0, 4, size=(16, 32)).astype(np.float64)

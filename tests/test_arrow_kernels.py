@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 from nebuia_vector_db_spark.functions.vector import l2_norm, dot
 from nebuia_vector_db_spark.operators.ann import IVFIndex
 from nebuia_vector_db_spark.operators.dedup import exact_cosine_pairs
-from nebuia_vector_db_spark.operators.topk import _BLOCK_ROWS, _score_batch, knn_join
+from nebuia_vector_db_spark.operators.topk import (
+    _BLOCK_ROWS,
+    _gemm_scorer,
+    _score_batch,
+    knn_join,
+)
 from nebuia_vector_db_spark.sources.registry import load_table
 
 
@@ -145,7 +150,10 @@ def test_score_batch_memory_does_not_grow_with_batch_rows():
         mat = rng.normal(size=(blocks * _BLOCK_ROWS, 16)).astype(np.float32)
         tracemalloc.start()
         try:
-            rows, _, _ = _score_batch(mat, qmat, 10, lambda: np.arange(len(mat)))
+            rows, _, _ = _score_batch(
+                _gemm_scorer(mat, qmat), len(mat), len(qmat), 10,
+                lambda: np.arange(len(mat)),
+            )
             peak = tracemalloc.get_traced_memory()[1]
         finally:
             tracemalloc.stop()

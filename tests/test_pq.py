@@ -237,6 +237,50 @@ def test_pq_append_equals_full_reencode(spark, sf_oracle, tmp_path_factory):
     emb.unpersist()
 
 
+def test_saved_codes_hold_one_file_per_cell(spark, sf_oracle, tmp_path):
+    """save_pq_index writes each cell's codes as one parquet file,
+    whatever the corpus partitioning, and append_to_pq_index adds at
+    most one file to each cell it touches."""
+    from nebuia_vector_db_spark.operators.ann import build_ivf_index
+    from nebuia_vector_db_spark.operators.pq import (
+        append_to_pq_index,
+        save_pq_index,
+    )
+
+    emb = load_table(spark, sf_oracle, "embeddings")
+    part_a = emb.where(F.col("vec_id") % 5 != 0).repartition(4)
+    part_b = emb.where(F.col("vec_id") % 5 == 0).repartition(4)
+    path = tmp_path / "pq"
+
+    def files_per_cell():
+        return {
+            d.name: len(list(d.glob("*.parquet")))
+            for d in (path / "codes").glob("ivf_cell=*")
+        }
+
+    ivf = build_ivf_index(part_a, n_cells=8)
+    books = train_pq(
+        ivf.assigned, m=8, k=16, sample=2_000, cell_centroids=ivf.centroids
+    )
+    save_pq_index(
+        encode_pq(ivf.assigned, books, cell_centroids=ivf.centroids), str(path)
+    )
+    saved = files_per_cell()
+    assert len(saved) == 8 and set(saved.values()) == {1}, saved
+
+    append_to_pq_index(spark, str(path), part_b)
+    added = {c: n - saved.get(c, 0) for c, n in files_per_cell().items()}
+    assert set(added.values()) <= {0, 1} and sum(added.values()) > 0, added
+
+
+def test_search_rejects_tie_columns_outside_the_codes(pq_index):
+    """ADC ties are ordered inside the codes relation, so a tie column
+    it does not hold is a ValueError raised before any Spark job."""
+    emb, idx = pq_index
+    with pytest.raises(ValueError, match="text"):
+        idx.search(emb, [0.125] * 64, 5, tie_cols=["text"])
+
+
 def test_load_pq_index_raises_on_damaged_centroid_file(spark, sf_oracle, tmp_path):
     """A damaged saved matrix is an error, never a silent fall back to
     a flat (centroid-less) index."""
@@ -264,7 +308,12 @@ def test_load_pq_index_raises_on_damaged_centroid_file(spark, sf_oracle, tmp_pat
 
 def test_pq_search_batch_matches_per_query_search(spark, sf_oracle):
     """Batched ADC == per-query ADC scores/ranks for every query in
-    the batch (same tables, same codes, one pass)."""
+    the batch (same tables, same codes, one pass): on a flat PQ index,
+    and on an IVF-PQ index at partial probe, where each cell's rows
+    are scored only against the queries that probed it."""
+    from nebuia_vector_db_spark.operators.ann import (
+        build_ivf_index_deterministic,
+    )
     from nebuia_vector_db_spark.operators.pq import (
         encode_pq,
         pq_search_batch,
@@ -274,8 +323,19 @@ def test_pq_search_batch_matches_per_query_search(spark, sf_oracle):
 
     emb = load_table(spark, sf_oracle, "embeddings").cache()
     books = train_pq(emb, m=16, k=16, sample=1000, seed=1)
-    pq = encode_pq(emb, books)
-    pq.codes = pq.codes.cache()
+    flat = encode_pq(emb, books)
+    flat.codes = flat.codes.cache()
+    mat = np.array(
+        [r["embedding"] for r in emb.orderBy("vec_id").collect()],
+        dtype=np.float32,
+    )
+    ivf = build_ivf_index_deterministic(emb, 8, mat, seed=5)
+    ivf_books = train_pq(
+        ivf.assigned, m=16, k=16, sample=1000, seed=2,
+        cell_centroids=ivf.centroids, sample_matrix=mat[:1000],
+    )
+    ivfpq = encode_pq(ivf.assigned, ivf_books, cell_centroids=ivf.centroids)
+    ivfpq.codes = ivfpq.codes.cache()
     qrows = emb.where(F.col("vec_id").isin(1, 6, 12)).select(
         "vec_id", "embedding"
     ).collect()
@@ -283,20 +343,23 @@ def test_pq_search_batch_matches_per_query_search(spark, sf_oracle):
         [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in qrows],
         "query_id long, query_vec array<double>",
     )
-    batch = {
-        (r["query_id"], r["vec_id"], round(r["adc_score"], 9))
-        for r in pq_search_batch(pq, emb, queries, topk=5).collect()
-    }
-    single = set()
-    for r in qrows:
-        for s in pq.search(
-            emb, [float(x) for x in r["embedding"]], 5,
-            tie_cols=["vec_id"],
-        ).collect():
-            single.add(
-                (int(r["vec_id"]), s["vec_id"], round(s["adc_score"], 9))
-            )
-    assert batch == single
+    for pq, nprobe in ((flat, None), (ivfpq, 2)):
+        batch = {
+            (r["query_id"], r["vec_id"], round(r["adc_score"], 9))
+            for r in pq_search_batch(
+                pq, emb, queries, topk=5, nprobe=nprobe
+            ).collect()
+        }
+        single = set()
+        for r in qrows:
+            for s in pq.search(
+                emb, [float(x) for x in r["embedding"]], 5,
+                tie_cols=["vec_id"], nprobe=nprobe,
+            ).collect():
+                single.add(
+                    (int(r["vec_id"]), s["vec_id"], round(s["adc_score"], 9))
+                )
+        assert len(batch) == 15 and batch == single, nprobe
 
 
 def test_pq_search_batch_full_rerank_is_exact_batch_knn(spark, sf_oracle):
