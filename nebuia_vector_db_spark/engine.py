@@ -18,6 +18,14 @@ them before Spark plans the scan. The whole-document GET+decode
 ``chunks.embedding`` + the projected fields. The warehouse is a
 local-disk path.
 
+Writes run no Spark job: ``store`` builds one Arrow table and the
+table writes it as one parquet file on the driver, and
+``delete_collection`` drops the collection's files by their manifest
+stats (``collection`` min = max = name, null count 0), the reference's
+prefix delete (main.go:415-418) as one atomic commit. Only a file that
+also holds other rows is rewritten copy-on-write. A new warehouse gets
+an empty first commit, so every write is an append.
+
 Documented deviations (SURVEY §1.5): D-1 always-sorted results, D-2
 deterministic tie-break, D-3 ``collection_name`` carries the real
 collection, D-4 dimension validated at ingest, D-5 synchronous
@@ -36,8 +44,10 @@ from __future__ import annotations
 import uuid
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nebuia_vector_db_spark.operators.topk import topk_search
 from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
@@ -45,6 +55,8 @@ from nebuia_vector_db_spark.sources.snapshot import (
     CommitConflictError,
     SnapshotTable,
 )
+
+_DOCUMENT_ARROW = to_arrow_schema(DOCUMENT_SCHEMA)
 
 
 class DimensionMismatchError(ValueError):
@@ -63,22 +75,34 @@ class VectorEngine:
         """The warehouse is one
         :class:`~nebuia_vector_db_spark.sources.snapshot.SnapshotTable`:
         every store is an atomic snapshot commit and delete_collection
-        a transactional copy-on-write DELETE. ``table_format`` has one
-        legal value, ``"snapshot"``; any other raises ``ValueError``
-        (the parquet-directory format is gone and its warehouses are
-        not read)."""
+        a transactional DELETE. A missing table is created empty in
+        ``DOCUMENT_SCHEMA`` (no files, no Spark job). ``table_format``
+        has one legal value, ``"snapshot"``; any other raises
+        ``ValueError`` (the parquet-directory format is gone and its
+        warehouses are not read)."""
         if table_format != "snapshot":
             raise ValueError(f"unknown table_format: {table_format!r}")
         self.spark = spark
         self.warehouse_path = warehouse_path
         self.dim = dim
         self.table = SnapshotTable(spark, warehouse_path)
+        try:
+            self.table.current_version()  # no log listing once checkpointed
+        except FileNotFoundError:
+            try:
+                SnapshotTable.create(
+                    spark, warehouse_path, _DOCUMENT_ARROW.empty_table()
+                )
+            except (FileExistsError, CommitConflictError):
+                pass  # another engine created it first
 
     # ---------------------------------------------------------------- store
     def store(self, collection_name: str, documents: Sequence[dict]) -> dict:
         """≙ POST /store (main.go:294-349): mint a UUID per document,
         append under the collection. Synchronous (D-5); returns the
-        same ``{message, operation_id}`` payload shape.
+        same ``{message, operation_id}`` payload shape. The documents
+        become one Arrow table, written as one parquet file on the
+        driver and committed with no Spark job.
 
         Python dicts follow the reference wire shape:
         ``{text, metadata: {source, name}, chunks: [{text, embedding,
@@ -117,8 +141,9 @@ class VectorEngine:
                     "chunks": chunks,
                 }
             )
-        df = self.spark.createDataFrame(rows, schema=DOCUMENT_SCHEMA)
-        self.store_dataframe(df)
+        self.table.with_retry(
+            "append", pa.Table.from_pylist(rows, schema=_DOCUMENT_ARROW)
+        )
         return {
             "message": "Batch store operation started",  # main.go:324
             "operation_id": operation_id,
@@ -129,39 +154,16 @@ class VectorEngine:
         DOCUMENT_SCHEMA shape; missing doc_ids minted JVM-side."""
         if "doc_id" not in df.columns:
             df = df.withColumn("doc_id", F.expr("uuid()"))
-        if self._head() is None:
-            # create-vs-create race: the loser's exclusive v1 commit
-            # fails — fall through to a retried append so concurrent
-            # first stores both land
-            try:
-                SnapshotTable.create(self.spark, self.warehouse_path, df)
-                return
-            except (FileExistsError, CommitConflictError):
-                pass
         self.table.with_retry("append", df)
-
-    def _head(self) -> int | None:
-        """The table's current version, None when nothing is committed
-        yet. Once the log is checkpointed this probes forward from the
-        checkpoint pointer, so a request does not list the log."""
-        try:
-            return self.table.current_version()
-        except FileNotFoundError:
-            return None
 
     # --------------------------------------------------------------- search
     def documents(self, collections: Sequence[str] | None = None) -> DataFrame:
         """The document relation, optionally limited to ``collections``
         — one read whose ``in`` predicate also prunes files by their
         ``collection`` stats."""
-        head = self._head()
-        if head is None:
-            return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
         if collections is None:
-            return self.table.read(version=head)
-        return self.table.read(
-            version=head, where=[("collection", "in", list(collections))]
-        )
+            return self.table.read()
+        return self.table.read(where=[("collection", "in", list(collections))])
 
     def chunks(self, collections: Sequence[str] | None = None) -> DataFrame:
         """The exploded search relation (SURVEY §1.4): one row per
@@ -264,22 +266,25 @@ class VectorEngine:
     # --------------------------------------------------------------- delete
     def delete_collection(self, collection_name: str) -> dict:
         """≙ POST /delete_collection (main.go:407-458). Synchronous
-        (D-5) and transactional (D-6): one atomic copy-on-write
-        SnapshotTable commit, so a concurrent reader never sees a
-        half-deleted collection (the reference's prefix delete removes
-        objects one by one, main.go:427-452); the pre-delete snapshot
-        stays time-travelable until vacuum. Oracle-verified by the
-        ``snap_engine_lifecycle`` registry row."""
-        if self._head() is None:
-            return {"status": "Collection deletion started", "deleted": False}
+        (D-5) and transactional (D-6): one atomic SnapshotTable
+        commit, so a concurrent reader never sees a half-deleted
+        collection (the reference's prefix delete removes objects one
+        by one, main.go:427-452); the pre-delete snapshot stays
+        time-travelable until vacuum. The manifest stats decide each
+        file: a file of only this collection is dropped unscanned, and
+        only a file that also holds other rows (or null
+        ``collection`` values) is rewritten copy-on-write.
+        Oracle-verified by the ``snap_engine_lifecycle`` registry
+        row."""
         # retried through the commit CAS: a store racing this delete
         # must not surface CommitConflictError to the caller. The flag
         # comes from the delete's own commit, so other writers'
         # commits cannot flip it.
         v = self.table.with_retry(
-            "delete_where", F.col("collection") == collection_name
+            "delete_where", [("collection", "=", collection_name)]
         )
-        deleted = self.table.meta("rewrote_files", v) > 0
+        meta = self.table.meta
+        deleted = meta("dropped_files", v) + meta("rewrote_files", v) > 0
         return {"status": "Collection deletion started", "deleted": deleted}
 
     # -------------------------------------------------------------- catalog

@@ -4424,9 +4424,11 @@ def q_snap_engine_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly but no recorded row drove. The embeddings table is
     ingested as documents (deterministic doc_ids, collection =
     ``col_{label mod 4}``, one chunk per doc) via store_dataframe
-    (snapshot CREATE commit); phase ``before`` is the reference-parity
-    top-10 over one collection (snapshot stats-pruned read); then
-    delete_collection runs the copy-on-write DELETE commit and phase
+    (a snapshot APPEND commit onto the engine's empty v1); phase
+    ``before`` is the reference-parity top-10 over one collection
+    (snapshot stats-pruned read); then delete_collection runs the
+    stats-decided DELETE commit (copy-on-write for files that mix
+    collections) and phase
     ``after`` multi-searches every collection (one read pruned by an
     ``in`` predicate on the collection stats). The
     oracle replays both phases relationally on the raw embeddings

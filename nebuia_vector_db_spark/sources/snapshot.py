@@ -5,15 +5,16 @@ isolation (main.go:294-348 store, main.go:407-458 delete — a
 concurrent reader can observe a half-deleted collection). At 100 TB
 that is untenable: every production lakehouse (Delta/Iceberg/Hudi)
 layers a transaction log over immutable data files. This module is
-that layer, minimal but real, with no dependency beyond the stdlib +
-Spark:
+that layer, minimal but real, with no dependency beyond the stdlib,
+Spark and pyarrow:
 
 Layout::
 
     table_root/
       data/<commit-uuid>/part-*.parquet   immutable data files
       _snapshots/v00000001.json           snapshot: file list + schema
-      _snapshots/v00000002.json           + per-file column min/max stats
+      _snapshots/v00000002.json           + per-file column min/max
+                                            and null-count stats
 
 Commit protocol — the versioned snapshot object is published through
 a :class:`~..sources.commit_backend.CommitBackend`, whose
@@ -47,32 +48,48 @@ name, schema, new file list and op-specific counters; the commit
 derives ``n_files``/``n_rows`` and carries the parent's application
 metadata forward.
 
+Two writers make data files: a DataFrame goes through Spark's parquet
+writer, and a ``pyarrow.Table`` (the engine's ``store``) is written on
+the driver as one file, with no Spark job. Both take their manifest
+entry from the new file's footer (``_file_entry``).
+
 Scale properties:
 - **Copy-on-write** ``delete_where``, ``delete_matching`` and
   ``upsert`` rewrite ONLY the files that contain matching rows, found
   distributedly by one shared probe (``_split_hit_files``, via
   ``input_file_name``); the untouched 99.9% of a 100 TB table is
   carried forward by reference.
+- **Stats-decided delete**: ``delete_where`` with simple predicates
+  (``[("collection", "=", name)]``) decides most files from the
+  manifest alone. A file the stats exclude is kept and one whose
+  stats are ``[v, v]`` with a null count of 0 is dropped by
+  reference, both unscanned (Delta's metadata-only delete); only the
+  rest reach the probe.
 - **File-level data skipping**: each snapshot stores per-file min/max
-  for leaf columns (harvested from parquet footers, no data read);
-  ``read(where=...)`` prunes the file list BEFORE Spark ever plans
-  the scan — the same planning-time skipping Delta/Iceberg do, which
-  row-group pruning inside Spark cannot match because it still pays
-  task scheduling + footer reads for every file.
+  and null counts for top-level columns (harvested from parquet
+  footers, no data read); ``read(where=...)`` prunes the file list
+  BEFORE Spark ever plans the scan — the same planning-time skipping
+  Delta/Iceberg do, which row-group pruning inside Spark cannot match
+  because it still pays task scheduling + footer reads for every
+  file. Files with 0 rows are never scanned.
 - **Time travel**: ``read(version=N)``; old snapshots stay valid
   until ``vacuum`` because deletes never remove data files.
 """
 
 from __future__ import annotations
 
+import io
 import json
 import os
 import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from nebuia_vector_db_spark.sources.commit_backend import (
     CommitBackend,
@@ -310,73 +327,89 @@ class SnapshotTable:
         self.backend.write_pointer(json.dumps({"version": version}))
 
     def _read_checkpoint_files(self, version: int) -> list[dict]:
-        import io
-
-        import pyarrow.parquet as pq
-
         data = self.backend.read_checkpoint(version)
         table = pq.read_table(io.BytesIO(data))
         return [json.loads(s) for s in table.column("entry").to_pylist()]
 
     def _write_files(
-        self, df: DataFrame, stats_cols: list[str] | None = None
+        self, data: DataFrame | pa.Table, stats_cols: list[str] | None = None
     ) -> list[dict]:
-        """Write df as a new immutable commit dir; return file entries
-        (relative path, row count, byte size, and per-column min/max
-        for ``stats_cols`` — default :meth:`_default_stats_cols` —
-        from the parquet FOOTERS; no data pages are read)."""
-        stats_cols = stats_cols or self._default_stats_cols(df)
+        """Write ``data`` as a new immutable commit dir; return its
+        manifest entries (:meth:`_file_entry`). A DataFrame goes through
+        Spark's parquet writer. A ``pyarrow.Table`` is written on the
+        driver as one file, with no Spark job, and an empty table writes
+        no file."""
+        stats_cols = stats_cols or self._default_stats_cols(_spark_schema(data))
         commit_id = uuid.uuid4().hex
         out_dir = os.path.join(self._data_dir, commit_id)
-        df.write.mode("error").parquet(out_dir)
-        import pyarrow.parquet as pq
-
-        entries = []
-        for name in sorted(os.listdir(out_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(out_dir, name)
-            md = pq.ParquetFile(full).metadata
-            stats: dict[str, list] = {}
-            for ci in range(md.num_columns):
-                col = md.schema.column(ci).name
-                if col not in stats_cols:
-                    continue
-                lo = hi = None
-                ok = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if ok and lo is not None:
-                    stats[col] = [_json_safe(lo), _json_safe(hi)]
-            entries.append(
-                {
-                    "path": os.path.join("data", commit_id, name),
-                    "rows": md.num_rows,
-                    "bytes": os.path.getsize(full),
-                    "stats": stats,
-                }
+        if isinstance(data, pa.Table):
+            if data.num_rows == 0:
+                return []
+            os.makedirs(out_dir)
+            # no dictionary pages: float vectors are near-unique, and a
+            # dictionary only adds to them (Spark's writer falls back)
+            pq.write_table(
+                data, os.path.join(out_dir, "part-00000.parquet"),
+                use_dictionary=False,
             )
-        return entries
+        else:
+            data.write.mode("error").parquet(out_dir)
+        return [
+            self._file_entry(os.path.join("data", commit_id, name), stats_cols)
+            for name in sorted(os.listdir(out_dir))
+            if name.endswith(".parquet")
+        ]
+
+    def _file_entry(self, rel: str, stats_cols: list[str]) -> dict:
+        """The manifest entry of one data file: relative path, row count,
+        byte size and, for each top-level column of ``stats_cols``, its
+        ``[min, max]`` under ``stats`` and its null count under
+        ``nulls``, summed over row groups. All of it comes from the
+        parquet FOOTER; no data page is read. A column gets a min/max
+        only when every row group has one, and a null count only when
+        every row group has one."""
+        full = os.path.join(self.path, rel)
+        md = pq.read_metadata(full)
+        stats: dict[str, list] = {}
+        nulls: dict[str, int] = {}
+        for ci in range(md.num_columns):
+            col = md.schema.column(ci).path  # a nested leaf never matches
+            if col not in stats_cols:
+                continue
+            sts = [
+                md.row_group(rg).column(ci).statistics
+                for rg in range(md.num_row_groups)
+            ]
+            if sts and all(st is not None and st.has_min_max for st in sts):
+                stats[col] = [
+                    _json_safe(min(st.min for st in sts)),
+                    _json_safe(max(st.max for st in sts)),
+                ]
+            if all(st is not None and st.has_null_count for st in sts):
+                nulls[col] = sum(st.null_count for st in sts)
+        return {
+            "path": rel,
+            "rows": md.num_rows,
+            "bytes": os.path.getsize(full),
+            "stats": stats,
+            "nulls": nulls,
+        }
 
     def _scan_files(self, schema: T.StructType, files: list[dict]) -> DataFrame:
-        """One DataFrame over the given manifest entries (empty when
-        there are none)."""
+        """One DataFrame over the given manifest entries. With none it is
+        an empty local relation built from Arrow, which, unlike a
+        Python-list ``createDataFrame``, starts no Python worker."""
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame(to_arrow_schema(schema).empty_table())
         return self.spark.read.schema(schema).parquet(
             *[os.path.join(self.path, f["path"]) for f in files]
         )
 
     @staticmethod
-    def _default_stats_cols(df: DataFrame) -> list[str]:
+    def _default_stats_cols(schema: T.StructType) -> list[str]:
         return [
             f.name
-            for f in df.schema.fields
+            for f in schema.fields
             if isinstance(
                 f.dataType,
                 (
@@ -393,12 +426,16 @@ class SnapshotTable:
         cls,
         spark: SparkSession,
         path: str,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         stats_cols: list[str] | None = None,
         extra_meta: dict | None = None,
         backend: CommitBackend | None = None,
         checkpoint_interval: int = 10,
     ) -> "SnapshotTable":
+        """Commit v1 with ``df``'s schema and rows (a DataFrame or a
+        ``pyarrow.Table``, see :meth:`_write_files`; an empty table
+        commits a table with no files). Raises ``FileExistsError`` when
+        the log already has a version."""
         tbl = cls(
             spark, path, backend=backend,
             checkpoint_interval=checkpoint_interval,
@@ -409,7 +446,7 @@ class SnapshotTable:
             {
                 **(extra_meta or {}),
                 "op": "create",
-                "schema": json.loads(df.schema.json()),
+                "schema": json.loads(_spark_schema(df).json()),
                 "files": tbl._write_files(df, stats_cols),
             },
             expected_parent=None,
@@ -427,7 +464,7 @@ class SnapshotTable:
     _RESERVED_KEYS = frozenset(
         {
             "op", "schema", "files", "n_files", "n_rows", "parent",
-            "version", "rewrote_files", "carried_files",
+            "version", "rewrote_files", "dropped_files", "carried_files",
             "compacted_files", "zorder_cols",
         }
     )
@@ -455,11 +492,10 @@ class SnapshotTable:
         against the snapshot's min/max stats (planning-time data
         skipping). Pruning is advisory only
         — the predicates are ALSO applied to the rows, so a stats-less
-        file degrades to a normal scan, never a wrong answer."""
+        file degrades to a normal scan, never a wrong answer. Files
+        whose manifest entry counts 0 rows are never scanned."""
         snap = self._snapshot(version)
-        files = snap["files"]
-        if where:
-            files = [f for f in files if _file_may_match(f, where)]
+        files = [f for f in snap["files"] if _file_may_match(f, where or [])]
         df = self._scan_files(self._schema(snap), files)
         for col, op, lit in where or []:
             df = df.where(_predicate(col, op, lit))
@@ -471,7 +507,8 @@ class SnapshotTable:
     def pruned_file_count(
         self, where: list[tuple[str, str, object]]
     ) -> int:
-        """How many files a ``read(where=...)`` would actually scan."""
+        """How many files a ``read(where=...)`` would actually scan (0-row
+        files never are)."""
         return sum(
             1 for f in self._snapshot()["files"] if _file_may_match(f, where)
         )
@@ -555,8 +592,7 @@ class SnapshotTable:
             frames.append(ins.unionByName(dels))
         if not frames:
             schema = self._schema(self._snapshot(v_hi))
-            empty = self.spark.createDataFrame([], schema)
-            return meta(empty, 0).where(F.lit(False))
+            return meta(self._scan_files(schema, []), 0)
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
@@ -564,13 +600,15 @@ class SnapshotTable:
 
     def append(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         stats_cols: list[str] | None = None,
         extra_meta: dict | None = None,
         merge_schema: bool = False,
         expected_parent: int | None = None,
     ) -> int:
-        """Append ``df`` as new immutable files. With ``merge_schema``,
+        """Append ``df`` as new immutable files: a DataFrame through
+        Spark's writer, a ``pyarrow.Table`` as one file written on the
+        driver with no Spark job (:meth:`_write_files`). With ``merge_schema``,
         columns present in ``df`` but not the table are ADDED to the
         table schema (additive evolution, the lakehouse
         ``mergeSchema`` contract): existing files are untouched — the
@@ -596,7 +634,7 @@ class SnapshotTable:
             known = {f.name for f in schema.fields}
             schema = T.StructType(
                 schema.fields
-                + [f for f in df.schema.fields if f.name not in known]
+                + [f for f in _spark_schema(df).fields if f.name not in known]
             )
         df = _align(df, schema)
         return self._commit(
@@ -670,18 +708,21 @@ class SnapshotTable:
         )
 
     def _split_hit_files(
-        self, snap: dict, matching: Callable[[DataFrame], DataFrame]
+        self,
+        schema: T.StructType,
+        files: list[dict],
+        matching: Callable[[DataFrame], DataFrame],
     ) -> tuple[list[dict], list[dict]]:
         """Copy-on-write phase 1, shared by every row-level rewrite:
-        split the files of snapshot ``snap`` into ``(kept, hit)``,
-        where a hit file holds at least one row of
-        ``matching(scan)``. The file name is bound AT SCAN TIME —
+        split ``files`` into ``(kept, hit)``, where a hit file holds at
+        least one row of ``matching(scan)``. Only ``files`` are
+        scanned. The file name is bound AT SCAN TIME —
         ``input_file_name()`` is empty for rows that crossed a
         shuffle, and is ambiguous after a join whose other side is
         itself a file source — so the caller may filter the scan with
         a predicate or a join. One distributed scan; only distinct
         file names reach the driver, never rows."""
-        scan = self.read(snap["version"]).withColumn(
+        scan = self._scan_files(schema, files).withColumn(
             "_hit_file", F.input_file_name()
         )
         hit_paths = {
@@ -689,7 +730,7 @@ class SnapshotTable:
             for r in matching(scan).select("_hit_file").distinct().collect()
         }
         kept, hit = [], []
-        for f in snap["files"]:
+        for f in files:
             full = os.path.abspath(os.path.join(self.path, f["path"]))
             (hit if full in hit_paths else kept).append(f)
         return kept, hit
@@ -698,42 +739,82 @@ class SnapshotTable:
         self,
         matching: Callable[[DataFrame], DataFrame],
         surviving: Callable[[DataFrame], DataFrame],
+        where: list[tuple[str, str, object]] | None = None,
     ) -> int:
-        """Copy-on-write delete. Three phases, Delta-style:
+        """Copy-on-write delete, Delta-style. Each file is decided from
+        its manifest entry when it can be, and scanned only when it
+        cannot:
 
-        1. find the files that hold ≥1 ``matching`` row
-           (:meth:`_split_hit_files`);
-        2. rewrite ONLY those files, keeping their ``surviving`` rows;
-        3. commit: carried-forward files + rewritten files.
+        1. a file with 0 rows, or whose ``where`` stats exclude every
+           row (:func:`_file_may_match`), is kept with no scan;
+        2. a file whose stats prove every row matches ``where``
+           (:func:`_file_all_match`) is dropped by reference, with no
+           scan (the metadata-only delete);
+        3. of the rest, the files holding ≥1 ``matching`` row
+           (:meth:`_split_hit_files`) are rewritten with only their
+           ``surviving`` rows.
 
+        ``where`` is the simple-predicate form of the condition (see
+        :meth:`read`); without it every non-empty file goes to step 3.
         Unaffected files move by reference — at 100 TB a delete that
         touches one day's partition rewrites that day, not the table —
         and a delete that hits no file writes no data file. Old
         snapshots remain readable (time travel) until vacuum."""
         parent = self.current_version()
         snap = self._snapshot(parent)
-        kept, hit = self._split_hit_files(snap, matching)
+        schema = self._schema(snap)
+        dropped, undecided = [], []
+        for f in snap["files"]:
+            if not _file_may_match(f, where or []):
+                continue
+            if where is not None and _file_all_match(f, where):
+                dropped.append(f)
+            else:
+                undecided.append(f)
+        hit = []
+        if undecided:
+            _, hit = self._split_hit_files(schema, undecided, matching)
+        gone = {f["path"] for f in dropped + hit}
+        kept = [f for f in snap["files"] if f["path"] not in gone]
         new_files = list(kept)
         if hit:
-            survivors = surviving(self._scan_files(self._schema(snap), hit))
-            new_files += self._write_files(survivors)
+            new_files += self._write_files(
+                surviving(self._scan_files(schema, hit))
+            )
         return self._commit(
             {
                 "op": "delete",
                 "schema": snap["schema"],
                 "files": new_files,
                 "rewrote_files": len(hit),
+                "dropped_files": len(dropped),
                 "carried_files": len(kept),
             },
             expected_parent=parent,
         )
 
-    def delete_where(self, condition: Column | str) -> int:
+    def delete_where(
+        self, condition: Column | str | list[tuple[str, str, object]]
+    ) -> int:
         """Copy-on-write delete of the rows matching ``condition``
-        (:meth:`_cow_delete`)."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
+        (:meth:`_cow_delete`): a Column, a SQL string, or a list of
+        simple predicates ``(col, op, literal)`` as :meth:`read` takes
+        them, ANDed. Only the list form lets the stats decide whole
+        files. As in SQL ``DELETE``, a row whose condition is NULL is
+        not deleted."""
+        where = condition if isinstance(condition, list) else None
+        if where is not None:
+            cond = F.lit(True)
+            for col, op, lit in where:
+                cond = cond & _predicate(col, op, lit)
+        elif isinstance(condition, str):
+            cond = F.expr(condition)
+        else:
+            cond = condition
         return self._cow_delete(
-            lambda df: df.where(cond), lambda df: df.where(~cond)
+            lambda df: df.where(cond),
+            lambda df: df.where(~F.coalesce(cond, F.lit(False))),
+            where,
         )
 
     def delete_matching(self, keys: DataFrame) -> int:
@@ -786,7 +867,7 @@ class SnapshotTable:
         updates = _align(updates, schema)
         keys = F.broadcast(updates.select(*key_cols).distinct())
         kept, hit = self._split_hit_files(
-            snap, lambda df: df.join(keys, key_cols, "left_semi")
+            schema, snap["files"], lambda df: df.join(keys, key_cols, "left_semi")
         )
         merged = upsert_latest(
             self._scan_files(schema, hit), updates, key_cols, version_col
@@ -887,6 +968,8 @@ class SnapshotTable:
                 live.add(os.path.abspath(os.path.join(self.path, f["path"])))
         removed_files = 0
         now = _time.time()
+        # a table created empty has no data dir until its first write
+        os.makedirs(self._data_dir, exist_ok=True)
         for commit_id in list(os.listdir(self._data_dir)):
             cdir = os.path.join(self._data_dir, commit_id)
             for name in list(os.listdir(cdir)):
@@ -953,10 +1036,13 @@ def _predicate(col: str, op: str, lit) -> Column:
 
 
 def _file_may_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
-    """Conservative stats check: False only when the file's min/max
-    stats PROVE it has no matching rows (all predicates are ANDed). A
+    """Conservative stats check: False only when the file's manifest
+    entry PROVES it has no matching rows: it counts 0 rows, or its
+    min/max stats exclude some predicate (all predicates are ANDed). A
     column without stats, or a manifest key this check does not read,
     never prunes."""
+    if f.get("rows") == 0:
+        return False
     for col, op, lit in where:
         st = f.get("stats", {}).get(col)
         if st and st[0] is not None:
@@ -975,8 +1061,36 @@ def _file_may_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
     return True
 
 
-def _align(df: DataFrame, schema: T.StructType) -> DataFrame:
+def _file_all_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
+    """The other side of :func:`_file_may_match`: True only when the
+    file's manifest entry PROVES every row matches. That needs, for each
+    predicate, an ``=`` on a string or integer column whose stats are
+    ``[lit, lit]`` and whose recorded null count is 0 (a parquet min/max
+    ignores nulls, and an entry without null counts proves nothing).
+    Floats never qualify: their min/max also ignore NaN."""
+    for col, op, lit in where:
+        st = f.get("stats", {}).get(col)
+        if op != "=" or not st or f.get("nulls", {}).get(col) != 0:
+            return False
+        if type(lit) not in (str, int) or type(st[0]) is not type(lit):
+            return False
+        if st != [lit, lit]:
+            return False
+    return True
+
+
+def _spark_schema(data: DataFrame | pa.Table) -> T.StructType:
+    if isinstance(data, pa.Table):
+        return from_arrow_schema(data.schema)
+    return data.schema
+
+
+def _align(
+    df: DataFrame | pa.Table, schema: T.StructType
+) -> DataFrame | pa.Table:
     """Project/cast df to the table schema (column order + types)."""
+    if isinstance(df, pa.Table):
+        return df.select(schema.fieldNames()).cast(to_arrow_schema(schema))
     return df.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )

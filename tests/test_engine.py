@@ -1,6 +1,8 @@
 """VectorEngine parity tests — one per reference route plus the §1.5
 semantic-quirk regressions (deviations D-1..D-5)."""
 
+import os
+
 import numpy as np
 import pytest
 from hypothesis import example, given, settings
@@ -348,6 +350,168 @@ def test_snapshot_delete_flag_ignores_concurrent_commits(
     monkeypatch.setattr(SnapshotTable, "delete_where", rival_lands_first)
     assert eng.delete_collection(target)["deleted"] is deleted
     assert target not in eng.list_collections()
+
+
+def test_new_warehouse_is_an_empty_first_commit(spark, tmp_path, monkeypatch):
+    """A new engine commits an empty v1 (no files, no data dir); an
+    engine that loses the race to create it opens the winner's table."""
+    from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
+
+    wh = str(tmp_path / "wh")
+    eng = VectorEngine(spark, wh, dim=4)
+    (h,) = eng.table.history()
+    assert (h["op"], h["n_files"], h["n_rows"]) == ("create", 0, 0)
+    assert sorted(os.listdir(wh)) == ["_snapshots"]
+
+    def not_yet(self):
+        raise FileNotFoundError("raced")
+
+    monkeypatch.setattr(SnapshotTable, "current_version", not_yet)
+    VectorEngine(spark, wh, dim=4)  # its create loses: v1 exists
+    monkeypatch.undo()
+    assert eng.table.versions() == [1]
+    assert eng.list_collections() == []
+    assert eng.search("c", [1.0, 0.0, 0.0, 0.0], 3).count() == 0
+    assert eng.delete_collection("c")["deleted"] is False
+    assert eng.table.vacuum()["removed_data_files"] == 0
+
+
+def test_driver_store_reads_back_like_store_dataframe(spark, tmp_path):
+    """``store`` writes its file on the driver; read back through
+    Spark, its rows equal ``store_dataframe`` of the same documents in
+    every column: nested metadata, JSON ``source``, nulls, a document
+    without chunks and the ``{vector: [...]}`` wire shape."""
+    from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
+
+    docs = [
+        {
+            "text": "first",
+            "metadata": {"source": {"b": 1, "a": [2]}, "name": "d0"},
+            "chunks": [
+                {
+                    "text": "c0",
+                    "embedding": [1.0, -2.5, 3.25],
+                    "metadata": {"source": "plain", "name": "d0.1"},
+                    "semantic_score": 0.75,
+                },
+                {
+                    "text": None,
+                    "embedding": {"vector": [0.0, 1e-300, -0.0]},
+                    "metadata": None,
+                },
+            ],
+        },
+        {"text": None, "metadata": None, "chunks": []},
+        {"metadata": {"name": "d2"}},
+    ]
+    want = [
+        ("c", "first", ('{"a": [2], "b": 1}', "d0"), [
+            ("c0", [1.0, -2.5, 3.25], ("plain", "d0.1"), 0.75),
+            (None, [0.0, 1e-300, -0.0], (None, None), 0.0),
+        ]),
+        ("c", None, (None, None), []),
+        ("c", None, (None, "d2"), []),
+    ]
+    eng = VectorEngine(spark, str(tmp_path / "driver"), dim=3)
+    eng.store("c", docs)
+    bulk = VectorEngine(spark, str(tmp_path / "bulk"), dim=3)
+    bulk.store_dataframe(
+        spark.createDataFrame(
+            [(c, f"id{i}", t, m, ch) for i, (c, t, m, ch) in enumerate(want)],
+            DOCUMENT_SCHEMA,
+        )
+    )
+
+    def rows(e):
+        df = e.documents()
+        assert df.schema == DOCUMENT_SCHEMA
+        return sorted(
+            (r.asDict(recursive=True) for r in df.drop("doc_id").collect()),
+            key=repr,
+        )
+
+    assert rows(eng) == rows(bulk)
+    assert len(eng.table._snapshot()["files"]) == 1  # one store, one file
+    ids = [r.doc_id for r in eng.documents().collect()]
+    assert len(set(ids)) == 3 and all(len(i) == 36 for i in ids)
+
+
+def test_null_collection_row_survives_delete_of_its_file(spark, tmp_path):
+    """A file whose ``collection`` stats are [x, x] may still hold a
+    null ``collection`` (min/max ignore nulls): its null count keeps it
+    from being dropped whole, and the rewrite keeps the null row."""
+    from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
+
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    rows = [
+        (c, f"id{i}", None, None, []) for i, c in enumerate(["x", None, "x"])
+    ]
+    eng.store_dataframe(spark.createDataFrame(rows, DOCUMENT_SCHEMA).coalesce(1))
+    (entry,) = eng.table._snapshot()["files"]
+    assert entry["stats"]["collection"] == ["x", "x"]
+    assert entry["nulls"]["collection"] == 1
+    assert eng.delete_collection("x")["deleted"] is True
+    left = eng.documents().collect()
+    assert [(r.collection, r.doc_id) for r in left] == [(None, "id1")]
+
+
+def test_delete_decided_by_stats_scans_nothing(spark, tmp_path, monkeypatch):
+    """``store`` writes on the driver, and a collection whose every
+    file holds only that collection is deleted from the manifest
+    alone: its files are dropped by reference, other files carried,
+    and no file is probed or written by Spark. The commit's
+    ``dropped_files`` stays out of later commits."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
+
+    def boom(*a, **kw):
+        raise AssertionError("a Spark scan or write ran")
+
+    monkeypatch.setattr(SnapshotTable, "_split_hit_files", boom)
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    eng.store("a", _mkdocs(2, 1, 4, seed=61))
+    eng.store("b", _mkdocs(3, 1, 4, seed=62))
+    eng.store("a", _mkdocs(1, 1, 4, seed=63))
+    assert eng.delete_collection("a")["deleted"] is True
+    assert eng.table.meta("dropped_files") == 2
+    assert eng.table.meta("rewrote_files") == 0
+    assert eng.delete_collection("a")["deleted"] is False
+    monkeypatch.undo()
+    assert eng.list_collections() == ["b"]
+    assert eng.documents(["b"]).count() == 3
+    eng.store("c", _mkdocs(1, 1, 4, seed=64))
+    assert eng.table.meta("dropped_files") is None
+
+
+def test_requests_build_no_python_list_relation(spark, tmp_path, monkeypatch):
+    """``store``, ``search`` (a hit, a miss, an emptied collection) and
+    ``delete_collection`` never hand ``createDataFrame`` a Python list:
+    that relation runs on the RDD runner and forks Python workers."""
+    from pyspark.sql import SparkSession
+
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    docs = _mkdocs(2, 2, 4, seed=71)
+    q = docs[0]["chunks"][0]["embedding"]
+    lists = []
+    create = SparkSession.createDataFrame
+
+    def spy(self, data, *a, **kw):
+        if isinstance(data, list):
+            lists.append(data)
+        return create(self, data, *a, **kw)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", spy)
+    eng.store("c", docs)
+    assert eng.search("c", q, 3).count() == 3
+    missing = eng.search("missing", q, 5)
+    assert missing.count() == 0
+    plan = missing._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert eng.delete_collection("c")["deleted"] is True
+    assert eng.search("c", q, 3).collect() == []
+    assert lists == []
 
 
 def test_search_min_similarity_radius_gate(spark, tmp_path_factory):

@@ -6,12 +6,15 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.sources.snapshot import (
     CommitConflictError,
     SnapshotTable,
+    _file_all_match,
     _file_may_match,
 )
 
@@ -186,6 +189,92 @@ def test_stats_check_is_conservative():
     assert _file_may_match({"stats": {}}, [("a", "=", 1)])
     assert _file_may_match(f, [("a", "=", "zzz")])
     assert _file_may_match(f, [("a", "in", ["zzz"])])
+
+
+def test_all_match_needs_single_value_stats_and_zero_nulls():
+    """A file is dropped unscanned only when its stats are [v, v] and
+    it counts no nulls; an entry without null counts (an older
+    manifest) proves nothing."""
+    f = {"stats": {"c": ["x", "x"]}, "nulls": {"c": 0}}
+    assert _file_all_match(f, [("c", "=", "x")])
+    assert not _file_all_match(f, [("c", "in", ["x"])])
+    assert not _file_all_match(f, [("c", "=", "y")])
+    assert not _file_all_match(f, [("c", ">=", "x")])
+    assert not _file_all_match({**f, "nulls": {"c": 1}}, [("c", "=", "x")])
+    assert not _file_all_match({"stats": f["stats"]}, [("c", "=", "x")])
+    assert not _file_all_match(
+        {**f, "stats": {"c": ["w", "x"]}}, [("c", "=", "x")]
+    )
+    # floats (NaN sits outside parquet min/max) and bools never qualify
+    g = {"stats": {"c": [1.0, 1.0]}, "nulls": {"c": 0}}
+    assert not _file_all_match(g, [("c", "=", 1.0)])
+    assert not _file_all_match(
+        {"stats": {"c": [1, 1]}, "nulls": {"c": 0}}, [("c", "=", True)]
+    )
+
+
+def test_zero_row_entries_are_neither_counted_nor_scanned(spark, tmp_path):
+    """Spark writes a 0-row file for an empty append; the manifest
+    says so exactly, so reads skip it and keep the same rows."""
+    assert not _file_may_match({"rows": 0, "stats": {}}, [])
+    tbl = SnapshotTable.create(
+        spark, str(tmp_path / "t"), spark.range(0, 10).coalesce(1)
+    )
+    tbl.append(spark.range(0))
+    files = tbl._snapshot()["files"]
+    empty = [f for f in files if f["rows"] == 0]
+    assert empty, "the empty append left no 0-row entry"
+    assert tbl.pruned_file_count([]) == len(files) - len(empty)
+    assert tbl.pruned_file_count([("id", ">=", 0)]) == 1
+    got = tbl.read()
+    scanned = {os.path.basename(p) for p in got.inputFiles()}
+    assert not scanned & {os.path.basename(f["path"]) for f in empty}
+    assert sorted(r.id for r in got.collect()) == list(range(10))
+
+
+def test_arrow_append_writes_one_undictionaried_file(spark, tmp_path):
+    """A pyarrow.Table append is one parquet file written on the
+    driver, with footer stats and null counts in its entry and no
+    dictionary pages on the vector column."""
+    tbl = SnapshotTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(
+            pa.table({"c": pa.array(["z"]), "v": pa.array([[0.0]])})
+        ),
+    )
+    t = pa.table(
+        {
+            "c": pa.array(["x", None, "x"]),
+            "v": pa.array([[0.1 * i, 1.0 + i] for i in range(3)]),
+        }
+    )
+    before = {f["path"] for f in tbl._snapshot()["files"]}
+    tbl.append(t)
+    (entry,) = [f for f in tbl._snapshot()["files"] if f["path"] not in before]
+    assert entry["rows"] == 3
+    assert entry["stats"] == {"c": ["x", "x"]}
+    assert entry["nulls"] == {"c": 1}
+    md = pq.read_metadata(os.path.join(tbl.path, entry["path"]))
+    enc = {
+        md.schema.column(i).path: md.row_group(0).column(i).encodings
+        for i in range(md.num_columns)
+    }
+    assert "RLE_DICTIONARY" not in enc["v.list.element"]
+    assert "PLAIN_DICTIONARY" not in enc["v.list.element"]
+    got = tbl.read().where(F.col("c").isNull() | (F.col("c") == "x"))
+    assert got.count() == 3
+
+
+def test_empty_relations_start_no_python_rdd(spark, tmp_path):
+    """An empty scan is a local relation from Arrow, not a
+    Python-list RDD (which forks Python workers when it runs)."""
+    tbl = SnapshotTable.create(spark, str(tmp_path / "t"), spark.range(0, 4))
+    for df in (tbl.read(where=[("id", ">", 99)]), tbl.changes(1, 1)):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert tbl.changes(1, 1).columns == ["id", "_change", "_commit_version"]
 
 
 def test_schema_evolution_additive(spark, base_df, tmp_path):
