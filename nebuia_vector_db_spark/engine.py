@@ -33,22 +33,39 @@ snapshot-isolated writes (strictly stronger than the reference's
 fire-and-forget goroutines, main.go:302-321), D-6 one transactional
 delete.
 
-Scale: manifest-stats pruning keeps a query reading only its
-collections' files; TakeOrderedAndProject keeps top-k shuffle-free;
-for massive collections add a bucketed/Z-ordered layout or the IVF
-index (operators/ann.py) for candidate pruning.
+Search has two routes with the same answer. Manifest-stats pruning
+keeps a query reading only its collections' files. When those files
+hold at most ``_DRIVER_SEARCH_MAX_BYTES`` and there is no ``where``,
+the driver reads them with pyarrow one at a time, scores them with the
+Spark route's left-to-right dot and sorts the best rows in the D-2
+order, and the result is a local relation: the request runs no Spark
+job. Otherwise (and for chunks Spark would score NULL or NaN) the
+search is a Spark query whose TakeOrderedAndProject keeps top-k
+shuffle-free, which is the route at scale; for massive collections add
+a bucketed/Z-ordered layout or the IVF index
+(operators/ann.py) for candidate pruning.
 """
 
 from __future__ import annotations
 
+import math
+import numbers
+import os
 import uuid
 from collections.abc import Sequence
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from nebuia_vector_db_spark.functions.vector import (
+    arrow_list_to_matrix,
+    normalize_query,
+)
 from nebuia_vector_db_spark.operators.topk import topk_search
 from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
 from nebuia_vector_db_spark.sources.snapshot import (
@@ -57,6 +74,28 @@ from nebuia_vector_db_spark.sources.snapshot import (
 )
 
 _DOCUMENT_ARROW = to_arrow_schema(DOCUMENT_SCHEMA)
+
+# a search whose candidate files hold at most this many bytes runs on
+# the driver. It reads one file at a time and holds about 4.7x that
+# file's bytes, so the bound caps a request's driver memory and keeps
+# large collections on the Spark route, which scales
+_DRIVER_SEARCH_MAX_BYTES = 64 << 20
+
+# the columns the driver route reads, and the search result's columns
+_SEARCH_ARROW = pa.schema(
+    [_DOCUMENT_ARROW.field(c) for c in ("collection", "doc_id", "metadata", "chunks")]
+)
+_RESULT_ARROW = pa.schema(
+    [
+        ("embedding_id", pa.string()),
+        ("similarity", pa.float64()),
+        ("position", pa.int32()),
+        ("metadata", _DOCUMENT_ARROW.field("metadata").type),
+        ("text", pa.string()),
+        ("collection_name", pa.string()),
+        ("doc_id", pa.string()),
+    ]
+)
 
 
 class DimensionMismatchError(ValueError):
@@ -122,6 +161,10 @@ class VectorEngine:
                     raise DimensionMismatchError(
                         f"chunk embedding dim {len(emb)} != engine dim {self.dim}"
                     )
+                if not all(map(math.isfinite, emb)):
+                    # a NaN would score NaN and rank above every
+                    # finite similarity
+                    raise ValueError("chunk embedding values must be finite")
                 md = ch.get("metadata") or {}
                 chunks.append(
                     {
@@ -207,7 +250,19 @@ class VectorEngine:
         exploded chunk relation (``doc_name``, ``chunk_metadata``,
         ``text``, ``semantic_score``, ...) BEFORE scoring, so Catalyst
         can push eligible predicates into the scan and the similarity
-        kernel only sees surviving rows."""
+        kernel only sees surviving rows.
+
+        Two routes give the same rows in the same order. Without
+        ``where``, when the collection's files (pruned by their
+        ``collection`` stats) hold at most ``_DRIVER_SEARCH_MAX_BYTES``,
+        the search runs on the driver: the files are read with pyarrow
+        and cut there (:func:`_driver_top_k`), and the result is a
+        local relation whose ``collect()`` runs no Spark job. Otherwise, and
+        when a candidate chunk's embedding is null, not ``len(q)``
+        wide or not finite, it is a Spark query (TakeOrderedAndProject).
+
+        ``top_k`` must be an int >= 0 and every query component finite
+        (``ValueError``)."""
         return self._search_impl(
             [collection_name], query_vector, top_k, where, min_similarity
         )
@@ -225,7 +280,8 @@ class VectorEngine:
         top-k (SURVEY §1.5-6); one plan over the unified table — the
         per-collection goroutine fan-out becomes partition parallelism.
         ``where`` filters chunks before scoring and ``min_similarity``
-        adds the radius gate (see ``search``)."""
+        adds the radius gate; the driver and Spark routes and the input
+        checks are those of ``search``."""
         return self._search_impl(
             list(collections), query_vector, top_k, where, min_similarity
         )
@@ -238,17 +294,27 @@ class VectorEngine:
         where: "F.Column | str | None" = None,
         min_similarity: float | None = None,
     ) -> DataFrame:
+        integral = isinstance(top_k, numbers.Integral) and not isinstance(top_k, bool)
+        if not integral or top_k < 0:
+            raise ValueError(f"top_k must be an int >= 0, got {top_k!r}")
         if self.dim is not None and len(query_vector) != self.dim:
             raise DimensionMismatchError(
                 f"query dim {len(query_vector)} != engine dim {self.dim}"
             )
+        q = [float(x) for x in query_vector]
+        if not all(map(math.isfinite, q)):
+            raise ValueError("query vector components must be finite")
+        if where is None:
+            found = self._driver_search(collections, q, int(top_k), min_similarity)
+            if found is not None:
+                return self.spark.createDataFrame(found)
         ch = self.chunks(collections)
         if where is not None:
             ch = ch.where(F.expr(where) if isinstance(where, str) else where)
         scored = topk_search(
             ch,
-            query_vector,
-            top_k,
+            q,
+            int(top_k),
             vec_col="embedding",
             sim_col="similarity",
             # D-1/D-2: always sorted, deterministic ties
@@ -262,6 +328,45 @@ class VectorEngine:
                 F.col("similarity") >= F.lit(float(min_similarity))
             )
         return _search_result(scored)
+
+    def _driver_search(
+        self,
+        collections: Sequence[str],
+        q: list[float],
+        k: int,
+        min_similarity: float | None,
+    ) -> pa.Table | None:
+        """The driver route of a search: the current snapshot's files
+        that may hold ``collections``, each read with pyarrow on one
+        thread and cut to its best k rows by :func:`_driver_top_k`,
+        then the best k of those. A request holds one file's rows at a
+        time. ``None`` sends the request to the Spark route: the files
+        hold more than ``_DRIVER_SEARCH_MAX_BYTES``, or a chunk cannot
+        be scored here."""
+        files = self.table.candidate_files([("collection", "in", list(collections))])
+        if sum(f["bytes"] for f in files) > _DRIVER_SEARCH_MAX_BYTES:
+            return None
+        wanted = pa.array(list(collections), pa.string())
+        qn = np.asarray(normalize_query(q))
+        best = [_RESULT_ARROW.empty_table()]
+        for f in files:
+            docs = (
+                pq.ParquetFile(os.path.join(self.table.path, f["path"]))
+                .read(columns=_SEARCH_ARROW.names, use_threads=False)
+                .select(_SEARCH_ARROW.names)
+                .cast(_SEARCH_ARROW)
+            )
+            keep = pc.is_in(docs["collection"], wanted, skip_nulls=True)
+            if not pc.all(keep).as_py():  # the file also holds other collections
+                docs = docs.filter(keep)
+            part = _driver_top_k(docs.combine_chunks(), qn, k)
+            if part is None:
+                return None
+            best.append(part)
+        out = _d2_first(pa.concat_tables(best), k)
+        if min_similarity is not None:
+            out = out.filter(pc.greater_equal(out["similarity"], float(min_similarity)))
+        return out
 
     # --------------------------------------------------------------- delete
     def delete_collection(self, collection_name: str) -> dict:
@@ -309,6 +414,78 @@ def _search_result(scored: DataFrame) -> DataFrame:
         F.col("collection").alias("collection_name"),
         "doc_id",
     )
+
+
+def _driver_top_k(docs: pa.Table, q: np.ndarray, k: int) -> pa.Table | None:
+    """The best k chunks of ``docs`` (``_SEARCH_ARROW`` rows) for the
+    normalized query ``q``, as an Arrow table of ``_RESULT_ARROW`` in
+    the D-2 order, or ``None`` when a chunk's embedding is null, not
+    ``len(q)`` wide or not finite (the Spark route scores those NULL or
+    NaN). ``chunks`` is exploded with 1-based positions, as
+    ``posexplode`` does, and the embeddings are decoded zero-copy."""
+    lists = docs["chunks"].combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+    parent = np.repeat(np.arange(len(lens)), lens)  # each chunk's document
+    position = np.arange(len(parent)) - (np.cumsum(lens) - lens)[parent] + 1
+    chunk = lists.flatten()
+    emb, d = pc.struct_field(chunk, "embedding"), len(q)
+    if emb.null_count or (len(emb) and not d):
+        return None
+    if (pc.list_value_length(emb).to_numpy() != d).any():
+        return None
+    mat = arrow_list_to_matrix(emb) if len(emb) else np.empty((0, d))
+    if not np.isfinite(mat).all():
+        return None
+    sims = _dot_left_to_right(mat, q)
+    n = len(sims)
+    cand = np.arange(n)
+    if k < n:  # only rows at or above the k-th similarity can make the cut
+        cand = np.flatnonzero(sims >= np.partition(sims, n - k)[n - k]) if k else cand[:0]
+    of_doc, kept = parent[cand], chunk.take(cand)
+    rows = pa.table(
+        [
+            pc.struct_field(docs["metadata"], "name").take(of_doc),
+            pa.array(sims[cand], pa.float64()),
+            pa.array(position[cand], pa.int32()),
+            pc.struct_field(kept, "metadata"),
+            pc.struct_field(kept, "text"),
+            docs["collection"].take(of_doc),
+            docs["doc_id"].take(of_doc),
+        ],
+        schema=_RESULT_ARROW,
+    )
+    return _d2_first(rows, k)
+
+
+def _d2_first(rows: pa.Table, k: int) -> pa.Table:
+    """The first k of ``_RESULT_ARROW`` rows in the D-2 order of the
+    Spark route: similarity descending, then ``doc_id`` and
+    ``position`` ascending with nulls first."""
+    order = pc.sort_indices(
+        rows,
+        sort_keys=[
+            ("similarity", "descending"),
+            ("doc_id", "ascending"),
+            ("position", "ascending"),
+        ],
+        null_placement="at_start",
+    )
+    return rows.take(order[:k])
+
+
+def _dot_left_to_right(mat: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """``mat @ q`` with each row summed left to right from 0.0, as the
+    SQL :func:`~nebuia_vector_db_spark.functions.vector.dot` does, so a
+    similarity equals the Spark route's bit for bit and depends on its
+    row's values alone (a BLAS GEMV rounds equal rows differently by
+    their place in the matrix, which breaks exact ties). Blocks of 256
+    rows bound the temporary products."""
+    sims = np.empty(len(mat))
+    for s in range(0, len(mat), 256):
+        sums = np.add.accumulate(mat[s : s + 256] * q, axis=1)
+        # + 0.0 turns an all-(-0.0) sum into the 0.0 SQL starts from
+        sims[s : s + 256] = sums[:, -1] + 0.0
+    return sims
 
 
 def _as_json_str(value) -> str | None:

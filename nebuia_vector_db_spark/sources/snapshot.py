@@ -80,6 +80,7 @@ from __future__ import annotations
 
 import io
 import json
+import operator
 import os
 import uuid
 from collections.abc import Callable
@@ -504,14 +505,18 @@ class SnapshotTable:
     def n_files(self, version: int | None = None) -> int:
         return len(self._snapshot(version)["files"])
 
+    def candidate_files(
+        self, where: list[tuple[str, str, object]]
+    ) -> list[dict]:
+        """The current snapshot's manifest entries that a
+        ``read(where=...)`` would scan (0-row files never are)."""
+        return [f for f in self._snapshot()["files"] if _file_may_match(f, where)]
+
     def pruned_file_count(
         self, where: list[tuple[str, str, object]]
     ) -> int:
-        """How many files a ``read(where=...)`` would actually scan (0-row
-        files never are)."""
-        return sum(
-            1 for f in self._snapshot()["files"] if _file_may_match(f, where)
-        )
+        """How many files a ``read(where=...)`` would actually scan."""
+        return len(self.candidate_files(where))
 
     # ----------------------------------------------------- change feed
     def _step_delta(self, v: int) -> tuple[list[dict], list[dict]]:
@@ -803,17 +808,22 @@ class SnapshotTable:
         files. As in SQL ``DELETE``, a row whose condition is NULL is
         not deleted."""
         where = condition if isinstance(condition, list) else None
-        if where is not None:
-            cond = F.lit(True)
+        if isinstance(condition, str):
+            condition = F.expr(condition)
+
+        def cond() -> Column:
+            # the list form's Column is built only when a file must be
+            # scanned: a delete the stats decide makes no py4j call
+            if where is None:
+                return condition
+            out = F.lit(True)
             for col, op, lit in where:
-                cond = cond & _predicate(col, op, lit)
-        elif isinstance(condition, str):
-            cond = F.expr(condition)
-        else:
-            cond = condition
+                out = out & _predicate(col, op, lit)
+            return out
+
         return self._cow_delete(
-            lambda df: df.where(cond),
-            lambda df: df.where(~F.coalesce(cond, F.lit(False))),
+            lambda df: df.where(cond()),
+            lambda df: df.where(~F.coalesce(cond(), F.lit(False))),
             where,
         )
 
@@ -1025,14 +1035,18 @@ def _strip_scheme(p: str) -> str:
     return os.path.abspath(p)
 
 
+_COMPARE = {
+    "=": operator.eq, "<": operator.lt, "<=": operator.le,
+    ">": operator.gt, ">=": operator.ge,
+}
+
+
 def _predicate(col: str, op: str, lit) -> Column:
     c = F.col(col)
     if op == "in":
         return c.isin(list(lit))
-    return {
-        "=": c == lit, "<": c < lit, "<=": c <= lit,
-        ">": c > lit, ">=": c >= lit,
-    }[op]
+    # only the asked-for comparison: each Column call is a py4j round trip
+    return _COMPARE[op](c, lit)
 
 
 def _file_may_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
@@ -1040,12 +1054,15 @@ def _file_may_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
     entry PROVES it has no matching rows: it counts 0 rows, or its
     min/max stats exclude some predicate (all predicates are ANDed). A
     column without stats, or a manifest key this check does not read,
-    never prunes."""
+    never prunes. Float stats never prune either: Spark orders NaN
+    above every number, but a pyarrow footer leaves NaN out of min/max
+    and a Spark one may record it as the max, so neither bounds the
+    rows a predicate keeps."""
     if f.get("rows") == 0:
         return False
     for col, op, lit in where:
         st = f.get("stats", {}).get(col)
-        if st and st[0] is not None:
+        if st and st[0] is not None and not any(type(v) is float for v in st):
             lo, hi = st
             try:
                 if op == "=" and not (lo <= lit <= hi):

@@ -1,6 +1,7 @@
 """VectorEngine parity tests — one per reference route plus the §1.5
 semantic-quirk regressions (deviations D-1..D-5)."""
 
+import inspect
 import os
 
 import numpy as np
@@ -9,6 +10,7 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from nebuia_vector_db_spark import engine as engine_module
 from nebuia_vector_db_spark.engine import DimensionMismatchError, VectorEngine
 
 
@@ -34,8 +36,7 @@ def _mkdocs(n_docs: int, chunks_per_doc: int, dim: int, seed: int, name_prefix="
     return docs
 
 
-@pytest.fixture(scope="module")
-def engine(spark, tmp_path_factory):
+def _three_collections(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("warehouse"))
     eng = VectorEngine(spark, wh, dim=8)
     resp = eng.store("alpha", _mkdocs(6, 3, 8, seed=1, name_prefix="a"))
@@ -43,6 +44,13 @@ def engine(spark, tmp_path_factory):
     eng.store("beta", _mkdocs(4, 2, 8, seed=2, name_prefix="b"))
     eng.store("gamma", _mkdocs(2, 1, 8, seed=3, name_prefix="g"))
     return eng
+
+
+@pytest.fixture(scope="module")
+def engine(spark, tmp_path_factory):
+    """Three small collections: every search of them takes the driver
+    route (``TestSparkRoute`` runs the same tests on the Spark one)."""
+    return _three_collections(spark, tmp_path_factory)
 
 
 def test_store_and_catalog(engine):
@@ -485,6 +493,29 @@ def test_delete_decided_by_stats_scans_nothing(spark, tmp_path, monkeypatch):
     assert eng.table.meta("dropped_files") is None
 
 
+def test_delete_decided_by_stats_makes_no_py4j_call(spark, tmp_path, monkeypatch):
+    """A delete the manifest stats decide never builds its Spark
+    predicate, so it makes no py4j round trip: it is a driver-side
+    manifest commit only."""
+    from py4j.clientserver import ClientServerConnection
+
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    eng.store("a", _mkdocs(2, 1, 4, seed=65))
+    eng.store("b", _mkdocs(1, 1, 4, seed=66))
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def spy(self, command, *a, **kw):
+        calls.append(command)
+        return send(self, command, *a, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", spy)
+    assert eng.delete_collection("a")["deleted"] is True
+    assert eng.delete_collection("a")["deleted"] is False
+    monkeypatch.undo()
+    assert calls == []
+    assert eng.list_collections() == ["b"]
+
 def test_requests_build_no_python_list_relation(spark, tmp_path, monkeypatch):
     """``store``, ``search`` (a hit, a miss, an emptied collection) and
     ``delete_collection`` never hand ``createDataFrame`` a Python list:
@@ -586,3 +617,226 @@ def test_registered_views_serve_full_sql(spark, sf_smoke):
     )
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(got) > 0
+
+
+# ------------------------------------------------------ the two search routes
+def _route(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "driver" if plan.startswith("LocalTableScan") else "spark"
+
+
+def _both_routes(monkeypatch, run):
+    """``run()`` on the driver route (no bound) and on the Spark route
+    (bound 0), with the route each took."""
+    out = {}
+    for route, bound in (("driver", 1 << 62), ("spark", 0)):
+        monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", bound)
+        df = run()
+        assert _route(df) == route
+        out[route] = df
+    return out["driver"], out["spark"]
+
+
+def test_search_routes_agree(spark, tmp_path, monkeypatch):
+    """The driver and Spark routes return the same ``(doc_id,
+    position)`` sequence, the same rows (similarities bit for bit) and
+    the same column types: under exact ties (one vector stored in
+    several documents and positions), for ``multi_search`` over a
+    Spark-written file and driver-written ones, with ``min_similarity``
+    and with ``top_k`` above the collection size."""
+    from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
+
+    tie = [0.5, -0.25, 1.0, 0.125]
+    docs = _mkdocs(6, 3, 4, seed=81, name_prefix="d")
+    for i, j in [(0, 2), (1, 0), (3, 1), (3, 2), (5, 0)]:
+        docs[i]["chunks"][j]["embedding"] = list(tie)
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    eng.store("d", docs[:4])
+    eng.store("d", docs[4:])
+    chunk = ("c", tie, ("s", "n"), 0.0)
+    eng.store_dataframe(
+        spark.createDataFrame(
+            [("s", f"s{i}", "t", (None, f"s{i}"), [chunk, chunk]) for i in range(3)],
+            DOCUMENT_SCHEMA,
+        )
+    )
+    cases = [
+        lambda: eng.search("d", tie, 3),  # a tie crosses the cut
+        lambda: eng.multi_search(["s", "d"], tie, 7),
+        lambda: eng.multi_search(["d", "s"], [1.0, 0.0, 0.0, 0.0], 100),
+        lambda: eng.search("d", [0.0, 1.0, 0.0, 1.0], 10, min_similarity=0.2),
+        lambda: eng.search("d", tie, 100),
+    ]
+    for run in cases:
+        driver, sparked = _both_routes(monkeypatch, run)
+        got, want = driver.collect(), sparked.collect()
+        assert [(r.doc_id, r.position) for r in got] == [
+            (r.doc_id, r.position) for r in want
+        ]
+        assert got == want  # every column, similarities to the bit
+        assert driver.dtypes == sparked.dtypes
+    assert len(eng.search("d", tie, 100).collect()) == 6 * 3
+
+
+@pytest.mark.parametrize("bad", ["empty", "ragged", "nan"])
+def test_unscorable_chunk_takes_the_spark_route(spark, tmp_path, monkeypatch, bad):
+    """With ``dim=None`` a chunk may hold an empty or ragged embedding,
+    and ``store_dataframe`` a NaN. Spark scores those NULL or NaN, so
+    the search goes to the Spark route and gives its answer."""
+    from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
+
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=None)
+    eng.store("c", _mkdocs(3, 2, 4, seed=91))
+    vec = {"empty": [], "ragged": [1.0, 0.0, 0.0], "nan": [float("nan"), 0, 0, 0]}
+    chunk = ("x", [float(v) for v in vec[bad]], (None, "x.1"), 0.0)
+    eng.store_dataframe(
+        spark.createDataFrame([("c", "odd", None, (None, "x"), [chunk])], DOCUMENT_SCHEMA)
+    )
+
+    def answer(df):
+        return [(r.doc_id, r.position, repr(r.similarity)) for r in df.collect()]
+
+    q = [1.0, 0.5, 0.0, 0.0]
+    chosen = eng.search("c", q, 4)
+    assert _route(chosen) == "spark"
+    monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", 0)
+    assert answer(chosen) == answer(eng.search("c", q, 4))
+    if bad == "nan":
+        assert answer(chosen)[0][:2] == ("odd", 1)  # NaN sorts first
+
+
+def test_driver_search_runs_no_spark_job(spark, tmp_path):
+    """A driver-route ``search`` and ``multi_search`` are local
+    relations: through ``collect()`` they run no Spark job, while a
+    ``where=`` search still does."""
+    import time
+
+    sc = spark.sparkContext
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    eng.store("a", _mkdocs(4, 2, 4, seed=101))
+    eng.store("b", _mkdocs(3, 2, 4, seed=102))
+    q = [1.0, 0.0, -1.0, 0.5]
+    tag = os.path.basename(str(tmp_path))
+    try:
+        sc.setJobGroup(f"{tag}-driver", "driver-route searches")
+        single = eng.search("a", q, 3)
+        multi = eng.multi_search(["a", "b"], q, 5)
+        assert (len(single.collect()), len(multi.collect())) == (3, 5)
+        sc.setJobGroup(f"{tag}-where", "a where= search")
+        assert len(eng.search("a", q, 3, where="position = 1").collect()) == 3
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{tag}-where"):
+        assert time.monotonic() < deadline, "the where= search ran no job"
+        time.sleep(0.1)
+    # listener events arrive in order: the where= job is seen, so any
+    # earlier job would be too
+    assert tracker.getJobIdsForGroup(f"{tag}-driver") == []
+    for df in (single, multi):
+        assert _route(df) == "driver"
+
+
+def test_driver_route_reads_on_one_thread_under_the_bound(spark, tmp_path, monkeypatch):
+    """The driver route reads each candidate file with one thread and
+    never imports ``pyarrow.dataset``; candidates over the byte bound
+    take the Spark route."""
+    import sys
+
+    import pyarrow.parquet as pq
+
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    eng.store("a", _mkdocs(3, 2, 4, seed=111))
+    eng.store("b", _mkdocs(3, 2, 4, seed=112))
+    eng.store("a", _mkdocs(2, 2, 4, seed=113))
+    size = sum(
+        f["bytes"] for f in eng.table.candidate_files([("collection", "in", ["a"])])
+    )
+    reads = []
+    read = pq.ParquetFile.read
+
+    def spy(self, *a, **kw):
+        reads.append(kw.get("use_threads"))
+        return read(self, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read", spy)
+    monkeypatch.setitem(sys.modules, "pyarrow.dataset", None)  # import fails
+    q = [0.0, 1.0, 0.0, 0.0]
+    monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", size)
+    at_bound = eng.search("a", q, 4)
+    assert _route(at_bound) == "driver" and reads == [False, False]
+    monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", size - 1)
+    over = eng.search("a", q, 4)
+    assert _route(over) == "spark" and len(reads) == 2
+    assert at_bound.collect() == over.collect()
+
+
+@pytest.mark.parametrize("top_k", [-1, 2.5, True, "3", None])
+def test_search_rejects_a_bad_top_k(engine, top_k):
+    """``top_k`` must be an int >= 0: a negative or fractional one is
+    a ValueError before any route runs, never an empty result."""
+    with pytest.raises(ValueError, match="top_k"):
+        engine.search("alpha", [1.0] * 8, top_k)
+    with pytest.raises(ValueError, match="top_k"):
+        engine.multi_search(["alpha", "beta"], [1.0] * 8, top_k)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_search_rejects_a_non_finite_query(engine, bad):
+    """A NaN or infinite query component scores every chunk NaN or
+    NULL: it is a ValueError, never a ranked answer."""
+    q = [1.0] * 7 + [bad]
+    with pytest.raises(ValueError, match="finite"):
+        engine.search("alpha", q, 5)
+    with pytest.raises(ValueError, match="finite"):
+        engine.multi_search(["alpha", "beta"], q, 5)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_store_rejects_non_finite_embedding(spark, tmp_path, bad):
+    """A stored NaN would score NaN and rank first in every search of
+    its collection; ``store`` refuses it and commits nothing."""
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    docs = _mkdocs(2, 2, 4, seed=121)
+    docs[1]["chunks"][1]["embedding"] = [bad, 0.0, 0.0, 0.0]
+    with pytest.raises(ValueError, match="finite"):
+        eng.store("c", docs)
+    assert eng.table.n_files() == 0
+    assert eng.search("c", [1.0, 0.0, 0.0, 0.0], 3).collect() == []
+
+
+class TestSparkRoute:
+    """The search tests again, with the driver route's byte bound at 0,
+    so every request takes the Spark route. The class is filled below:
+    every module test that takes the shared ``engine``, and the tests
+    that search an engine of their own."""
+
+    @pytest.fixture(autouse=True, scope="class")
+    def spark_route(self):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", 0)
+            yield
+
+    @pytest.fixture(scope="class")
+    def engine(self, spark, tmp_path_factory, spark_route):
+        return _three_collections(spark, tmp_path_factory)
+
+    def test_routed_to_spark(self, engine):
+        assert _route(engine.search("alpha", [1.0] * 8, 3)) == "spark"
+
+
+for _test in [
+    *(
+        f
+        for name, f in list(globals().items())
+        if name.startswith("test_")
+        and "engine" in inspect.signature(f).parameters
+    ),
+    test_search_min_similarity_radius_gate,
+    test_multi_search_min_similarity_gate,
+    test_list_collections_raises_on_corrupt_log,
+    test_requests_do_not_list_the_log,
+    test_requests_build_no_python_list_relation,
+]:
+    setattr(TestSparkRoute, _test.__name__, staticmethod(_test))

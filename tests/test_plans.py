@@ -83,16 +83,21 @@ def test_events_hourly_shuffle_budget(spark, sf_oracle):
     assert has_broadcast_join(df)
 
 
-def test_engine_search_prunes_collection_partitions(spark, tmp_path_factory):
+def test_engine_search_prunes_collection_partitions(
+    spark, tmp_path_factory, monkeypatch
+):
     """A search must read ONLY its collections' files (≙ the
     reference's MinIO prefix listing, main.go:186-189): each store
     commit writes one collection, and the snapshot manifest's
     ``collection`` stats drop every other file before the scan is
-    planned — for one collection and for several."""
+    planned — for one collection and for several, on the Spark route
+    (the files the plan scans) and on the driver route (the files it
+    opens)."""
     from urllib.parse import urlparse
 
     import pyarrow.parquet as pq
 
+    from nebuia_vector_db_spark import engine as engine_module
     from nebuia_vector_db_spark.engine import VectorEngine
 
     wh = str(tmp_path_factory.mktemp("wh_prune"))
@@ -126,7 +131,22 @@ def test_engine_search_prunes_collection_partitions(spark, tmp_path_factory):
                 out.append(sorted(set(colls.column(0).to_pylist())))
         return sorted(out)
 
+    opened = []
+    init = pq.ParquetFile.__init__
+
+    def spy(self, source, *a, **kw):
+        opened.append(source)
+        init(self, source, *a, **kw)
+
     q = [1.0, 0.0, 0.0, 0.0]
+    monkeypatch.setattr(pq.ParquetFile, "__init__", spy)
+    eng.search("b", q, 5)
+    eng.multi_search(["a", "b"], q, 5)
+    monkeypatch.undo()
+    assert [pq.read_table(p).column("collection").to_pylist() for p in opened] == [
+        ["b"], ["a"], ["b"]
+    ]
+    monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", 0)
     assert data_files(eng.search("b", q, 5)) == [["b"]]
     assert data_files(eng.multi_search(["a", "b"], q, 5)) == [["a"], ["b"]]
 

@@ -232,6 +232,36 @@ def test_zero_row_entries_are_neither_counted_nor_scanned(spark, tmp_path):
     assert sorted(r.id for r in got.collect()) == list(range(10))
 
 
+def test_float_stats_never_prune_nan_rows(spark, tmp_path):
+    """Spark orders NaN above every double, so ``x > 5`` keeps a NaN
+    row. Neither footer bounds it: a Spark-written one records
+    ``[1.0, NaN]`` and a pyarrow-written one leaves NaN out of min/max.
+    A pruned read keeps the rows the unpruned one does."""
+    nan = float("nan")
+    tbl = SnapshotTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, 1.0), (2, nan)], "k long, x double").coalesce(1),
+    )
+    tbl.append(pa.table({"k": pa.array([3, 4]), "x": pa.array([2.0, nan])}))
+    stats = [f["stats"]["x"] for f in tbl._snapshot()["files"] if f["rows"]]
+    assert len(stats) == 2  # one footer per writer
+    for op in (">", ">=", "=", "<", "<="):
+        for lit in (5.0, nan, 1.0):
+            where = [("x", op, lit)]
+            sql = f"x {op} {lit!r}".replace("nan", "'NaN'")
+            assert tbl.pruned_file_count(where) == 2
+            assert tbl.read(where=where).count() == tbl.read().where(sql).count()
+    # Spark's own row-group filter skips the pyarrow file's NaN (its
+    # footer says max 2.0); without it both NaN rows are kept
+    key = "spark.sql.parquet.filterPushdown"
+    spark.conf.set(key, "false")
+    try:
+        assert tbl.read(where=[("x", ">", 5.0)]).count() == 2
+    finally:
+        spark.conf.unset(key)
+
+
 def test_arrow_append_writes_one_undictionaried_file(spark, tmp_path):
     """A pyarrow.Table append is one parquet file written on the
     driver, with footer stats and null counts in its entry and no
