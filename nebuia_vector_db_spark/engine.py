@@ -147,7 +147,9 @@ class VectorEngine:
         ``{text, metadata: {source, name}, chunks: [{text, embedding,
         metadata, semantic_score}]}`` — ``embedding`` is a plain list
         (the reference wraps it as ``{vector: [...]}``; both accepted).
+        A ``collection_name`` that is not a ``str`` raises ``TypeError``.
         """
+        _check_collection_name(collection_name)
         operation_id = str(uuid.uuid4())
         rows = []
         for doc in documents:
@@ -262,7 +264,8 @@ class VectorEngine:
         wide or not finite, it is a Spark query (TakeOrderedAndProject).
 
         ``top_k`` must be an int >= 0 and every query component finite
-        (``ValueError``)."""
+        (``ValueError``); a ``collection_name`` that is not a ``str``
+        raises ``TypeError``."""
         return self._search_impl(
             [collection_name], query_vector, top_k, where, min_similarity
         )
@@ -294,6 +297,8 @@ class VectorEngine:
         where: "F.Column | str | None" = None,
         min_similarity: float | None = None,
     ) -> DataFrame:
+        for name in collections:
+            _check_collection_name(name)
         integral = isinstance(top_k, numbers.Integral) and not isinstance(top_k, bool)
         if not integral or top_k < 0:
             raise ValueError(f"top_k must be an int >= 0, got {top_k!r}")
@@ -380,7 +385,9 @@ class VectorEngine:
         only a file that also holds other rows (or null
         ``collection`` values) is rewritten copy-on-write.
         Oracle-verified by the ``snap_engine_lifecycle`` registry
-        row."""
+        row. A ``collection_name`` that is not a ``str`` raises
+        ``TypeError``."""
+        _check_collection_name(collection_name)
         # retried through the commit CAS: a store racing this delete
         # must not surface CommitConflictError to the caller. The flag
         # comes from the delete's own commit, so other writers'
@@ -398,6 +405,13 @@ class VectorEngine:
         return sorted(
             r[0] for r in self.documents().select("collection").distinct().collect()
         )
+
+
+def _check_collection_name(name) -> None:
+    """A collection is a ``collection`` string value: anything else
+    would be stored as null or fail deep inside Arrow."""
+    if not isinstance(name, str):
+        raise TypeError(f"collection name must be a str, got {type(name).__name__}")
 
 
 def _search_result(scored: DataFrame) -> DataFrame:

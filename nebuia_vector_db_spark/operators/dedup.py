@@ -593,6 +593,11 @@ _MAX_SCORE_CELLS = 32_000_000
 # Measured (tools/exp_b9_kernel.py, 40k×40k blocks, 21 concurrent
 # tasks): 40.9 s → 20.6 s wall with the f32 screen + 1 BLAS thread.
 _SCREEN_MARGIN = 1e-3
+# Exact-recompute slice: candidates are gathered and re-scored at most
+# this many f64 cells (8 MB) per operand at a time, so a duplicate-
+# dense chunk, where every screened cell is a candidate, holds one
+# slice of gathered rows instead of all of them (candidates x d x 16 B).
+_RECOMPUTE_CELLS = 1 << 20
 
 
 def _screened_pairs(
@@ -616,10 +621,15 @@ def _screened_pairs(
         return ii, jj, np.empty(0)
     ii = ii + l_off
     # exact recompute, same formula as the SQL/oracle path:
-    # dot(raw) / (na*nb)
-    cos = np.einsum("ij,ij->i", l_mat[ii], r_mat[jj]) / (
-        l_norms[ii] * r_norms[jj]
-    )
+    # dot(raw) / (na*nb), one bounded slice of candidates at a time
+    # (each row's dot is the same whatever the slice)
+    step = max(1, _RECOMPUTE_CELLS // max(1, l_mat.shape[1]))
+    cos = np.empty(len(ii))
+    for s in range(0, len(ii), step):
+        a, b = ii[s : s + step], jj[s : s + step]
+        cos[s : s + step] = np.einsum("ij,ij->i", l_mat[a], r_mat[b]) / (
+            l_norms[a] * r_norms[b]
+        )
     ok = cos >= threshold
     return ii[ok], jj[ok], cos[ok]
 

@@ -22,14 +22,9 @@ a :class:`~..sources.commit_backend.CommitBackend`, whose
 two writers racing to commit version N+1 cannot both succeed; the
 loser gets :class:`CommitConflictError` and retries on the new
 snapshot (optimistic concurrency, same contract as Delta's
-``_delta_log`` protocol). On the default local-filesystem backend the
-publish is write-temp + fsync + ``os.link`` — the link is the CAS and
-the version file appears fully written or not at all, so a reader can
-NEVER observe a truncated snapshot and a writer crash leaves only an
-orphan temp file (never a corrupt committed version). Other backends
-(S3 conditional PUT, HDFS create-no-overwrite) plug in behind the
-same three-method surface; the in-memory conditional-PUT fake in
-commit_backend.py proves the protocol backend-agnostic in tests.
+``_delta_log`` protocol). The default backend publishes by link, so a
+reader never observes a truncated snapshot; tests drive the protocol,
+lost race included, through the ``backend=`` argument.
 
 Log scalability (the Delta checkpoint shape): commit N's payload
 stores only the file-manifest DELTA (``add`` + ``remove``) against
@@ -136,36 +131,20 @@ class SnapshotTable:
         """O(tail) version resolution: start at the ``_last_checkpoint``
         pointer and probe forward until the next version is absent.
         Falls back to a listing only when the table has never been
-        checkpointed (short logs, where listing is cheap anyway)."""
+        checkpointed (short logs, where listing is cheap anyway) or
+        the pointer is missing or names a vacuumed version."""
         ptr = self._read_pointer()
         if ptr is not None and self.backend.version_exists(ptr):
             v = ptr
         else:
-            # probe past the listing too (round 6): object-store
-            # listings may lag writes (GCS/S3-compatible stores with
-            # eventual LIST), while point reads are read-after-write —
-            # so the listing only SEEDS the probe (and an empty lagging
-            # listing on a fresh table seeds it at 0: versions start
-            # at 1 and the log is gapless, so forward probing finds
-            # every committed head)
+            # no usable pointer: seed the probe from the listing. A
+            # backend lists every committed version, and vacuum keeps
+            # the newest ones, so the listing's head (or 0 on a table
+            # with no commits) is the right place to start
             vs = self.versions()
             v = vs[-1] if vs else 0
         while self.backend.version_exists(v + 1):
             v += 1
-        if v == 0:
-            # vacuum deletes versions below the oldest retained
-            # checkpoint, so after vacuum the log no longer starts at
-            # v1 — a missing/stale pointer plus a lagging (empty)
-            # listing would seed the probe at 0 and find nothing even
-            # though newer committed versions exist. Before concluding
-            # the table is empty, re-seed from the oldest surviving
-            # checkpoint (checkpointed versions are always retained).
-            for c in sorted(self.backend.list_checkpoints()):
-                if self.backend.version_exists(c):
-                    v = c
-                    while self.backend.version_exists(v + 1):
-                        v += 1
-                    break
         if v == 0:
             raise FileNotFoundError(f"no snapshots at {self.path}")
         return v
@@ -348,10 +327,14 @@ class SnapshotTable:
                 return []
             os.makedirs(out_dir)
             # no dictionary pages: float vectors are near-unique, and a
-            # dictionary only adds to them (Spark's writer falls back)
+            # dictionary only adds to them (Spark's writer falls back).
+            # No float statistics: a pyarrow footer leaves NaN out of a
+            # float min/max, and Spark's row-group pushdown would then
+            # skip NaN rows that Spark orders above every number
             pq.write_table(
                 data, os.path.join(out_dir, "part-00000.parquet"),
                 use_dictionary=False,
+                write_statistics=_non_float_leaves(data.schema),
             )
         else:
             data.write.mode("error").parquet(out_dir)
@@ -1094,6 +1077,29 @@ def _file_all_match(f: dict, where: list[tuple[str, str, object]]) -> bool:
         if st != [lit, lit]:
             return False
     return True
+
+
+def _non_float_leaves(schema: pa.Schema) -> list[str]:
+    """The parquet column paths of ``schema``'s leaves whose physical
+    type is neither FLOAT nor DOUBLE, in pyarrow's nested naming
+    (``chunks.list.element.embedding.list.element``)."""
+    out: list[str] = []
+
+    def walk(path: str, t: pa.DataType) -> None:
+        if pa.types.is_struct(t):
+            for f in t:
+                walk(f"{path}.{f.name}", f.type)
+        elif pa.types.is_map(t):
+            walk(f"{path}.key_value.key", t.key_type)
+            walk(f"{path}.key_value.value", t.item_type)
+        elif isinstance(t, (pa.ListType, pa.LargeListType, pa.FixedSizeListType)):
+            walk(f"{path}.list.element", t.value_type)
+        elif not (pa.types.is_float32(t) or pa.types.is_float64(t)):
+            out.append(path)
+
+    for f in schema:
+        walk(f.name, f.type)
+    return out
 
 
 def _spark_schema(data: DataFrame | pa.Table) -> T.StructType:

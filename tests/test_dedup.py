@@ -600,3 +600,40 @@ def test_substring_anchor_cache_is_releasable(spark):
     assert dd._CACHED_RELATIONS[0].storageLevel.useMemory
     assert dd.release_cached_relations() == 1
     assert dd._CACHED_RELATIONS == []
+
+
+def test_screened_pairs_recompute_memory_is_bounded_on_duplicates():
+    """An all-duplicate screening chunk makes every cell a candidate.
+    The exact recompute gathers them one bounded slice at a time, so
+    its peak allocation stays far below the 128 MB that gathering all
+    262,144 candidate row pairs (512 x 512, d = 32, float64) at once
+    takes, and the pairs are bit-identical to the unsliced recompute."""
+    import tracemalloc
+
+    import numpy as np
+
+    from nebuia_vector_db_spark.operators import dedup as dd
+
+    rng = np.random.default_rng(7)
+    n, d, threshold = 512, 32, 0.9
+    mat = rng.normal(size=d) + 1e-4 * rng.normal(size=(n, d))
+    norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    n32 = (mat / norms[:, None]).astype(np.float32)
+    cos32 = n32 @ n32.T
+    assert (cos32 >= threshold).all()
+
+    tracemalloc.start()
+    try:
+        ii, jj, cos = dd._screened_pairs(cos32, mat, norms, mat, norms, 0, threshold)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 48 * 2**20, f"peak {peak / 2**20:.1f} MB"
+
+    want_i, want_j = np.nonzero(cos32 >= np.float32(threshold - dd._SCREEN_MARGIN))
+    want = np.einsum("ij,ij->i", mat[want_i], mat[want_j]) / (
+        norms[want_i] * norms[want_j]
+    )
+    assert len(ii) == n * n
+    assert np.array_equal(ii, want_i) and np.array_equal(jj, want_j)
+    assert np.array_equal(cos, want)

@@ -806,6 +806,29 @@ def test_store_rejects_non_finite_embedding(spark, tmp_path, bad):
     assert eng.search("c", [1.0, 0.0, 0.0, 0.0], 3).collect() == []
 
 
+@pytest.mark.parametrize("bad", [None, 5, b"c"])
+def test_routes_reject_a_non_str_collection_name(spark, tmp_path, bad):
+    """A collection is a string: a null name would store a row no
+    route can name again, and an int fails deep inside Arrow. All four
+    routes raise TypeError before they touch the table."""
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    docs = _mkdocs(1, 1, 4, seed=131)
+    eng.store("c", docs)
+    table, eng.table = eng.table, None  # any read or write would fail otherwise
+    q = [1.0, 0.0, 0.0, 0.0]
+    for call in (
+        lambda: eng.store(bad, docs),
+        lambda: eng.search(bad, q, 3),
+        lambda: eng.multi_search(["c", bad], q, 3),
+        lambda: eng.delete_collection(bad),
+    ):
+        with pytest.raises(TypeError, match="collection name must be a str"):
+            call()
+    eng.table = table
+    assert eng.list_collections() == ["c"]
+    assert table.n_files() == 1
+
+
 class TestSparkRoute:
     """The search tests again, with the driver route's byte bound at 0,
     so every request takes the Spark route. The class is filled below:

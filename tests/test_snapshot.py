@@ -234,9 +234,9 @@ def test_zero_row_entries_are_neither_counted_nor_scanned(spark, tmp_path):
 
 def test_float_stats_never_prune_nan_rows(spark, tmp_path):
     """Spark orders NaN above every double, so ``x > 5`` keeps a NaN
-    row. Neither footer bounds it: a Spark-written one records
-    ``[1.0, NaN]`` and a pyarrow-written one leaves NaN out of min/max.
-    A pruned read keeps the rows the unpruned one does."""
+    row. A Spark-written footer records ``[1.0, NaN]``, which does not
+    bound it, and a driver-written file carries no float stats. A
+    pruned read keeps the rows the unpruned one does."""
     nan = float("nan")
     tbl = SnapshotTable.create(
         spark,
@@ -244,22 +244,63 @@ def test_float_stats_never_prune_nan_rows(spark, tmp_path):
         spark.createDataFrame([(1, 1.0), (2, nan)], "k long, x double").coalesce(1),
     )
     tbl.append(pa.table({"k": pa.array([3, 4]), "x": pa.array([2.0, nan])}))
-    stats = [f["stats"]["x"] for f in tbl._snapshot()["files"] if f["rows"]]
-    assert len(stats) == 2  # one footer per writer
+    stats = [f["stats"].get("x") for f in tbl._snapshot()["files"] if f["rows"]]
+    assert len(stats) == 2 and sum(st is not None for st in stats) == 1
     for op in (">", ">=", "=", "<", "<="):
         for lit in (5.0, nan, 1.0):
             where = [("x", op, lit)]
             sql = f"x {op} {lit!r}".replace("nan", "'NaN'")
             assert tbl.pruned_file_count(where) == 2
             assert tbl.read(where=where).count() == tbl.read().where(sql).count()
-    # Spark's own row-group filter skips the pyarrow file's NaN (its
-    # footer says max 2.0); without it both NaN rows are kept
+
+
+def test_driver_written_files_carry_no_float_stats(spark, tmp_path):
+    """A pyarrow footer leaves NaN out of a float min/max, so a
+    driver-written file records no float or double statistics at any
+    nesting depth, and Spark's own row-group filter, on or off, keeps
+    the NaN row it orders above 5.0. Other leaves keep their stats."""
+    nan = float("nan")
+    tbl = SnapshotTable.create(
+        spark,
+        str(tmp_path / "t"),
+        pa.table(
+            {
+                "c": pa.array(["a", "b"]),
+                "x": pa.array([2.0, nan]),
+                "f": pa.array([1.0, nan], pa.float32()),
+                "chunks": pa.array(
+                    [[{"name": "n", "embedding": [0.5, nan]}], []]
+                ),
+                "m": pa.array(
+                    [[("k", nan)], []], pa.map_(pa.string(), pa.float64())
+                ),
+            }
+        ),
+    )
+    (entry,) = tbl._snapshot()["files"]
+    assert entry["stats"] == {"c": ["a", "b"]}
+    md = pq.read_metadata(os.path.join(tbl.path, entry["path"]))
+    has_stats = {
+        md.schema.column(i).path: md.row_group(0).column(i).is_stats_set
+        for i in range(md.num_columns)
+    }
+    assert has_stats == {
+        "c": True,
+        "x": False,
+        "f": False,
+        "chunks.list.element.name": True,
+        "chunks.list.element.embedding.list.element": False,
+        "m.key_value.key": True,
+        "m.key_value.value": False,
+    }
     key = "spark.sql.parquet.filterPushdown"
-    spark.conf.set(key, "false")
-    try:
-        assert tbl.read(where=[("x", ">", 5.0)]).count() == 2
-    finally:
-        spark.conf.unset(key)
+    for pushdown in ("true", "false"):
+        spark.conf.set(key, pushdown)
+        try:
+            assert tbl.read().where("x > 5.0").count() == 1
+            assert tbl.read().where("f > 5.0").count() == 1
+        finally:
+            spark.conf.unset(key)
 
 
 def test_arrow_append_writes_one_undictionaried_file(spark, tmp_path):

@@ -1,12 +1,12 @@
-"""Snapshot-log scalability + commit-backend protocol (round 4).
+"""Snapshot-log scalability + commit-backend protocol.
 
-Covers the two storage-layer items from VERDICT r3:
-- #1 checkpointed log: delta commits, parquet manifest checkpoints,
+Covers the two storage-layer properties of the log:
+- checkpointed log: delta commits, parquet manifest checkpoints,
   ``_last_checkpoint`` pointer — ``current_version()``/``read()``
   touch only the checkpoint + the delta tail even after 500+ commits;
-- #4 pluggable commit backend: the same optimistic-concurrency
-  protocol runs against an in-memory conditional-PUT fake (the S3 /
-  GCS shape), including the lost-race path.
+- the ``backend=`` seam: the same optimistic-concurrency protocol runs
+  against the POSIX link-CAS and an in-memory create-if-absent fake,
+  including the lost-race path.
 """
 
 from __future__ import annotations
@@ -18,13 +18,91 @@ import pytest
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.sources.commit_backend import (
-    InMemoryCommitBackend,
+    CommitBackend,
     LocalFSCommitBackend,
 )
 from nebuia_vector_db_spark.sources.snapshot import (
     CommitConflictError,
     SnapshotTable,
 )
+
+
+class InMemoryCommitBackend(CommitBackend):
+    """In-memory create-if-absent fake: ``try_commit`` atomically
+    succeeds for exactly one caller per version. Used by the protocol
+    tests to prove the commit logic does not depend on the
+    filesystem — including the lost-race path. ``race_hook``, when
+    set, runs inside ``try_commit`` *before* the conditional put (with
+    the lock released) so tests can interleave a rival commit at the
+    worst possible moment."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._versions: dict[int, str] = {}
+        self._checkpoints: dict[int, bytes] = {}
+        self._pointer: str | None = None
+        self.race_hook = None
+        self.put_attempts = 0
+
+    def try_commit(self, version: int, payload: str) -> bool:
+        hook = self.race_hook
+        if hook is not None:
+            self.race_hook = None  # fire once
+            hook()
+        with self._lock:
+            self.put_attempts += 1
+            if version in self._versions:
+                return False
+            self._versions[version] = payload
+            return True
+
+    def read_version(self, version: int) -> str:
+        with self._lock:
+            if version not in self._versions:
+                raise FileNotFoundError(f"version {version}")
+            return self._versions[version]
+
+    def version_exists(self, version: int) -> bool:
+        with self._lock:
+            return version in self._versions
+
+    def list_versions(self) -> list[int]:
+        with self._lock:
+            return sorted(self._versions)
+
+    def delete_version(self, version: int) -> None:
+        with self._lock:
+            del self._versions[version]
+
+    def write_checkpoint(self, version: int, data: bytes) -> None:
+        with self._lock:
+            self._checkpoints.setdefault(version, data)
+
+    def read_checkpoint(self, version: int) -> bytes:
+        with self._lock:
+            if version not in self._checkpoints:
+                raise FileNotFoundError(f"checkpoint {version}")
+            return self._checkpoints[version]
+
+    def checkpoint_exists(self, version: int) -> bool:
+        with self._lock:
+            return version in self._checkpoints
+
+    def list_checkpoints(self) -> list[int]:
+        with self._lock:
+            return sorted(self._checkpoints)
+
+    def delete_checkpoint(self, version: int) -> None:
+        with self._lock:
+            self._checkpoints.pop(version, None)
+
+    def write_pointer(self, payload: str) -> None:
+        with self._lock:
+            self._pointer = payload
+
+    def read_pointer(self) -> str | None:
+        with self._lock:
+            return self._pointer
 
 
 class CountingFSBackend(LocalFSCommitBackend):
@@ -261,109 +339,6 @@ def test_append_expected_parent_detects_interleaved_commit(
     assert tbl.meta("stream_watermarks") == {"a": 1, "b": 7}
 
 
-# ---------------------------------------------------------------------------
-# ObjectStoreCommitBackend (round 6, VERDICT r5 task #5)
-# ---------------------------------------------------------------------------
-import io
-
-from nebuia_vector_db_spark.sources.commit_backend import (
-    ObjectStoreCommitBackend,
-)
-
-
-class FakeClientError(Exception):
-    """botocore.ClientError-shaped error (duck-typed: .response)."""
-
-    def __init__(self, status: int, code: str):
-        super().__init__(code)
-        self.response = {
-            "ResponseMetadata": {"HTTPStatusCode": status},
-            "Error": {"Code": code},
-        }
-
-
-class FakeS3Client:
-    """boto3-shaped in-memory S3: conditional writes (`IfNoneMatch`)
-    with exactly-one-winner semantics under a lock, STRONG point reads
-    (get/head), a LIST view that can LAG writes by ``list_lag``
-    commits (the S3-compatible/GCS behavior the protocol must
-    tolerate), paginated list_objects_v2 (MaxKeys=2, so pagination is
-    always exercised), and optional injected 409
-    ConditionalRequestConflict responses."""
-
-    def __init__(self, list_lag: int = 0, conflict_409s: int = 0):
-        self._lock = threading.Lock()
-        self._objects: dict[str, bytes] = {}
-        self._put_seq: dict[str, int] = {}
-        self._seq = 0
-        self.list_lag = list_lag
-        self.conflict_409s = conflict_409s
-        self.race_hook = None
-        self.put_attempts = 0
-
-    def put_object(self, Bucket, Key, Body, IfNoneMatch=None):
-        if IfNoneMatch is not None:
-            hook = self.race_hook
-            if hook is not None:
-                self.race_hook = None  # fire once, pre-PUT
-                hook()
-            if self.conflict_409s > 0:
-                self.conflict_409s -= 1
-                raise FakeClientError(409, "ConditionalRequestConflict")
-        with self._lock:
-            if IfNoneMatch is not None:
-                self.put_attempts += 1
-                if Key in self._objects:
-                    raise FakeClientError(412, "PreconditionFailed")
-            self._seq += 1
-            self._objects[Key] = bytes(Body)
-            self._put_seq[Key] = self._seq
-        return {"ResponseMetadata": {"HTTPStatusCode": 200}}
-
-    def get_object(self, Bucket, Key):
-        with self._lock:
-            if Key not in self._objects:
-                raise FakeClientError(404, "NoSuchKey")
-            return {"Body": io.BytesIO(self._objects[Key])}
-
-    def head_object(self, Bucket, Key):
-        with self._lock:
-            if Key not in self._objects:
-                raise FakeClientError(404, "NotFound")
-            return {"ContentLength": len(self._objects[Key])}
-
-    def delete_object(self, Bucket, Key):
-        with self._lock:
-            self._objects.pop(Key, None)
-            self._put_seq.pop(Key, None)
-        return {}
-
-    def list_objects_v2(self, Bucket, Prefix="", ContinuationToken=None):
-        with self._lock:
-            horizon = self._seq - self.list_lag
-            keys = sorted(
-                k
-                for k, s in self._put_seq.items()
-                if k.startswith(Prefix) and s <= horizon
-            )
-        start = int(ContinuationToken) if ContinuationToken else 0
-        page = keys[start : start + 2]  # MaxKeys=2: force pagination
-        out = {"Contents": [{"Key": k} for k in page]}
-        if start + 2 < len(keys):
-            out["IsTruncated"] = True
-            out["NextContinuationToken"] = str(start + 2)
-        else:
-            out["IsTruncated"] = False
-        return out
-
-
-def _objectstore_backend(tmp_path, **kw):
-    return ObjectStoreCommitBackend(
-        FakeS3Client(**kw), bucket="b", prefix="tables/t/_snapshots",
-        sleep=lambda _s: None,
-    )
-
-
 class _HookableFSBackend(LocalFSCommitBackend):
     """LocalFS with the InMemory backend's race_hook so the racing-
     writers interleaving can be driven identically on all backends."""
@@ -378,26 +353,18 @@ class _HookableFSBackend(LocalFSCommitBackend):
         return super().try_commit(version, payload)
 
 
-def _set_race_hook(backend, hook):
-    if isinstance(backend, ObjectStoreCommitBackend):
-        backend.client.race_hook = hook
-    else:
-        backend.race_hook = hook
-
-
 @pytest.mark.parametrize(
     "make_backend",
     [
         lambda p: _HookableFSBackend(str(p / "log")),
         lambda p: InMemoryCommitBackend(),
-        lambda p: _objectstore_backend(p),
     ],
-    ids=["localfs", "inmemory", "objectstore"],
+    ids=["localfs", "inmemory"],
 )
 def test_racing_writers_protocol_all_backends(spark, tmp_path, make_backend):
     """The worst-case interleaving (rival lands the version AFTER we
     read the parent, BEFORE our conditional PUT) on every backend:
-    POSIX link-CAS, conditional-PUT fake, and the S3-shaped adapter.
+    POSIX link-CAS and the in-memory create-if-absent fake.
     The loser sees CommitConflictError; with_retry converges with both
     writers' rows present; no version is lost or duplicated."""
     be = make_backend(tmp_path)
@@ -410,7 +377,7 @@ def test_racing_writers_protocol_all_backends(spark, tmp_path, make_backend):
         rv = SnapshotTable(spark, str(tmp_path / "t"), backend=be)
         rv.append(rival_rows)
 
-    _set_race_hook(be, _rival)
+    be.race_hook = _rival
     with pytest.raises(CommitConflictError):
         tbl.append(spark.range(2000, 2010).selectExpr("id k"))
     tbl.with_retry("append", spark.range(2000, 2010).selectExpr("id k"))
@@ -421,141 +388,15 @@ def test_racing_writers_protocol_all_backends(spark, tmp_path, make_backend):
     assert be.list_versions() == [1, 2, 3]
 
 
-def test_objectstore_conditional_put_single_winner():
-    be = _objectstore_backend(__import__("pathlib").Path("/tmp"))
-    wins = []
-
-    def _try(tag):
-        if be.try_commit(7, tag):
-            wins.append(tag)
-
-    ts = [threading.Thread(target=_try, args=(f"w{i}",)) for i in range(8)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    assert len(wins) == 1
-    assert be.read_version(7) == wins[0]
-    assert be.client.put_attempts == 8
-
-
-def test_objectstore_409_conflict_retries_then_wins(tmp_path):
-    """409 ConditionalRequestConflict (a rival conditional write in
-    flight) is retried; when the rival aborts, the retry wins."""
-    be = _objectstore_backend(tmp_path, conflict_409s=2)
-    assert be.try_commit(1, "payload") is True
-    assert be.read_version(1) == "payload"
-
-
-def test_objectstore_409_budget_exhausted_returns_false(tmp_path):
-    """A 409 storm past the retry budget returns False (lost race);
-    the outer optimistic retry re-resolves the head with point reads,
-    so liveness is the caller's loop, safety is never at risk."""
-    be = _objectstore_backend(tmp_path, conflict_409s=10**9)
-    be.conflict_retries = 3
-    assert be.try_commit(1, "payload") is False
-    assert not be.version_exists(1)
-
-
-def test_objectstore_full_stack_with_lagging_list(spark, tmp_path):
-    """The whole table protocol over the S3-shaped adapter whose LIST
-    lags writes by 2 commits: version resolution must come from the
-    pointer + point-read probe (and probe PAST a stale listing), so
-    reads always see the latest committed snapshot."""
-    be = _objectstore_backend(tmp_path, list_lag=2)
-    df = spark.range(0, 200).selectExpr("id k", "id % 4 bucket")
-    tbl = SnapshotTable.create(spark, str(tmp_path / "t"), df, backend=be)
-    tbl.append(spark.range(200, 300).selectExpr("id k", "id % 4 bucket"))
-    tbl.delete_where("bucket = 3")
-    assert tbl.current_version() == 3  # NOT the lagging listing's head
-    got = tbl.read()
-    assert got.count() == 225
-    assert got.where(F.col("bucket") == 3).count() == 0
-    assert tbl.read(version=1).count() == 200  # time travel
-    # the strong view catches up once the lag horizon passes
-    be.client.list_lag = 0
-    assert be.list_versions() == [1, 2, 3]  # paginated (MaxKeys=2) list
-
-
-class ReplayingS3Client(FakeS3Client):
-    """Models boto3's transport-level retry: the FIRST conditional PUT
-    to each key LANDS server-side but the response is 'lost', so the
-    client's internal retry layer replays the PUT — which now 412s
-    against the caller's OWN object. The backend must not report a
-    lost race for a commit that actually succeeded."""
-
-    def put_object(self, Bucket, Key, Body, IfNoneMatch=None):
-        if IfNoneMatch is not None and Key not in self._objects:
-            super().put_object(Bucket, Key, Body)  # first attempt lands
-            # ...response lost; internal retry replays conditionally:
-        return super().put_object(Bucket, Key, Body, IfNoneMatch=IfNoneMatch)
-
-
-def test_objectstore_412_from_own_replayed_put_is_a_win(tmp_path):
-    """ADVICE r6: on 412, read back and compare — identical body means
-    the PUT that 412'd was our own transport-retried write, so the
-    commit SUCCEEDED; returning False would make the snapshot layer's
-    optimistic retry duplicate the append on top of its own commit."""
-    from nebuia_vector_db_spark.sources.commit_backend import (
-        ObjectStoreCommitBackend,
-    )
-
-    be = ObjectStoreCommitBackend(
-        ReplayingS3Client(), bucket="b", prefix="t/_snapshots",
-        sleep=lambda _s: None,
-    )
-    assert be.try_commit(1, '{"writer": "me"}') is True
-    assert be.read_version(1) == '{"writer": "me"}'
-    # a GENUINE rival object still reads as a lost race
-    assert be.try_commit(1, '{"writer": "rival"}') is False
-    assert be.read_version(1) == '{"writer": "me"}'
-
-
-def test_objectstore_write_checkpoint_raises_when_dropped(tmp_path):
-    """ADVICE r6: write_checkpoint must not swallow a False that left
-    NO object behind — vacuum deletes the delta chain below the
-    checkpoint it believes it just wrote, so a silently dropped
-    checkpoint makes that version unreconstructible."""
-    be = _objectstore_backend(tmp_path, conflict_409s=10**9)
-    be.conflict_retries = 2
-    with pytest.raises(RuntimeError, match="checkpoint v5"):
-        be.write_checkpoint(5, b"manifest-bytes")
-    # ...but a rival's already-landed checkpoint IS a benign no-op,
-    # even when our own conditional put cannot get through
-    be.client.conflict_409s = 0
-    be.write_checkpoint(6, b"rival-manifest")
-    be.client.conflict_409s = 10**9
-    be.write_checkpoint(6, b"other-bytes-same-version")  # no raise
-    assert be.read_checkpoint(6) == b"rival-manifest"
-
-
-class VersionListLagS3Client(FakeS3Client):
-    """LIST staleness is per-prefix in real stores (listing shards are
-    keyed by prefix): model a version listing that lags to EMPTY while
-    the checkpoint listing stays fresh. Point reads remain strong."""
-
-    lag_versions = False  # flipped on post-vacuum by the test
-
-    def list_objects_v2(self, Bucket, Prefix="", ContinuationToken=None):
-        if self.lag_versions and Prefix.rsplit("/", 1)[-1] == "v":
-            return {"Contents": [], "IsTruncated": False}
-        return super().list_objects_v2(Bucket, Prefix, ContinuationToken)
-
-
-def test_current_version_after_vacuum_with_stale_pointer_and_empty_list(
+def test_current_version_from_listing_after_vacuum_without_pointer(
     spark, tmp_path
 ):
-    """ADVICE r6: after vacuum the log starts at the oldest retained
-    checkpoint, not v1 — a missing pointer plus a lagging (empty)
-    version listing must re-seed the head probe from the surviving
-    checkpoints instead of raising 'no snapshots'."""
-    be = ObjectStoreCommitBackend(
-        VersionListLagS3Client(), bucket="b",
-        prefix="tables/t/_snapshots", sleep=lambda _s: None,
-    )
+    """After vacuum the log no longer starts at v1, and with the
+    ``_last_checkpoint`` pointer gone a cold reader must resolve the
+    head from the version listing and still read every row."""
     df = spark.range(0, 40).selectExpr("id k", "id % 4 bucket")
     tbl = SnapshotTable.create(
-        spark, str(tmp_path / "t"), df, backend=be, checkpoint_interval=2
+        spark, str(tmp_path / "t"), df, checkpoint_interval=2
     )
     for lo in range(40, 100, 20):
         tbl.append(
@@ -563,17 +404,12 @@ def test_current_version_after_vacuum_with_stale_pointer_and_empty_list(
         )
     head = tbl.current_version()
     tbl.vacuum(keep_last=2)
-    # stale/missing pointer + a version listing lagged to empty
-    be.client.lag_versions = True
-    be.client.delete_object(
-        Bucket="b", Key=be._key("_last_checkpoint")
-    )
-    assert be.read_pointer() is None  # the fallback path is live
-    assert be.list_versions() == []  # ...and the listing really lags
-    assert be.list_checkpoints() != []  # ...but checkpoints survive
-    tbl._cache.clear()
-    assert tbl.current_version() == head
-    assert tbl.read().count() == 100
+    (tmp_path / "t" / "_snapshots" / "_last_checkpoint").unlink()
+    cold = SnapshotTable(spark, str(tmp_path / "t"))
+    assert cold.backend.read_pointer() is None
+    assert cold.versions() == [head - 1, head]
+    assert cold.current_version() == head
+    assert cold.read().count() == 100
 
 
 def test_bench_driver_memory_sizing_helpers():
