@@ -205,10 +205,12 @@ class VectorEngine:
     def documents(self, collections: Sequence[str] | None = None) -> DataFrame:
         """The document relation, optionally limited to ``collections``
         — one read whose ``in`` predicate also prunes files by their
-        ``collection`` stats."""
+        ``collection`` stats. A bare ``str`` as ``collections`` raises
+        ``TypeError``."""
         if collections is None:
             return self.table.read()
-        return self.table.read(where=[("collection", "in", list(collections))])
+        names = _collection_list(collections)
+        return self.table.read(where=[("collection", "in", names)])
 
     def chunks(self, collections: Sequence[str] | None = None) -> DataFrame:
         """The exploded search relation (SURVEY §1.4): one row per
@@ -284,9 +286,10 @@ class VectorEngine:
         per-collection goroutine fan-out becomes partition parallelism.
         ``where`` filters chunks before scoring and ``min_similarity``
         adds the radius gate; the driver and Spark routes and the input
-        checks are those of ``search``."""
+        checks are those of ``search``, and a bare ``str`` as
+        ``collections`` raises ``TypeError``."""
         return self._search_impl(
-            list(collections), query_vector, top_k, where, min_similarity
+            _collection_list(collections), query_vector, top_k, where, min_similarity
         )
 
     def _search_impl(
@@ -412,6 +415,14 @@ def _check_collection_name(name) -> None:
     would be stored as null or fail deep inside Arrow."""
     if not isinstance(name, str):
         raise TypeError(f"collection name must be a str, got {type(name).__name__}")
+
+
+def _collection_list(collections) -> list:
+    """``collections`` as a list of names: a bare ``str`` would split
+    into one-letter collections and search those silently."""
+    if isinstance(collections, str):
+        raise TypeError("collections must be a sequence of names, not a str")
+    return list(collections)
 
 
 def _search_result(scored: DataFrame) -> DataFrame:

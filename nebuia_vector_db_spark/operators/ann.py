@@ -45,10 +45,14 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nebuia_vector_db_spark.functions.vector import normalize_query
+from nebuia_vector_db_spark.functions.vector import (
+    arrow_list_to_matrix,
+    normalize_query,
+)
 from nebuia_vector_db_spark.operators.topk import (
+    _arrow_topk,
     _d2_cut,
-    _gemm_topk,
+    _gemm_scorer,
     _query_matrix,
     topk_per_group,
     topk_search,
@@ -148,15 +152,18 @@ class IVFIndex:
           map, which ships in the kernel closure;
         - scan side: ONE pass over only the UNION of probed cells
           (``ivf_cell IN (...)`` → partition/stats pruning — the scan
-          fraction is |union| / n_cells, not 1.0) through the same
-          Arrow kernel as ``knn_join(method='arrow')``
-          (``topk._gemm_topk``): per Arrow batch the rows are grouped
-          by cell and each cell's rows are multiplied, in row blocks,
-          only by the queries that probed it (a candidate is charged
-          only to those queries, so the GEMM work is about
-          ``nprobe / n_cells`` of the exact scan's), and a per-query
-          local cut keeps each batch's ≤ k best rows per query in the
-          D-2 order (ties at the cut go by ``tie_cols``);
+          fraction is |union| / n_cells, not 1.0) through the one
+          Arrow top-k kernel, ``topk._arrow_topk``, with the GEMM
+          scorer of ``knn_join(method='arrow')``: per Arrow batch the
+          rows are grouped by cell and each cell's rows are
+          multiplied, in row blocks, only by the queries that probed
+          it (a candidate is charged only to those queries, so the
+          GEMM work is about ``nprobe / n_cells`` of the exact
+          scan's), and a per-query local cut keeps each batch's ≤ k
+          best rows per query in the D-2 order (ties at the cut go by
+          ``tie_cols``; as in ``knn_join(method='arrow')``, that order
+          between exact duplicate vectors is not guaranteed, since
+          BLAS can round them 1 ulp apart);
         - global cut: the same bounded row_number window as
           ``knn_join`` (Partial WindowGroupLimit — tasks ship ≤ k rows
           per query).
@@ -168,8 +175,11 @@ class IVFIndex:
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
         cell_queries = _cell_queries(self.centroids @ qmat.T, nprobe)
         cand = self.assigned.where(F.col("ivf_cell").isin(list(cell_queries)))
-        cut = _gemm_topk(
-            cand, qids, qmat, k, self.vec_col, sim_col, query_id_col,
+        vec_col = self.vec_col
+        cut = _arrow_topk(
+            cand, qids, k,
+            lambda rb: _gemm_scorer(arrow_list_to_matrix(rb.column(vec_col)), qmat),
+            [vec_col, "ivf_cell"], sim_col, query_id_col,
             tie_cols=tie_cols, cell_queries=cell_queries,
         )
         return topk_per_group(
@@ -316,10 +326,6 @@ def assign_to_cells(
     )
 
     def _assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from nebuia_vector_db_spark.functions.vector import (
-            arrow_list_to_matrix,
-        )
-
         c = bc.value
         c_sq = np.einsum("ij,ij->i", c, c)
         for rb in batches:

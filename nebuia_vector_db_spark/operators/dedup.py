@@ -548,12 +548,13 @@ def exact_cosine_pairs(
 
     Both paths run the same two-phase kernel (r16): a dense float32
     screening GEMM over pre-normalized rows finds candidate cells
-    (threshold − ``_SCREEN_MARGIN``, a ≥30× safety factor over the
-    worst-case f32 error — no true pair can be missed), then every
-    candidate is recomputed EXACTLY as float64 ``dot(raw)/(na·nb)``
-    (the SQL/oracle formula) and re-tested against the true
-    threshold. Emitted cosines are therefore float64 row-pair dots —
-    identical accumulation order on both paths, so blocked ≡
+    (threshold − ``max(_SCREEN_MARGIN, 8·d·2⁻²⁴)``, a ≥8× safety
+    factor over the worst-case f32 error at any d — no true pair can
+    be missed), then every candidate is recomputed EXACTLY as
+    float64 ``dot(raw)/(na·nb)`` (the SQL/oracle formula) and
+    re-tested against the true threshold. Emitted cosines are
+    therefore float64 row-pair dots — identical accumulation order on
+    both paths, so blocked ≡
     broadcast to within a ULP (a pair whose cosine sits within one
     ULP of ``threshold`` could in principle appear in one path only,
     as before). Both chunk the screen so no task materializes more
@@ -584,12 +585,14 @@ _MAX_SCORE_CELLS = 32_000_000
 # only cells with cos32 ≥ threshold − margin are recomputed EXACTLY
 # as float64 dot(raw)/(na·nb) (the SQL/oracle formula) and re-tested
 # against the true threshold. For unit-normalized f32 inputs the
-# worst-case |cos32 − cos64| is ≈ (d+4)·2⁻²⁴ ≈ 4e-6 at d=64 (≤ 3e-5
-# even at d=4096), so 1e-3 is a ≥30× safety factor: no true pair can
-# be screened out, and false candidates are removed by the exact
-# re-test. Final cosines come from one f64 row-pair einsum — the same
-# accumulation for both kernels, so blocked ≡ broadcast outputs stay
-# within the pinned 1e-12 (test_dedup.py::_assert_pairs_ulp_equal).
+# worst-case |cos32 − cos64| is about (d+2)·2⁻²⁴ (≈ 4e-6 at d = 64,
+# ≈ 2e-3 at d = 32k), so the margin is max(_SCREEN_MARGIN, 8·d·2⁻²⁴):
+# a ≥8× safety factor at any d, and 1e-3 up to d ≈ 2,097. No true
+# pair can be screened out, and false candidates are removed by the
+# exact re-test. Final cosines come from one f64 row-pair einsum —
+# the same accumulation for both kernels, so blocked ≡ broadcast
+# outputs stay within the pinned 1e-12
+# (test_dedup.py::_assert_pairs_ulp_equal).
 # Measured (tools/exp_b9_kernel.py, 40k×40k blocks, 21 concurrent
 # tasks): 40.9 s → 20.6 s wall with the f32 screen + 1 BLAS thread.
 _SCREEN_MARGIN = 1e-3
@@ -616,7 +619,8 @@ def _screened_pairs(
     """
     import numpy as np
 
-    ii, jj = np.nonzero(cos32 >= np.float32(threshold - _SCREEN_MARGIN))
+    margin = max(_SCREEN_MARGIN, 8 * l_mat.shape[1] * 2.0**-24)
+    ii, jj = np.nonzero(cos32 >= np.float32(threshold - margin))
     if len(ii) == 0:
         return ii, jj, np.empty(0)
     ii = ii + l_off

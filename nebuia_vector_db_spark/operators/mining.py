@@ -20,11 +20,11 @@ repo's existing kNN machinery rather than growing a new kernel:
   WindowGroupLimit, so each task ships ≤ k rows per query to the
   single shuffle.
 
-At GEMM scale the same semantics would run through
-``topk._score_batch``, the per-batch function of ``topk._gemm_topk``,
-with each label's rows grouped and scored only against the queries
-of other labels (the grouping ``IVFIndex.search_batch`` uses for
-cells); the SQL path here is the oracle-exact spine that variant
+At GEMM scale the same semantics would run through the one Arrow
+top-k kernel, ``topk._arrow_topk``, with the GEMM scorer and each
+label's rows grouped and scored only against the queries of other
+labels (the grouping ``IVFIndex.search_batch`` uses for cells); the
+SQL path here is the oracle-exact spine that variant
 would be verified against — same discipline as ``knn_join``'s
 sql/arrow pairing.
 

@@ -17,15 +17,17 @@ Spark mapping:
   rotation, then the per-subspace argmin of :func:`_encode_np`), run
   per Arrow batch by ``encode_pq`` and by the fused search scan.
   Map-side only, no shuffle.
-- **search**: the tiny table ships in the kernel closure, and one ADC
-  function, :func:`_adc` (``Σ_s table[s][codes[:, s]]``, summed in
-  subspace order), scores each Arrow batch; then a per-partition
-  top-k cut and a global TakeOrderedAndProject.
+- **search**: one shortlist, :func:`_adc_shortlist`, serves the
+  single and the batch search: the tiny (m, k, B) table stack ships in
+  the kernel closure, and one ADC function, :func:`_adc`
+  (``Σ_s table[s][codes[:, s]]``, summed in subspace order), plus the
+  cell term scores each Arrow batch inside the one Arrow top-k kernel
+  of batch kNN, ``topk._arrow_topk``, which keeps each batch's best
+  rows per query (rows grouped by cell and scored only against the
+  queries that probed it); then a global TakeOrderedAndProject
+  (``PQIndex.search``) or row_number window (``pq_search_batch``).
   The corpus read is codes only — raw vectors are touched ONLY for
   the exact re-rank of the ≤ ``rerank`` survivors (a semi-join by id).
-- **batch search**: ``pq_search_batch`` hands each Arrow batch to the
-  cell-grouped kernel of batch kNN, ``topk._score_batch``, with the
-  ADC lookups plus the cell term as its scorer.
 
 Scoring matches the engine's similarity semantics — ``dot(q/‖q‖, x)``
 with the stored vector raw (SURVEY §1.5-1) — approximated by the sum
@@ -50,9 +52,13 @@ from nebuia_vector_db_spark.operators.ann import (
     _load_matrix,
     _matrix_file,
     _save_matrix,
-    _select_cells,
     _write_cells,
     assign_to_cells,
+)
+from nebuia_vector_db_spark.operators.topk import (
+    _arrow_topk,
+    _query_matrix,
+    topk_per_group,
 )
 
 
@@ -147,26 +153,6 @@ class PQIndex:
     def k(self) -> int:
         return int(self.codebooks.shape[1])
 
-    def adc_table(self, qvec: Sequence[float]) -> np.ndarray:
-        """(m, k) inner products of the normalized query's subspace
-        slices against every codeword — the whole query-side work.
-
-        With an OPQ ``rotation`` R the codes quantize y = rR (the
-        rotated residual), and ``dot(q, r) = dot(qR, rR)`` since R is
-        orthogonal — so the query is rotated HERE, once, and the scan
-        side is untouched (the cell term stays unrotated: it scores
-        against raw-space centroids)."""
-        qn = np.asarray(normalize_query(qvec), dtype=np.float64)
-        if self.rotation is not None:
-            qn = qn @ self.rotation
-        dsub = self.codebooks.shape[2]
-        return np.stack(
-            [
-                self.codebooks[s] @ qn[s * dsub : (s + 1) * dsub]
-                for s in range(self.m)
-            ]
-        )
-
     def search(
         self,
         corpus: DataFrame,
@@ -190,11 +176,12 @@ class PQIndex:
         relation (``id_col``, and ``cell_col`` on an IVF-PQ index);
         any other column is a ``ValueError`` before any Spark job.
 
-        One Arrow crossing (guide §4): :meth:`_adc_scored` scores the
-        codes in a single mapInArrow kernel, encoding them on the fly
-        when the index was built by encode_pq in this plan and the
-        codes are not persisted. Scores are bit-identical across both
-        sources: same encoder, same ADC sum."""
+        One Arrow crossing (guide §4): :func:`_adc_shortlist`, the
+        shortlist of ``pq_search_batch`` for a batch of one query,
+        keeps each Arrow batch's ``max(topk, rerank)`` best rows, and
+        the global cut is a TakeOrderedAndProject. Scores are
+        bit-identical whether the codes are stored or encoded on the
+        fly: same encoder, same ADC sum."""
         has_cell = self.cell_centroids is not None
         avail = {self.id_col, self.cell_col} if has_cell else {self.id_col}
         if not set(tie_cols) <= avail:
@@ -202,17 +189,12 @@ class PQIndex:
                 f"tie columns {sorted(set(tie_cols) - avail)} are not in "
                 f"the codes relation (allowed: {sorted(avail)})"
             )
-        table = self.adc_table(qvec)
         cut = max(topk, rerank)
-
-        cell_term = probe = None
-        if has_cell:
-            qn = np.asarray(normalize_query(qvec), dtype=np.float64)
-            cell_term = self.cell_centroids @ qn  # (n_cells,)
-            if nprobe is not None:
-                probe = _select_cells(cell_term[:, None], nprobe)[:, 0].tolist()
-
-        scored = self._adc_scored(table, cell_term, probe)
+        qn = normalize_query(qvec)
+        scored = _adc_shortlist(
+            self, np.array([0]), np.asarray(qn, dtype=np.float64)[None],
+            cut, nprobe, tie_cols, "_query",
+        )
         short = scored.orderBy(
             F.desc("adc_score"), *[F.col(c) for c in tie_cols]
         ).limit(cut)
@@ -220,7 +202,6 @@ class PQIndex:
             return short.select(self.id_col, "adc_score")
         from nebuia_vector_db_spark.functions.vector import dot
 
-        qn = normalize_query(qvec)
         cand = corpus.join(
             F.broadcast(short.select(self.id_col)), self.id_col, "left_semi"
         )
@@ -235,67 +216,76 @@ class PQIndex:
             .select(self.id_col, "similarity")
         )
 
-    def _adc_scored(
-        self,
-        table: np.ndarray,
-        cell_term: np.ndarray | None,
-        probe: list[int] | None,
-    ) -> DataFrame:
-        """(id[, cell], adc_score) relation behind search()'s top-k
-        cut, restricted to the ``probe`` cells when given: one
-        mapInArrow kernel that decodes the stored codes, or encodes
-        the raw vectors (:func:`_encode_batch`) when the index was
-        built by encode_pq in this plan AND the codes were not
-        persisted by the caller (a cached/stored codes relation is the
-        cheaper scan — re-encoding raw vectors would bypass it), then
-        adds :func:`_adc` and the cell term."""
-        from collections.abc import Iterator
 
-        import pyarrow as pa
+def _adc_shortlist(
+    index: PQIndex,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    cut: int,
+    nprobe: int | None,
+    tie_cols: Sequence[str],
+    query_id_col: str,
+) -> DataFrame:
+    """The ADC shortlist of both PQ searches: (id[, cell],
+    ``query_id_col``, adc_score) rows, each Arrow batch's ≤ ``cut``
+    best rows per query of the (B, d) normalized queries ``qmat`` in
+    the D-2 order (ties by ``tie_cols``), from ``topk._arrow_topk``
+    with :func:`_adc_scorer`.
 
-        id_col, cell_col, vec_col = self.id_col, self.cell_col, self.vec_col
-        codebooks, centroids, rotation = (
-            self.codebooks, self.cell_centroids, self.rotation
+    Driver side: one (m, k, B) stack of ADC tables (an einsum over the
+    codebooks — ~0.5 MB at B=16/m=16/k=256, closure-shipped) plus, on
+    an IVF-PQ index, the (C, B) cell dots and, with ``nprobe``, the
+    cell → query-index map of ``ann._cell_queries``, whose keys bound
+    the scan and whose groups keep each cell's rows to the queries
+    that probed it. The source is the stored codes, or the raw vectors
+    encoded per batch (:func:`_encode_batch`) when the index was built
+    by encode_pq in this plan AND the codes were not persisted by the
+    caller (a cached/stored codes relation is the cheaper scan)."""
+    b = qmat.shape[0]
+    m, dsub = index.m, index.codebooks.shape[2]
+    # OPQ: the codes quantize y = rR (the rotated residual) and
+    # dot(q, r) = dot(qR, rR) since R is orthogonal, so the queries are
+    # rotated here, once; the cell term stays in raw space (it scores
+    # against raw-space centroids)
+    qrot = qmat @ index.rotation if index.rotation is not None else qmat
+    tables = np.einsum(
+        "skd,bsd->bsk", index.codebooks, qrot.reshape(b, m, dsub)
+    ).transpose(1, 2, 0)  # (m, k, B)
+
+    stored = (
+        index._encode_src is None
+        or index.codes.storageLevel.useMemory
+        or index.codes.storageLevel.useDisk
+    )
+    src = index.codes if stored else index._encode_src
+    vec_col = "codes" if stored else index.vec_col
+    cell_col, books = index.cell_col, index.codebooks
+    centroids, rotation = index.cell_centroids, index.rotation
+    keep = [index.id_col]
+    cell_dots = cell_queries = None
+    if centroids is not None:
+        keep.append(cell_col)
+        cell_dots = centroids @ qmat.T  # (C, B)
+        if nprobe is not None:
+            cell_queries = _cell_queries(cell_dots, nprobe)
+            src = src.where(F.col(cell_col).isin(list(cell_queries)))
+
+    def scorer(rb):
+        cells = None
+        if cell_dots is not None:
+            cells = np.asarray(rb.column(cell_col)).astype(np.int64)
+        codes = arrow_list_to_matrix(rb.column(vec_col))
+        if not stored:
+            codes = _encode_batch(codes, cells, books, centroids, rotation)
+        return _adc_scorer(
+            codes.astype(np.int64, copy=False), tables, cells, cell_dots
         )
-        stored = (
-            self._encode_src is None
-            or self.codes.storageLevel.useMemory
-            or self.codes.storageLevel.useDisk
-        )
-        src = self.codes if stored else self._encode_src
-        if probe is not None:
-            src = src.where(F.col(cell_col).isin(probe))
-        out_cols = [id_col] + ([cell_col] if cell_term is not None else [])
-        out_schema = ", ".join(
-            [f"{id_col} {dict(src.dtypes)[id_col]}"]
-            + ([f"{cell_col} int"] if cell_term is not None else [])
-            + ["adc_score double"]
-        )
 
-        def _scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                cells = None
-                if cell_term is not None:
-                    cells = np.asarray(rb.column(cell_col)).astype(np.int64)
-                if stored:
-                    codes = arrow_list_to_matrix(rb.column("codes"))
-                else:
-                    codes = _encode_batch(
-                        arrow_list_to_matrix(rb.column(vec_col)),
-                        cells, codebooks, centroids, rotation,
-                    )
-                s = _adc(codes.astype(np.int64, copy=False), table)
-                if cell_term is not None:
-                    s += cell_term[cells]
-                arrays = [rb.column(c) for c in out_cols] + [pa.array(s)]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=out_cols + ["adc_score"]
-                )
-
-        src = src.select(*out_cols, "codes" if stored else vec_col)
-        return src.mapInArrow(_scan, schema=out_schema)
+    return _arrow_topk(
+        src.select(*keep, vec_col), qids, cut, scorer, [vec_col],
+        "adc_score", query_id_col, tie_cols=tie_cols, cell_col=cell_col,
+        cell_queries=cell_queries,
+    )
 
 
 def _adc(codes: np.ndarray, tables: np.ndarray) -> np.ndarray:
@@ -309,7 +299,7 @@ def _adc(codes: np.ndarray, tables: np.ndarray) -> np.ndarray:
 
 
 def _adc_scorer(codes, tables, cells, cell_dots):
-    """The scorer ``pq_search_batch`` hands to ``topk._score_batch``:
+    """The scorer :func:`_adc_shortlist` hands to ``topk._score_batch``:
     :func:`_adc` of the (n, m) ``codes`` against the (m, k, B) table
     stack, plus, on an IVF-PQ index, each row's cell term from the
     (C, B) ``cell_dots``."""
@@ -343,89 +333,31 @@ def pq_search_batch(
     """Batch IVF-PQ search: ONE pass over the codes serves a whole
     query batch (the PQ tier's twin of ``IVFIndex.search_batch``).
 
-    Driver side: one (m, k, B) stack of ADC tables (an einsum over the
-    codebooks — ~0.5 MB at B=16/m=16/k=256, closure-shipped) plus, on
-    an IVF-PQ index with ``nprobe``, the cell → query-index map of
-    ``ann._cell_queries`` (the cells ``PQIndex.search`` probes for the
-    same query), whose keys bound the scan. Scan side: each Arrow
-    batch goes through the cell-grouped kernel of batch kNN,
-    ``topk._score_batch``: its rows are grouped by cell and each
-    cell's rows are scored (:func:`_adc` plus the cell term) only
-    against the queries that probed it, in row blocks, keeping
-    ≤ max(topk, rerank) rows per query in the D-2 order (ties at the
-    cut to the lower ``id_col``); the global cut is the bounded
-    row_number window.
+    The shortlist is :func:`_adc_shortlist`, the one ``PQIndex.search``
+    runs for a single query (same tables, same probed cells, and one
+    Arrow crossing on an unpersisted encode_pq index): each Arrow
+    batch keeps ≤ max(topk, rerank) rows per query in the D-2 order,
+    ties at the cut to the lower ``id_col``, and the global cut is the
+    bounded row_number window.
 
     With ``rerank > 0`` the per-query shortlists are re-scored
     EXACTLY: one inner join of the (query_id, id) shortlist against
     the raw corpus + a broadcast join of the normalized query vectors
     — only shortlist×1 rows are ever re-scored. ``rerank >= |corpus|``
     with full probe degrades to the exact batch kNN (test-pinned)."""
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-
     from nebuia_vector_db_spark.functions.vector import (
         dot,
         l2_normalize,
     )
-    from nebuia_vector_db_spark.operators.topk import (
-        _query_matrix,
-        _score_batch,
-        _tie_rank,
-        topk_per_group,
-    )
 
     qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
-    b = qmat.shape[0]
-    m, dsub = index.m, index.codebooks.shape[2]
-    # OPQ: tables score rotated residuals, so rotate the queries; the
-    # cell term below stays in raw space (see PQIndex.adc_table)
-    qrot = qmat @ index.rotation if index.rotation is not None else qmat
-    tables = np.einsum(
-        "skd,bsd->bsk", index.codebooks, qrot.reshape(b, m, dsub)
-    ).transpose(1, 2, 0)  # (m, k, B)
-
-    codes_src = index.codes
-    cell_col, id_col = index.cell_col, index.id_col
-    cell_dots = cell_queries = None
-    if index.cell_centroids is not None:
-        cell_dots = index.cell_centroids @ qmat.T  # (C, B)
-        if nprobe is not None:
-            cell_queries = _cell_queries(cell_dots, nprobe)
-            codes_src = codes_src.where(
-                F.col(cell_col).isin(list(cell_queries))
-            )
+    id_col = index.id_col
     cut = max(topk, rerank)
-    id_type = dict(codes_src.dtypes)[id_col]
-    out_schema = (
-        f"{id_col} {id_type}, {query_id_col} long, adc_score double"
+    scored = _adc_shortlist(
+        index, qids, qmat, cut, nprobe, [id_col], query_id_col
     )
-
-    def _score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            codes = arrow_list_to_matrix(rb.column("codes"))
-            cells = None
-            if cell_dots is not None:
-                cells = np.asarray(rb.column(cell_col)).astype(np.int64)
-            rows, qidx, sims = _score_batch(
-                _adc_scorer(
-                    codes.astype(np.int64, copy=False), tables, cells, cell_dots
-                ),
-                rb.num_rows, b, cut, lambda: _tie_rank(rb, [id_col]),
-                cells if cell_queries is not None else None, cell_queries,
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(id_col).take(pa.array(rows)),
-                    pa.array(qids[qidx]),
-                    pa.array(sims),
-                ],
-                names=[id_col, query_id_col, "adc_score"],
-            )
-
     shortlisted = topk_per_group(
-        codes_src.mapInArrow(_score, schema=out_schema),
+        scored,
         [query_id_col],
         "adc_score",
         cut,
@@ -646,7 +578,7 @@ def train_opq(
          of XᵀŶ (R = U·Vᵀ).
     Query side: dot(q, x̂) = dot(q·R, ŷ) since R is orthogonal — the
     rotation is applied to the QUERY once per search, never to the
-    scan (PQIndex.adc_table / pq_search_batch).
+    scan (:func:`_adc_shortlist`).
 
     ``init`` seeds the alternating minimization: ``"eigen"``
     (default) or ``"identity"`` (the original non-parametric start).

@@ -17,19 +17,20 @@ Spark-first design notes (scale):
   window (``topk_per_group``).
 - Single-query search (:func:`topk_search`) has one path: the
   codegen'd ``dot`` expression cut by ``orderBy(desc).limit(k)``.
-- The batch paths score through ONE per-batch NumPy function,
+- The NumPy-scored paths score through ONE Arrow top-k kernel,
+  :func:`_arrow_topk`, around ONE per-batch NumPy function,
   :func:`_score_batch`. It splits a batch's rows into groups, each
-  scored only against its own queries by a caller-supplied scorer:
-  :func:`_gemm_topk` (``knn_join(method='arrow')``, the one-group
-  case, and ``IVFIndex.search_batch`` in operators/ann.py, one group
-  per ``ivf_cell``) passes the GEMM, :func:`_gemm_scorer`, and
-  ``pq_search_batch`` (operators/pq.py) the ADC table lookups plus the
-  cell term. A group is scored in blocks of ``_BLOCK_ROWS`` rows, each
-  block cut to k rows per query in the D-2 order (rows tied at a cut
-  are decided by the caller's tie columns), so temporaries are
-  O(block × B) whatever the batch size and a task ships ≤ k rows per
-  (batch, query). A query batch becomes the normalized query matrix
-  in one place, :func:`_query_matrix`.
+  scored only against its own queries by the scorer the caller builds
+  from the batch: ``knn_join(method='arrow')`` (one group) and
+  ``IVFIndex.search_batch`` in operators/ann.py (one group per
+  ``ivf_cell``) pass the GEMM, :func:`_gemm_scorer`; ``PQIndex.search``
+  and ``pq_search_batch`` (operators/pq.py) pass the ADC table lookups
+  plus the cell term. A group is scored in blocks of ``_BLOCK_ROWS``
+  rows, each block cut to k rows per query in the D-2 order (rows tied
+  at a cut are decided by the caller's tie columns), so temporaries
+  are O(block × B) whatever the batch size and a task ships ≤ k rows
+  per (batch, query). A query batch becomes the normalized query
+  matrix in one place, :func:`_query_matrix`.
 """
 
 from __future__ import annotations
@@ -82,32 +83,33 @@ def _query_matrix(
     return qids, qmat
 
 
-def _gemm_topk(
+def _arrow_topk(
     df: DataFrame,
     qids: np.ndarray,
-    qmat: np.ndarray,
     k: int,
-    vec_col: str,
+    scorer: Callable,
+    drop: Sequence[str],
     sim_col: str,
     query_id_col: str,
     tie_cols: Sequence[str] = (),
+    cell_col: str = "ivf_cell",
     cell_queries: dict[int, np.ndarray] | None = None,
 ) -> DataFrame:
-    """The Arrow scoring kernel behind ``knn_join(method='arrow')`` and
-    ``IVFIndex.search_batch``: :func:`_score_batch` over each Arrow
-    batch, on the zero-copy view of ``vec_col``, so a task emits
-    ≤ batches × B × k rows, the corpus never shuffles, and the vectors
-    never materialize as Python objects. ``vec_col`` is dropped from
-    the output and ``query_id_col`` (long) is added.
+    """The one Arrow top-k kernel of the NumPy-scored searches
+    (``knn_join(method='arrow')``, ``IVFIndex.search_batch`` and both
+    PQ searches): :func:`_score_batch` over each Arrow batch with the
+    scorer ``scorer(rb)`` builds from it, so a task emits
+    ≤ batches × len(qids) × k rows, the corpus never shuffles, and the
+    vectors never materialize as Python objects. The ``drop`` columns
+    leave the output and ``query_id_col`` (long) and ``sim_col``
+    (double) are added.
 
-    ``cell_queries`` maps an ``ivf_cell`` value to the indices (into
+    ``cell_queries`` maps a ``cell_col`` value to the indices (into
     ``qids``) of the queries that probed it: a row is scored only
-    against its cell's queries, and ``ivf_cell`` is dropped from the
-    output. The caller applies the global cut.
+    against its cell's queries. The caller applies the global cut.
     """
     import pyarrow as pa
 
-    drop = {vec_col, "ivf_cell"} if cell_queries is not None else {vec_col}
     fields = [(n, t) for n, t in df.dtypes if n not in drop]
     keep = [n for n, _ in fields]
     added = [(query_id_col, "long"), (sim_col, "double")]
@@ -116,12 +118,13 @@ def _gemm_topk(
 
     def _score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
+            if not rb.num_rows:
+                continue
             cells = None
             if cell_queries is not None:
-                cells = np.asarray(rb.column("ivf_cell")).astype(np.int64)
+                cells = np.asarray(rb.column(cell_col)).astype(np.int64)
             rows, qidx, sims = _score_batch(
-                _gemm_scorer(arrow_list_to_matrix(rb.column(vec_col)), qmat),
-                rb.num_rows, len(qmat), k,
+                scorer(rb), rb.num_rows, len(qids), k,
                 lambda: _tie_rank(rb, tie_cols), cells, cell_queries,
             )
             take = pa.array(rows)
@@ -298,17 +301,22 @@ def knn_join(
     construction — SURVEY §7.3-2); the corpus is scanned once, never
     shuffled for the join itself; the per-query cut is a row_number
     window (Spark 4 plans a Partial WindowGroupLimit, so tasks ship
-    ≤ k rows per query). ``method='arrow'``: the one-group case of
-    :func:`_gemm_topk` (every row of each Arrow batch against the
-    whole query matrix, in row blocks, + a per-query local cut in the
-    D-2 order), then the same window — the amortized fast path for
-    many queries.
+    ≤ k rows per query). ``method='arrow'``: :func:`_arrow_topk` with
+    the GEMM scorer, one group (every row of each Arrow batch against
+    the whole query matrix, in row blocks, + a per-query local cut in
+    the D-2 order), then the same window — the amortized fast path for
+    many queries. Its D-2 order (similarity desc, then ``tie_cols``)
+    between exact duplicate vectors is not guaranteed: BLAS can round
+    duplicates 1 ulp apart, and the larger one then ranks first.
     """
     if method == "arrow":
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
-        cut = _gemm_topk(
-            corpus_df, qids, qmat, k, corpus_vec_col, sim_col, query_id_col,
-            tie_cols=tie_cols,
+        cut = _arrow_topk(
+            corpus_df, qids, k,
+            lambda rb: _gemm_scorer(
+                arrow_list_to_matrix(rb.column(corpus_vec_col)), qmat
+            ),
+            [corpus_vec_col], sim_col, query_id_col, tie_cols=tie_cols,
         )
         return topk_per_group(cut, [query_id_col], sim_col, k, tie_cols=tie_cols)
     # reference semantics: the query side is L2-normalized, the stored

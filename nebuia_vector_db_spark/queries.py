@@ -11561,8 +11561,8 @@ REGISTRY: dict[
     "vs_nested_search": (q_vs_nested_search, ORACLE_VS_NESTED),
     # batch ANN (round-4 promotion): per-query probed cells + a
     # cell-grouped GEMM in ONE corpus pass; at full probe ≡ exact batch
-    # kNN. Covers the MLlib IVF build AND the cell-grouped kernel
-    # (topk._score_batch); the single-query
+    # kNN. Covers the MLlib IVF build AND the one Arrow top-k kernel
+    # (topk._arrow_topk, cell-grouped); the single-query
     # IVF path (same centroids, same isin pruning, TakeOrdered cut)
     # demotes below the window — see justification there.
     "vs_ivf_batch": (q_vs_ivf_batch, ORACLE_VS_IVF_BATCH),

@@ -637,3 +637,21 @@ def test_screened_pairs_recompute_memory_is_bounded_on_duplicates():
     assert len(ii) == n * n
     assert np.array_equal(ii, want_i) and np.array_equal(jj, want_j)
     assert np.array_equal(cos, want)
+
+
+def test_screened_pairs_margin_scales_with_dimension():
+    """The f32 screen's worst-case error grows as about (d+2)·2⁻²⁴, so
+    at d = 32,768 a true pair can score ~2e-3 under the threshold in
+    f32. The screen keeps it (the margin is max(1e-3, 8·d·2⁻²⁴)) and
+    the exact recompute passes it."""
+    import numpy as np
+
+    from nebuia_vector_db_spark.operators import dedup as dd
+
+    d, threshold = 32_768, 0.9
+    mat = np.ones((1, d))
+    norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    cos32 = np.array([[threshold - 2e-3]], dtype=np.float32)
+    ii, jj, cos = dd._screened_pairs(cos32, mat, norms, mat, norms, 0, threshold)
+    assert ii.tolist() == [0] and jj.tolist() == [0]
+    assert cos[0] >= threshold

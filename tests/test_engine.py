@@ -829,6 +829,27 @@ def test_routes_reject_a_non_str_collection_name(spark, tmp_path, bad):
     assert table.n_files() == 1
 
 
+@pytest.mark.parametrize("route", ["multi_search", "documents", "chunks"])
+def test_collection_lists_reject_a_bare_str(spark, tmp_path, route):
+    """``list("ab")`` is ``["a", "b"]``: a bare string passed as the
+    collection list would search collections ``a`` and ``b``, not
+    ``ab``. The three list-taking routes raise TypeError before they
+    read the table."""
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    for name in ("a", "b", "ab"):
+        eng.store(name, _mkdocs(1, 1, 4, seed=137))
+    table, eng.table = eng.table, None  # any read would fail otherwise
+    call = {
+        "multi_search": lambda: eng.multi_search("ab", [1.0, 0.0, 0.0, 0.0], 3),
+        "documents": lambda: eng.documents("ab"),
+        "chunks": lambda: eng.chunks("ab"),
+    }[route]
+    with pytest.raises(TypeError, match="not a str"):
+        call()
+    eng.table = table
+    assert eng.multi_search(["ab"], [1.0, 0.0, 0.0, 0.0], 3).count() == 1
+
+
 class TestSparkRoute:
     """The search tests again, with the driver route's byte bound at 0,
     so every request takes the Spark route. The class is filled below:

@@ -225,22 +225,36 @@ def test_pq_search_fuses_encode_and_adc_into_one_python_node(
     whose codes were not persisted must score through ONE Arrow
     crossing (fused encode + ADC kernel), not encode-mapInArrow +
     ADC-UDF. A cached codes relation keeps the codes-scan path — one
-    crossing over the cheaper table."""
+    crossing over the cheaper table. ``pq_search_batch`` scores through
+    the same shortlist, so it is one crossing too."""
     import re
 
-    from nebuia_vector_db_spark.operators.pq import encode_pq, train_pq
+    from nebuia_vector_db_spark.operators.pq import (
+        encode_pq,
+        pq_search_batch,
+        train_pq,
+    )
+
+    def python_nodes(df):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        return plan, re.findall(
+            r"\(\d+\) (MapInArrow|ArrowEvalPython|BatchEvalPython|MapInPandas)",
+            plan,
+        )
 
     emb = load_table(spark, sf_oracle, "embeddings")
     books = train_pq(emb, m=16, k=16, sample=200)
     pq = encode_pq(emb, books)
     fused = pq.search(emb, [0.1] * 64, 5, rerank=32, tie_cols=["vec_id"])
-    plan = fused._sc._jvm.PythonSQLUtils.explainString(
-        fused._jdf.queryExecution(), "formatted"
+    plan, nodes = python_nodes(fused)
+    assert nodes == ["MapInArrow"], plan
+    queries = spark.createDataFrame(
+        [(0, [0.1] * 64), (1, [0.2, -0.1] * 32)],
+        "query_id long, query_vec array<double>",
     )
-    nodes = re.findall(
-        r"\(\d+\) (MapInArrow|ArrowEvalPython|BatchEvalPython|MapInPandas)",
-        plan,
-    )
+    plan, nodes = python_nodes(pq_search_batch(pq, emb, queries, 5, rerank=32))
     assert nodes == ["MapInArrow"], plan
     fused_rows = fused.collect()
     # cached codes → the codes-scan path; results bit-identical
