@@ -16,12 +16,14 @@ Layout::
       _snapshots/v00000002.json           + per-file column min/max
                                             and null-count stats
 
-Commit protocol — the versioned snapshot object is published through
-a :class:`~..sources.commit_backend.CommitBackend`, whose
-``try_commit(version, payload)`` is an atomic "create iff absent":
-two writers racing to commit version N+1 cannot both succeed; the
-loser gets :class:`CommitConflictError` and retries on the new
-snapshot (optimistic concurrency, same contract as Delta's
+Commit protocol — the log is a flat set of named objects
+(``vNNNNNNNN.json`` versions, ``ckpt-vNNNNNNNN.parquet`` checkpoints
+and the ``_last_checkpoint`` pointer) kept through a
+:class:`~..sources.commit_backend.CommitBackend`, six name-keyed
+operations. A version is published with ``put_if_absent``, an atomic
+"create iff absent": two writers racing to commit version N+1 cannot
+both succeed; the loser gets :class:`CommitConflictError` and retries
+on the new snapshot (optimistic concurrency, same contract as Delta's
 ``_delta_log`` protocol). The default backend publishes by link, so a
 reader never observes a truncated snapshot; tests drive the protocol,
 lost race included, through the ``backend=`` argument.
@@ -29,9 +31,9 @@ lost race included, through the ``backend=`` argument.
 Log scalability (the Delta checkpoint shape): commit N's payload
 stores only the file-manifest DELTA (``add`` + ``remove``) against
 commit N-1 — O(changed files), not O(table files) — and every
-``checkpoint_interval`` commits the full manifest is also written as
-a parquet checkpoint (``ckpt-vNNNNNNNN.parquet``) with a
-``_last_checkpoint`` pointer. Readers resolve the current version in
+``_CHECKPOINT_INTERVAL`` (10) commits the full manifest is also
+written as a parquet checkpoint with a ``_last_checkpoint`` pointer.
+Readers resolve the current version in
 O(tail) by probing forward from the pointer (no directory listing)
 and reconstruct a manifest from the nearest checkpoint plus the delta
 tail — at one commit per 5 minutes for a year (~100k versions over
@@ -77,6 +79,8 @@ import io
 import json
 import operator
 import os
+import shutil
+import time
 import uuid
 from collections.abc import Callable
 
@@ -97,35 +101,60 @@ class CommitConflictError(RuntimeError):
     """Another writer committed this version first; re-read and retry."""
 
 
+# every this many commits the full manifest is checkpointed to parquet
+# (smaller = shorter delta tails on read, more checkpoint writes)
+_CHECKPOINT_INTERVAL = 10
+_POINTER = "_last_checkpoint"
+
+
+def _vname(version: int) -> str:
+    return f"v{version:08d}.json"
+
+
+def _ckpt_name(version: int) -> str:
+    return f"ckpt-v{version:08d}.parquet"
+
+
 class SnapshotTable:
     """Handle on a snapshot-versioned parquet table rooted at ``path``.
 
     ``backend`` overrides the transaction-log storage (default: the
-    local filesystem under ``path/_snapshots``); ``checkpoint_interval``
-    is how often the full manifest is checkpointed to parquet (the
-    Delta-style log-compaction knob — smaller = shorter delta tails on
-    read, more checkpoint writes)."""
+    local filesystem under ``path/_snapshots``). The full manifest is
+    checkpointed to parquet every ``_CHECKPOINT_INTERVAL`` commits."""
 
     def __init__(
         self,
         spark: SparkSession,
         path: str,
         backend: CommitBackend | None = None,
-        checkpoint_interval: int = 10,
     ):
         self.spark = spark
         self.path = os.path.abspath(path)
         self._snap_dir = os.path.join(self.path, "_snapshots")
         self._data_dir = os.path.join(self.path, "data")
         self.backend = backend or LocalFSCommitBackend(self._snap_dir)
-        self.checkpoint_interval = int(checkpoint_interval)
         self._cache: dict[int, dict] = {}  # version -> full snapshot state
 
     # ------------------------------------------------------------ snapshots
+    def _numbered(self, prefix: str, suffix: str) -> list[tuple[int, float]]:
+        """``(number, modification time)`` of each log object named
+        ``prefix<number>suffix``, ascending (one full listing)."""
+        out = []
+        for name, mtime in self.backend.list():
+            if name.startswith(prefix) and name.endswith(suffix):
+                try:
+                    out.append((int(name[len(prefix) : -len(suffix)]), mtime))
+                except ValueError:
+                    pass
+        return sorted(out)
+
     def versions(self) -> list[int]:
         """Full log listing (audit/history path — hot readers use
         :meth:`current_version`, which never lists)."""
-        return self.backend.list_versions()
+        return [v for v, _ in self._numbered("v", ".json")]
+
+    def _checkpoints(self) -> list[int]:
+        return [v for v, _ in self._numbered("ckpt-v", ".parquet")]
 
     def current_version(self) -> int:
         """O(tail) version resolution: start at the ``_last_checkpoint``
@@ -133,8 +162,8 @@ class SnapshotTable:
         Falls back to a listing only when the table has never been
         checkpointed (short logs, where listing is cheap anyway) or
         the pointer is missing or names a vacuumed version."""
-        ptr = self._read_pointer()
-        if ptr is not None and self.backend.version_exists(ptr):
+        ptr = self._pointer_hint()
+        if ptr is not None and self.backend.exists(_vname(ptr)):
             v = ptr
         else:
             # no usable pointer: seed the probe from the listing. A
@@ -143,24 +172,21 @@ class SnapshotTable:
             # with no commits) is the right place to start
             vs = self.versions()
             v = vs[-1] if vs else 0
-        while self.backend.version_exists(v + 1):
+        while self.backend.exists(_vname(v + 1)):
             v += 1
         if v == 0:
             raise FileNotFoundError(f"no snapshots at {self.path}")
         return v
 
-    def _read_pointer(self) -> int | None:
-        raw = self.backend.read_pointer()
-        if raw is None:
-            return None
+    def _pointer_hint(self) -> int | None:
         try:
-            return int(json.loads(raw)["version"])
-        except (ValueError, KeyError, json.JSONDecodeError):
+            return int(json.loads(self.backend.get(_POINTER))["version"])
+        except (FileNotFoundError, ValueError, KeyError):
             return None  # pointer is a hint; fall back to listing
 
     def _load_version_json(self, version: int) -> dict:
         try:
-            return json.loads(self.backend.read_version(version))
+            return json.loads(self.backend.get(_vname(version)))
         except json.JSONDecodeError as e:
             raise OSError(
                 f"corrupt snapshot v{version} at {self.path}: {e}"
@@ -177,8 +203,8 @@ class SnapshotTable:
         j_v = self._load_version_json(v)
         if "files" in j_v:  # full commit (create / legacy format)
             files = j_v["files"]
-        elif self.backend.checkpoint_exists(v):
-            files = self._read_checkpoint_files(v)
+        elif self.backend.exists(_ckpt_name(v)):
+            files = self._checkpoint_files(v)
         else:
             deltas = [j_v]
             cur = v - 1
@@ -187,8 +213,8 @@ class SnapshotTable:
                     raise FileNotFoundError(
                         f"no manifest base below v{v} at {self.path}"
                     )
-                if self.backend.checkpoint_exists(cur):
-                    files = self._read_checkpoint_files(cur)
+                if self.backend.exists(_ckpt_name(cur)):
+                    files = self._checkpoint_files(cur)
                     break
                 j = self._load_version_json(cur)
                 if "files" in j:
@@ -244,70 +270,56 @@ class SnapshotTable:
         forward beneath the op's keys. The payload stores the manifest
         as a DELTA against the parent (``add``/``remove``) so commit
         size is O(changed files); the full state is checkpointed every
-        ``checkpoint_interval`` commits."""
+        ``_CHECKPOINT_INTERVAL`` commits. Every op has just read the
+        parent, so it comes from the cache."""
         new_version = (0 if expected_parent is None else expected_parent) + 1
-        parent = None
-        if expected_parent is not None:
-            try:
-                parent = self._snapshot(expected_parent)
-            except (FileNotFoundError, OSError):
-                pass  # unreadable parent: publish a full manifest
-        files = snap.get("files")
+        parent = None if expected_parent is None else self._snapshot(expected_parent)
+        files = snap["files"]
         snap = {
             **(self._app_meta(parent) if parent else {}),
             **snap,
             "parent": expected_parent,
+            "n_files": len(files),
+            "n_rows": sum(f["rows"] for f in files),
         }
-        if files is not None:
-            snap["n_files"] = len(files)
-            snap["n_rows"] = sum(f["rows"] for f in files)
         payload = {k: v for k, v in snap.items() if k != "files"}
-        if files is not None:
-            if parent is None:
-                payload["files"] = files  # full commit (create / fallback)
-            else:
-                parent_paths = {f["path"] for f in parent["files"]}
-                new_paths = {f["path"] for f in files}
-                payload["add"] = [
-                    f for f in files if f["path"] not in parent_paths
-                ]
-                payload["remove"] = sorted(parent_paths - new_paths)
-        if not self.backend.try_commit(
-            new_version, json.dumps(payload, sort_keys=True)
+        if parent is None:
+            payload["files"] = files  # full commit (create)
+        else:
+            parent_paths = {f["path"] for f in parent["files"]}
+            new_paths = {f["path"] for f in files}
+            payload["add"] = [f for f in files if f["path"] not in parent_paths]
+            payload["remove"] = sorted(parent_paths - new_paths)
+        if not self.backend.put_if_absent(
+            _vname(new_version), json.dumps(payload, sort_keys=True).encode()
         ):
             raise CommitConflictError(
                 f"version {new_version} already committed at {self.path}"
             )
-        if files is not None:
-            self._remember({**snap, "version": new_version})
-            if (
-                self.checkpoint_interval > 0
-                and new_version % self.checkpoint_interval == 0
-            ):
-                self._write_checkpoint(new_version, files)
+        self._remember({**snap, "version": new_version})
+        if new_version % _CHECKPOINT_INTERVAL == 0:
+            self._save_checkpoint(new_version, files)
         return new_version
 
     # --------------------------------------------------------- checkpoints
-    def _write_checkpoint(self, version: int, files: list[dict]) -> None:
+    def _save_checkpoint(self, version: int, files: list[dict]) -> None:
         """Materialize the full manifest as a parquet checkpoint and
         advance the ``_last_checkpoint`` pointer. Losing the race on
         either write is harmless: checkpoints are immutable functions
         of the version, and the pointer is only a hint."""
-        import io
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         table = pa.table(
             {"entry": pa.array([json.dumps(f, sort_keys=True) for f in files])}
         )
         buf = io.BytesIO()
         pq.write_table(table, buf)
-        self.backend.write_checkpoint(version, buf.getvalue())
-        self.backend.write_pointer(json.dumps({"version": version}))
+        self.backend.put_if_absent(_ckpt_name(version), buf.getvalue())
+        self._set_pointer(version)
 
-    def _read_checkpoint_files(self, version: int) -> list[dict]:
-        data = self.backend.read_checkpoint(version)
+    def _set_pointer(self, version: int) -> None:
+        self.backend.replace(_POINTER, json.dumps({"version": version}).encode())
+
+    def _checkpoint_files(self, version: int) -> list[dict]:
+        data = self.backend.get(_ckpt_name(version))
         table = pq.read_table(io.BytesIO(data))
         return [json.loads(s) for s in table.column("entry").to_pylist()]
 
@@ -414,16 +426,12 @@ class SnapshotTable:
         stats_cols: list[str] | None = None,
         extra_meta: dict | None = None,
         backend: CommitBackend | None = None,
-        checkpoint_interval: int = 10,
     ) -> "SnapshotTable":
         """Commit v1 with ``df``'s schema and rows (a DataFrame or a
         ``pyarrow.Table``, see :meth:`_write_files`; an empty table
         commits a table with no files). Raises ``FileExistsError`` when
         the log already has a version."""
-        tbl = cls(
-            spark, path, backend=backend,
-            checkpoint_interval=checkpoint_interval,
-        )
+        tbl = cls(spark, path, backend=backend)
         if tbl.versions():
             raise FileExistsError(f"snapshot table already exists at {path}")
         tbl._commit(
@@ -930,22 +938,33 @@ class SnapshotTable:
         self, keep_last: int = 1, min_file_age_seconds: float = 0.0
     ) -> dict:
         """Physically delete data files unreferenced by the retained
-        ``keep_last`` snapshots, and drop the older snapshot files.
-        This is the ONLY operation that removes data; until it runs,
-        every historical snapshot is readable and in-flight readers of
-        any retained snapshot are safe.
+        snapshots, and drop the older snapshot files. The retained
+        snapshots are the ``keep_last`` newest and every one younger
+        than ``min_file_age_seconds``. This is the ONLY operation that
+        removes data; until it runs, every historical snapshot is
+        readable and in-flight readers of any retained snapshot are
+        safe.
 
         ``min_file_age_seconds`` is the concurrent-WRITER guard (the
-        Delta vacuum-retention contract): a racing writer's data files
-        exist on disk BEFORE the snapshot that references them, so an
-        unguarded vacuum could delete an in-flight commit's files.
-        Files younger than the threshold are never removed; set it
-        above the longest plausible write duration when writers may
-        race the vacuum (0 is safe only for a quiesced table)."""
-        import time as _time
-
-        vs = self.versions()
-        retained = vs[-keep_last:] if keep_last > 0 else vs[-1:]
+        Delta vacuum-retention contract). A racing writer's data files
+        exist on disk BEFORE the snapshot that references them, and its
+        commit is refused only while the version after its parent
+        exists: once that version file is deleted, the writer would
+        publish the number again below the head, where no reader looks.
+        Neither data files nor version files younger than the threshold
+        are removed; set it above the longest plausible write duration
+        when writers may race the vacuum. With 0 (safe only for a
+        quiesced table) a racing commit, not only its data, can be
+        lost."""
+        now = time.time()
+        listed = self._numbered("v", ".json")
+        young = [
+            i for i, (_, mtime) in enumerate(listed)
+            if now - mtime < min_file_age_seconds
+        ]
+        cut = min([max(len(listed) - max(keep_last, 1), 0), *young])
+        vs = [v for v, _ in listed]
+        retained = vs[cut:]
         # Checkpoint the OLDEST retained version before dropping older
         # log entries: every retained version must stay reconstructible
         # from a base at-or-below it, and the dropped entries may have
@@ -953,14 +972,13 @@ class SnapshotTable:
         # newest surviving checkpoint so probe-forward resolution stays
         # O(tail).
         oldest = retained[0]
-        if not self.backend.checkpoint_exists(oldest):
-            self._write_checkpoint(oldest, self._snapshot(oldest)["files"])
+        if not self.backend.exists(_ckpt_name(oldest)):
+            self._save_checkpoint(oldest, self._snapshot(oldest)["files"])
         live = set()
         for v in retained:
             for f in self._snapshot(v)["files"]:
                 live.add(os.path.abspath(os.path.join(self.path, f["path"])))
         removed_files = 0
-        now = _time.time()
         # a table created empty has no data dir until its first write
         os.makedirs(self._data_dir, exist_ok=True)
         for commit_id in list(os.listdir(self._data_dir)):
@@ -975,26 +993,18 @@ class SnapshotTable:
                     os.remove(full)
                     removed_files += 1
             if not any(n.endswith(".parquet") for n in os.listdir(cdir)):
-                import shutil
-
                 shutil.rmtree(cdir)
-        removed_snaps = 0
-        for v in vs:
-            if v not in retained:
-                self.backend.delete_version(v)
-                self._cache.pop(v, None)
-                removed_snaps += 1
-        for cv in self.backend.list_checkpoints():
+        for v in vs[:cut]:
+            self.backend.delete(_vname(v))
+            self._cache.pop(v, None)
+        ckpts = self._checkpoints()  # ``oldest`` is among them
+        for cv in ckpts:
             if cv < oldest:
-                self.backend.delete_checkpoint(cv)
-        remaining_ckpts = self.backend.list_checkpoints()
-        if remaining_ckpts:
-            self.backend.write_pointer(
-                json.dumps({"version": remaining_ckpts[-1]})
-            )
+                self.backend.delete(_ckpt_name(cv))
+        self._set_pointer(ckpts[-1])
         return {
             "removed_data_files": removed_files,
-            "removed_snapshots": removed_snaps,
+            "removed_snapshots": cut,
             "retained_versions": retained,
         }
 

@@ -195,13 +195,13 @@ def test_requests_do_not_list_the_log(spark, tmp_path, monkeypatch):
     for i in range(11):  # past the default checkpoint interval (10)
         eng.store(f"c{i % 3}", _mkdocs(1, 1, 4, seed=50 + i))
     listings = []
-    list_versions = LocalFSCommitBackend.list_versions
+    list_log = LocalFSCommitBackend.list
 
     def counted(self):
         listings.append(1)
-        return list_versions(self)
+        return list_log(self)
 
-    monkeypatch.setattr(LocalFSCommitBackend, "list_versions", counted)
+    monkeypatch.setattr(LocalFSCommitBackend, "list", counted)
     assert eng.search("c1", [1.0, 0.0, 0.0, 0.0], 3).count() == 3
     eng.store("c1", _mkdocs(1, 1, 4, seed=70))
     assert eng.delete_collection("c2")["deleted"] is True

@@ -436,14 +436,20 @@ def test_with_retry_gives_up_after_budget(spark, base_df, tmp_path, monkeypatch)
 
 
 def test_vacuum_age_guard_spares_young_files(spark, base_df, tmp_path):
-    """The concurrent-writer guard: unreferenced files younger than
-    min_file_age_seconds survive vacuum (an in-flight commit's data
-    exists before its snapshot does)."""
+    """The concurrent-writer guard: data and version files younger
+    than min_file_age_seconds survive vacuum (an in-flight commit's
+    data exists before its snapshot does, and its commit needs the
+    version after its parent to still exist to be refused)."""
     tbl = SnapshotTable.create(spark, str(tmp_path / "t"), base_df)
     tbl.delete_where("k < 100")
+    inflight = tbl._write_files(base_df.limit(5))  # written, not committed
     res = tbl.vacuum(keep_last=1, min_file_age_seconds=3600)
     assert res["removed_data_files"] == 0, "young files must survive"
-    # old snapshot metadata is still dropped, current content intact
+    assert all(os.path.exists(tbl.path + "/" + f["path"]) for f in inflight)
+    # the young v1 survives too: a writer still holding it as its
+    # parent must lose the race on v2, not publish v2 again
+    assert res["removed_snapshots"] == 0
+    assert tbl.versions() == [1, 2]
     assert tbl.read().count() == 900
     res2 = tbl.vacuum(keep_last=1, min_file_age_seconds=0)
     assert res2["removed_data_files"] >= 1

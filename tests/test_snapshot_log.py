@@ -12,11 +12,15 @@ Covers the two storage-layer properties of the log:
 from __future__ import annotations
 
 import json
+import os
 import threading
+import time
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from nebuia_vector_db_spark.sources import snapshot as snapshot_module
 from nebuia_vector_db_spark.sources.commit_backend import (
     CommitBackend,
     LocalFSCommitBackend,
@@ -28,86 +32,64 @@ from nebuia_vector_db_spark.sources.snapshot import (
 
 
 class InMemoryCommitBackend(CommitBackend):
-    """In-memory create-if-absent fake: ``try_commit`` atomically
-    succeeds for exactly one caller per version. Used by the protocol
+    """In-memory create-if-absent fake: ``put_if_absent`` atomically
+    succeeds for exactly one caller per name. Used by the protocol
     tests to prove the commit logic does not depend on the
     filesystem — including the lost-race path. ``race_hook``, when
-    set, runs inside ``try_commit`` *before* the conditional put (with
-    the lock released) so tests can interleave a rival commit at the
-    worst possible moment."""
+    set, runs inside ``put_if_absent`` *before* the conditional put
+    (with the lock released) so tests can interleave a rival commit at
+    the worst possible moment."""
 
     def __init__(self):
         self._lock = threading.Lock()
-        self._versions: dict[int, str] = {}
-        self._checkpoints: dict[int, bytes] = {}
-        self._pointer: str | None = None
+        self._objects: dict[str, tuple[bytes, float]] = {}
         self.race_hook = None
         self.put_attempts = 0
 
-    def try_commit(self, version: int, payload: str) -> bool:
+    def put_if_absent(self, name: str, data: bytes) -> bool:
         hook = self.race_hook
         if hook is not None:
             self.race_hook = None  # fire once
             hook()
         with self._lock:
             self.put_attempts += 1
-            if version in self._versions:
+            if name in self._objects:
                 return False
-            self._versions[version] = payload
+            self._objects[name] = (data, time.time())
             return True
 
-    def read_version(self, version: int) -> str:
+    def replace(self, name: str, data: bytes) -> None:
         with self._lock:
-            if version not in self._versions:
-                raise FileNotFoundError(f"version {version}")
-            return self._versions[version]
+            self._objects[name] = (data, time.time())
 
-    def version_exists(self, version: int) -> bool:
+    def get(self, name: str) -> bytes:
         with self._lock:
-            return version in self._versions
+            if name not in self._objects:
+                raise FileNotFoundError(name)
+            return self._objects[name][0]
 
-    def list_versions(self) -> list[int]:
+    def exists(self, name: str) -> bool:
         with self._lock:
-            return sorted(self._versions)
+            return name in self._objects
 
-    def delete_version(self, version: int) -> None:
+    def list(self) -> list[tuple[str, float]]:
         with self._lock:
-            del self._versions[version]
+            return [(n, mtime) for n, (_, mtime) in self._objects.items()]
 
-    def write_checkpoint(self, version: int, data: bytes) -> None:
+    def delete(self, name: str) -> None:
         with self._lock:
-            self._checkpoints.setdefault(version, data)
+            del self._objects[name]
 
-    def read_checkpoint(self, version: int) -> bytes:
-        with self._lock:
-            if version not in self._checkpoints:
-                raise FileNotFoundError(f"checkpoint {version}")
-            return self._checkpoints[version]
 
-    def checkpoint_exists(self, version: int) -> bool:
-        with self._lock:
-            return version in self._checkpoints
-
-    def list_checkpoints(self) -> list[int]:
-        with self._lock:
-            return sorted(self._checkpoints)
-
-    def delete_checkpoint(self, version: int) -> None:
-        with self._lock:
-            self._checkpoints.pop(version, None)
-
-    def write_pointer(self, payload: str) -> None:
-        with self._lock:
-            self._pointer = payload
-
-    def read_pointer(self) -> str | None:
-        with self._lock:
-            return self._pointer
+def _is_version(name: str) -> bool:
+    return name.startswith("v") and name.endswith(".json")
 
 
 class CountingFSBackend(LocalFSCommitBackend):
     """LocalFS backend instrumented with per-operation counters so
-    tests can assert how much log I/O a read actually performs."""
+    tests can assert how much log I/O a read actually performs:
+    version reads and existence probes, and every listing (pointer and
+    checkpoint reads are not counted)."""
 
     def __init__(self, log_dir):
         super().__init__(log_dir)
@@ -115,17 +97,17 @@ class CountingFSBackend(LocalFSCommitBackend):
         self.listings = 0
         self.exist_probes = 0
 
-    def read_version(self, version):
-        self.reads += 1
-        return super().read_version(version)
+    def get(self, name):
+        self.reads += _is_version(name)
+        return super().get(name)
 
-    def list_versions(self):
+    def list(self):
         self.listings += 1
-        return super().list_versions()
+        return super().list()
 
-    def version_exists(self, version):
-        self.exist_probes += 1
-        return super().version_exists(version)
+    def exists(self, name):
+        self.exist_probes += _is_version(name)
+        return super().exists(name)
 
 
 def _entry(i: int) -> dict:
@@ -148,9 +130,9 @@ def test_500_commits_read_touches_only_checkpoint_plus_tail(
 ):
     """The VERDICT r3 #1 'done' criterion: after 500+ delta commits,
     version resolution does no listing and manifest reconstruction
-    reads at most checkpoint_interval log entries."""
+    reads at most _CHECKPOINT_INTERVAL (10) log entries."""
     root = str(tmp_path / "t")
-    tbl = SnapshotTable(spark, root, checkpoint_interval=10)
+    tbl = SnapshotTable(spark, root)
     schema = _schema_json(spark)
     files: list[dict] = []
     parent = None
@@ -193,41 +175,40 @@ def test_500_commits_read_touches_only_checkpoint_plus_tail(
     assert counting2.reads <= 10 + 2
 
 
-def test_delta_payloads_are_small_and_reconstruct(spark, tmp_path):
+def test_delta_payloads_are_small_and_reconstruct(spark, tmp_path, monkeypatch):
     """On-disk commits after create carry add/remove, not the full
     manifest; reads still see the complete file list."""
+    monkeypatch.setattr(snapshot_module, "_CHECKPOINT_INTERVAL", 5)
     df = spark.range(0, 100).selectExpr("id k")
-    tbl = SnapshotTable.create(
-        spark, str(tmp_path / "t"), df, checkpoint_interval=5
-    )
+    tbl = SnapshotTable.create(spark, str(tmp_path / "t"), df)
     for i in range(6):
         tbl.append(spark.range(100 * (i + 1), 100 * (i + 2)).selectExpr("id k"))
-    raw_v3 = json.loads(tbl.backend.read_version(3))
+    raw_v3 = json.loads(tbl.backend.get("v00000003.json"))
     assert "files" not in raw_v3, "append commits must be deltas"
     assert raw_v3["add"], "delta must list the new files"
-    assert tbl.backend.checkpoint_exists(5), "interval checkpoint missing"
+    assert tbl.backend.exists("ckpt-v00000005.parquet"), "interval checkpoint missing"
     assert tbl.read().count() == 700
     assert tbl.read(version=3).count() == 300  # time travel via replay
     # delete produces remove entries in the delta
     tbl.delete_where("k < 100")
-    raw_v8 = json.loads(tbl.backend.read_version(8))
+    raw_v8 = json.loads(tbl.backend.get("v00000008.json"))
     assert raw_v8.get("remove"), "COW delete must record removed paths"
     assert tbl.read().count() == 600
 
 
-def test_vacuum_checkpoints_oldest_retained(spark, tmp_path):
+def test_vacuum_checkpoints_oldest_retained(spark, tmp_path, monkeypatch):
     """Vacuum must leave every retained version reconstructible even
     though the delta commits below them are gone."""
+    # interval high: NO periodic checkpoint before vacuum
+    monkeypatch.setattr(snapshot_module, "_CHECKPOINT_INTERVAL", 100)
     df = spark.range(0, 50).selectExpr("id k")
-    tbl = SnapshotTable.create(
-        spark, str(tmp_path / "t"), df, checkpoint_interval=100
-    )  # interval high: NO periodic checkpoint before vacuum
+    tbl = SnapshotTable.create(spark, str(tmp_path / "t"), df)
     for i in range(7):
         tbl.append(spark.range(50 * (i + 1), 50 * (i + 2)).selectExpr("id k"))
     res = tbl.vacuum(keep_last=3)
     assert res["removed_snapshots"] == 5
     assert tbl.versions() == [6, 7, 8]
-    assert tbl.backend.checkpoint_exists(6), "oldest retained needs a base"
+    assert tbl.backend.exists("ckpt-v00000006.parquet"), "oldest retained needs a base"
     for v, n in [(6, 300), (7, 350), (8, 400)]:
         assert tbl.read(version=v).count() == n
     assert tbl.current_version() == 8
@@ -253,7 +234,7 @@ def test_inmemory_backend_full_stack(spark, tmp_path):
     assert got.where(F.col("bucket") == 3).count() == 0
     assert tbl.meta("stream_watermarks") == {"a": 1}
     assert tbl.read(version=1).count() == 200  # time travel
-    assert be.list_versions() == [1, 2, 3]
+    assert tbl.versions() == [1, 2, 3]
 
 
 def test_inmemory_conditional_put_single_winner():
@@ -261,7 +242,7 @@ def test_inmemory_conditional_put_single_winner():
     wins = []
 
     def _try(tag):
-        if be.try_commit(7, tag):
+        if be.put_if_absent("v00000007.json", tag.encode()):
             wins.append(tag)
 
     ts = [threading.Thread(target=_try, args=(f"w{i}",)) for i in range(8)]
@@ -270,7 +251,7 @@ def test_inmemory_conditional_put_single_winner():
     for t in ts:
         t.join()
     assert len(wins) == 1
-    assert be.read_version(7) == wins[0]
+    assert be.get("v00000007.json") == wins[0].encode()
     assert be.put_attempts == 8
 
 
@@ -290,7 +271,7 @@ def test_lost_race_retries_through_fake_backend(spark, tmp_path):
         rv = SnapshotTable(spark, str(tmp_path / "t"), backend=be)
         rv.append(rival_rows)
 
-    be.race_hook = _rival  # fires inside OUR try_commit, pre-PUT
+    be.race_hook = _rival  # fires inside OUR put_if_absent, pre-PUT
     with pytest.raises(CommitConflictError):
         tbl.append(spark.range(2000, 2010).selectExpr("id k"))
     # the optimistic retry path recovers on the new parent
@@ -303,13 +284,11 @@ def test_lost_race_retries_through_fake_backend(spark, tmp_path):
 
 def test_localfs_commit_leaves_no_temp_or_partial(tmp_path):
     be = LocalFSCommitBackend(str(tmp_path / "log"))
-    assert be.try_commit(1, '{"op": "create"}')
-    assert not be.try_commit(1, '{"op": "rival"}')  # lost race
-    import os
-
+    assert be.put_if_absent("v00000001.json", b'{"op": "create"}')
+    assert not be.put_if_absent("v00000001.json", b'{"op": "rival"}')  # lost race
     names = os.listdir(str(tmp_path / "log"))
     assert names == ["v00000001.json"], names
-    assert be.read_version(1) == '{"op": "create"}'
+    assert be.get("v00000001.json") == b'{"op": "create"}'
 
 
 def test_append_expected_parent_detects_interleaved_commit(
@@ -345,23 +324,48 @@ class _HookableFSBackend(LocalFSCommitBackend):
 
     race_hook = None
 
-    def try_commit(self, version, payload):
+    def put_if_absent(self, name, data):
         hook = self.race_hook
         if hook is not None:
             self.race_hook = None
             hook()
-        return super().try_commit(version, payload)
+        return super().put_if_absent(name, data)
+
+
+def _rival_append(rv, rows):
+    rv.append(rows)
+
+
+def _rival_append_twice_and_vacuum(rv, rows):
+    """Two commits, then a vacuum with the concurrent-writer guard: the
+    version after our parent must survive it, or our link would publish
+    that number again below the head."""
+    rv.append(rows.where("k % 2 = 0"))
+    rv.append(rows.where("k % 2 = 1"))
+    rv.vacuum(keep_last=1, min_file_age_seconds=3600)
+
+
+def _localfs(p):
+    return _HookableFSBackend(str(p / "log"))
+
+
+def _inmemory(p):
+    return InMemoryCommitBackend()
 
 
 @pytest.mark.parametrize(
-    "make_backend",
+    "make_backend, rival, head",
     [
-        lambda p: _HookableFSBackend(str(p / "log")),
-        lambda p: InMemoryCommitBackend(),
+        (_localfs, _rival_append, 3),
+        (_inmemory, _rival_append, 3),
+        (_localfs, _rival_append_twice_and_vacuum, 4),
+        (_inmemory, _rival_append_twice_and_vacuum, 4),
     ],
-    ids=["localfs", "inmemory"],
+    ids=["localfs", "inmemory", "localfs_vacuum", "inmemory_vacuum"],
 )
-def test_racing_writers_protocol_all_backends(spark, tmp_path, make_backend):
+def test_racing_writers_protocol_all_backends(
+    spark, tmp_path, make_backend, rival, head
+):
     """The worst-case interleaving (rival lands the version AFTER we
     read the parent, BEFORE our conditional PUT) on every backend:
     POSIX link-CAS and the in-memory create-if-absent fake.
@@ -374,8 +378,7 @@ def test_racing_writers_protocol_all_backends(spark, tmp_path, make_backend):
     rival_rows = spark.range(1000, 1010).selectExpr("id k")
 
     def _rival():
-        rv = SnapshotTable(spark, str(tmp_path / "t"), backend=be)
-        rv.append(rival_rows)
+        rival(SnapshotTable(spark, str(tmp_path / "t"), backend=be), rival_rows)
 
     be.race_hook = _rival
     with pytest.raises(CommitConflictError):
@@ -385,19 +388,65 @@ def test_racing_writers_protocol_all_backends(spark, tmp_path, make_backend):
     assert got.count() == 30
     assert got.where((F.col("k") >= 1000) & (F.col("k") < 1010)).count() == 10
     assert got.where(F.col("k") >= 2000).count() == 10
-    assert be.list_versions() == [1, 2, 3]
+    assert tbl.versions() == list(range(1, head + 1))
+
+
+def _ktable(lo: int, tag: str):
+    return pa.table(
+        {"k": pa.array(range(lo, lo + 5), pa.int64()), "tag": [tag] * 5}
+    )
+
+
+def test_stale_parent_conflicts_after_guarded_vacuum(spark, tmp_path):
+    """Writer A holds v1; writer B appends twice and vacuums with the
+    concurrent-writer guard. A's append on parent 1 must raise, not
+    publish v2 again below the head, where no reader would see it."""
+    a = SnapshotTable.create(spark, str(tmp_path / "t"), _ktable(0, "a"))
+    b = SnapshotTable(spark, str(tmp_path / "t"))
+    b.append(_ktable(10, "b"))
+    b.append(_ktable(20, "b"))
+    b.vacuum(keep_last=1, min_file_age_seconds=3600)
+    with pytest.raises(CommitConflictError):
+        a.append(_ktable(30, "a"), expected_parent=1)
+    assert a.versions() == [1, 2, 3]
+    assert a.read().count() == 15
+
+
+def test_log_object_names_on_disk(spark, tmp_path):
+    """The log's names on disk: a create, 11 appends and a delete make
+    v1..v13 with a checkpoint at v10; ``vacuum(keep_last=2)`` keeps v12
+    and v13, checkpoints v12 (the oldest kept), drops the v10 one and
+    points ``_last_checkpoint`` at v12. No temp file is left."""
+    tbl = SnapshotTable.create(spark, str(tmp_path / "t"), _ktable(0, "c0"))
+    for i in range(1, 12):
+        tbl.append(_ktable(10 * i, f"c{i}"))
+    tbl.delete_where([("tag", "=", "c0")])
+    log = tmp_path / "t" / "_snapshots"
+    assert sorted(os.listdir(log)) == [
+        "_last_checkpoint",
+        "ckpt-v00000010.parquet",
+        *[f"v{v:08d}.json" for v in range(1, 14)],
+    ]
+    tbl.vacuum(keep_last=2)
+    assert sorted(os.listdir(log)) == [
+        "_last_checkpoint",
+        "ckpt-v00000012.parquet",
+        "v00000012.json",
+        "v00000013.json",
+    ]
+    assert json.loads((log / "_last_checkpoint").read_text()) == {"version": 12}
+    assert SnapshotTable(spark, str(tmp_path / "t")).read().count() == 55
 
 
 def test_current_version_from_listing_after_vacuum_without_pointer(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """After vacuum the log no longer starts at v1, and with the
     ``_last_checkpoint`` pointer gone a cold reader must resolve the
     head from the version listing and still read every row."""
+    monkeypatch.setattr(snapshot_module, "_CHECKPOINT_INTERVAL", 2)
     df = spark.range(0, 40).selectExpr("id k", "id % 4 bucket")
-    tbl = SnapshotTable.create(
-        spark, str(tmp_path / "t"), df, checkpoint_interval=2
-    )
+    tbl = SnapshotTable.create(spark, str(tmp_path / "t"), df)
     for lo in range(40, 100, 20):
         tbl.append(
             spark.range(lo, lo + 20).selectExpr("id k", "id % 4 bucket")
@@ -406,7 +455,7 @@ def test_current_version_from_listing_after_vacuum_without_pointer(
     tbl.vacuum(keep_last=2)
     (tmp_path / "t" / "_snapshots" / "_last_checkpoint").unlink()
     cold = SnapshotTable(spark, str(tmp_path / "t"))
-    assert cold.backend.read_pointer() is None
+    assert cold._pointer_hint() is None
     assert cold.versions() == [head - 1, head]
     assert cold.current_version() == head
     assert cold.read().count() == 100
