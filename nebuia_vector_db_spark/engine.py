@@ -35,7 +35,7 @@ delete.
 
 Search has two routes with the same answer. Manifest-stats pruning
 keeps a query reading only its collections' files. When those files
-hold at most ``_DRIVER_SEARCH_MAX_BYTES`` and there is no ``where``,
+hold at most ``topk._DRIVER_MAX_BYTES`` and there is no ``where``,
 the driver reads them with pyarrow one at a time, scores them with the
 Spark route's left-to-right dot and sorts the best rows in the D-2
 order, and the result is a local relation: the request runs no Spark
@@ -66,6 +66,7 @@ from nebuia_vector_db_spark.functions.vector import (
     arrow_list_to_matrix,
     normalize_query,
 )
+from nebuia_vector_db_spark.operators import topk
 from nebuia_vector_db_spark.operators.topk import topk_search
 from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
 from nebuia_vector_db_spark.sources.snapshot import (
@@ -74,12 +75,6 @@ from nebuia_vector_db_spark.sources.snapshot import (
 )
 
 _DOCUMENT_ARROW = to_arrow_schema(DOCUMENT_SCHEMA)
-
-# a search whose candidate files hold at most this many bytes runs on
-# the driver. It reads one file at a time and holds about 4.7x that
-# file's bytes, so the bound caps a request's driver memory and keeps
-# large collections on the Spark route, which scales
-_DRIVER_SEARCH_MAX_BYTES = 64 << 20
 
 # the columns the driver route reads, and the search result's columns
 _SEARCH_ARROW = pa.schema(
@@ -258,7 +253,7 @@ class VectorEngine:
 
         Two routes give the same rows in the same order. Without
         ``where``, when the collection's files (pruned by their
-        ``collection`` stats) hold at most ``_DRIVER_SEARCH_MAX_BYTES``,
+        ``collection`` stats) hold at most ``topk._DRIVER_MAX_BYTES``,
         the search runs on the driver: the files are read with pyarrow
         and cut there (:func:`_driver_top_k`), and the result is a
         local relation whose ``collect()`` runs no Spark job. Otherwise, and
@@ -348,11 +343,11 @@ class VectorEngine:
         that may hold ``collections``, each read with pyarrow on one
         thread and cut to its best k rows by :func:`_driver_top_k`,
         then the best k of those. A request holds one file's rows at a
-        time. ``None`` sends the request to the Spark route: the files
-        hold more than ``_DRIVER_SEARCH_MAX_BYTES``, or a chunk cannot
-        be scored here."""
+        time, about 4.7x that file's bytes. ``None`` sends the request
+        to the Spark route: the files hold more than the driver bound,
+        ``topk._DRIVER_MAX_BYTES``, or a chunk cannot be scored here."""
         files = self.table.candidate_files([("collection", "in", list(collections))])
-        if sum(f["bytes"] for f in files) > _DRIVER_SEARCH_MAX_BYTES:
+        if sum(f["bytes"] for f in files) > topk._DRIVER_MAX_BYTES:
             return None
         wanted = pa.array(list(collections), pa.string())
         qn = np.asarray(normalize_query(q))
@@ -386,20 +381,19 @@ class VectorEngine:
         time-travelable until vacuum. The manifest stats decide each
         file: a file of only this collection is dropped unscanned, and
         only a file that also holds other rows (or null
-        ``collection`` values) is rewritten copy-on-write.
-        Oracle-verified by the ``snap_engine_lifecycle`` registry
+        ``collection`` values) is rewritten copy-on-write. Deleting a
+        missing collection commits nothing and returns ``deleted:
+        False``. Oracle-verified by the ``snap_engine_lifecycle`` registry
         row. A ``collection_name`` that is not a ``str`` raises
         ``TypeError``."""
         _check_collection_name(collection_name)
         # retried through the commit CAS: a store racing this delete
         # must not surface CommitConflictError to the caller. The flag
-        # comes from the delete's own commit, so other writers'
-        # commits cannot flip it.
-        v = self.table.with_retry(
-            "delete_where", [("collection", "=", collection_name)]
+        # is whether this call published, so other writers' commits,
+        # an earlier delete of the same name included, cannot flip it.
+        deleted = self.table.with_retry(
+            "delete_where_any", [("collection", "=", collection_name)]
         )
-        meta = self.table.meta
-        deleted = meta("dropped_files", v) + meta("rewrote_files", v) > 0
         return {"status": "Collection deletion started", "deleted": deleted}
 
     # -------------------------------------------------------------- catalog

@@ -50,11 +50,12 @@ from nebuia_vector_db_spark.functions.vector import (
     normalize_query,
 )
 from nebuia_vector_db_spark.operators.topk import (
-    _arrow_topk,
+    _BLOCK_ROWS,
+    _batch_topk,
     _d2_cut,
+    _driver_corpus,
     _gemm_scorer,
     _query_matrix,
-    topk_per_group,
     topk_search,
 )
 
@@ -152,21 +153,26 @@ class IVFIndex:
           map, which ships in the kernel closure;
         - scan side: ONE pass over only the UNION of probed cells
           (``ivf_cell IN (...)`` → partition/stats pruning — the scan
-          fraction is |union| / n_cells, not 1.0) through the one
-          Arrow top-k kernel, ``topk._arrow_topk``, with the GEMM
-          scorer of ``knn_join(method='arrow')``: per Arrow batch the
-          rows are grouped by cell and each cell's rows are
-          multiplied, in row blocks, only by the queries that probed
-          it (a candidate is charged only to those queries, so the
-          GEMM work is about ``nprobe / n_cells`` of the exact
-          scan's), and a per-query local cut keeps each batch's ≤ k
-          best rows per query in the D-2 order (ties at the cut go by
-          ``tie_cols``; as in ``knn_join(method='arrow')``, that order
-          between exact duplicate vectors is not guaranteed, since
-          BLAS can round them 1 ulp apart);
-        - global cut: the same bounded row_number window as
-          ``knn_join`` (Partial WindowGroupLimit — tasks ship ≤ k rows
-          per query).
+          fraction is |union| / n_cells, not 1.0), cut by
+          ``topk._batch_topk`` with the GEMM scorer of
+          ``knn_join(method='arrow')``: the rows are grouped by cell and
+          each cell's rows are multiplied, in row blocks, only by the
+          queries that probed it (a candidate is charged only to those
+          queries, so the GEMM work is about ``nprobe / n_cells`` of
+          the exact scan's), and each query keeps its ≤ k best rows in
+          the D-2 order (ties at the cut go by ``tie_cols``; as in
+          ``knn_join(method='arrow')``, that order between exact
+          duplicate vectors is not guaranteed, since BLAS can round
+          them 1 ulp apart);
+        - route: within the driver bound (``topk._driver_corpus``) the
+          JVM collects the candidate rows and the driver cuts them
+          whole, returning a local relation (no Python worker, no
+          window). A saved index's bound counts every cell's files,
+          since ``inputFiles()`` lists before partition pruning, though
+          only the probed cells are read. Above it, each Arrow batch is
+          cut on the workers and the same bounded row_number window as
+          ``knn_join`` applies the global cut (Partial WindowGroupLimit
+          — tasks ship ≤ k rows per query).
 
         ``nprobe == n_cells`` makes this EXACTLY ``knn_join`` (every
         pair allowed, full scan) — which is how the oracle checks it
@@ -176,14 +182,11 @@ class IVFIndex:
         cell_queries = _cell_queries(self.centroids @ qmat.T, nprobe)
         cand = self.assigned.where(F.col("ivf_cell").isin(list(cell_queries)))
         vec_col = self.vec_col
-        cut = _arrow_topk(
+        return _batch_topk(
             cand, qids, k,
             lambda rb: _gemm_scorer(arrow_list_to_matrix(rb.column(vec_col)), qmat),
             [vec_col, "ivf_cell"], sim_col, query_id_col,
             tie_cols=tie_cols, cell_queries=cell_queries,
-        )
-        return topk_per_group(
-            cut, [query_id_col], sim_col, k, tie_cols=tie_cols
         )
 
 
@@ -305,42 +308,56 @@ def load_ivf_index(
     return IVFIndex(assigned, centroids, vec_col)
 
 
+def _nearest_cells(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Each row's nearest centroid (squared-Euclidean argmin, ties to
+    the lowest cell id) as int32, scored in blocks of ``_BLOCK_ROWS``
+    rows so the temporaries stay O(block × n_cells)."""
+    c_sq = np.einsum("ij,ij->i", cents, cents)
+    out = np.empty(len(mat), np.int32)
+    for lo in range(0, len(mat), _BLOCK_ROWS):
+        blk = mat[lo : lo + _BLOCK_ROWS].astype(np.float64, copy=False)
+        # dist² = ‖x‖² − 2·x·c + ‖c‖²; ‖x‖² is constant per row so
+        # argmin needs only the last two terms
+        out[lo : lo + _BLOCK_ROWS] = np.argmin(blk @ cents.T * -2.0 + c_sq, axis=1)
+    return out
+
+
 def assign_to_cells(
     df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding"
 ) -> DataFrame:
     """Assign every row its nearest centroid (squared-Euclidean
     argmin, ties to the lowest cell id — KMeans assignment semantics)
-    WITHOUT retraining: the centroid matrix is broadcast and each
-    Arrow batch does one (b, d)·(d, C) BLAS product. Map-side only,
-    no shuffle — the kernel a 100 TB daily ingest runs to route new
-    vectors into an existing index."""
-    from collections.abc import Iterator
+    WITHOUT retraining: ``df`` plus an ``ivf_cell`` int column, one
+    (block, d)·(d, C) BLAS product per row block. No shuffle — the
+    kernel a 100 TB daily ingest runs to route new vectors into an
+    existing index.
 
+    Within the driver bound (``topk._driver_corpus``) the JVM collects
+    ``df``, the driver assigns it, and the result is a local relation,
+    so neither this nor a ``save_ivf_index`` of it starts a Python
+    worker. Above it the centroid matrix is broadcast and each Arrow
+    batch is assigned on the workers (map-side only)."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
     cents = np.ascontiguousarray(centroids, dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast(cents)
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField("ivf_cell", T.IntegerType())]
     )
+    table = _driver_corpus(df)
+    if table is not None:
+        cells = _nearest_cells(arrow_list_to_matrix(table.column(vec_col)), cents)
+        return df.sparkSession.createDataFrame(
+            table.append_column("ivf_cell", pa.array(cells, pa.int32())),
+            schema=out_schema,
+        )
+    bc = df.sparkSession.sparkContext.broadcast(cents)
 
-    def _assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        c = bc.value
-        c_sq = np.einsum("ij,ij->i", c, c)
+    def _assign(batches):
         for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            mat = arrow_list_to_matrix(rb.column(vec_col)).astype(
-                np.float64, copy=False
-            )
-            # dist² = ‖x‖² − 2·x·c + ‖c‖²; ‖x‖² is constant per row so
-            # argmin needs only the last two terms
-            scores = mat @ c.T * -2.0 + c_sq[None, :]
-            cells = np.argmin(scores, axis=1).astype(np.int32)
-            yield rb.append_column(
-                "ivf_cell", pa.array(cells, type=pa.int32())
-            )
+            if rb.num_rows:
+                cells = _nearest_cells(arrow_list_to_matrix(rb.column(vec_col)), bc.value)
+                yield rb.append_column("ivf_cell", pa.array(cells, pa.int32()))
 
     return df.mapInArrow(_assign, schema=out_schema)
 

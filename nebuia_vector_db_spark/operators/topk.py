@@ -31,6 +31,12 @@ Spark-first design notes (scale):
   are O(block × B) whatever the batch size and a task ships ≤ k rows
   per (batch, query). A query batch becomes the normalized query
   matrix in one place, :func:`_query_matrix`.
+- Batch kNN under the driver bound runs without Python workers:
+  ``knn_join(method='arrow')`` and ``IVFIndex.search_batch`` cut their
+  corpus in :func:`_batch_topk`, which collects it with
+  :func:`_driver_corpus` when it fits ``_DRIVER_MAX_BYTES`` and runs
+  :func:`_score_batch` on the driver; a larger corpus goes through
+  :func:`_arrow_topk` and the ``row_number`` window.
 """
 
 from __future__ import annotations
@@ -39,8 +45,11 @@ import functools
 from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nebuia_vector_db_spark.functions.vector import (
     arrow_list_to_matrix,
@@ -83,6 +92,129 @@ def _query_matrix(
     return qids, qmat
 
 
+# The one driver bound, shared by the engine's search and the batch kNN
+# paths. A request is served on the driver only when its input holds at
+# most this many bytes: for a search, the bytes of its candidate files
+# (engine._driver_search); for a batch kNN corpus, the larger of
+# Catalyst's size estimate and its input files' bytes (_driver_corpus).
+# It caps a request's driver memory and keeps large inputs on the Spark
+# route, which scales.
+_DRIVER_MAX_BYTES = 64 << 20
+
+
+def _driver_corpus(df: DataFrame) -> pa.Table | None:
+    """``df`` as an Arrow table collected by the JVM, or ``None`` when
+    it may exceed ``_DRIVER_MAX_BYTES``.
+
+    Both figures must be within the bound. Catalyst's size estimate of
+    the optimized plan sees joins and local relations, and an RDD
+    source, which it cannot size (``Long.MaxValue``), always fails it;
+    but it undercounts generators (``posexplode``: 2.7 MB estimated for
+    8.8 MB of Arrow). The bytes of ``df.inputFiles()`` see the files
+    but not joins. ``inputFiles()`` lists before physical partition
+    pruning, so a partitioned scan (a saved IVF index) counts every
+    partition's files, not only the ones it reads. Only local files are
+    sized: an input on another filesystem keeps the Spark route.
+    ``toArrow()`` runs the plan in the JVM: no Python worker starts."""
+    import pyarrow.fs as pafs
+
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if int(est) > _DRIVER_MAX_BYTES:
+        return None
+    total = 0
+    for uri in df.inputFiles():
+        if not uri.startswith("file:"):
+            return None
+        fs, path = pafs.FileSystem.from_uri(uri)
+        total += fs.get_file_info(path).size or 0
+        if total > _DRIVER_MAX_BYTES:
+            return None
+    return df.toArrow()
+
+
+def _cut_schema(
+    df: DataFrame, drop: Sequence[str], sim_col: str, query_id_col: str
+) -> T.StructType:
+    """The schema of a batch cut: ``df``'s columns but ``drop``, then
+    ``query_id_col`` (long) and ``sim_col`` (double), parsed from DDL,
+    so every field is nullable on both routes."""
+    fields = [(n, t) for n, t in df.dtypes if n not in drop]
+    fields += [(query_id_col, "long"), (sim_col, "double")]
+    return T._parse_datatype_string(", ".join(f"{n} {t}" for n, t in fields))
+
+
+def _cut_batch(
+    rb, qids, k, scorer, keep, tie_cols, cell_col, cell_queries
+) -> list:
+    """The ``keep`` columns, query ids and similarities of each query's
+    best ``k`` rows of the Arrow batch or table ``rb``
+    (:func:`_score_batch` with ``scorer(rb)``)."""
+    cells = None
+    if cell_queries is not None:
+        cells = np.asarray(rb.column(cell_col)).astype(np.int64)
+    rows, qidx, sims = _score_batch(
+        scorer(rb), rb.num_rows, len(qids), k,
+        lambda: _tie_rank(rb, tie_cols), cells, cell_queries,
+    )
+    take = pa.array(rows)
+    return [rb.column(c).take(take) for c in keep] + [pa.array(qids[qidx]), pa.array(sims)]
+
+
+def _batch_topk(
+    df: DataFrame,
+    qids: np.ndarray,
+    k: int,
+    scorer: Callable,
+    drop: Sequence[str],
+    sim_col: str,
+    query_id_col: str,
+    tie_cols: Sequence[str] = (),
+    cell_queries: dict[int, np.ndarray] | None = None,
+) -> DataFrame:
+    """Each query's exact top-k of ``df`` with its 1-based rank ``rk``
+    (int), the shared tail of ``knn_join(method='arrow')`` and
+    ``IVFIndex.search_batch``; the arguments are :func:`_arrow_topk`'s.
+
+    When :func:`_driver_corpus` collects ``df``, the whole table is cut
+    on the driver by :func:`_score_batch`, its ≤ B·k rows sorted by
+    query, similarity desc and ``tie_cols`` (nulls first), and returned
+    as a local relation: no Python worker, no window. Otherwise
+    :func:`_arrow_topk` cuts each Arrow batch on the workers and the
+    ``row_number`` window (:func:`topk_per_group`) applies the global
+    cut. Both give the same rows, ranks and schema."""
+    table = _driver_corpus(df)
+    if table is None:
+        cut = _arrow_topk(
+            df, qids, k, scorer, drop, sim_col, query_id_col,
+            tie_cols=tie_cols, cell_queries=cell_queries,
+        )
+        return topk_per_group(cut, [query_id_col], sim_col, k, tie_cols=tie_cols)
+    schema = _cut_schema(df, drop, sim_col, query_id_col)
+    cut = pa.Table.from_arrays(
+        _cut_batch(
+            table.combine_chunks(), qids, k, scorer, schema.names[:-2],
+            tie_cols, "ivf_cell", cell_queries,
+        ),
+        names=schema.names,
+    )
+    order = pc.sort_indices(
+        cut,
+        sort_keys=[
+            (query_id_col, "ascending"),
+            (sim_col, "descending"),
+            *((c, "ascending") for c in tie_cols),
+        ],
+        null_placement="at_start",
+    )
+    cut = cut.take(order)
+    q = cut[query_id_col].to_numpy()
+    rk = np.arange(len(q)) - np.searchsorted(q, q) + 1
+    cut = cut.append_column("rk", pa.array(rk, pa.int32()))
+    # row_number() is non-nullable, so the window route's rk is too
+    schema = schema.add("rk", T.IntegerType(), nullable=False)
+    return df.sparkSession.createDataFrame(cut, schema=schema)
+
+
 def _arrow_topk(
     df: DataFrame,
     qids: np.ndarray,
@@ -108,31 +240,18 @@ def _arrow_topk(
     ``qids``) of the queries that probed it: a row is scored only
     against its cell's queries. The caller applies the global cut.
     """
-    import pyarrow as pa
-
-    fields = [(n, t) for n, t in df.dtypes if n not in drop]
-    keep = [n for n, _ in fields]
-    added = [(query_id_col, "long"), (sim_col, "double")]
-    out_schema = ", ".join(f"{n} {t}" for n, t in fields + added)
-    names = [*keep, *(n for n, _ in added)]
+    schema = _cut_schema(df, drop, sim_col, query_id_col)
+    names = schema.names
 
     def _score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            if not rb.num_rows:
-                continue
-            cells = None
-            if cell_queries is not None:
-                cells = np.asarray(rb.column(cell_col)).astype(np.int64)
-            rows, qidx, sims = _score_batch(
-                scorer(rb), rb.num_rows, len(qids), k,
-                lambda: _tie_rank(rb, tie_cols), cells, cell_queries,
-            )
-            take = pa.array(rows)
-            arrays = [rb.column(c).take(take) for c in keep]
-            arrays += [pa.array(qids[qidx]), pa.array(sims)]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            if rb.num_rows:
+                arrays = _cut_batch(
+                    rb, qids, k, scorer, names[:-2], tie_cols, cell_col, cell_queries
+                )
+                yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return df.mapInArrow(_score, schema=out_schema)
+    return df.mapInArrow(_score, schema=schema)
 
 
 # rows per scoring block: the kernel's temporaries are O(_BLOCK_ROWS × B)
@@ -230,8 +349,6 @@ def _d2_merge(rows, qs, sims, k, rank):
 def _tie_rank(rb, ties: Sequence[str]) -> np.ndarray:
     """Each row's place in the Arrow batch ordered by the tie columns
     (ascending, nulls first — Spark's ORDER BY default)."""
-    import pyarrow.compute as pc
-
     if not ties:
         return np.arange(rb.num_rows)
     order = pc.sort_indices(
@@ -301,24 +418,30 @@ def knn_join(
     construction — SURVEY §7.3-2); the corpus is scanned once, never
     shuffled for the join itself; the per-query cut is a row_number
     window (Spark 4 plans a Partial WindowGroupLimit, so tasks ship
-    ≤ k rows per query). ``method='arrow'``: :func:`_arrow_topk` with
-    the GEMM scorer, one group (every row of each Arrow batch against
-    the whole query matrix, in row blocks, + a per-query local cut in
-    the D-2 order), then the same window — the amortized fast path for
-    many queries. Its D-2 order (similarity desc, then ``tie_cols``)
-    between exact duplicate vectors is not guaranteed: BLAS can round
-    duplicates 1 ulp apart, and the larger one then ranks first.
+    ≤ k rows per query).
+
+    ``method='arrow'``, the amortized fast path for many queries,
+    scores with the GEMM scorer in :func:`_batch_topk`. A corpus within
+    the driver bound (:func:`_driver_corpus`) is collected by the JVM
+    and cut on the driver, and the result is a local relation: no
+    Python worker, no window. A larger one is cut per Arrow batch on
+    the workers (:func:`_arrow_topk`, every row against the whole query
+    matrix in row blocks) and the same window applies the global cut.
+    Either route returns the corpus columns but the vector, then
+    ``query_id_col``, ``sim_col`` and ``rk``. Its D-2 order (similarity
+    desc, then ``tie_cols``) between exact duplicate vectors is not
+    guaranteed: BLAS can round duplicates 1 ulp apart, and the larger
+    one then ranks first.
     """
     if method == "arrow":
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
-        cut = _arrow_topk(
+        return _batch_topk(
             corpus_df, qids, k,
             lambda rb: _gemm_scorer(
                 arrow_list_to_matrix(rb.column(corpus_vec_col)), qmat
             ),
             [corpus_vec_col], sim_col, query_id_col, tie_cols=tie_cols,
         )
-        return topk_per_group(cut, [query_id_col], sim_col, k, tie_cols=tie_cols)
     # reference semantics: the query side is L2-normalized, the stored
     # vector used raw (SURVEY §1.5-1); normalizing the small broadcast
     # side is O(B·d)

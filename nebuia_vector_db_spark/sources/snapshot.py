@@ -159,9 +159,10 @@ class SnapshotTable:
     def current_version(self) -> int:
         """O(tail) version resolution: start at the ``_last_checkpoint``
         pointer and probe forward until the next version is absent.
-        Falls back to a listing only when the table has never been
-        checkpointed (short logs, where listing is cheap anyway) or
-        the pointer is missing or names a vacuumed version."""
+        :meth:`create` points it at v1, so a table that was never
+        checkpointed probes at most ``_CHECKPOINT_INTERVAL`` names.
+        Falls back to a listing only when the pointer is missing or
+        names a vacuumed version."""
         ptr = self._pointer_hint()
         if ptr is not None and self.backend.exists(_vname(ptr)):
             v = ptr
@@ -429,7 +430,9 @@ class SnapshotTable:
     ) -> "SnapshotTable":
         """Commit v1 with ``df``'s schema and rows (a DataFrame or a
         ``pyarrow.Table``, see :meth:`_write_files`; an empty table
-        commits a table with no files). Raises ``FileExistsError`` when
+        commits a table with no files) and point ``_last_checkpoint``
+        at it: v1 holds the full manifest, so head resolution starts
+        there and never lists the log. Raises ``FileExistsError`` when
         the log already has a version."""
         tbl = cls(spark, path, backend=backend)
         if tbl.versions():
@@ -443,6 +446,7 @@ class SnapshotTable:
             },
             expected_parent=None,
         )
+        tbl._set_pointer(1)
         return tbl
 
     def meta(self, key: str, version: int | None = None):
@@ -736,6 +740,7 @@ class SnapshotTable:
         matching: Callable[[DataFrame], DataFrame],
         surviving: Callable[[DataFrame], DataFrame],
         where: list[tuple[str, str, object]] | None = None,
+        expected_parent: int | None = None,
     ) -> int:
         """Copy-on-write delete, Delta-style. Each file is decided from
         its manifest entry when it can be, and scanned only when it
@@ -753,10 +758,17 @@ class SnapshotTable:
         ``where`` is the simple-predicate form of the condition (see
         :meth:`read`); without it every non-empty file goes to step 3.
         Unaffected files move by reference — at 100 TB a delete that
-        touches one day's partition rewrites that day, not the table —
-        and a delete that hits no file writes no data file. Old
-        snapshots remain readable (time travel) until vacuum."""
-        parent = self.current_version()
+        touches one day's partition rewrites that day, not the table.
+        A delete that drops and rewrites no file publishes nothing and
+        returns its parent version: ``expected_parent`` when given (as
+        :meth:`append` takes it), else the head it read. A caller that
+        pins the parent therefore learns whether its own call published
+        (the returned version differs). Old snapshots remain readable
+        (time travel) until vacuum."""
+        parent = (
+            self.current_version() if expected_parent is None
+            else expected_parent
+        )
         snap = self._snapshot(parent)
         schema = self._schema(snap)
         dropped, undecided = [], []
@@ -770,6 +782,8 @@ class SnapshotTable:
         hit = []
         if undecided:
             _, hit = self._split_hit_files(schema, undecided, matching)
+        if not dropped and not hit:
+            return parent
         gone = {f["path"] for f in dropped + hit}
         kept = [f for f in snap["files"] if f["path"] not in gone]
         new_files = list(kept)
@@ -790,14 +804,17 @@ class SnapshotTable:
         )
 
     def delete_where(
-        self, condition: Column | str | list[tuple[str, str, object]]
+        self,
+        condition: Column | str | list[tuple[str, str, object]],
+        expected_parent: int | None = None,
     ) -> int:
         """Copy-on-write delete of the rows matching ``condition``
         (:meth:`_cow_delete`): a Column, a SQL string, or a list of
         simple predicates ``(col, op, literal)`` as :meth:`read` takes
         them, ANDed. Only the list form lets the stats decide whole
         files. As in SQL ``DELETE``, a row whose condition is NULL is
-        not deleted."""
+        not deleted. A delete that matches nothing commits nothing and
+        returns its parent version (``expected_parent``, or the head)."""
         where = condition if isinstance(condition, list) else None
         if isinstance(condition, str):
             condition = F.expr(condition)
@@ -816,7 +833,20 @@ class SnapshotTable:
             lambda df: df.where(cond()),
             lambda df: df.where(~F.coalesce(cond(), F.lit(False))),
             where,
+            expected_parent,
         )
+
+    def delete_where_any(
+        self, condition: Column | str | list[tuple[str, str, object]]
+    ) -> bool:
+        """:meth:`delete_where` on the head, pinned as its parent:
+        ``True`` iff THIS call published a version (some row matched).
+        Other writers' commits cannot flip the flag, an earlier delete
+        of the same rows included, because a no-op returns the pinned
+        parent and a commit over a newer head raises
+        :class:`CommitConflictError` (retry with :meth:`with_retry`)."""
+        parent = self.current_version()
+        return self.delete_where(condition, expected_parent=parent) != parent
 
     def delete_matching(self, keys: DataFrame) -> int:
         """Copy-on-write delete of every row whose values on
@@ -919,8 +949,9 @@ class SnapshotTable:
 
     def with_retry(self, op: str, *args, retries: int = 5, **kwargs):
         """Optimistic-concurrency loop: run a mutating table op
-        (``"append"``, ``"delete_where"``, ``"upsert"``, ``"compact"``,
-        ``"optimize_zorder"``) and, on :class:`CommitConflictError`
+        (``"append"``, ``"delete_where"``, ``"delete_where_any"``,
+        ``"upsert"``, ``"compact"``, ``"optimize_zorder"``) and, on
+        :class:`CommitConflictError`
         (another writer landed the version first), re-read the new
         snapshot and reapply — the standard lakehouse retry contract.
         Safe because every op derives its input from the CURRENT

@@ -40,3 +40,27 @@ def tiny_arrow_batches(spark):
         yield
     finally:
         spark.conf.set(key, old)
+
+
+@pytest.fixture
+def on_route(request, monkeypatch):
+    """Pin the route of the batch kNN paths (``knn_join(method="arrow")``,
+    ``IVFIndex.search_batch``, ``assign_to_cells``) for one test and
+    return ``check(df)``, which asserts that ``df`` took it and returns
+    ``df``. The route is ``"driver"`` (a corpus within the driver bound
+    is cut on the driver into a local relation) unless the test's class
+    sets ``route = "spark"``: then the shared driver bound,
+    ``topk._DRIVER_MAX_BYTES``, is 0, and every corpus goes through
+    ``mapInArrow`` on Python workers."""
+    from nebuia_vector_db_spark.operators import topk
+
+    route = getattr(request.cls, "route", "driver")
+    if route == "spark":
+        monkeypatch.setattr(topk, "_DRIVER_MAX_BYTES", 0)
+
+    def check(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInArrow" in plan) == (route == "spark"), plan
+        return df
+
+    return check

@@ -1,7 +1,12 @@
 """IVF index (operators/ann.py): exactness at full probe, recall and
-scan-fraction at partial probe."""
+scan-fraction at partial probe.
+
+The tests that take ``on_route`` run on the driver route and again, in
+``TestSparkRoute``, on the Spark (``mapInArrow``) one."""
 
 from __future__ import annotations
+
+import inspect
 
 import numpy as np
 import pytest
@@ -125,7 +130,7 @@ def test_saved_cells_hold_one_file_per_cell(spark, sf_oracle, tmp_path):
     assert set(added.values()) <= {0, 1} and sum(added.values()) > 0, added
 
 
-def test_assign_to_cells_matches_mllib_transform(spark, sf_oracle):
+def test_assign_to_cells_matches_mllib_transform(spark, sf_oracle, on_route):
     """Our broadcast-GEMM assignment (the append path) must agree with
     MLlib's model.transform (the build path) — otherwise append and
     rebuild would route the same vector differently."""
@@ -135,7 +140,7 @@ def test_assign_to_cells_matches_mllib_transform(spark, sf_oracle):
     index = build_ivf_index(emb, n_cells=8)
     ours = {
         r["vec_id"]: r["ivf_cell"]
-        for r in assign_to_cells(emb, index.centroids)
+        for r in on_route(assign_to_cells(emb, index.centroids))
         .select("vec_id", "ivf_cell")
         .collect()
     }
@@ -202,7 +207,7 @@ def test_append_equals_full_rebuild(spark, sf_oracle, tmp_path_factory):
     emb.unpersist()
 
 
-def test_search_batch_full_probe_equals_knn_join(spark, sf_oracle):
+def test_search_batch_full_probe_equals_knn_join(spark, sf_oracle, on_route):
     """nprobe == n_cells: batch ANN must be EXACTLY the exact batch
     kNN (same ids, same sims, same ranks) — the oracle contract the
     vs_ivf_batch registry row rides on."""
@@ -223,14 +228,14 @@ def test_search_batch_full_probe_equals_knn_join(spark, sf_oracle):
     }
     got = {
         (r["query_id"], r["vec_id"], round(r["similarity"], 9), r["rk"])
-        for r in index.search_batch(
+        for r in on_route(index.search_batch(
             queries, 5, nprobe=index.n_cells, tie_cols=["vec_id"]
-        ).collect()
+        )).collect()
     }
     assert got == want
 
 
-def test_search_batch_partial_probe_respects_mask_and_k(spark, sf_oracle):
+def test_search_batch_partial_probe_respects_mask_and_k(spark, sf_oracle, on_route):
     """Partial probe: every returned candidate's cell must have been
     probed FOR THAT QUERY, each query gets <= k rows, and similarities
     are the true dots (no approximation in the kernel itself)."""
@@ -247,7 +252,7 @@ def test_search_batch_partial_probe_respects_mask_and_k(spark, sf_oracle):
         [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in qrows],
         "query_id long, query_vec array<double>",
     )
-    out = index.search_batch(queries, 4, nprobe=2, tie_cols=["vec_id"]).collect()
+    out = on_route(index.search_batch(queries, 4, nprobe=2, tie_cols=["vec_id"])).collect()
     cell_of = {
         r["vec_id"]: r["ivf_cell"]
         for r in index.assigned.select("vec_id", "ivf_cell").collect()
@@ -271,7 +276,7 @@ def test_search_batch_partial_probe_respects_mask_and_k(spark, sf_oracle):
 
 
 @pytest.mark.parametrize("k", [0, 2, 5])
-def test_search_batch_tiny_batches_equal_numpy(spark, sf_oracle, tiny_arrow_batches, k):
+def test_search_batch_tiny_batches_equal_numpy(spark, sf_oracle, tiny_arrow_batches, on_route, k):
     """nprobe = 1 over Arrow batches of 3 rows: batches are smaller
     than k (k = 5), cut (k = 2) or empty of any row a given query
     probed, and k = 0 returns nothing. Each query's answer must be the
@@ -287,9 +292,11 @@ def test_search_batch_tiny_batches_equal_numpy(spark, sf_oracle, tiny_arrow_batc
     queries = spark.createDataFrame(
         [(q, qvec_of[q]) for q in qids], "query_id long, query_vec array<double>"
     )
+    out = index.search_batch(queries, k, nprobe=1, tie_cols=["vec_id"])
+    if k:  # k = 0 plans an empty relation
+        on_route(out)
     got = sorted(
-        (r["query_id"], r["rk"], r["vec_id"], r["similarity"])
-        for r in index.search_batch(queries, k, nprobe=1, tie_cols=["vec_id"]).collect()
+        (r["query_id"], r["rk"], r["vec_id"], r["similarity"]) for r in out.collect()
     )
     want = []
     for q in qids:
@@ -373,13 +380,16 @@ def test_deterministic_ivf_build_is_bit_stable(spark, sf_oracle):
 
 
 def test_saved_index_search_batch_prunes_partitions(
-    spark, sf_oracle, tmp_path_factory
+    spark, sf_oracle, tmp_path_factory, monkeypatch, on_route
 ):
     """Persisted index + BATCH search: the union-of-probed-cells
     filter must reach the scan as a PartitionFilter — at scale the
-    batch pays for |union| cells' files, not the corpus."""
+    batch pays for |union| cells' files, not the corpus. The driver
+    route collects that pruned scan; the Spark route plans it under
+    its MapInArrow."""
     import re
 
+    from nebuia_vector_db_spark.operators import topk
     from nebuia_vector_db_spark.operators.ann import (
         build_ivf_index,
         load_ivf_index,
@@ -399,8 +409,14 @@ def test_saved_index_search_batch_prunes_partitions(
             F.col("embedding").cast("array<double>").alias("query_vec"),
         )
     )
-    got = loaded.search_batch(queries, 5, nprobe=2, tie_cols=["vec_id"])
-    plan = explain_str(got)
+    scans = []
+    driver_corpus = topk._driver_corpus
+    monkeypatch.setattr(
+        topk, "_driver_corpus", lambda df: scans.append(df) or driver_corpus(df)
+    )
+    got = on_route(loaded.search_batch(queries, 5, nprobe=2, tie_cols=["vec_id"]))
+    monkeypatch.setattr(topk, "_driver_corpus", driver_corpus)
+    plan = explain_str(scans[0])
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "ivf_cell" in m.group(1), plan
     # and the results agree with the in-memory index's batch search
@@ -459,3 +475,16 @@ def test_search_and_search_batch_probe_the_same_tied_cells(spark):
         r["vec_id"] for r in index.search(q, 4, nprobe=3, tie_cols=["vec_id"]).collect()
     }
     assert batch == single == probed
+
+
+class TestSparkRoute:
+    """The ``on_route`` tests again, on the Spark route."""
+
+    route = "spark"
+
+
+for _test in [
+    f for name, f in list(globals().items())
+    if name.startswith("test_") and "on_route" in inspect.signature(f).parameters
+]:
+    setattr(TestSparkRoute, _test.__name__, staticmethod(_test))

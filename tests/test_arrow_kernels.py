@@ -1,15 +1,22 @@
 """Arrow fast paths must agree with the oracle-exact SQL paths:
 knn_join(method='arrow'), IVFIndex.search_batch, exact_cosine_pairs —
-same rows, similarities within float tolerance."""
+same rows, similarities within float tolerance.
+
+The batch kNN tests that take ``on_route`` run on the driver route
+and again, in ``TestSparkRoute``, on the Spark (``mapInArrow``) one."""
 
 from __future__ import annotations
 
+import inspect
+
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark.functions.vector import l2_norm, dot
-from nebuia_vector_db_spark.operators.ann import IVFIndex
+from nebuia_vector_db_spark.operators import topk
+from nebuia_vector_db_spark.operators.ann import IVFIndex, assign_to_cells
 from nebuia_vector_db_spark.operators.dedup import exact_cosine_pairs
 from nebuia_vector_db_spark.operators.topk import (
     _BLOCK_ROWS,
@@ -17,6 +24,7 @@ from nebuia_vector_db_spark.operators.topk import (
     _score_batch,
     knn_join,
 )
+from nebuia_vector_db_spark.plans.inspect import explain_str
 from nebuia_vector_db_spark.sources.registry import load_table
 
 
@@ -24,7 +32,15 @@ def _emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
-def test_arrow_knn_equals_sql(spark, sf_oracle):
+def _duplicates(spark, n, vec):
+    """``n`` copies of ``vec`` with vec_id n..1 (descending), one
+    partition, as an Arrow-built local relation the driver can size."""
+    return spark.createDataFrame(
+        pa.table({"vec_id": pa.array(range(n, 0, -1), pa.int64()), "embedding": [vec] * n})
+    ).coalesce(1)
+
+
+def test_arrow_knn_equals_sql(spark, sf_oracle, on_route):
     emb = _emb(spark, sf_oracle)
     queries = emb.where(F.col("vec_id").isin(0, 1, 7)).select(
         F.col("vec_id").alias("query_id"),
@@ -38,12 +54,12 @@ def test_arrow_knn_equals_sql(spark, sf_oracle):
         )
 
     a = _key(knn_join(queries, emb, k=5, tie_cols=["vec_id"], method="sql"))
-    b = _key(knn_join(queries, emb, k=5, tie_cols=["vec_id"], method="arrow"))
+    b = _key(on_route(knn_join(queries, emb, k=5, tie_cols=["vec_id"], method="arrow")))
     assert a == b
 
 
 @pytest.mark.parametrize("k", [0, 2, 5])
-def test_arrow_kernel_tiny_batches_equal_sql(spark, sf_oracle, tiny_arrow_batches, k):
+def test_arrow_kernel_tiny_batches_equal_sql(spark, sf_oracle, tiny_arrow_batches, on_route, k):
     """Arrow batches of 3 rows, so with k = 5 every batch is smaller
     than k, with k = 2 every batch is cut, and k = 0 returns nothing:
     the batch GEMM kernel must still return the SQL rows in the D-2
@@ -55,9 +71,11 @@ def test_arrow_kernel_tiny_batches_equal_sql(spark, sf_oracle, tiny_arrow_batche
     )
 
     def _knn(method):
+        df = knn_join(queries, emb, k=k, tie_cols=["vec_id"], method=method)
+        if method == "arrow" and k:  # k = 0 plans an empty relation
+            on_route(df)
         return sorted(
-            (r["query_id"], r["rk"], r["vec_id"], r["similarity"])
-            for r in knn_join(queries, emb, k=k, tie_cols=["vec_id"], method=method).collect()
+            (r["query_id"], r["rk"], r["vec_id"], r["similarity"]) for r in df.collect()
         )
 
     want, got = _knn("sql"), _knn("arrow")
@@ -66,7 +84,7 @@ def test_arrow_kernel_tiny_batches_equal_sql(spark, sf_oracle, tiny_arrow_batche
     assert len(want) == 3 * k
 
 
-def test_gemm_cut_breaks_ties_by_tie_cols(spark, tiny_arrow_batches):
+def test_gemm_cut_breaks_ties_by_tie_cols(spark, tiny_arrow_batches, on_route):
     """Identical vectors stored in descending vec_id order, Arrow
     batches of 3 rows, k = 2: every row ties, so each batch's cut must
     keep its two smallest vec_ids (the D-2 tie order), not its first
@@ -74,9 +92,7 @@ def test_gemm_cut_breaks_ties_by_tie_cols(spark, tiny_arrow_batches):
     must return exactly the knn_join(method='sql') rows and ranks."""
 
     vec = [0.6, 0.8, 0.0]
-    corpus = spark.createDataFrame(
-        [(i, vec) for i in range(12, 0, -1)], "vec_id long, embedding array<double>"
-    ).coalesce(1)
+    corpus = _duplicates(spark, 12, vec)
     queries = spark.createDataFrame(
         [(0, vec), (1, [1.0, 0.0, 0.0])], "query_id long, query_vec array<double>"
     )
@@ -88,19 +104,19 @@ def test_gemm_cut_breaks_ties_by_tie_cols(spark, tiny_arrow_batches):
 
     want = _key(knn_join(queries, corpus, k=2, tie_cols=["vec_id"], method="sql"))
     assert [r[:3] for r in want] == [(0, 1, 1), (0, 2, 2), (1, 1, 1), (1, 2, 2)]
-    got = _key(knn_join(queries, corpus, k=2, tie_cols=["vec_id"], method="arrow"))
+    got = _key(on_route(knn_join(queries, corpus, k=2, tie_cols=["vec_id"], method="arrow")))
     assert [r[:3] for r in got] == [r[:3] for r in want]
     assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
 
     index = IVFIndex(
         corpus.withColumn("ivf_cell", F.lit(0)), np.array([vec]), "embedding"
     )
-    got = _key(index.search_batch(queries, 2, nprobe=1, tie_cols=["vec_id"]))
+    got = _key(on_route(index.search_batch(queries, 2, nprobe=1, tie_cols=["vec_id"])))
     assert [r[:3] for r in got] == [r[:3] for r in want]
     assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
 
 
-def test_gemm_cut_breaks_ties_across_row_blocks(spark):
+def test_gemm_cut_breaks_ties_across_row_blocks(spark, on_route):
     """One Arrow batch of more than two row blocks of identical
     vectors, stored in descending vec_id order: every row ties, so the
     block cuts and their merges must keep the smallest vec_ids.
@@ -109,9 +125,7 @@ def test_gemm_cut_breaks_ties_across_row_blocks(spark):
     knn_join(method='sql') rows and ranks."""
     n = 2 * _BLOCK_ROWS + 5
     vec = [0.6, 0.8, 0.0]
-    corpus = spark.createDataFrame(
-        [(i, vec) for i in range(n, 0, -1)], "vec_id long, embedding array<double>"
-    ).coalesce(1)
+    corpus = _duplicates(spark, n, vec)
     queries = spark.createDataFrame(
         [(0, vec), (1, [1.0, 0.0, 0.0])], "query_id long, query_vec array<double>"
     )
@@ -129,8 +143,8 @@ def test_gemm_cut_breaks_ties_across_row_blocks(spark):
         "embedding",
     )
     for got in (
-        _key(knn_join(queries, corpus, k=3, tie_cols=["vec_id"], method="arrow")),
-        _key(index.search_batch(queries, 3, nprobe=2, tie_cols=["vec_id"])),
+        _key(on_route(knn_join(queries, corpus, k=3, tie_cols=["vec_id"], method="arrow"))),
+        _key(on_route(index.search_batch(queries, 3, nprobe=2, tie_cols=["vec_id"]))),
     ):
         assert [r[:3] for r in got] == [r[:3] for r in want]
         assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
@@ -190,3 +204,131 @@ def test_exact_cosine_pairs_equals_join_formula(spark, sf_oracle):
     assert set(gemm) == set(ref)
     for k in ref:
         assert abs(gemm[k] - ref[k]) < 1e-9
+
+
+def _queries(emb, ids):
+    return emb.where(F.col("vec_id").isin(*ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("query_vec"),
+    )
+
+
+def _both_routes(monkeypatch, build):
+    """``build()`` on the driver route, then on the Spark route (the
+    shared driver bound at 0); each result is checked for its route."""
+    drv = build()
+    with monkeypatch.context() as mp:
+        mp.setattr(topk, "_DRIVER_MAX_BYTES", 0)
+        spk = build()
+    assert "MapInArrow" not in explain_str(drv)
+    assert "MapInArrow" in explain_str(spk)
+    return drv, spk
+
+
+def _ranked(df):
+    """(query_id, rk, vec_id, similarity) rows in rank order."""
+    return [
+        tuple(r) for r in df.orderBy("query_id", "rk")
+        .select("query_id", "rk", "vec_id", "similarity").collect()
+    ]
+
+
+def _assert_same_ranking(got, want):
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
+
+
+def test_batch_routes_agree(spark, sf_oracle, monkeypatch):
+    """knn_join(method='arrow'), full- and partial-probe search_batch
+    and assign_to_cells give the same rows in the same order, with
+    similarities within 1e-9 and equal schemas, on the driver route and
+    on the Spark route; and both equal the SQL kernels:
+    knn_join(method='sql') and, per query, IVFIndex.search."""
+    emb = load_table(spark, sf_oracle, "embeddings")
+    queries = _queries(emb, [0, 3, 11, 42])
+    ids = [r[0] for r in queries.collect()]
+    qvecs = [list(r[1]) for r in queries.orderBy("query_id").collect()]
+
+    drv, spk = _both_routes(
+        monkeypatch,
+        lambda: knn_join(queries, emb, k=5, tie_cols=["vec_id"], method="arrow"),
+    )
+    sql = knn_join(queries, emb, k=5, tie_cols=["vec_id"], method="sql")
+    assert drv.schema == spk.schema
+    assert drv.dtypes == [t for t in sql.dtypes if t[0] != "embedding"]
+    want = _ranked(sql)
+    assert len(want) == 5 * len(ids)
+    _assert_same_ranking(_ranked(drv), want)
+    _assert_same_ranking(_ranked(spk), want)
+
+    mat = np.array([r["embedding"] for r in emb.orderBy("vec_id").collect()], np.float64)
+    cents = mat[[1, 50, 99, 150, 201, 260, 333, 480]]
+    a_drv, a_spk = _both_routes(monkeypatch, lambda: assign_to_cells(emb, cents))
+    assert a_drv.schema == a_spk.schema
+    cells = a_drv.orderBy("vec_id").select("vec_id", "ivf_cell").collect()
+    assert cells == a_spk.orderBy("vec_id").select("vec_id", "ivf_cell").collect()
+    dist = ((mat[:, None, :] - cents[None]) ** 2).sum(axis=2)
+    assert [r["ivf_cell"] for r in cells] == np.argmin(dist, axis=1).tolist()
+
+    index = IVFIndex(a_drv, cents, "embedding")
+    for nprobe in (len(cents), 2):
+        drv, spk = _both_routes(
+            monkeypatch,
+            lambda: index.search_batch(queries, 5, nprobe=nprobe, tie_cols=["vec_id"]),
+        )
+        assert drv.schema == spk.schema
+        if nprobe == len(cents):
+            want = _ranked(sql)
+        else:
+            want = [
+                (q, rk, r["vec_id"], r["similarity"])
+                for q, v in zip(sorted(ids), qvecs)
+                for rk, r in enumerate(
+                    index.search(v, 5, nprobe=nprobe, tie_cols=["vec_id"]).collect(), 1
+                )
+            ]
+        _assert_same_ranking(_ranked(drv), want)
+        _assert_same_ranking(_ranked(spk), want)
+
+
+def test_driver_route_plans_no_python(spark, sf_oracle):
+    """Within the driver bound, the batch kNN results are local
+    relations: no MapInArrow in their formatted plans, so collecting
+    them starts no Python worker."""
+    emb = load_table(spark, sf_oracle, "embeddings")
+    queries = _queries(emb, [0, 7])
+    cents = np.eye(64)[:4]
+    assigned = assign_to_cells(emb, cents)
+    index = IVFIndex(assigned, cents, "embedding")
+    for df in (
+        knn_join(queries, emb, k=3, tie_cols=["vec_id"], method="arrow"),
+        index.search_batch(queries, 3, nprobe=2, tie_cols=["vec_id"]),
+        assigned,
+    ):
+        plan = explain_str(df)
+        assert "MapInArrow" not in plan and "LocalTableScan" in plan, plan
+
+
+def test_cross_join_inflated_corpus_keeps_mapinarrow(spark, sf_oracle):
+    """A corpus whose input files are small but whose plan is a cross
+    join is sized by Catalyst's estimate, which exceeds the driver
+    bound, so it is not collected: the kNN keeps the MapInArrow kernel
+    (a JVM collect of such a corpus once overran the driver heap)."""
+    emb = load_table(spark, sf_oracle, "embeddings")
+    inflated = emb.crossJoin(emb.limit(100).select(F.col("vec_id").alias("vec_id2")))
+    assert topk._driver_corpus(inflated) is None
+    out = knn_join(_queries(emb, [0]), inflated, k=3, tie_cols=["vec_id", "vec_id2"], method="arrow")
+    assert "MapInArrow" in explain_str(out)
+
+
+class TestSparkRoute:
+    """The ``on_route`` tests again, on the Spark route."""
+
+    route = "spark"
+
+
+for _test in [
+    f for name, f in list(globals().items())
+    if name.startswith("test_") and "on_route" in inspect.signature(f).parameters
+]:
+    setattr(TestSparkRoute, _test.__name__, staticmethod(_test))

@@ -10,8 +10,8 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from nebuia_vector_db_spark import engine as engine_module
 from nebuia_vector_db_spark.engine import DimensionMismatchError, VectorEngine
+from nebuia_vector_db_spark.operators import topk as topk_module
 
 
 def _mkdocs(n_docs: int, chunks_per_doc: int, dim: int, seed: int, name_prefix="doc"):
@@ -130,6 +130,24 @@ def test_delete_collection(spark, tmp_path_factory):
     assert eng.delete_collection("tmp")["deleted"] is False
 
 
+def test_no_op_delete_publishes_nothing(spark, tmp_path):
+    """A delete that removes nothing commits nothing: the head stays
+    where it was, and a no-op right after a real delete of the same
+    collection reports ``deleted: False`` although the head it returns
+    to is that real delete."""
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
+    eng.store("a", _mkdocs(2, 1, 4, seed=11))
+    eng.store("b", _mkdocs(2, 1, 4, seed=12))
+    head = eng.table.current_version()
+    assert eng.delete_collection("nope")["deleted"] is False
+    assert eng.table.current_version() == head
+    assert eng.delete_collection("a")["deleted"] is True
+    assert eng.table.current_version() == head + 1
+    assert eng.delete_collection("a")["deleted"] is False
+    assert eng.table.versions() == list(range(1, head + 2))
+    assert eng.list_collections() == ["b"]
+
+
 
 @settings(max_examples=6, deadline=None)
 @example(name="a/b")
@@ -185,8 +203,10 @@ def test_list_collections_raises_on_corrupt_log(spark, tmp_path):
 
 
 def test_requests_do_not_list_the_log(spark, tmp_path, monkeypatch):
-    """Once the log is checkpointed, store, search and delete resolve
-    the head from the checkpoint pointer: no request lists the log."""
+    """Store, search and delete resolve the head from the
+    ``_last_checkpoint`` pointer, so no request lists the log: once the
+    log is checkpointed, and on a 2-commit warehouse (the create, then
+    one ``store_dataframe``), where the pointer still names v1."""
     from nebuia_vector_db_spark.sources.commit_backend import (
         LocalFSCommitBackend,
     )
@@ -194,6 +214,10 @@ def test_requests_do_not_list_the_log(spark, tmp_path, monkeypatch):
     eng = VectorEngine(spark, str(tmp_path / "wh"), dim=4)
     for i in range(11):  # past the default checkpoint interval (10)
         eng.store(f"c{i % 3}", _mkdocs(1, 1, 4, seed=50 + i))
+    young = VectorEngine(spark, str(tmp_path / "young"), dim=4)
+    docs = eng.documents(["c0", "c1"])
+    young.store_dataframe(docs)
+    assert young.table.versions() == [1, 2]
     listings = []
     list_log = LocalFSCommitBackend.list
 
@@ -202,10 +226,13 @@ def test_requests_do_not_list_the_log(spark, tmp_path, monkeypatch):
         return list_log(self)
 
     monkeypatch.setattr(LocalFSCommitBackend, "list", counted)
-    assert eng.search("c1", [1.0, 0.0, 0.0, 0.0], 3).count() == 3
-    eng.store("c1", _mkdocs(1, 1, 4, seed=70))
-    assert eng.delete_collection("c2")["deleted"] is True
-    assert eng.multi_search(["c0", "c1"], [1.0, 0.0, 0.0, 0.0], 10).count() == 9
+    for e in (eng, young):
+        assert e.search("c1", [1.0, 0.0, 0.0, 0.0], 3).count() == 3
+        e.store("c1", _mkdocs(1, 1, 4, seed=70))
+        assert e.delete_collection("c2")["deleted"] is (e is eng)
+        assert e.multi_search(["c0", "c1"], [1.0, 0.0, 0.0, 0.0], 10).count() == 9
+        assert e.delete_collection("c1")["deleted"] is True
+    assert young.table.current_version() == 4
     assert listings == []
 
 
@@ -350,10 +377,10 @@ def test_snapshot_delete_flag_ignores_concurrent_commits(
     }
     pending = [rivals[rival]]
 
-    def rival_lands_first(self, condition):
+    def rival_lands_first(self, condition, **kwargs):
         if pending:
             pending.pop()()
-        return delete_where(self, condition)
+        return delete_where(self, condition, **kwargs)
 
     monkeypatch.setattr(SnapshotTable, "delete_where", rival_lands_first)
     assert eng.delete_collection(target)["deleted"] is deleted
@@ -630,7 +657,7 @@ def _both_routes(monkeypatch, run):
     (bound 0), with the route each took."""
     out = {}
     for route, bound in (("driver", 1 << 62), ("spark", 0)):
-        monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", bound)
+        monkeypatch.setattr(topk_module, "_DRIVER_MAX_BYTES", bound)
         df = run()
         assert _route(df) == route
         out[route] = df
@@ -699,7 +726,7 @@ def test_unscorable_chunk_takes_the_spark_route(spark, tmp_path, monkeypatch, ba
     q = [1.0, 0.5, 0.0, 0.0]
     chosen = eng.search("c", q, 4)
     assert _route(chosen) == "spark"
-    monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", 0)
+    monkeypatch.setattr(topk_module, "_DRIVER_MAX_BYTES", 0)
     assert answer(chosen) == answer(eng.search("c", q, 4))
     if bad == "nan":
         assert answer(chosen)[0][:2] == ("odd", 1)  # NaN sorts first
@@ -763,10 +790,10 @@ def test_driver_route_reads_on_one_thread_under_the_bound(spark, tmp_path, monke
     monkeypatch.setattr(pq.ParquetFile, "read", spy)
     monkeypatch.setitem(sys.modules, "pyarrow.dataset", None)  # import fails
     q = [0.0, 1.0, 0.0, 0.0]
-    monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", size)
+    monkeypatch.setattr(topk_module, "_DRIVER_MAX_BYTES", size)
     at_bound = eng.search("a", q, 4)
     assert _route(at_bound) == "driver" and reads == [False, False]
-    monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", size - 1)
+    monkeypatch.setattr(topk_module, "_DRIVER_MAX_BYTES", size - 1)
     over = eng.search("a", q, 4)
     assert _route(over) == "spark" and len(reads) == 2
     assert at_bound.collect() == over.collect()
@@ -859,7 +886,7 @@ class TestSparkRoute:
     @pytest.fixture(autouse=True, scope="class")
     def spark_route(self):
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", 0)
+            mp.setattr(topk_module, "_DRIVER_MAX_BYTES", 0)
             yield
 
     @pytest.fixture(scope="class")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from nebuia_vector_db_spark import queries as Q
 from nebuia_vector_db_spark.plans.inspect import (
+    explain_str,
     has_broadcast_join,
     plan_asserts,
     scan_read_schema,
@@ -97,7 +98,7 @@ def test_engine_search_prunes_collection_partitions(
 
     import pyarrow.parquet as pq
 
-    from nebuia_vector_db_spark import engine as engine_module
+    from nebuia_vector_db_spark.operators import topk as topk_module
     from nebuia_vector_db_spark.engine import VectorEngine
 
     wh = str(tmp_path_factory.mktemp("wh_prune"))
@@ -146,7 +147,7 @@ def test_engine_search_prunes_collection_partitions(
     assert [pq.read_table(p).column("collection").to_pylist() for p in opened] == [
         ["b"], ["a"], ["b"]
     ]
-    monkeypatch.setattr(engine_module, "_DRIVER_SEARCH_MAX_BYTES", 0)
+    monkeypatch.setattr(topk_module, "_DRIVER_MAX_BYTES", 0)
     assert data_files(eng.search("b", q, 5)) == [["b"]]
     assert data_files(eng.multi_search(["a", "b"], q, 5)) == [["a"], ["b"]]
 
@@ -393,18 +394,24 @@ def test_epoch_shard_is_map_side_only(spark, sf_oracle):
     assert shuffle_count(epoch_shard(docs, epoch=1)) == 0
 
 
-def test_ivf_cell_assignment_is_map_side_only(spark, sf_oracle):
+def test_ivf_cell_assignment_is_map_side_only(spark, sf_oracle, monkeypatch):
     """assign_to_cells (the incremental-append router) must be a pure
     map: broadcast centroid matrix + per-batch GEMM argmin, zero
-    exchanges — appending a day's vectors never reshuffles anything."""
+    exchanges — appending a day's vectors never reshuffles anything.
+    The Spark route is checked (driver bound 0); the driver route's
+    result is a local relation."""
     import numpy as np
 
+    from nebuia_vector_db_spark.operators import topk
     from nebuia_vector_db_spark.operators.ann import assign_to_cells
 
     emb = load_table(spark, sf_oracle, "embeddings")
     cents = np.zeros((8, 64), dtype=np.float64)
     cents[np.arange(8), np.arange(8)] = 1.0
-    assert shuffle_count(assign_to_cells(emb, cents)) == 0
+    monkeypatch.setattr(topk, "_DRIVER_MAX_BYTES", 0)
+    assigned = assign_to_cells(emb, cents)
+    assert "MapInArrow" in explain_str(assigned)
+    assert shuffle_count(assigned) == 0
 
 
 def test_domain_quota_partial_group_limit_before_exchange(spark, sf_oracle):

@@ -82,13 +82,15 @@ def test_cow_delete_rewrites_only_hit_files(spark, tmp_path):
 
 
 def _assert_no_hit_delete(tbl, delete):
-    """A delete that matches no row commits the parent's manifest
-    unchanged and writes no data file."""
+    """A delete that matches no row publishes nothing: it returns the
+    head it read, the head and its manifest stay, and no data file is
+    written."""
+    head = tbl.current_version()
     parent = [f["path"] for f in tbl._snapshot()["files"]]
     data_dirs = set(os.listdir(tbl._data_dir))
-    snap = tbl._snapshot(delete())
-    assert snap["rewrote_files"] == 0
-    assert [f["path"] for f in snap["files"]] == parent
+    assert delete() == head
+    assert tbl.current_version() == head
+    assert [f["path"] for f in tbl._snapshot()["files"]] == parent
     assert set(os.listdir(tbl._data_dir)) == data_dirs
 
 

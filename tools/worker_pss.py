@@ -11,14 +11,18 @@ driver, the JVM and each Python worker process, the proportional set
 size (PSS, shared pages split among the processes that map them) and
 the peak resident size (VmHWM), and the Python total.
 
+Then it prints the route each path took: ``driver`` when its corpus
+fits the driver bound (``topk._driver_corpus``: the JVM collects it and
+the driver scores it, so no Python worker runs the kernel) or ``spark``
+(a ``mapInArrow`` kernel on Python workers). The Python workers that
+remain on the driver route only unpickle the query rows of the
+Python-list query DataFrame.
+
 Last, it prints the GEMM work per batch of each path, in GFLOP
 (2 · rows · d · queries, summed over the products the kernel runs):
 the exact path multiplies every corpus row by every query; the IVF
-path either multiplies every row of the probed-cell union by every
-query and masks the pairs no query probed (the masked kernel), or
-multiplies each cell's rows only by the queries that probed that cell
-(the cell-grouped kernel, ``topk._score_batch``). The line marked
-``*`` is the kernel this checkout runs.
+path multiplies each cell's rows only by the queries that probed that
+cell (``topk._score_batch``).
 
 Spark runs as perfbench runs it (``perfbench/run.py``'s configuration);
 scratch files go under ``perfbench/.work/`` and are removed at exit.
@@ -88,8 +92,26 @@ def print_memory() -> None:
     print(f"{'python total':<24}{py_pss:>10.1f}")
 
 
+def print_routes(wl) -> None:
+    import workloads
+
+    from nebuia_vector_db_spark.operators.topk import knn_join
+
+    qs = wl.queries(0, 0)
+    qdf = wl.ctx.spark.createDataFrame(
+        [(i, q.tolist()) for i, q in enumerate(qs)], "query_id long, query_vec array<double>"
+    )
+    ties = ["doc_id", "position"]
+    print("route per path")
+    for name, df in (
+        ("knn_join", knn_join(qdf, wl.corpus_df, k=workloads.K, tie_cols=ties, method="arrow")),
+        ("ann_search", wl.index.search_batch(qdf, workloads.K, wl.size["nprobe"], tie_cols=ties)),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        print(f"  {name:<28}{'spark' if 'MapInArrow' in plan else 'driver'}")
+
+
 def print_gemm(wl, batches: int) -> None:
-    from nebuia_vector_db_spark.operators import topk
     from nebuia_vector_db_spark.operators.ann import _select_cells
 
     rows_of = {
@@ -97,22 +119,16 @@ def print_gemm(wl, batches: int) -> None:
         for r in wl.index.assigned.groupBy("ivf_cell").count().collect()
     }
     d = wl.index.centroids.shape[1]
-    exact, masked, grouped = [], [], []
+    exact, grouped = [], []
     for b in range(batches):
         qs = wl.queries(0, b)
         qmat = qs / np.linalg.norm(qs, axis=1, keepdims=True)
         sel = _select_cells(wl.index.centroids @ qmat.T, wl.size["nprobe"])
         exact.append(2.0 * wl.corpus.n_chunks * d * len(qs))
-        masked.append(2.0 * d * len(qs) * sum(rows_of.get(c, 0) for c in np.unique(sel)))
         grouped.append(2.0 * d * sum(rows_of.get(int(c), 0) for c in sel.ravel()))
-    runs_grouped = hasattr(topk, "_score_batch")
     print("GEMM GFLOP per batch (mean)")
-    print(f"  exact knn_join              {np.mean(exact) / 1e9:.4f} *")
-    for name, xs, mine in (
-        ("IVF search_batch, masked ", masked, not runs_grouped),
-        ("IVF search_batch, grouped", grouped, runs_grouped),
-    ):
-        print(f"  {name}   {np.mean(xs) / 1e9:.4f}{' *' if mine else ''}")
+    print(f"  exact knn_join              {np.mean(exact) / 1e9:.4f}")
+    print(f"  IVF search_batch            {np.mean(grouped) / 1e9:.4f}")
 
 
 def main(argv=None) -> int:
@@ -146,6 +162,7 @@ def main(argv=None) -> int:
             wl.verify(loop)
             print(f"batches {args.batches}, failed checks {loop.failed}, "
                   f"recall@10 {workloads.mean(wl.recalls):.5f}")
+            print_routes(wl)
             print_gemm(wl, args.batches)
             wl.teardown()
         finally:
