@@ -36,10 +36,11 @@ delete.
 Search has two routes with the same answer. Manifest-stats pruning
 keeps a query reading only its collections' files. When those files
 hold at most ``topk._DRIVER_MAX_BYTES`` and there is no ``where``,
-the driver reads them with pyarrow one at a time, scores them with the
-Spark route's left-to-right dot and sorts the best rows in the D-2
-order, and the result is a local relation: the request runs no Spark
-job. Otherwise (and for chunks Spark would score NULL or NaN) the
+the driver reads them with pyarrow one at a time, cuts each with the
+batch kNN's exact dense scorer (``topk._gemm_scorer``, the Spark
+route's dot bit for bit) and sorts the best rows in the D-2 order,
+and the result is a local relation: the request runs no Spark job.
+Otherwise (and for chunks Spark would score NULL or NaN) the
 search is a Spark query whose TakeOrderedAndProject keeps top-k
 shuffle-free, which is the route at scale; for massive collections add
 a bucketed/Z-ordered layout or the IVF index
@@ -64,6 +65,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from nebuia_vector_db_spark.functions.vector import (
     arrow_list_to_matrix,
+    limit_blas_threads,
     normalize_query,
 )
 from nebuia_vector_db_spark.operators import topk
@@ -455,16 +457,17 @@ def _driver_top_k(docs: pa.Table, q: np.ndarray, k: int) -> pa.Table | None:
     mat = arrow_list_to_matrix(emb) if len(emb) else np.empty((0, d))
     if not np.isfinite(mat).all():
         return None
-    sims = _dot_left_to_right(mat, q)
-    n = len(sims)
-    cand = np.arange(n)
-    if k < n:  # only rows at or above the k-th similarity can make the cut
-        cand = np.flatnonzero(sims >= np.partition(sims, n - k)[n - k]) if k else cand[:0]
+    tie_rank = lambda: topk._tie_rank(  # noqa: E731
+        pa.table({"doc_id": docs["doc_id"].take(parent), "position": position}),
+        ["doc_id", "position"],
+    )
+    with limit_blas_threads(1):  # BLAS threads only spin on a one-query product
+        cand, _, sims = topk._score_batch(topk._gemm_scorer(mat, q[None]), len(mat), 1, k, tie_rank)
     of_doc, kept = parent[cand], chunk.take(cand)
-    rows = pa.table(
+    return pa.table(
         [
             pc.struct_field(docs["metadata"], "name").take(of_doc),
-            pa.array(sims[cand], pa.float64()),
+            pa.array(sims, pa.float64()),
             pa.array(position[cand], pa.int32()),
             pc.struct_field(kept, "metadata"),
             pc.struct_field(kept, "text"),
@@ -473,7 +476,6 @@ def _driver_top_k(docs: pa.Table, q: np.ndarray, k: int) -> pa.Table | None:
         ],
         schema=_RESULT_ARROW,
     )
-    return _d2_first(rows, k)
 
 
 def _d2_first(rows: pa.Table, k: int) -> pa.Table:
@@ -490,21 +492,6 @@ def _d2_first(rows: pa.Table, k: int) -> pa.Table:
         null_placement="at_start",
     )
     return rows.take(order[:k])
-
-
-def _dot_left_to_right(mat: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """``mat @ q`` with each row summed left to right from 0.0, as the
-    SQL :func:`~nebuia_vector_db_spark.functions.vector.dot` does, so a
-    similarity equals the Spark route's bit for bit and depends on its
-    row's values alone (a BLAS GEMV rounds equal rows differently by
-    their place in the matrix, which breaks exact ties). Blocks of 256
-    rows bound the temporary products."""
-    sims = np.empty(len(mat))
-    for s in range(0, len(mat), 256):
-        sums = np.add.accumulate(mat[s : s + 256] * q, axis=1)
-        # + 0.0 turns an all-(-0.0) sum into the 0.0 SQL starts from
-        sims[s : s + 256] = sums[:, -1] + 0.0
-    return sims
 
 
 def _as_json_str(value) -> str | None:

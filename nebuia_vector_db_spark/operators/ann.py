@@ -69,10 +69,8 @@ def _select_cells(cell_sims: np.ndarray, nprobe: int) -> np.ndarray:
     The cut is the kernel's D-2 top-n (:func:`topk._d2_cut`) with the
     cell id as the tie rank, so every caller — single query or batch,
     IVF or IVF-PQ — probes the same cells for the same query."""
-    c = cell_sims.shape[0]
-    idx = _d2_cut(cell_sims, max(1, min(nprobe, c)), lambda: np.arange(c))
-    sims = np.take_along_axis(cell_sims, idx, axis=0)
-    return np.take_along_axis(idx, np.lexsort((idx, -sims), axis=0), axis=0)
+    c, n = cell_sims.shape[0], max(1, min(nprobe, cell_sims.shape[0]))
+    return _d2_cut(cell_sims, n, lambda: np.arange(c))[0].reshape(-1, n).T
 
 
 def _cell_queries(cell_sims: np.ndarray, nprobe: int) -> dict[int, np.ndarray]:
@@ -160,10 +158,7 @@ class IVFIndex:
           queries that probed it (a candidate is charged only to those
           queries, so the GEMM work is about ``nprobe / n_cells`` of
           the exact scan's), and each query keeps its ≤ k best rows in
-          the D-2 order (ties at the cut go by ``tie_cols``; as in
-          ``knn_join(method='arrow')``, that order between exact
-          duplicate vectors is not guaranteed, since BLAS can round
-          them 1 ulp apart);
+          the D-2 order (ties at the cut go by ``tie_cols``);
         - route: within the driver bound (``topk._driver_corpus``) the
           JVM collects the candidate rows and the driver cuts them
           whole, returning a local relation (no Python worker, no
@@ -179,7 +174,7 @@ class IVFIndex:
         end-to-end; small ``nprobe`` is the scale path (bench b12).
         """
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
-        cell_queries = _cell_queries(self.centroids @ qmat.T, nprobe)
+        cell_queries = _cell_queries(self.centroids @ qmat.T, nprobe) if len(qids) else {}
         cand = self.assigned.where(F.col("ivf_cell").isin(list(cell_queries)))
         vec_col = self.vec_col
         return _batch_topk(

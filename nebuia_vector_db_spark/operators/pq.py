@@ -241,8 +241,8 @@ def _adc_shortlist(
     encoded per batch (:func:`_encode_batch`) when the index was built
     by encode_pq in this plan AND the codes were not persisted by the
     caller (a cached/stored codes relation is the cheaper scan)."""
-    b = qmat.shape[0]
-    m, dsub = index.m, index.codebooks.shape[2]
+    b, m, dsub = len(qids), index.m, index.codebooks.shape[2]
+    qmat = qmat.reshape(b, m * dsub)  # an empty query batch is (0, 0)
     # OPQ: the codes quantize y = rR (the rotated residual) and
     # dot(q, r) = dot(qR, rR) since R is orthogonal, so the queries are
     # rotated here, once; the cell term stays in raw space (it scores
@@ -312,7 +312,7 @@ def _adc_scorer(codes, tables, cells, cell_dots):
             s = _adc(codes[blk], t)
             if ct is not None:
                 s += ct[cells[blk]]
-            return s
+            return s, 0.0, None  # approximate by design: no re-score
 
         return score
 

@@ -23,7 +23,8 @@ Spark-first design notes (scale):
   scored only against its own queries by the scorer the caller builds
   from the batch: ``knn_join(method='arrow')`` (one group) and
   ``IVFIndex.search_batch`` in operators/ann.py (one group per
-  ``ivf_cell``) pass the GEMM, :func:`_gemm_scorer`; ``PQIndex.search``
+  ``ivf_cell``) pass the one exact dense scorer, :func:`_gemm_scorer`
+  (the engine's driver search runs it too); ``PQIndex.search``
   and ``pq_search_batch`` (operators/pq.py) pass the ADC table lookups
   plus the cell term. A group is scored in blocks of ``_BLOCK_ROWS``
   rows, each block cut to k rows per query in the D-2 order (rows tied
@@ -88,6 +89,7 @@ def _query_matrix(
     qids = np.array([r[0] for r in rows])
     qmat = np.vstack(
         [np.asarray(normalize_query(r[1]), dtype=np.float64) for r in rows]
+        or [np.empty((0, 0))]  # an empty batch
     )
     return qids, qmat
 
@@ -176,13 +178,13 @@ def _batch_topk(
     ``IVFIndex.search_batch``; the arguments are :func:`_arrow_topk`'s.
 
     When :func:`_driver_corpus` collects ``df``, the whole table is cut
-    on the driver by :func:`_score_batch`, its ≤ B·k rows sorted by
-    query, similarity desc and ``tie_cols`` (nulls first), and returned
+    on the driver by :func:`_score_batch`, each query's ≤ k rows
+    contiguous in the D-2 order (``tie_cols`` nulls first), and returned
     as a local relation: no Python worker, no window. Otherwise
     :func:`_arrow_topk` cuts each Arrow batch on the workers and the
     ``row_number`` window (:func:`topk_per_group`) applies the global
     cut. Both give the same rows, ranks and schema."""
-    table = _driver_corpus(df)
+    table = _driver_corpus(df if len(qids) else df.limit(0))
     if table is None:
         cut = _arrow_topk(
             df, qids, k, scorer, drop, sim_col, query_id_col,
@@ -197,18 +199,8 @@ def _batch_topk(
         ),
         names=schema.names,
     )
-    order = pc.sort_indices(
-        cut,
-        sort_keys=[
-            (query_id_col, "ascending"),
-            (sim_col, "descending"),
-            *((c, "ascending") for c in tie_cols),
-        ],
-        null_placement="at_start",
-    )
-    cut = cut.take(order)
-    q = cut[query_id_col].to_numpy()
-    rk = np.arange(len(q)) - np.searchsorted(q, q) + 1
+    _, first, of = np.unique(cut[query_id_col].to_numpy(), return_index=True, return_inverse=True)
+    rk = np.arange(len(of)) - first[of] + 1
     cut = cut.append_column("rk", pa.array(rk, pa.int32()))
     # row_number() is non-nullable, so the window route's rk is too
     schema = schema.add("rk", T.IntegerType(), nullable=False)
@@ -240,6 +232,7 @@ def _arrow_topk(
     ``qids``) of the queries that probed it: a row is scored only
     against its cell's queries. The caller applies the global cut.
     """
+    df = df if len(qids) else df.limit(0)  # an empty batch scans nothing
     schema = _cut_schema(df, drop, sim_col, query_id_col)
     names = schema.names
 
@@ -260,7 +253,7 @@ _BLOCK_ROWS = 1024
 
 
 def _score_batch(
-    score_for: Callable[[np.ndarray], Callable[[np.ndarray], np.ndarray]],
+    score_for: Callable[[np.ndarray], Callable[[np.ndarray], tuple]],
     n: int,
     n_queries: int,
     k: int,
@@ -270,11 +263,12 @@ def _score_batch(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Each query's best ``k`` of a batch's ``n`` rows, in the D-2
     order (similarity desc, then ``tie_rank()`` asc — an (n,) rank of
-    the rows, built only if a tie crosses a cut).
+    the rows, built only for a tie).
 
     ``score_for(qs)`` is called once per group with the group's query
     indices (into the ``n_queries`` queries) and returns a scorer
-    ``blk -> (len(blk), len(qs))`` similarities of the rows ``blk``.
+    ``blk -> (sims, margin, exact)``: the (len(blk), len(qs))
+    similarities of the rows ``blk`` and :func:`_d2_cut`'s re-score.
     Without ``cells`` every row is scored against every query. With
     them, the rows are stable-sorted by cell and each cell's rows are
     scored only against ``cell_queries[cell]``; a cell absent from the
@@ -306,41 +300,61 @@ def _score_batch(
 
 
 def _gemm_scorer(mat: np.ndarray, qmat: np.ndarray):
-    """The GEMM scorer of :func:`_score_batch`: ``mat`` (n, d) rows
-    against the (B, d) normalized queries ``qmat``."""
+    """The dense scorer of :func:`_score_batch`: ``mat`` (n, d) rows
+    against the (B, d) normalized queries ``qmat``, one BLAS product
+    per block, which rounds equal rows apart by their place. Any sum
+    is within γ_d·‖v‖·‖q‖ of the true dot, γ_d = d·u / (1 − d·u), so
+    :func:`_d2_cut` re-scores the entries within 4·γ_d·max‖v‖·max‖q‖
+    of the k-th with the SQL dot's sum, :func:`_dot_left_to_right`."""
+    gamma = mat.shape[1] * 2.0**-53 / (1 - mat.shape[1] * 2.0**-53)
 
     def score_for(qs):
         qt = qmat[qs].T  # (d, Bg)
-        return lambda blk: mat[blk].astype(np.float64, copy=False) @ qt
+        qmax = np.sqrt((qt * qt).sum(axis=0).max(initial=0.0))
+
+        def score(blk):
+            v = mat[blk].astype(np.float64, copy=False)
+            vmax = np.sqrt(np.fmax.reduce((v * v).sum(axis=1), initial=0.0))  # NaN rows skipped
+            exact = lambda r, c: _dot_left_to_right(mat, qmat, blk[r], qs[c])  # noqa: E731
+            return v @ qt, 4 * gamma * vmax * qmax, exact
+
+        return score
 
     return score_for
+
+
+def _dot_left_to_right(mat, qmat, rows, qs) -> np.ndarray:
+    """Each ``mat[rows[i]] · qmat[qs[i]]`` summed left to right from
+    0.0, as the SQL dot does, in slices of ``_BLOCK_ROWS`` pairs, so
+    temporaries stay O(block × d) even when every pair ties."""
+    out = np.empty(len(rows))
+    for lo in range(0, len(rows), _BLOCK_ROWS):
+        sl = slice(lo, lo + _BLOCK_ROWS)
+        # + 0.0 turns an all-(-0.0) sum into the 0.0 SQL starts from
+        out[sl] = np.add.accumulate(mat[rows[sl]] * qmat[qs[sl]], axis=1)[:, -1] + 0.0
+    return out
 
 
 def _group_topk(score, rows, qs, k, rank):
     """One group's running top-k: ``score`` over ``rows`` in row
     blocks. Returns flat (rows, queries, sims)."""
-    top = None  # (sims, rows), each (≤ k, Bg)
+    top = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
     for lo in range(0, len(rows), _BLOCK_ROWS):
         blk = rows[lo : lo + _BLOCK_ROWS]
-        sims = score(blk)  # (block, Bg)
-        idx = _d2_cut(sims, min(k, len(blk)), lambda: rank()[blk])
-        s, r = np.take_along_axis(sims, idx, axis=0), blk[idx]
-        if top is not None:
-            s, r = np.vstack([top[0], s]), np.vstack([top[1], r])
-            idx = _d2_cut(s, min(k, len(s)), lambda: rank()[r])
-            s, r = np.take_along_axis(s, idx, 0), np.take_along_axis(r, idx, 0)
-        top = s, r
-    return top[1].ravel(), np.broadcast_to(qs, top[1].shape).ravel(), top[0].ravel()
+        sims, margin, exact = score(blk)  # sims: (block, Bg)
+        r, c, s = _d2_cut(sims, min(k, len(blk)), lambda: rank()[blk], margin, exact)
+        top = _d2_merge(*map(np.concatenate, zip(top, (blk[r], c, s))), k, rank)
+    return top[0], qs[top[1]], top[2]
 
 
 def _d2_merge(rows, qs, sims, k, rank):
     """The ≤ ``k`` best of each query's (row, sim) candidates in the
-    D-2 order; ``rank()`` is only built when a tie crosses a cut."""
+    D-2 order, by query; ``rank()`` is only built for a tie."""
     order = np.lexsort((-sims, qs))
     sq = qs[order]
     pos = np.arange(len(order)) - np.searchsorted(sq, sq)  # place in query
     s = sims[order]
-    if ((pos[1:] == k) & (s[1:] == s[:-1])).any():
+    if ((pos[1:] > 0) & (pos[1:] <= k) & (s[1:] == s[:-1])).any():
         order = np.lexsort((rank()[rows], -sims, qs))
     keep = order[pos < k]
     return rows[keep], qs[keep], sims[keep]
@@ -359,26 +373,18 @@ def _tie_rank(rb, ties: Sequence[str]) -> np.ndarray:
     return np.argsort(np.asarray(order))  # inverse permutation
 
 
-def _d2_cut(sims: np.ndarray, kk: int, tie_rank) -> np.ndarray:
-    """Row indices (kk, B) of each column's top ``kk`` of ``sims`` in
-    the D-2 order: similarity desc, then ``tie_rank()`` asc.
-
-    ``argpartition`` alone keeps arbitrary rows among those tied at the
-    ``kk``-th similarity; a column with more tied rows than fit is
-    re-cut exactly over its rows at or above that value, so
-    ``tie_rank`` (an (n,) rank of the rows by the tie columns, or an
-    (n, B) one when each column holds different rows) is only built
-    for batches with such a tie."""
+def _d2_cut(sims: np.ndarray, kk: int, tie_rank, margin=0.0, exact=None):
+    """Flat (rows, columns, sims) of each column's top ``kk`` of
+    ``sims`` in the D-2 order (``tie_rank()``, an (n,) rank of the
+    rows, breaks ties), cut over the entries at or above the ``kk``-th
+    value less ``margin`` alone, re-scored by ``exact(rows, cols)``."""
     idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]
     kth = np.take_along_axis(sims, idx, axis=0).min(axis=0)  # (B,)
-    over = np.flatnonzero((sims >= kth).sum(axis=0) > kk)
-    if over.size:
-        rank = np.broadcast_to(np.reshape(tie_rank(), (len(sims), -1)), sims.shape)
-        for q in over:
-            cand = np.flatnonzero(sims[:, q] >= kth[q])
-            order = np.lexsort((rank[cand, q], -sims[cand, q]))
-            idx[:, q] = cand[order[:kk]]
-    return idx
+    near = sims >= kth - margin
+    near[idx, np.arange(sims.shape[1])] = True  # a NaN compares false
+    rows, cols = np.nonzero(near)
+    vals = sims[rows, cols] if exact is None else exact(rows, cols)
+    return _d2_merge(rows, cols, vals, kk, tie_rank)
 
 
 def topk_per_group(
@@ -427,11 +433,8 @@ def knn_join(
     Python worker, no window. A larger one is cut per Arrow batch on
     the workers (:func:`_arrow_topk`, every row against the whole query
     matrix in row blocks) and the same window applies the global cut.
-    Either route returns the corpus columns but the vector, then
-    ``query_id_col``, ``sim_col`` and ``rk``. Its D-2 order (similarity
-    desc, then ``tie_cols``) between exact duplicate vectors is not
-    guaranteed: BLAS can round duplicates 1 ulp apart, and the larger
-    one then ranks first.
+    Every method returns the corpus columns but the vector, then
+    ``query_id_col``, ``sim_col`` and ``rk``.
     """
     if method == "arrow":
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
@@ -454,5 +457,5 @@ def knn_join(
     )
     return topk_per_group(
         scored, [query_id_col], sim_col, k, tie_cols=tie_cols
-    ).drop(query_vec_col)
+    ).drop(query_vec_col, corpus_vec_col)
 

@@ -461,7 +461,7 @@ class SnapshotTable:
         {
             "op", "schema", "files", "n_files", "n_rows", "parent",
             "version", "rewrote_files", "dropped_files", "carried_files",
-            "compacted_files", "zorder_cols",
+            "compacted_files", "zorder_cols",  # the last: old optimize_zorder logs
         }
     )
 
@@ -914,43 +914,10 @@ class SnapshotTable:
             expected_parent=parent,
         )
 
-    def optimize_zorder(
-        self,
-        cols: list[str],
-        n_partitions: int | None = None,
-        bits: int = 8,
-    ) -> int:
-        """``OPTIMIZE ... ZORDER BY (cols)``: rewrite the whole
-        snapshot Morton-clustered on ``cols`` (operators/zorder.py) so
-        every data file covers a compact hyper-rectangle and the
-        snapshot's min/max stats prune on ALL clustered dimensions.
-        One range exchange + local sort — the price any re-layout
-        pays; committed atomically like every other op, so readers
-        flip to the clustered layout in one step and prior snapshots
-        stay time-travelable until vacuum."""
-        from nebuia_vector_db_spark.operators.zorder import cluster_by_zorder
-
-        parent = self.current_version()
-        snap = self._snapshot(parent)
-        if n_partitions is None:
-            n_partitions = max(4, len(snap["files"]))
-        clustered = cluster_by_zorder(
-            self.read(parent), cols, n_partitions, bits
-        )
-        return self._commit(
-            {
-                "op": "optimize_zorder",
-                "zorder_cols": cols,
-                "schema": snap["schema"],
-                "files": self._write_files(clustered),
-            },
-            expected_parent=parent,
-        )
-
     def with_retry(self, op: str, *args, retries: int = 5, **kwargs):
         """Optimistic-concurrency loop: run a mutating table op
         (``"append"``, ``"delete_where"``, ``"delete_where_any"``,
-        ``"upsert"``, ``"compact"``, ``"optimize_zorder"``) and, on
+        ``"upsert"``, ``"compact"``) and, on
         :class:`CommitConflictError`
         (another writer landed the version first), re-read the new
         snapshot and reapply — the standard lakehouse retry contract.

@@ -14,7 +14,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from nebuia_vector_db_spark.functions.vector import l2_norm, dot
+from nebuia_vector_db_spark.functions.vector import dot, l2_norm, normalize_query
 from nebuia_vector_db_spark.operators import topk
 from nebuia_vector_db_spark.operators.ann import IVFIndex, assign_to_cells
 from nebuia_vector_db_spark.operators.dedup import exact_cosine_pairs
@@ -150,18 +150,48 @@ def test_gemm_cut_breaks_ties_across_row_blocks(spark, on_route):
         assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
 
 
+def test_duplicates_split_by_blas_keep_the_sql_order(spark, on_route):
+    """Five exact duplicates at d = 128, stored in descending vec_id. A
+    plain BLAS product against the query rounds them apart (asserted
+    first, so the data exercises the split), and the larger value
+    would rank first whatever its vec_id. knn_join(method='arrow') and
+    full-probe search_batch must still equal knn_join(method='sql') in
+    rows, order and similarities, bit for bit: the cut re-scores its
+    candidates left to right, as the SQL dot sums."""
+    rng = np.random.default_rng(0)
+    vec = rng.normal(size=128).round(3).tolist()
+    qvec = rng.normal(size=128).round(3).tolist()
+    blas = np.array([vec] * 5) @ np.array(normalize_query(qvec))[:, None]
+    assert len(np.unique(blas)) > 1, "BLAS no longer splits these duplicates"
+
+    corpus = _duplicates(spark, 5, vec)
+    queries = spark.createDataFrame([(0, qvec)], "query_id long, query_vec array<double>")
+    want = _ranked(knn_join(queries, corpus, k=3, tie_cols=["vec_id"], method="sql"))
+    assert [r[2] for r in want] == [1, 2, 3]
+    index = IVFIndex(corpus.withColumn("ivf_cell", F.lit(0)), np.array([vec]), "embedding")
+    for got in (
+        knn_join(queries, corpus, k=3, tie_cols=["vec_id"], method="arrow"),
+        index.search_batch(queries, 3, nprobe=1, tie_cols=["vec_id"]),
+    ):
+        assert _ranked(on_route(got)) == want
+
+
 def test_score_batch_memory_does_not_grow_with_batch_rows():
     """The per-batch kernel scores in row blocks: its peak traced
     allocation at 32 blocks of rows stays within 1.5x of its peak at 4
-    blocks (an (n, B) similarity matrix would grow about 8x)."""
+    blocks (an (n, B) similarity matrix would grow about 8x), also when
+    every row is the same vector, so every entry of every block ties
+    at the cut and is re-scored left to right."""
     import tracemalloc
 
     rng = np.random.default_rng(0)
     qmat = rng.normal(size=(64, 16))
     qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
 
-    def _peak(blocks):
+    def _peak(blocks, duplicates):
         mat = rng.normal(size=(blocks * _BLOCK_ROWS, 16)).astype(np.float32)
+        if duplicates:
+            mat[:] = mat[0]
         tracemalloc.start()
         try:
             rows, _, _ = _score_batch(
@@ -172,9 +202,12 @@ def test_score_batch_memory_does_not_grow_with_batch_rows():
         finally:
             tracemalloc.stop()
         assert len(rows) == 10 * len(qmat)
+        if duplicates:  # the D-2 order keeps the first ten rows
+            assert (np.sort(rows.reshape(len(qmat), 10)) == np.arange(10)).all()
         return peak
 
-    assert _peak(32) <= 1.5 * _peak(4)
+    for duplicates in (False, True):
+        assert _peak(32, duplicates) <= 1.5 * _peak(4, duplicates)
 
 
 def test_exact_cosine_pairs_equals_join_formula(spark, sf_oracle):
@@ -255,7 +288,7 @@ def test_batch_routes_agree(spark, sf_oracle, monkeypatch):
     )
     sql = knn_join(queries, emb, k=5, tie_cols=["vec_id"], method="sql")
     assert drv.schema == spk.schema
-    assert drv.dtypes == [t for t in sql.dtypes if t[0] != "embedding"]
+    assert drv.dtypes == sql.dtypes
     want = _ranked(sql)
     assert len(want) == 5 * len(ids)
     _assert_same_ranking(_ranked(drv), want)
@@ -307,6 +340,38 @@ def test_driver_route_plans_no_python(spark, sf_oracle):
     ):
         plan = explain_str(df)
         assert "MapInArrow" not in plan and "LocalTableScan" in plan, plan
+
+
+def test_empty_query_batch_returns_no_rows(spark, sf_oracle, monkeypatch):
+    """An empty query batch gives 0 rows in the schema of a non-empty
+    batch from knn_join(method='arrow'), IVFIndex.search_batch and
+    pq_search_batch, and collects no corpus row."""
+    from nebuia_vector_db_spark.operators.pq import encode_pq, pq_search_batch
+
+    emb = load_table(spark, sf_oracle, "embeddings")
+    some = _queries(emb, [0, 7])
+    empty = some.limit(0)
+    cents = np.eye(64)[:4]
+    index = IVFIndex(assign_to_cells(emb, cents), cents, "embedding")
+    books = np.zeros((8, 2, 8))
+    books[:, 1] = 1.0
+    pq = encode_pq(index.assigned, books, cell_centroids=cents)
+    collected = []
+    corpus = topk._driver_corpus
+    monkeypatch.setattr(
+        topk, "_driver_corpus", lambda df: collected.append(corpus(df)) or collected[-1]
+    )
+    for run in (
+        lambda q: knn_join(q, emb, k=3, tie_cols=["vec_id"], method="arrow"),
+        lambda q: index.search_batch(q, 3, nprobe=2, tie_cols=["vec_id"]),
+        lambda q: pq_search_batch(pq, emb, q, 3, rerank=5, nprobe=2, tie_cols=["vec_id"]),
+    ):
+        want = run(some)
+        assert want.count() > 0
+        collected.clear()
+        got = run(empty)
+        assert got.count() == 0 and got.schema == want.schema
+        assert all(t is None or t.num_rows == 0 for t in collected)
 
 
 def test_cross_join_inflated_corpus_keeps_mapinarrow(spark, sf_oracle):

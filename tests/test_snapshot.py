@@ -469,7 +469,6 @@ def test_maintenance_commits_preserve_app_metadata(spark, base_df, tmp_path):
     tbl.append(base_df.limit(10))
     tbl.delete_where("k < 50")
     tbl.compact(small_file_bytes=1 << 30, target_partitions=1)
-    tbl.optimize_zorder(["k", "bucket"], n_partitions=2)
     tbl.upsert(
         base_df.limit(5).withColumn("ver", F.lit(9).cast("long")),
         key_cols=["k"], version_col="ver",

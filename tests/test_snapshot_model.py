@@ -1,5 +1,5 @@
 """Randomized model-based test for SnapshotTable: a seeded sequence of
-append / delete / upsert / compact / optimize_zorder / vacuum ops is
+append / delete / upsert / compact / vacuum ops is
 applied both to the real table and to a pandas model; contents must
 agree after EVERY step, and historical snapshots must stay readable
 until vacuumed. Complements the per-op unit tests with interaction
@@ -52,7 +52,7 @@ def test_random_op_sequences_match_model(spark, tmp_path, seed):
 
     for step in range(8):
         op = rng.choice(
-            ["append", "delete", "upsert", "compact", "zorder", "vacuum"]
+            ["append", "delete", "upsert", "compact", "vacuum"]
         )
         if op == "append":
             rows = fresh_rows(int(rng.integers(5, 20)))
@@ -79,8 +79,6 @@ def test_random_op_sequences_match_model(spark, tmp_path, seed):
         elif op == "compact":
             tbl.with_retry("compact", small_file_bytes=1 << 30,
                            target_partitions=2)
-        elif op == "zorder":
-            tbl.with_retry("optimize_zorder", ["k", "grp"], n_partitions=4)
         elif op == "vacuum":
             tbl.vacuum(keep_last=1)
             checkpoints = []  # history gone by contract

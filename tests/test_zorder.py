@@ -90,31 +90,3 @@ def test_zorder_prunes_on_both_dims_linear_only_on_one(spark, tmp_path):
         (F.col("b") >= 1400) & (F.col("b") <= 1499)
     ).count()
     assert t_z.read(where=box_b).count() == expected
-
-
-def test_snapshot_optimize_zorder(spark, tmp_path):
-    """OPTIMIZE ZORDER BY on a table created with a pruning-hostile
-    layout: afterwards, box queries prune on both dimensions and the
-    content is unchanged."""
-    df = spark.range(0, 30_000).select(
-        (F.hash(F.col("id")) % 500 + 500).alias("a"),
-        (F.hash(F.col("id") + 3) % 500 + 500).alias("b"),
-    )
-    tbl = SnapshotTable.create(
-        spark, str(tmp_path / "t"), df.repartition(12)  # round-robin
-    )
-    box = [("b", ">=", 700), ("b", "<=", 749)]
-    assert tbl.pruned_file_count(box) == tbl.n_files()  # nothing prunes
-    before = tbl.read().groupBy().agg(
-        F.count("*"), F.sum("a"), F.sum("b")
-    ).head()
-
-    v = tbl.optimize_zorder(["a", "b"], n_partitions=16)
-    assert v == 2 and tbl._snapshot()["op"] == "optimize_zorder"
-    assert tbl.pruned_file_count(box) <= tbl.n_files() // 2
-    after = tbl.read().groupBy().agg(
-        F.count("*"), F.sum("a"), F.sum("b")
-    ).head()
-    assert tuple(before) == tuple(after)
-    expected = df.where((F.col("b") >= 700) & (F.col("b") <= 749)).count()
-    assert tbl.read(where=box).count() == expected
