@@ -11,12 +11,14 @@ Storage: one :class:`~nebuia_vector_db_spark.sources.snapshot.SnapshotTable`
 (SURVEY §1.4) instead of per-document JSON blobs in MinIO
 (main.go:334-342). A collection ≙ a ``collection`` column value, never
 a path; prefix listing (main.go:186-189) ≙ manifest-stats pruning:
-each store commit writes files of one collection, so a read for some
-collections drops every file whose ``collection`` min/max excludes
-them before Spark plans the scan. The whole-document GET+decode
-(main.go:277-292) becomes a columnar scan that reads only
-``chunks.embedding`` + the projected fields. The warehouse is a
-local-disk path.
+``store`` and the driver route of ``store_dataframe`` write files of
+one collection each, so a read for some collections drops every file
+whose ``collection`` min/max excludes them before Spark plans the scan.
+The Spark route of ``store_dataframe`` writes files as its DataFrame is
+partitioned, so such a file is pruned only when its stats allow it.
+The whole-document GET+decode (main.go:277-292) becomes a columnar
+scan that reads only ``chunks.embedding`` + the projected fields. The
+warehouse is a local-disk path.
 
 Writes run no Spark job: ``store`` builds one Arrow table and the
 table writes it as one parquet file on the driver, and
@@ -24,7 +26,14 @@ table writes it as one parquet file on the driver, and
 stats (``collection`` min = max = name, null count 0), the reference's
 prefix delete (main.go:415-418) as one atomic commit. Only a file that
 also holds other rows is rewritten copy-on-write. A new warehouse gets
-an empty first commit, so every write is an append.
+an empty first commit, so every write is an append. A bulk
+``store_dataframe`` within the driver bound (``topk._DRIVER_MAX_BYTES``,
+shared with search) runs one Spark job, the JVM's collect of the
+DataFrame, and the driver writes one file per collection in one
+commit. As with ``store``, a bulk load of many tiny collections
+therefore writes many small files; merging them is
+``SnapshotTable.compact``'s job. A larger DataFrame, or one whose size
+Catalyst cannot bound, is written by Spark.
 
 Documented deviations (SURVEY §1.5): D-1 always-sorted results, D-2
 deterministic tie-break, D-3 ``collection_name`` carries the real
@@ -74,6 +83,7 @@ from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
 from nebuia_vector_db_spark.sources.snapshot import (
     CommitConflictError,
     SnapshotTable,
+    split_by,
 )
 
 _DOCUMENT_ARROW = to_arrow_schema(DOCUMENT_SCHEMA)
@@ -193,10 +203,19 @@ class VectorEngine:
 
     def store_dataframe(self, df: DataFrame) -> None:
         """Bulk ingest path (no per-row Python): DataFrame in
-        DOCUMENT_SCHEMA shape; missing doc_ids minted JVM-side."""
+        DOCUMENT_SCHEMA shape; missing doc_ids minted JVM-side. One
+        atomic append, on one of two routes with the same rows. Within
+        the driver bound (``topk._driver_corpus``) the JVM collects
+        ``df`` and the driver writes one parquet file per
+        ``collection`` value (null collections in a file of their own):
+        one Spark job, no write stage. Otherwise Spark's writer writes
+        files as ``df`` is partitioned."""
         if "doc_id" not in df.columns:
             df = df.withColumn("doc_id", F.expr("uuid()"))
-        self.table.with_retry("append", df)
+        table = topk._driver_corpus(df)
+        self.table.with_retry(
+            "append", df if table is None else _by_collection(table)
+        )
 
     # --------------------------------------------------------------- search
     def documents(self, collections: Sequence[str] | None = None) -> DataFrame:
@@ -419,6 +438,16 @@ def _collection_list(collections) -> list:
     if isinstance(collections, str):
         raise TypeError("collections must be a sequence of names, not a str")
     return list(collections)
+
+
+def _by_collection(docs: pa.Table) -> list[pa.Table]:
+    """``docs`` cut into one table per ``collection`` value, nulls in
+    one table of their own (``split_by`` on the dictionary codes, which
+    number the collections in order of first appearance). An empty
+    ``docs`` stays one empty table."""
+    codes = pc.dictionary_encode(docs["collection"].combine_chunks()).indices
+    parts = split_by(docs, pc.fill_null(codes, -1).to_numpy())
+    return [rows for _, rows in parts] or [docs]
 
 
 def _search_result(scored: DataFrame) -> DataFrame:

@@ -155,8 +155,10 @@ def limit_blas_threads(n: int = 1) -> Iterator[None]:
 
 
 def arrow_list_to_matrix(col) -> np.ndarray:
-    """pyarrow List/FixedSizeList array of floats → (n, d) ndarray with
-    zero copies where the layout allows (contiguous values buffer).
+    """pyarrow List/FixedSizeList array of floats → (len(col), d)
+    ndarray with zero copies where the layout allows (contiguous values
+    buffer). A sliced array decodes its own rows, and width-0 lists
+    keep their rows.
 
     A pandas_udf would see per-row object arrays (``np.vstack`` copies
     every row); under mapInArrow the list array's values buffer is
@@ -167,8 +169,9 @@ def arrow_list_to_matrix(col) -> np.ndarray:
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     if pa.types.is_fixed_size_list(col.type):
-        values = col.values
         d = col.type.list_size
+        # ``values`` ignores the slice offset
+        values = col.values.slice(col.offset * d, len(col) * d)
     else:
         # guard against a sliced/offset list array where offsets don't
         # start at 0 (flatten() handles it, still no per-row copy)
@@ -178,5 +181,4 @@ def arrow_list_to_matrix(col) -> np.ndarray:
         d = int(widths[0]) if len(widths) else 0
         if len(widths) and not (widths == d).all():
             raise ValueError("ragged embedding column; expected fixed dim")
-    mat = values.to_numpy(zero_copy_only=False)
-    return mat.reshape(-1, d) if d else mat.reshape(0, 0)
+    return values.to_numpy(zero_copy_only=False).reshape(len(col), d)

@@ -10,11 +10,21 @@ index as a *batch* job and keep serving batch-style too:
   centroids; every vector is assigned its nearest centroid id as an
   ``ivf_cell`` column.
 - **Persist** (``save_ivf_index``): ``cells/`` holds the corpus
-  partitioned by cell, one parquet file per cell, so a cell is a
-  partition — candidate pruning becomes *partition* pruning, the same
-  mechanism that makes collection-scoped search cheap (SURVEY.md §2.1
-  O-2) — and ``centroids.npy`` the centroid matrix, written and read
-  driver-side through the Hadoop FileSystem API (no Spark job).
+  partitioned by cell (``ivf_cell=<c>/``, Spark's ``partitionBy``
+  layout), one parquet file per cell, so a cell is a partition —
+  candidate pruning becomes *partition* pruning, the same mechanism
+  that makes collection-scoped search cheap (SURVEY.md §2.1 O-2) —
+  plus its scan schema (``cells/_schema.json``), and ``centroids.npy``
+  the centroid matrix, written and read driver-side through the Hadoop
+  FileSystem API (no Spark job). Within the one driver bound
+  (``topk._DRIVER_MAX_BYTES``) on a local filesystem the driver writes
+  the cells with pyarrow after one JVM collect; otherwise Spark writes
+  them. Either way the layout is the same.
+- **Load** (``load_ivf_index``): no Spark job. The cell directories are
+  listed once on the driver (cell → files and bytes, the per-partition
+  metadata a coordinator keeps so a query opens only the partitions it
+  needs), the schema and centroids are read, and the partition-pruned
+  Spark scan of ``cells/`` is built on first use.
 - **Query**: score the centroids against the query (or query batch)
   driver-side (n_cells is small — a NumPy product over the centroid
   matrix), take each query's ``nprobe`` best cells with the one cell
@@ -26,10 +36,11 @@ index as a *batch* job and keep serving batch-style too:
   measured in tests).
 
 Scale notes: each query scores ``nprobe/n_cells`` of the corpus. A
-batch scan reads the union of its queries' probed cells, but the
-kernel multiplies each cell's rows only by the queries that probed it
-(:func:`_cell_queries`), so its GEMM work scales with ``nprobe /
-n_cells`` even when the union is every cell. Top-k is still
+batch scan reads the union of its queries' probed cells (on a loaded
+index within the driver bound, exactly those cells' files, read by the
+driver), but the kernel multiplies each cell's rows only by the
+queries that probed it (:func:`_cell_queries`), so its GEMM work
+scales with ``nprobe / n_cells`` even when the union is every cell. Top-k is still
 TakeOrderedAndProject (per-partition heap, no shuffle). The centroid
 matrix lives on the driver (n_cells × d floats — 4 MB at 16k cells ×
 64 d), never shuffled.
@@ -38,26 +49,45 @@ matrix lives on the driver (n_cells × d floats — 4 MB at 16k cells ×
 from __future__ import annotations
 
 import io
+import json
 import os
+import shutil
+import uuid
 from collections.abc import Sequence
+from urllib.parse import urlparse
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nebuia_vector_db_spark.functions.vector import (
     arrow_list_to_matrix,
     normalize_query,
 )
+from nebuia_vector_db_spark.operators import topk
 from nebuia_vector_db_spark.operators.topk import (
     _BLOCK_ROWS,
     _batch_topk,
     _d2_cut,
     _driver_corpus,
+    _driver_topk,
     _gemm_scorer,
     _query_matrix,
     topk_search,
 )
+from nebuia_vector_db_spark.sources.snapshot import (
+    _strip_scheme,
+    split_by,
+    write_parquet,
+)
+
+# the scan schema of a saved cell directory, beside its cells; Spark's
+# file listing skips names that start with "_"
+_SCHEMA_FILE = "_schema.json"
 
 
 def _select_cells(cell_sims: np.ndarray, nprobe: int) -> np.ndarray:
@@ -85,15 +115,98 @@ def _cell_queries(cell_sims: np.ndarray, nprobe: int) -> dict[int, np.ndarray]:
     return dict(zip(ids.tolist(), np.split(queries[order], starts[1:])))
 
 
+class _SavedCells:
+    """A saved index's cell directory, ``root``, listed once on the
+    driver: the scan schema (the cell column last, where Spark's
+    partition discovery puts it) and, on a local filesystem, each
+    cell's parquet files with their bytes (``files``, ``None``
+    elsewhere). No Spark job."""
+
+    def __init__(self, spark, root: str, cell_col: str = "ivf_cell"):
+        self.spark, self.root, self.cell_col = spark, root, cell_col
+        raw = _load_bytes(spark, os.path.join(root, _SCHEMA_FILE), missing_ok=True)
+        # an index saved without the schema file: Spark infers it
+        self.schema = (
+            spark.read.parquet(root).schema if raw is None
+            else T.StructType.fromJson(json.loads(raw))
+        )
+        self.files = _list_cells(root, cell_col)
+
+    def scan(self) -> DataFrame:
+        """The partition-prunable Spark scan of every cell."""
+        return self.spark.read.schema(self.schema).parquet(self.root)
+
+    def read(self, cells) -> pa.Table:
+        """The rows of ``cells`` as one Arrow table of the scan schema,
+        their files read with pyarrow and the cell column filled from
+        the directory name."""
+        arrow = to_arrow_schema(self.schema)
+        cell = arrow.field(self.cell_col)
+        data = arrow.remove(arrow.get_field_index(self.cell_col))
+        parts = [arrow.empty_table()]
+        for c in cells:
+            for path, _ in self.files.get(c, []):
+                t = pq.read_table(path, columns=data.names).select(data.names).cast(data)
+                ids = pa.array(np.full(t.num_rows, c), cell.type)
+                parts.append(t.append_column(cell, ids))
+        return pa.concat_tables(parts)
+
+
+def _local_dir(path: str) -> str | None:
+    """``path`` as a local directory, or ``None`` on another
+    filesystem: the driver reads and writes only local files."""
+    scheme = urlparse(path).scheme
+    return _strip_scheme(path) if scheme in ("", "file") else None
+
+
+def _list_cells(root: str, cell_col: str) -> dict[int, list[tuple[str, int]]] | None:
+    """Each ``<cell_col>=<c>/`` directory under ``root`` mapped to its
+    data files' ``(path, bytes)``, skipping the ``_``/``.`` names Spark
+    skips too; ``None`` when ``root`` is not local."""
+    local = _local_dir(root)
+    if local is None:
+        return None
+    prefix, out = f"{cell_col}=", {}
+    for d in os.scandir(local) if os.path.isdir(local) else []:
+        if d.is_dir() and d.name.startswith(prefix):
+            out[int(d.name[len(prefix):])] = sorted(
+                (f.path, f.stat().st_size)
+                for f in os.scandir(d.path)
+                if f.is_file() and not f.name.startswith(("_", "."))
+            )
+    return out
+
+
 class IVFIndex:
     """A built IVF index: the corpus with an ``ivf_cell`` column plus
     the centroid matrix (driver-side NumPy). Cell selection for every
-    search goes through :func:`_select_cells`."""
+    search goes through :func:`_select_cells`. A loaded index
+    (:func:`load_ivf_index`) also holds its cell listing, ``saved``,
+    and builds ``assigned`` on first use."""
 
-    def __init__(self, assigned: DataFrame, centroids: np.ndarray, vec_col: str):
-        self.assigned = assigned
+    def __init__(
+        self,
+        assigned: DataFrame | None,
+        centroids: np.ndarray,
+        vec_col: str,
+        saved: _SavedCells | None = None,
+    ):
+        self._assigned = assigned
         self.centroids = centroids  # (n_cells, d) float64
         self.vec_col = vec_col
+        self.saved = saved
+
+    @property
+    def assigned(self) -> DataFrame:
+        """The corpus with its ``ivf_cell`` column; on a loaded index
+        the partition-pruned scan of ``cells/``."""
+        if self._assigned is None:
+            self._assigned = self.saved.scan()
+        return self._assigned
+
+    @assigned.setter
+    def assigned(self, df: DataFrame) -> None:
+        self._assigned = df
 
     @property
     def n_cells(self) -> int:
@@ -159,15 +272,16 @@ class IVFIndex:
           queries, so the GEMM work is about ``nprobe / n_cells`` of
           the exact scan's), and each query keeps its ≤ k best rows in
           the D-2 order (ties at the cut go by ``tie_cols``);
-        - route: within the driver bound (``topk._driver_corpus``) the
-          JVM collects the candidate rows and the driver cuts them
-          whole, returning a local relation (no Python worker, no
-          window). A saved index's bound counts every cell's files,
-          since ``inputFiles()`` lists before partition pruning, though
-          only the probed cells are read. Above it, each Arrow batch is
-          cut on the workers and the same bounded row_number window as
-          ``knn_join`` applies the global cut (Partial WindowGroupLimit
-          — tasks ship ≤ k rows per query).
+        - route: on a loaded index whose probed cells' files hold at
+          most ``topk._DRIVER_MAX_BYTES``, the driver reads exactly
+          those files with pyarrow (no Spark job) and cuts them whole;
+          on an index in memory, within the driver bound
+          (``topk._driver_corpus``), the JVM collects the candidate
+          rows and the driver cuts them. Either way the result is a
+          local relation (no Python worker, no window). Otherwise each
+          Arrow batch is cut on the workers and the same bounded
+          row_number window as ``knn_join`` applies the global cut
+          (Partial WindowGroupLimit — tasks ship ≤ k rows per query).
 
         ``nprobe == n_cells`` makes this EXACTLY ``knn_join`` (every
         pair allowed, full scan) — which is how the oracle checks it
@@ -175,14 +289,20 @@ class IVFIndex:
         """
         qids, qmat = _query_matrix(queries_df, query_id_col, query_vec_col)
         cell_queries = _cell_queries(self.centroids @ qmat.T, nprobe) if len(qids) else {}
-        cand = self.assigned.where(F.col("ivf_cell").isin(list(cell_queries)))
         vec_col = self.vec_col
-        return _batch_topk(
-            cand, qids, k,
+        cut = (
             lambda rb: _gemm_scorer(arrow_list_to_matrix(rb.column(vec_col)), qmat),
-            [vec_col, "ivf_cell"], sim_col, query_id_col,
-            tie_cols=tie_cols, cell_queries=cell_queries,
+            [vec_col, "ivf_cell"], sim_col, query_id_col, tie_cols, cell_queries,
         )
+        saved = self.saved
+        if saved is not None and saved.files is not None:
+            probed = sum(b for c in cell_queries for _, b in saved.files.get(c, []))
+            if probed <= topk._DRIVER_MAX_BYTES:
+                return _driver_topk(
+                    saved.spark, saved.read(cell_queries), saved.schema, qids, k, *cut
+                )
+        cand = self.assigned.where(F.col("ivf_cell").isin(list(cell_queries)))
+        return _batch_topk(cand, qids, k, *cut)
 
 
 def build_ivf_index(
@@ -227,16 +347,34 @@ def _matrix_file(spark, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+def _save_bytes(spark, path: str, data: bytes) -> None:
+    """Write one driver-side file: no Spark job."""
+    fs, jpath = _matrix_file(spark, path)
+    out = fs.create(jpath, True)
+    try:
+        out.write(data)
+    finally:
+        out.close()
+
+
+def _load_bytes(spark, path: str, missing_ok: bool = False) -> bytes | None:
+    """Read a :func:`_save_bytes` file; ``None`` when it is absent and
+    ``missing_ok``."""
+    fs, jpath = _matrix_file(spark, path)
+    if missing_ok and not fs.exists(jpath):
+        return None
+    stream = fs.open(jpath)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
 def _save_matrix(spark, path: str, mat: np.ndarray) -> None:
     """Write one driver-side matrix as a ``.npy`` file: no Spark job."""
     buf = io.BytesIO()
     np.save(buf, np.ascontiguousarray(mat), allow_pickle=False)
-    fs, jpath = _matrix_file(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(buf.getvalue())
-    finally:
-        out.close()
+    _save_bytes(spark, path, buf.getvalue())
 
 
 def _load_matrix(
@@ -244,15 +382,8 @@ def _load_matrix(
 ) -> np.ndarray | None:
     """Read a :func:`_save_matrix` file; ``None`` when it is absent and
     ``missing_ok``. A damaged file raises."""
-    fs, jpath = _matrix_file(spark, path)
-    if missing_ok and not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    try:
-        data = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return np.load(io.BytesIO(data), allow_pickle=False)
+    data = _load_bytes(spark, path, missing_ok)
+    return None if data is None else np.load(io.BytesIO(data), allow_pickle=False)
 
 
 def _write_cells(
@@ -262,20 +393,44 @@ def _write_cells(
     subdir: str = "cells",
     cell_col: str = "ivf_cell",
 ) -> None:
-    """Write ``df`` under ``path/subdir``, partitioned by ``cell_col``,
-    one file per cell: rows are first shuffled by the cell so each
-    cell lands in one writer task. The IVF corpus (``cells/``) and the
-    IVF-PQ codes (``codes/``) are both written this way."""
-    df.repartition(cell_col).write.partitionBy(cell_col).mode(mode).parquet(
-        os.path.join(path, subdir)
+    """Write ``df`` under ``path/subdir``, partitioned by ``cell_col``
+    (``<cell_col>=<c>/``, the layout of Spark's ``partitionBy``), one
+    file per cell, and the scan schema beside the cells
+    (``_schema.json``), so an index without rows loads too. The IVF
+    corpus (``cells/``) and the IVF-PQ codes (``codes/``) are both
+    written this way.
+
+    Within the driver bound (``topk._driver_corpus``) and on a local
+    filesystem, the JVM collects ``df`` and the driver writes each cell
+    with pyarrow: ``"overwrite"`` replaces ``subdir``, ``"append"``
+    adds a uniquely named file to each cell. Otherwise rows are
+    shuffled by the cell so each cell lands in one Spark writer task."""
+    root = os.path.join(path, subdir)
+    local = _local_dir(root)
+    table = None if local is None else _driver_corpus(df)
+    if table is None:
+        df.repartition(cell_col).write.partitionBy(cell_col).mode(mode).parquet(root)
+    else:
+        if mode == "overwrite":
+            shutil.rmtree(local, ignore_errors=True)
+        os.makedirs(local, exist_ok=True)
+        cells = table.column(cell_col).to_numpy()
+        for c, rows in split_by(table.drop_columns([cell_col]), cells):
+            cell_dir = os.path.join(local, f"{cell_col}={c}")
+            os.makedirs(cell_dir, exist_ok=True)
+            write_parquet(rows, os.path.join(cell_dir, f"part-{uuid.uuid4().hex}.parquet"))
+    scan = T.StructType(
+        [f for f in df.schema if f.name != cell_col] + [df.schema[cell_col]]
     )
+    _save_bytes(df.sparkSession, os.path.join(root, _SCHEMA_FILE), scan.json().encode())
 
 
 def save_ivf_index(index: IVFIndex, path: str) -> None:
     """Persist the index: ``cells/`` holds the corpus PHYSICALLY
     partitioned by cell (``ivf_cell=<c>/``, one parquet file per
-    cell), ``centroids.npy`` the (n_cells, d) float64 centroid matrix,
-    written driver-side (no Spark job).
+    cell, :func:`_write_cells`: on the driver within the driver bound,
+    else a Spark write), ``centroids.npy`` the (n_cells, d) float64
+    centroid matrix, written driver-side (no Spark job).
 
     This is the step that turns cell pruning into *partition* pruning:
     a reloaded index's ``search`` shows the ``ivf_cell IN (...)``
@@ -295,12 +450,15 @@ def save_ivf_index(index: IVFIndex, path: str) -> None:
 def load_ivf_index(
     spark, path: str, vec_col: str = "embedding"
 ) -> IVFIndex:
-    """Reload a saved index: the cell-partitioned corpus scan (lazy,
-    partition-prunable) + ``centroids.npy`` read driver-side (no Spark
-    job)."""
-    assigned = spark.read.parquet(os.path.join(path, "cells"))
+    """Reload a saved index with no Spark job: ``cells/`` is listed
+    once on the driver (each cell's files and bytes, for
+    ``search_batch``'s driver route), its scan schema and
+    ``centroids.npy`` are read driver-side, and ``assigned``, the
+    cell-partitioned corpus scan (partition-prunable), is built on
+    first use."""
+    saved = _SavedCells(spark, os.path.join(path, "cells"))
     centroids = _load_matrix(spark, os.path.join(path, "centroids.npy"))
-    return IVFIndex(assigned, centroids, vec_col)
+    return IVFIndex(None, centroids, vec_col, saved)
 
 
 def _nearest_cells(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
@@ -332,9 +490,6 @@ def assign_to_cells(
     so neither this nor a ``save_ivf_index`` of it starts a Python
     worker. Above it the centroid matrix is broadcast and each Arrow
     batch is assigned on the workers (map-side only)."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
     cents = np.ascontiguousarray(centroids, dtype=np.float64)
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField("ivf_cell", T.IntegerType())]

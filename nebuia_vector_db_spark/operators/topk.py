@@ -35,9 +35,12 @@ Spark-first design notes (scale):
 - Batch kNN under the driver bound runs without Python workers:
   ``knn_join(method='arrow')`` and ``IVFIndex.search_batch`` cut their
   corpus in :func:`_batch_topk`, which collects it with
-  :func:`_driver_corpus` when it fits ``_DRIVER_MAX_BYTES`` and runs
-  :func:`_score_batch` on the driver; a larger corpus goes through
-  :func:`_arrow_topk` and the ``row_number`` window.
+  :func:`_driver_corpus` when it fits ``_DRIVER_MAX_BYTES`` and cuts
+  it on the driver (:func:`_driver_topk`, an Arrow table plus its
+  schema); a larger corpus goes through :func:`_arrow_topk` and the
+  ``row_number`` window. A loaded IVF index hands
+  :func:`_driver_topk` the probed cells' files, read by the driver, with
+  no corpus collect.
 """
 
 from __future__ import annotations
@@ -114,8 +117,9 @@ def _driver_corpus(df: DataFrame) -> pa.Table | None:
     but it undercounts generators (``posexplode``: 2.7 MB estimated for
     8.8 MB of Arrow). The bytes of ``df.inputFiles()`` see the files
     but not joins. ``inputFiles()`` lists before physical partition
-    pruning, so a partitioned scan (a saved IVF index) counts every
-    partition's files, not only the ones it reads. Only local files are
+    pruning, so a partitioned scan counts every partition's files, not
+    only the ones it reads (a loaded IVF index's ``search_batch`` sizes
+    its probed cells from its own listing instead). Only local files are
     sized: an input on another filesystem keeps the Spark route.
     ``toArrow()`` runs the plan in the JVM: no Python worker starts."""
     import pyarrow.fs as pafs
@@ -135,12 +139,12 @@ def _driver_corpus(df: DataFrame) -> pa.Table | None:
 
 
 def _cut_schema(
-    df: DataFrame, drop: Sequence[str], sim_col: str, query_id_col: str
+    schema: T.StructType, drop: Sequence[str], sim_col: str, query_id_col: str
 ) -> T.StructType:
-    """The schema of a batch cut: ``df``'s columns but ``drop``, then
+    """The schema of a batch cut: ``schema``'s columns but ``drop``, then
     ``query_id_col`` (long) and ``sim_col`` (double), parsed from DDL,
     so every field is nullable on both routes."""
-    fields = [(n, t) for n, t in df.dtypes if n not in drop]
+    fields = [(f.name, f.dataType.simpleString()) for f in schema if f.name not in drop]
     fields += [(query_id_col, "long"), (sim_col, "double")]
     return T._parse_datatype_string(", ".join(f"{n} {t}" for n, t in fields))
 
@@ -177,13 +181,11 @@ def _batch_topk(
     (int), the shared tail of ``knn_join(method='arrow')`` and
     ``IVFIndex.search_batch``; the arguments are :func:`_arrow_topk`'s.
 
-    When :func:`_driver_corpus` collects ``df``, the whole table is cut
-    on the driver by :func:`_score_batch`, each query's ≤ k rows
-    contiguous in the D-2 order (``tie_cols`` nulls first), and returned
-    as a local relation: no Python worker, no window. Otherwise
-    :func:`_arrow_topk` cuts each Arrow batch on the workers and the
-    ``row_number`` window (:func:`topk_per_group`) applies the global
-    cut. Both give the same rows, ranks and schema."""
+    When :func:`_driver_corpus` collects ``df``, :func:`_driver_topk`
+    cuts the table on the driver. Otherwise :func:`_arrow_topk` cuts
+    each Arrow batch on the workers and the ``row_number`` window
+    (:func:`topk_per_group`) applies the global cut. Both give the same
+    rows, ranks and schema."""
     table = _driver_corpus(df if len(qids) else df.limit(0))
     if table is None:
         cut = _arrow_topk(
@@ -191,10 +193,34 @@ def _batch_topk(
             tie_cols=tie_cols, cell_queries=cell_queries,
         )
         return topk_per_group(cut, [query_id_col], sim_col, k, tie_cols=tie_cols)
-    schema = _cut_schema(df, drop, sim_col, query_id_col)
+    return _driver_topk(
+        df.sparkSession, table, df.schema, qids, k, scorer, drop, sim_col,
+        query_id_col, tie_cols, cell_queries,
+    )
+
+
+def _driver_topk(
+    spark,
+    table: pa.Table,
+    schema: T.StructType,
+    qids: np.ndarray,
+    k: int,
+    scorer: Callable,
+    drop: Sequence[str],
+    sim_col: str,
+    query_id_col: str,
+    tie_cols: Sequence[str] = (),
+    cell_queries: dict[int, np.ndarray] | None = None,
+) -> DataFrame:
+    """The driver route of :func:`_batch_topk`: the corpus ``table``,
+    whose Spark schema is ``schema``, cut whole by :func:`_score_batch`,
+    each query's ≤ k rows contiguous in the D-2 order (``tie_cols``
+    nulls first) with their rank ``rk``, returned as a local relation:
+    no Python worker, no window."""
+    schema = _cut_schema(schema, drop, sim_col, query_id_col)
     cut = pa.Table.from_arrays(
         _cut_batch(
-            table.combine_chunks(), qids, k, scorer, schema.names[:-2],
+            table, qids, k, scorer, schema.names[:-2],
             tie_cols, "ivf_cell", cell_queries,
         ),
         names=schema.names,
@@ -204,7 +230,7 @@ def _batch_topk(
     cut = cut.append_column("rk", pa.array(rk, pa.int32()))
     # row_number() is non-nullable, so the window route's rk is too
     schema = schema.add("rk", T.IntegerType(), nullable=False)
-    return df.sparkSession.createDataFrame(cut, schema=schema)
+    return spark.createDataFrame(cut, schema=schema)
 
 
 def _arrow_topk(
@@ -233,7 +259,7 @@ def _arrow_topk(
     against its cell's queries. The caller applies the global cut.
     """
     df = df if len(qids) else df.limit(0)  # an empty batch scans nothing
-    schema = _cut_schema(df, drop, sim_col, query_id_col)
+    schema = _cut_schema(df.schema, drop, sim_col, query_id_col)
     names = schema.names
 
     def _score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -46,8 +46,10 @@ derives ``n_files``/``n_rows`` and carries the parent's application
 metadata forward.
 
 Two writers make data files: a DataFrame goes through Spark's parquet
-writer, and a ``pyarrow.Table`` (the engine's ``store``) is written on
-the driver as one file, with no Spark job. Both take their manifest
+writer, and a ``pyarrow.Table`` (the engine's ``store``), or a list of
+them (the driver route of ``store_dataframe``, one table per
+collection), is written on the driver one file per table
+(:func:`write_parquet`), with no Spark job. Both take their manifest
 entry from the new file's footer (``_file_entry``).
 
 Scale properties:
@@ -84,6 +86,7 @@ import time
 import uuid
 from collections.abc import Callable
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -325,30 +328,25 @@ class SnapshotTable:
         return [json.loads(s) for s in table.column("entry").to_pylist()]
 
     def _write_files(
-        self, data: DataFrame | pa.Table, stats_cols: list[str] | None = None
+        self,
+        data: DataFrame | pa.Table | list[pa.Table],
+        stats_cols: list[str] | None = None,
     ) -> list[dict]:
         """Write ``data`` as a new immutable commit dir; return its
         manifest entries (:meth:`_file_entry`). A DataFrame goes through
         Spark's parquet writer. A ``pyarrow.Table`` is written on the
-        driver as one file, with no Spark job, and an empty table writes
-        no file."""
+        driver as one file, and a list of tables as one file per table,
+        with no Spark job; an empty table writes no file."""
         stats_cols = stats_cols or self._default_stats_cols(_spark_schema(data))
         commit_id = uuid.uuid4().hex
         out_dir = os.path.join(self._data_dir, commit_id)
-        if isinstance(data, pa.Table):
-            if data.num_rows == 0:
+        if isinstance(data, (pa.Table, list)):
+            tables = [t for t in _tables(data) if t.num_rows]
+            if not tables:
                 return []
             os.makedirs(out_dir)
-            # no dictionary pages: float vectors are near-unique, and a
-            # dictionary only adds to them (Spark's writer falls back).
-            # No float statistics: a pyarrow footer leaves NaN out of a
-            # float min/max, and Spark's row-group pushdown would then
-            # skip NaN rows that Spark orders above every number
-            pq.write_table(
-                data, os.path.join(out_dir, "part-00000.parquet"),
-                use_dictionary=False,
-                write_statistics=_non_float_leaves(data.schema),
-            )
+            for i, t in enumerate(tables):
+                write_parquet(t, os.path.join(out_dir, f"part-{i:05d}.parquet"))
         else:
             data.write.mode("error").parquet(out_dir)
         return [
@@ -600,15 +598,16 @@ class SnapshotTable:
 
     def append(
         self,
-        df: DataFrame | pa.Table,
+        df: DataFrame | pa.Table | list[pa.Table],
         stats_cols: list[str] | None = None,
         extra_meta: dict | None = None,
         merge_schema: bool = False,
         expected_parent: int | None = None,
     ) -> int:
         """Append ``df`` as new immutable files: a DataFrame through
-        Spark's writer, a ``pyarrow.Table`` as one file written on the
-        driver with no Spark job (:meth:`_write_files`). With ``merge_schema``,
+        Spark's writer, a ``pyarrow.Table`` (or a list of them) as one
+        file per table written on the driver with no Spark job
+        (:meth:`_write_files`). With ``merge_schema``,
         columns present in ``df`` but not the table are ADDED to the
         table schema (additive evolution, the lakehouse
         ``mergeSchema`` contract): existing files are untouched — the
@@ -1110,18 +1109,53 @@ def _non_float_leaves(schema: pa.Schema) -> list[str]:
     return out
 
 
-def _spark_schema(data: DataFrame | pa.Table) -> T.StructType:
-    if isinstance(data, pa.Table):
-        return from_arrow_schema(data.schema)
+def write_parquet(table: pa.Table, path: str) -> None:
+    """Write ``table`` as one parquet file on the driver, as Spark can
+    read it back: no dictionary pages, since float vectors are
+    near-unique and a dictionary only adds to them (Spark's writer
+    falls back), and no float statistics, since a pyarrow footer leaves
+    NaN out of a float min/max and Spark's row-group pushdown would
+    then skip NaN rows that Spark orders above every number."""
+    pq.write_table(
+        table, path,
+        use_dictionary=False,
+        write_statistics=_non_float_leaves(table.schema),
+    )
+
+
+def split_by(table: pa.Table, codes: np.ndarray) -> list[tuple[int, pa.Table]]:
+    """``table`` cut into one part per value of ``codes`` (an integer
+    code per row): ``(code, rows)`` pairs in code order, each part a
+    zero-copy slice. The rows are sorted by code first (one copy) only
+    when equal codes are not already adjacent in ascending order."""
+    order = np.argsort(codes, kind="stable")
+    if (order != np.arange(len(order))).any():
+        table, codes = table.take(order), codes[order]
+    ids, starts, counts = np.unique(codes, return_index=True, return_counts=True)
+    return [
+        (c, table.slice(lo, n))
+        for c, lo, n in zip(ids.tolist(), starts.tolist(), counts.tolist())
+    ]
+
+
+def _tables(data: pa.Table | list[pa.Table]) -> list[pa.Table]:
+    return [data] if isinstance(data, pa.Table) else list(data)
+
+
+def _spark_schema(data: DataFrame | pa.Table | list[pa.Table]) -> T.StructType:
+    if isinstance(data, (pa.Table, list)):
+        return from_arrow_schema(_tables(data)[0].schema)
     return data.schema
 
 
 def _align(
-    df: DataFrame | pa.Table, schema: T.StructType
-) -> DataFrame | pa.Table:
+    df: DataFrame | pa.Table | list[pa.Table], schema: T.StructType
+) -> DataFrame | pa.Table | list[pa.Table]:
     """Project/cast df to the table schema (column order + types)."""
     if isinstance(df, pa.Table):
         return df.select(schema.fieldNames()).cast(to_arrow_schema(schema))
+    if isinstance(df, list):
+        return [_align(t, schema) for t in df]
     return df.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )

@@ -7,6 +7,7 @@ The tests that take ``on_route`` run on the driver route and again, in
 from __future__ import annotations
 
 import inspect
+import os
 
 import numpy as np
 import pytest
@@ -101,7 +102,7 @@ def test_saved_ivf_index_search_prunes_partitions(spark, sf_oracle, tmp_path_fac
     assert {r["vec_id"] for r in got.collect()} == want
 
 
-def test_saved_cells_hold_one_file_per_cell(spark, sf_oracle, tmp_path):
+def test_saved_cells_hold_one_file_per_cell(spark, sf_oracle, tmp_path, on_route):
     """save_ivf_index writes each cell as one parquet file, whatever the
     corpus partitioning, and append_to_ivf_index adds at most one file
     to each cell it touches."""
@@ -380,14 +381,16 @@ def test_deterministic_ivf_build_is_bit_stable(spark, sf_oracle):
 
 
 def test_saved_index_search_batch_prunes_partitions(
-    spark, sf_oracle, tmp_path_factory, monkeypatch, on_route
+    spark, sf_oracle, tmp_path_factory, monkeypatch, on_route, request
 ):
-    """Persisted index + BATCH search: the union-of-probed-cells
-    filter must reach the scan as a PartitionFilter — at scale the
-    batch pays for |union| cells' files, not the corpus. The driver
-    route collects that pruned scan; the Spark route plans it under
-    its MapInArrow."""
+    """Persisted index + BATCH search reads only the union of the
+    probed cells — at scale the batch pays for |union| cells' files,
+    not the corpus. The driver route reads exactly those cells' files
+    with pyarrow; on the Spark route the cell filter reaches the scan
+    under its MapInArrow as a PartitionFilter."""
     import re
+
+    import pyarrow.parquet as pq
 
     from nebuia_vector_db_spark.operators import topk
     from nebuia_vector_db_spark.operators.ann import (
@@ -409,16 +412,34 @@ def test_saved_index_search_batch_prunes_partitions(
             F.col("embedding").cast("array<double>").alias("query_vec"),
         )
     )
-    scans = []
-    driver_corpus = topk._driver_corpus
+    scans, reads = [], []
+    driver_corpus, read_table = topk._driver_corpus, pq.read_table
     monkeypatch.setattr(
         topk, "_driver_corpus", lambda df: scans.append(df) or driver_corpus(df)
     )
+    monkeypatch.setattr(
+        pq, "read_table", lambda path, **kw: reads.append(path) or read_table(path, **kw)
+    )
     got = on_route(loaded.search_batch(queries, 5, nprobe=2, tie_cols=["vec_id"]))
     monkeypatch.setattr(topk, "_driver_corpus", driver_corpus)
-    plan = explain_str(scans[0])
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "ivf_cell" in m.group(1), plan
+    monkeypatch.setattr(pq, "read_table", read_table)
+    if getattr(request.cls, "route", "driver") == "spark":
+        plan = explain_str(scans[0])
+        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert m and "ivf_cell" in m.group(1), plan
+    else:
+        probed = {
+            c for r in queries.collect() for c in loaded.probe_cells(r["query_vec"], 2)
+        }
+        cells = os.path.join(path, "cells")
+        files_of = {
+            c: {os.path.join(cells, f"ivf_cell={c}", f)
+                for f in os.listdir(os.path.join(cells, f"ivf_cell={c}"))
+                if f.endswith(".parquet")}
+            for c in range(8)
+        }
+        assert scans == [] and len(probed) < 8
+        assert sorted(reads) == sorted(f for c in probed for f in files_of[c])
     # and the results agree with the in-memory index's batch search
     want = {
         (r["query_id"], r["vec_id"], r["rk"])
@@ -429,6 +450,81 @@ def test_saved_index_search_batch_prunes_partitions(
     assert {
         (r["query_id"], r["vec_id"], r["rk"]) for r in got.collect()
     } == want
+
+
+def _cell_rows(spark, path):
+    """Each saved cell's rows, read back through Spark, as a sorted
+    list of (vec_id, embedding) tuples."""
+    import glob
+
+    out = {}
+    for d in glob.glob(os.path.join(path, "cells", "ivf_cell=*")):
+        rows = spark.read.parquet(d).select("vec_id", "embedding").collect()
+        out[os.path.basename(d)] = sorted((r[0], tuple(r[1])) for r in rows)
+    return out
+
+
+def test_save_routes_write_the_same_cells(spark, sf_oracle, tmp_path, monkeypatch, spark_jobs):
+    """Within the driver bound save_ivf_index writes the cells with
+    pyarrow (no Spark write) in Spark's ``partitionBy`` layout, with
+    the same rows per cell as the Spark route, and load_ivf_index runs
+    no Spark job on either index."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from nebuia_vector_db_spark.operators import topk
+    from nebuia_vector_db_spark.operators.ann import load_ivf_index, save_ivf_index
+
+    index = build_ivf_index(_emb(spark, sf_oracle), n_cells=8)
+    writes = []
+    parquet = DataFrameWriter.parquet
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet",
+        lambda self, *a, **kw: writes.append(a) or parquet(self, *a, **kw),
+    )
+    save_ivf_index(index, str(tmp_path / "driver"))
+    assert writes == []
+    monkeypatch.setattr(topk, "_DRIVER_MAX_BYTES", 0)
+    save_ivf_index(index, str(tmp_path / "spark"))
+    assert len(writes) == 1
+    monkeypatch.undo()
+    driver = _cell_rows(spark, str(tmp_path / "driver"))
+    sparked = _cell_rows(spark, str(tmp_path / "spark"))
+    assert len(driver) == 8 and driver == sparked
+    for route in ("driver", "spark"):
+        path = str(tmp_path / route)
+        loaded, jobs, _ = spark_jobs(lambda: load_ivf_index(spark, path))
+        assert jobs == 0
+        # the schema Spark infers from the cells
+        assert loaded.assigned.schema == spark.read.parquet(f"{path}/cells").schema
+
+
+def test_index_of_an_empty_corpus_loads(spark, sf_oracle, tmp_path, on_route):
+    """An index saved from a corpus with no rows loads, and its searches
+    return 0 rows in the usual schema."""
+    from nebuia_vector_db_spark.operators.ann import (
+        build_ivf_index_deterministic,
+        load_ivf_index,
+        save_ivf_index,
+    )
+
+    emb = _emb(spark, sf_oracle)
+    sample = np.array([r["embedding"] for r in emb.limit(16).collect()])
+    full = build_ivf_index_deterministic(emb, 4, sample, seed=3)
+    empty = build_ivf_index_deterministic(
+        spark.createDataFrame(emb.limit(0).toArrow(), emb.schema), 4, sample, seed=3
+    )
+    save_ivf_index(empty, str(tmp_path / "ivf"))
+    loaded = load_ivf_index(spark, str(tmp_path / "ivf"))
+    assert np.array_equal(loaded.centroids, full.centroids)
+    queries = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("query_vec"),
+    )
+    batch = loaded.search_batch(queries, 5, nprobe=2, tie_cols=["vec_id"])
+    single = loaded.search(sample[0].tolist(), 5, nprobe=2, tie_cols=["vec_id"])
+    assert batch.collect() == [] and single.collect() == []
+    assert batch.schema == full.search_batch(queries, 5, nprobe=2, tie_cols=["vec_id"]).schema
+    assert single.schema == full.search(sample[0].tolist(), 5, nprobe=2).schema
 
 
 # centroid similarities [1, 0, 0, 0.6] for the query [1, 0]: cells 1

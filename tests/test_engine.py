@@ -471,6 +471,61 @@ def test_driver_store_reads_back_like_store_dataframe(spark, tmp_path):
     assert len(set(ids)) == 3 and all(len(i) == 36 for i in ids)
 
 
+def test_bulk_load_within_the_bound_writes_one_file_per_collection(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """``store_dataframe`` of an Arrow-built DataFrame within the driver
+    bound runs one Spark job (the JVM collect) and no Spark write. It
+    commits once, one driver-written file per collection, null
+    collections in a file of their own, and its rows equal the Spark
+    route's in every column."""
+    import pyarrow as pa
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from nebuia_vector_db_spark.engine import _DOCUMENT_ARROW
+
+    chunk = {"text": "t", "embedding": [1.0, -2.5], "metadata": {"source": "s", "name": "n"},
+             "semantic_score": 0.25}
+    docs = [
+        {"collection": c, "doc_id": f"id{i}", "text": f"d{i}",
+         "metadata": {"source": None, "name": f"n{i}"}, "chunks": [chunk] * (i % 3)}
+        for i, c in enumerate(["a", "b", None, "a", None, "c", "b"])
+    ]
+    bulk = spark.createDataFrame(pa.Table.from_pylist(docs, schema=_DOCUMENT_ARROW))
+    writes = []
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", lambda self, *a, **kw: writes.append(a)
+    )
+    eng = VectorEngine(spark, str(tmp_path / "driver"), dim=2)
+    _, jobs, stages = spark_jobs(lambda: eng.store_dataframe(bulk))
+    assert (jobs, stages, writes) == (1, 1, [])
+    monkeypatch.undo()
+    assert eng.table.versions() == [1, 2]
+    files = eng.table._snapshot()["files"]
+    by_name = {f["stats"].get("collection", [None])[0]: f for f in files}
+    assert len(files) == 4 and set(by_name) == {"a", "b", "c", None}
+    assert [by_name[c]["rows"] for c in ("a", "b", "c", None)] == [2, 2, 1, 2]
+    assert by_name[None]["nulls"]["collection"] == 2
+    assert all(by_name[c]["nulls"]["collection"] == 0 for c in "abc")
+    assert all(by_name[c]["stats"]["collection"] == [c, c] for c in "abc")
+
+    monkeypatch.setattr(topk_module, "_DRIVER_MAX_BYTES", 0)
+    sparked = VectorEngine(spark, str(tmp_path / "spark"), dim=2)
+    sparked.store_dataframe(bulk)
+
+    def rows(e):
+        return sorted(
+            (r.asDict(recursive=True) for r in e.documents().collect()), key=repr
+        )
+
+    assert rows(eng) == rows(sparked)
+    assert eng.documents().schema == sparked.documents().schema
+    assert eng.delete_collection("a")["deleted"] is True
+    assert sorted(r.doc_id for r in eng.documents().collect()) == [
+        "id1", "id2", "id4", "id5", "id6"
+    ]
+
+
 def test_null_collection_row_survives_delete_of_its_file(spark, tmp_path):
     """A file whose ``collection`` stats are [x, x] may still hold a
     null ``collection`` (min/max ignore nulls): its null count keeps it

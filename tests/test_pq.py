@@ -1,7 +1,12 @@
 """Product quantization (operators/pq.py): encode shape/determinism,
-ADC approximation quality, and exact-rerank recovery."""
+ADC approximation quality, and exact-rerank recovery.
+
+The save/load tests take ``on_route``: they run with the cells written
+on the driver and again, in ``TestSparkRoute``, by a Spark write."""
 
 from __future__ import annotations
+
+import inspect
 
 import numpy as np
 import pytest
@@ -146,7 +151,7 @@ def test_ivfpq_residual_encoding_on_clustered_data(spark):
     assert pruned == want
 
 
-def test_save_load_roundtrip_same_results(spark, tmp_path):
+def test_save_load_roundtrip_same_results(spark, tmp_path, on_route):
     import numpy as np
     import pandas as pd
 
@@ -178,7 +183,7 @@ def test_save_load_roundtrip_same_results(spark, tmp_path):
     assert (loaded.codebooks == pq.codebooks).all()
 
 
-def test_pq_append_equals_full_reencode(spark, sf_oracle, tmp_path_factory):
+def test_pq_append_equals_full_reencode(spark, sf_oracle, tmp_path_factory, on_route):
     """Incremental PQ: save(encode(A)) + append(B) holds the same
     codes as encode(A∪B) with the same codebooks/centroids, and a
     search over the appended index matches the full one."""
@@ -237,7 +242,7 @@ def test_pq_append_equals_full_reencode(spark, sf_oracle, tmp_path_factory):
     emb.unpersist()
 
 
-def test_saved_codes_hold_one_file_per_cell(spark, sf_oracle, tmp_path):
+def test_saved_codes_hold_one_file_per_cell(spark, sf_oracle, tmp_path, on_route):
     """save_pq_index writes each cell's codes as one parquet file,
     whatever the corpus partitioning, and append_to_pq_index adds at
     most one file to each cell it touches."""
@@ -281,7 +286,7 @@ def test_search_rejects_tie_columns_outside_the_codes(pq_index):
         idx.search(emb, [0.125] * 64, 5, tie_cols=["text"])
 
 
-def test_load_pq_index_raises_on_damaged_centroid_file(spark, sf_oracle, tmp_path):
+def test_load_pq_index_raises_on_damaged_centroid_file(spark, sf_oracle, tmp_path, on_route):
     """A damaged saved matrix is an error, never a silent fall back to
     a flat (centroid-less) index."""
     from py4j.protocol import Py4JJavaError
@@ -581,7 +586,7 @@ def test_opq_beats_pq_on_anisotropic_corpus(spark):
     assert mean_opq > mean_pq + 0.05, (mean_pq, mean_opq)
 
 
-def test_opq_save_load_roundtrip_preserves_rotation(spark, sf_oracle, tmp_path):
+def test_opq_save_load_roundtrip_preserves_rotation(spark, sf_oracle, tmp_path, on_route):
     from nebuia_vector_db_spark.operators.pq import (
         load_pq_index,
         save_pq_index,
@@ -659,3 +664,16 @@ def test_eigen_init_beats_identity_init_on_anisotropic_mse():
     mse_id = _mse(np.eye(d))
     mse_eig = _mse(_eigen_allocation_rotation(x, m))
     assert mse_eig < 0.7 * mse_id, (mse_eig, mse_id)
+
+
+class TestSparkRoute:
+    """The ``on_route`` tests again, with every cell written by Spark."""
+
+    route = "spark"
+
+
+for _test in [
+    f for name, f in list(globals().items())
+    if name.startswith("test_") and "on_route" in inspect.signature(f).parameters
+]:
+    setattr(TestSparkRoute, _test.__name__, staticmethod(_test))

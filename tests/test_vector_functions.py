@@ -1,6 +1,9 @@
+import numpy as np
+import pyarrow as pa
 import pytest
 
 from nebuia_vector_db_spark.functions.vector import (
+    arrow_list_to_matrix,
     cosine_sim,
     dot,
     l2_norm,
@@ -67,3 +70,21 @@ def test_limit_blas_threads_restores_prior_count():
         assert get() == 2
     finally:
         set_(original)
+
+
+def test_arrow_list_to_matrix_keeps_rows_of_width_zero():
+    """Width-0 lists decode to (n, 0), not (0, 0): a kernel indexes
+    the matrix by row."""
+    col = pa.array([[], [], []], pa.list_(pa.float64()))
+    for c in (col, col.slice(1)):
+        mat = arrow_list_to_matrix(c)
+        assert mat.shape == (len(c), 0) and mat.dtype == np.float64
+
+
+def test_arrow_list_to_matrix_decodes_a_sliced_fixed_size_list():
+    """A sliced FixedSizeListArray decodes its own rows: ``values``
+    ignores the slice offset."""
+    col = pa.FixedSizeListArray.from_arrays(pa.array([1.0, 2, 3, 4, 5, 6]), 2)
+    assert arrow_list_to_matrix(col.slice(1)).tolist() == [[3.0, 4.0], [5.0, 6.0]]
+    assert arrow_list_to_matrix(col.slice(1, 1)).tolist() == [[3.0, 4.0]]
+    assert arrow_list_to_matrix(pa.array([[1.0, 2], [3, 4], [5, 6]]).slice(2)).tolist() == [[5.0, 6.0]]

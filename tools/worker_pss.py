@@ -13,10 +13,14 @@ the peak resident size (VmHWM), and the Python total.
 
 Then it prints the route each path took: ``driver`` when its corpus
 fits the driver bound (``topk._driver_corpus``: the JVM collects it and
-the driver scores it, so no Python worker runs the kernel) or ``spark``
-(a ``mapInArrow`` kernel on Python workers). The Python workers that
-remain on the driver route only unpickle the query rows of the
-Python-list query DataFrame.
+the driver scores it, or, for the saved index's ``search_batch``, the
+driver reads the probed cells' files itself, so no Python worker runs
+the kernel) or ``spark`` (a ``mapInArrow`` kernel on Python workers).
+The Python workers that remain on the driver route only unpickle the
+query rows of the Python-list query DataFrame. Beside the routes it
+prints the Spark jobs, stages and wall time of each set-up step:
+``store`` (``store_dataframe``), ``build``
+(``build_ivf_index_deterministic``), ``save`` and ``load``.
 
 Last, it prints the GEMM work per batch of each path, in GFLOP
 (2 · rows · d · queries, summed over the products the kernel runs):
@@ -92,6 +96,56 @@ def print_memory() -> None:
     print(f"{'python total':<24}{py_pss:>10.1f}")
 
 
+SETUP_STEPS = {
+    "store": "store_dataframe",
+    "build": "build_ivf_index_deterministic",
+    "save": "save_ivf_index",
+    "load": "load_ivf_index",
+}
+
+
+def time_setup_steps(spark) -> dict[str, float]:
+    """Wrap each set-up step of ``SETUP_STEPS`` so it runs in its own
+    Spark job group, ``setup-<step>``, and return the dict its wall
+    times (seconds) go into."""
+    import time
+
+    import workloads
+
+    from nebuia_vector_db_spark.engine import VectorEngine
+
+    sc, wall = spark.sparkContext, {}
+
+    def timed(step, fn):
+        def run(*args, **kwargs):
+            sc.setJobGroup(f"setup-{step}", step)
+            t = time.perf_counter()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                wall[step] = time.perf_counter() - t
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        return run
+
+    for step, name in SETUP_STEPS.items():
+        owner = VectorEngine if name == "store_dataframe" else workloads
+        setattr(owner, name, timed(step, getattr(owner, name)))
+    return wall
+
+
+def print_setup(spark, wall: dict[str, float]) -> None:
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+    time.sleep(1.0)  # let the listener see the last jobs
+    print(f"{'set-up step':<16}{'jobs':>6}{'stages':>8}{'wall s':>9}")
+    for step in SETUP_STEPS:
+        ids = tracker.getJobIdsForGroup(f"setup-{step}")
+        stages = sum(len(tracker.getJobInfo(j).stageIds) for j in ids if tracker.getJobInfo(j))
+        print(f"  {step:<14}{len(ids):>6}{stages:>8}{wall.get(step, float('nan')):>9.2f}")
+
+
 def print_routes(wl) -> None:
     import workloads
 
@@ -155,6 +209,7 @@ def main(argv=None) -> int:
                 size=workloads.SIZES["full"]["batch_knn"],
             )
             wl = workloads.BatchKnn(ctx)
+            wall = time_setup_steps(spark)
             wl.setup()
             loop = workloads.Loop(ctx)
             wl.done = [wl.batch(loop, 0, b) for b in range(args.batches)]
@@ -163,6 +218,7 @@ def main(argv=None) -> int:
             print(f"batches {args.batches}, failed checks {loop.failed}, "
                   f"recall@10 {workloads.mean(wl.recalls):.5f}")
             print_routes(wl)
+            print_setup(spark, wall)
             print_gemm(wl, args.batches)
             wl.teardown()
         finally:
