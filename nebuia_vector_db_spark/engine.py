@@ -18,7 +18,10 @@ The Spark route of ``store_dataframe`` writes files as its DataFrame is
 partitioned, so such a file is pruned only when its stats allow it.
 The whole-document GET+decode (main.go:277-292) becomes a columnar
 scan that reads only ``chunks.embedding`` + the projected fields. The
-warehouse is a local-disk path.
+warehouse is on local disk, named by a plain path (taken as it stands)
+or a ``file:`` URI (percent-decoded); any other scheme, such as
+``s3a://`` or ``hdfs://``, raises ``ValueError`` before a file is
+written (``snapshot.local_path``, the one rule the index files share).
 
 Writes run no Spark job: ``store`` builds one Arrow table and the
 table writes it as one parquet file on the driver, and

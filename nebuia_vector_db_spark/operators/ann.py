@@ -15,11 +15,13 @@ index as a *batch* job and keep serving batch-style too:
   candidate pruning becomes *partition* pruning, the same mechanism
   that makes collection-scoped search cheap (SURVEY.md §2.1 O-2) —
   plus its scan schema (``cells/_schema.json``), and ``centroids.npy``
-  the centroid matrix, written and read driver-side through the Hadoop
-  FileSystem API (no Spark job). Within the one driver bound
-  (``topk._DRIVER_MAX_BYTES``) on a local filesystem the driver writes
-  the cells with pyarrow after one JVM collect; otherwise Spark writes
-  them. Either way the layout is the same.
+  the centroid matrix, both plain files written and read on the driver
+  (no Spark job). An index path is local: a plain path or a ``file:``
+  URI (``snapshot.local_path``, the warehouse's rule); any other scheme
+  raises ``ValueError``. Within the one driver bound
+  (``topk._DRIVER_MAX_BYTES``) the driver writes the cells with pyarrow
+  after one JVM collect; otherwise Spark writes them. Either way the
+  layout is the same.
 - **Load** (``load_ivf_index``): no Spark job. The cell directories are
   listed once on the driver (cell → files and bytes, the per-partition
   metadata a coordinator keeps so a query opens only the partitions it
@@ -48,13 +50,11 @@ matrix lives on the driver (n_cells × d floats — 4 MB at 16k cells ×
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
-from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -80,7 +80,7 @@ from nebuia_vector_db_spark.operators.topk import (
     topk_search,
 )
 from nebuia_vector_db_spark.sources.snapshot import (
-    _strip_scheme,
+    local_path,
     split_by,
     write_parquet,
 )
@@ -116,20 +116,21 @@ def _cell_queries(cell_sims: np.ndarray, nprobe: int) -> dict[int, np.ndarray]:
 
 
 class _SavedCells:
-    """A saved index's cell directory, ``root``, listed once on the
-    driver: the scan schema (the cell column last, where Spark's
-    partition discovery puts it) and, on a local filesystem, each
-    cell's parquet files with their bytes (``files``, ``None``
-    elsewhere). No Spark job."""
+    """A saved index's cell directory, the local path ``root``, listed
+    once on the driver: the scan schema (the cell column last, where
+    Spark's partition discovery puts it) and each cell's parquet files
+    with their bytes (``files``). With the schema file, no Spark job;
+    without it (an index saved before the file existed, or plain PQ
+    codes) Spark infers the schema."""
 
     def __init__(self, spark, root: str, cell_col: str = "ivf_cell"):
         self.spark, self.root, self.cell_col = spark, root, cell_col
-        raw = _load_bytes(spark, os.path.join(root, _SCHEMA_FILE), missing_ok=True)
-        # an index saved without the schema file: Spark infers it
-        self.schema = (
-            spark.read.parquet(root).schema if raw is None
-            else T.StructType.fromJson(json.loads(raw))
-        )
+        schema_file = os.path.join(root, _SCHEMA_FILE)
+        if os.path.exists(schema_file):
+            with open(schema_file, encoding="utf-8") as f:
+                self.schema = T.StructType.fromJson(json.load(f))
+        else:
+            self.schema = spark.read.parquet(root).schema
         self.files = _list_cells(root, cell_col)
 
     def scan(self) -> DataFrame:
@@ -152,22 +153,12 @@ class _SavedCells:
         return pa.concat_tables(parts)
 
 
-def _local_dir(path: str) -> str | None:
-    """``path`` as a local directory, or ``None`` on another
-    filesystem: the driver reads and writes only local files."""
-    scheme = urlparse(path).scheme
-    return _strip_scheme(path) if scheme in ("", "file") else None
-
-
-def _list_cells(root: str, cell_col: str) -> dict[int, list[tuple[str, int]]] | None:
+def _list_cells(root: str, cell_col: str) -> dict[int, list[tuple[str, int]]]:
     """Each ``<cell_col>=<c>/`` directory under ``root`` mapped to its
     data files' ``(path, bytes)``, skipping the ``_``/``.`` names Spark
-    skips too; ``None`` when ``root`` is not local."""
-    local = _local_dir(root)
-    if local is None:
-        return None
+    skips too."""
     prefix, out = f"{cell_col}=", {}
-    for d in os.scandir(local) if os.path.isdir(local) else []:
+    for d in os.scandir(root) if os.path.isdir(root) else []:
         if d.is_dir() and d.name.startswith(prefix):
             out[int(d.name[len(prefix):])] = sorted(
                 (f.path, f.stat().st_size)
@@ -295,7 +286,7 @@ class IVFIndex:
             [vec_col, "ivf_cell"], sim_col, query_id_col, tie_cols, cell_queries,
         )
         saved = self.saved
-        if saved is not None and saved.files is not None:
+        if saved is not None:
             probed = sum(b for c in cell_queries for _, b in saved.files.get(c, []))
             if probed <= topk._DRIVER_MAX_BYTES:
                 return _driver_topk(
@@ -339,51 +330,17 @@ def build_ivf_index(
     return IVFIndex(assigned, centroids, vec_col)
 
 
-def _matrix_file(spark, path: str):
-    """(FileSystem, Path) of ``path`` through the Hadoop FileSystem
-    API, so any scheme the cluster can write to (HDFS, S3A, local
-    file) works."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _save_bytes(spark, path: str, data: bytes) -> None:
-    """Write one driver-side file: no Spark job."""
-    fs, jpath = _matrix_file(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(data)
-    finally:
-        out.close()
-
-
-def _load_bytes(spark, path: str, missing_ok: bool = False) -> bytes | None:
-    """Read a :func:`_save_bytes` file; ``None`` when it is absent and
-    ``missing_ok``."""
-    fs, jpath = _matrix_file(spark, path)
-    if missing_ok and not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    try:
-        return bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-
-
-def _save_matrix(spark, path: str, mat: np.ndarray) -> None:
+def _save_matrix(path: str, mat: np.ndarray) -> None:
     """Write one driver-side matrix as a ``.npy`` file: no Spark job."""
-    buf = io.BytesIO()
-    np.save(buf, np.ascontiguousarray(mat), allow_pickle=False)
-    _save_bytes(spark, path, buf.getvalue())
+    np.save(path, np.ascontiguousarray(mat), allow_pickle=False)
 
 
-def _load_matrix(
-    spark, path: str, missing_ok: bool = False
-) -> np.ndarray | None:
+def _load_matrix(path: str, missing_ok: bool = False) -> np.ndarray | None:
     """Read a :func:`_save_matrix` file; ``None`` when it is absent and
     ``missing_ok``. A damaged file raises."""
-    data = _load_bytes(spark, path, missing_ok)
-    return None if data is None else np.load(io.BytesIO(data), allow_pickle=False)
+    if missing_ok and not os.path.exists(path):
+        return None
+    return np.load(path, allow_pickle=False)
 
 
 def _write_cells(
@@ -393,36 +350,36 @@ def _write_cells(
     subdir: str = "cells",
     cell_col: str = "ivf_cell",
 ) -> None:
-    """Write ``df`` under ``path/subdir``, partitioned by ``cell_col``
-    (``<cell_col>=<c>/``, the layout of Spark's ``partitionBy``), one
-    file per cell, and the scan schema beside the cells
-    (``_schema.json``), so an index without rows loads too. The IVF
-    corpus (``cells/``) and the IVF-PQ codes (``codes/``) are both
+    """Write ``df`` under the local ``path/subdir``, partitioned by
+    ``cell_col`` (``<cell_col>=<c>/``, the layout of Spark's
+    ``partitionBy``), one file per cell, and the scan schema beside the
+    cells (``_schema.json``), so an index without rows loads too. The
+    IVF corpus (``cells/``) and the IVF-PQ codes (``codes/``) are both
     written this way.
 
-    Within the driver bound (``topk._driver_corpus``) and on a local
-    filesystem, the JVM collects ``df`` and the driver writes each cell
-    with pyarrow: ``"overwrite"`` replaces ``subdir``, ``"append"``
-    adds a uniquely named file to each cell. Otherwise rows are
-    shuffled by the cell so each cell lands in one Spark writer task."""
+    Within the driver bound (``topk._driver_corpus``) the JVM collects
+    ``df`` and the driver writes each cell with pyarrow:
+    ``"overwrite"`` replaces ``subdir``, ``"append"`` adds a uniquely
+    named file to each cell. Otherwise rows are shuffled by the cell so
+    each cell lands in one Spark writer task."""
     root = os.path.join(path, subdir)
-    local = _local_dir(root)
-    table = None if local is None else _driver_corpus(df)
+    table = _driver_corpus(df)
     if table is None:
         df.repartition(cell_col).write.partitionBy(cell_col).mode(mode).parquet(root)
     else:
         if mode == "overwrite":
-            shutil.rmtree(local, ignore_errors=True)
-        os.makedirs(local, exist_ok=True)
+            shutil.rmtree(root, ignore_errors=True)
+        os.makedirs(root, exist_ok=True)
         cells = table.column(cell_col).to_numpy()
         for c, rows in split_by(table.drop_columns([cell_col]), cells):
-            cell_dir = os.path.join(local, f"{cell_col}={c}")
+            cell_dir = os.path.join(root, f"{cell_col}={c}")
             os.makedirs(cell_dir, exist_ok=True)
             write_parquet(rows, os.path.join(cell_dir, f"part-{uuid.uuid4().hex}.parquet"))
     scan = T.StructType(
         [f for f in df.schema if f.name != cell_col] + [df.schema[cell_col]]
     )
-    _save_bytes(df.sparkSession, os.path.join(root, _SCHEMA_FILE), scan.json().encode())
+    with open(os.path.join(root, _SCHEMA_FILE), "w", encoding="utf-8") as f:
+        f.write(scan.json())
 
 
 def save_ivf_index(index: IVFIndex, path: str) -> None:
@@ -430,7 +387,9 @@ def save_ivf_index(index: IVFIndex, path: str) -> None:
     partitioned by cell (``ivf_cell=<c>/``, one parquet file per
     cell, :func:`_write_cells`: on the driver within the driver bound,
     else a Spark write), ``centroids.npy`` the (n_cells, d) float64
-    centroid matrix, written driver-side (no Spark job).
+    centroid matrix, written driver-side (no Spark job). ``path`` is a
+    local path or ``file:`` URI (``snapshot.local_path``); any other
+    scheme raises ``ValueError`` before anything is written.
 
     This is the step that turns cell pruning into *partition* pruning:
     a reloaded index's ``search`` shows the ``ivf_cell IN (...)``
@@ -439,12 +398,9 @@ def save_ivf_index(index: IVFIndex, path: str) -> None:
     100 TB that is the difference between scanning nprobe/n_cells of
     the corpus and scanning all of it to filter.
     """
+    path = local_path(path)
     _write_cells(index.assigned, path, "overwrite")
-    _save_matrix(
-        index.assigned.sparkSession,
-        os.path.join(path, "centroids.npy"),
-        index.centroids,
-    )
+    _save_matrix(os.path.join(path, "centroids.npy"), index.centroids)
 
 
 def load_ivf_index(
@@ -456,9 +412,9 @@ def load_ivf_index(
     ``centroids.npy`` are read driver-side, and ``assigned``, the
     cell-partitioned corpus scan (partition-prunable), is built on
     first use."""
+    path = local_path(path)
     saved = _SavedCells(spark, os.path.join(path, "cells"))
-    centroids = _load_matrix(spark, os.path.join(path, "centroids.npy"))
-    return IVFIndex(None, centroids, vec_col, saved)
+    return IVFIndex(None, _load_matrix(os.path.join(path, "centroids.npy")), vec_col, saved)
 
 
 def _nearest_cells(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
@@ -530,6 +486,7 @@ def append_to_ivf_index(
     when the max/median ratio passes ~4× — the retrain is the same
     batch build, swapped in atomically by writing to a fresh path.
     """
+    path = local_path(path)
     idx = load_ivf_index(spark, path, vec_col)
     new_cells = assign_to_cells(new_df, idx.centroids, vec_col)
     _write_cells(new_cells, path, "append")

@@ -50,8 +50,8 @@ from nebuia_vector_db_spark.functions.vector import (
 from nebuia_vector_db_spark.operators.ann import (
     _cell_queries,
     _load_matrix,
-    _matrix_file,
     _save_matrix,
+    _SavedCells,
     _write_cells,
     assign_to_cells,
 )
@@ -60,6 +60,7 @@ from nebuia_vector_db_spark.operators.topk import (
     _query_matrix,
     topk_per_group,
 )
+from nebuia_vector_db_spark.sources.snapshot import local_path
 
 
 def _kmeans_np(
@@ -679,23 +680,22 @@ def save_pq_index(index: PQIndex, path: str) -> None:
     job); a stale optional file from an earlier save at ``path`` is
     removed. The raw-vector table is NOT copied — at rest the index is
     the 16-32× smaller representation; re-rank reads the original
-    corpus by id."""
-    spark = index.codes.sparkSession
+    corpus by id. ``path`` is local (``snapshot.local_path``)."""
+    path = local_path(path)
     if index.cell_centroids is not None:
         _write_cells(index.codes, path, "overwrite", "codes", index.cell_col)
     else:
         index.codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    _save_matrix(spark, os.path.join(path, "codebooks.npy"), index.codebooks)
+    _save_matrix(os.path.join(path, "codebooks.npy"), index.codebooks)
     for name, mat in (
         ("centroids", index.cell_centroids),
         ("rotation", index.rotation),
     ):
         file = os.path.join(path, f"{name}.npy")
         if mat is not None:
-            _save_matrix(spark, file, mat)
-        else:
-            fs, jpath = _matrix_file(spark, file)
-            fs.delete(jpath, False)
+            _save_matrix(file, mat)
+        elif os.path.exists(file):
+            os.remove(file)
 
 
 def append_to_pq_index(
@@ -719,6 +719,7 @@ def append_to_pq_index(
     degrades. Never retrain in place: old codes are meaningless under
     new codebooks.
     """
+    path = local_path(path)
     idx = load_pq_index(spark, path, vec_col, id_col, cell_col)
     src = new_df
     if idx.cell_centroids is not None and cell_col not in new_df.columns:
@@ -747,18 +748,17 @@ def load_pq_index(
 ) -> PQIndex:
     """Reload: lazy (partition-prunable) codes scan + driver-side
     codebooks, and the cell centroids and rotation when their files
-    exist (flat and plain-PQ indexes have none). A damaged file
-    raises."""
+    exist (flat and plain-PQ indexes have none). The codes scan is
+    ``ann._SavedCells``'s, the IVF index's reader: IVF-PQ codes carry
+    their saved schema, so an index of an empty corpus loads too; plain
+    PQ codes have none and Spark infers it. A damaged file raises."""
+    path = local_path(path)
     return PQIndex(
-        spark.read.parquet(os.path.join(path, "codes")),
-        _load_matrix(spark, os.path.join(path, "codebooks.npy")),
+        _SavedCells(spark, os.path.join(path, "codes"), cell_col).scan(),
+        _load_matrix(os.path.join(path, "codebooks.npy")),
         vec_col,
         id_col,
-        cell_centroids=_load_matrix(
-            spark, os.path.join(path, "centroids.npy"), missing_ok=True
-        ),
+        cell_centroids=_load_matrix(os.path.join(path, "centroids.npy"), missing_ok=True),
         cell_col=cell_col,
-        rotation=_load_matrix(
-            spark, os.path.join(path, "rotation.npy"), missing_ok=True
-        ),
+        rotation=_load_matrix(os.path.join(path, "rotation.npy"), missing_ok=True),
     )

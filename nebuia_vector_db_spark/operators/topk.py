@@ -46,6 +46,7 @@ Spark-first design notes (scale):
 from __future__ import annotations
 
 import functools
+import os
 from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
@@ -61,6 +62,7 @@ from nebuia_vector_db_spark.functions.vector import (
     l2_normalize,
     normalize_query,
 )
+from nebuia_vector_db_spark.sources.snapshot import local_path
 
 
 def topk_search(
@@ -119,11 +121,10 @@ def _driver_corpus(df: DataFrame) -> pa.Table | None:
     but not joins. ``inputFiles()`` lists before physical partition
     pruning, so a partitioned scan counts every partition's files, not
     only the ones it reads (a loaded IVF index's ``search_batch`` sizes
-    its probed cells from its own listing instead). Only local files are
-    sized: an input on another filesystem keeps the Spark route.
-    ``toArrow()`` runs the plan in the JVM: no Python worker starts."""
-    import pyarrow.fs as pafs
-
+    its probed cells from its own listing instead). Only ``file:``
+    inputs are sized (through ``snapshot.local_path``): an input on
+    another filesystem keeps the Spark route. ``toArrow()`` runs the
+    plan in the JVM: no Python worker starts."""
     est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     if int(est) > _DRIVER_MAX_BYTES:
         return None
@@ -131,8 +132,7 @@ def _driver_corpus(df: DataFrame) -> pa.Table | None:
     for uri in df.inputFiles():
         if not uri.startswith("file:"):
             return None
-        fs, path = pafs.FileSystem.from_uri(uri)
-        total += fs.get_file_info(path).size or 0
+        total += os.path.getsize(local_path(uri))
         if total > _DRIVER_MAX_BYTES:
             return None
     return df.toArrow()

@@ -85,6 +85,7 @@ import shutil
 import time
 import uuid
 from collections.abc import Callable
+from urllib.parse import unquote, urlsplit
 
 import numpy as np
 import pyarrow as pa
@@ -132,7 +133,7 @@ class SnapshotTable:
         backend: CommitBackend | None = None,
     ):
         self.spark = spark
-        self.path = os.path.abspath(path)
+        self.path = local_path(path)
         self._snap_dir = os.path.join(self.path, "_snapshots")
         self._data_dir = os.path.join(self.path, "data")
         self.backend = backend or LocalFSCommitBackend(self._snap_dir)
@@ -725,7 +726,7 @@ class SnapshotTable:
             "_hit_file", F.input_file_name()
         )
         hit_paths = {
-            _strip_scheme(r[0])
+            local_path(r[0])
             for r in matching(scan).select("_hit_file").distinct().collect()
         }
         kept, hit = [], []
@@ -1017,12 +1018,21 @@ def _json_safe(v):
     return str(v)
 
 
-def _strip_scheme(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[5:]
-        while p.startswith("//"):
-            p = p[1:]
-    return os.path.abspath(p)
+def local_path(path: str) -> str:
+    """The one rule that turns a warehouse, data-file or index path into
+    an absolute local path. A path with no scheme is taken as it stands,
+    with no decoding. A ``file:`` URI is percent-decoded: Spark's
+    ``input_file_name()`` and ``inputFiles()`` encode the names they
+    return (a space as ``%20``, a ``%`` as ``%25``). Any other scheme
+    (``s3a://``, ``hdfs://``, ...), a ``file:`` URI naming a host or
+    carrying a query raises ``ValueError``: the warehouse and the index
+    files live on local disk."""
+    u = urlsplit(path, allow_fragments=False)
+    if not u.scheme:
+        return os.path.abspath(path)
+    if u.scheme != "file" or u.netloc not in ("", "localhost") or u.query:
+        raise ValueError(f"not a local path or file: URI: {path!r}")
+    return os.path.abspath(unquote(u.path))
 
 
 _COMPARE = {

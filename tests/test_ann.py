@@ -527,6 +527,116 @@ def test_index_of_an_empty_corpus_loads(spark, sf_oracle, tmp_path, on_route):
     assert single.schema == full.search(sample[0].tolist(), 5, nprobe=2).schema
 
 
+def test_ivf_pq_index_of_an_empty_corpus_loads(spark, tmp_path, on_route):
+    """An IVF-PQ index saved from a corpus with no rows loads (the codes
+    scan reads ``codes/_schema.json`` instead of inferring a schema from
+    no files), and its batch search returns 0 rows."""
+    import pyarrow as pa
+
+    from nebuia_vector_db_spark.operators.pq import (
+        encode_pq,
+        load_pq_index,
+        pq_search_batch,
+        save_pq_index,
+    )
+
+    schema = "vec_id long, ivf_cell int, embedding array<double>"
+    empty = spark.createDataFrame(
+        pa.table({
+            "vec_id": pa.array([], pa.int64()),
+            "ivf_cell": pa.array([], pa.int32()),
+            "embedding": pa.array([], pa.list_(pa.float64())),
+        }),
+        schema,
+    )
+    cents = np.eye(4)
+    books = np.array([[[0.0, 0.0], [0.0, 1.0]], [[0.0, 0.0], [1.0, 0.0]]])  # (m, k, dsub)
+    save_pq_index(encode_pq(empty, books, cell_centroids=cents), str(tmp_path / "pq"))
+    loaded = load_pq_index(spark, str(tmp_path / "pq"))
+    assert np.array_equal(loaded.cell_centroids, cents)
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0])], "query_id long, query_vec array<double>"
+    )
+    assert pq_search_batch(loaded, empty, queries, 2, nprobe=2).collect() == []
+
+
+def test_load_ivf_index_makes_no_py4j_call(spark, sf_oracle, tmp_path, monkeypatch):
+    """Loading a saved index reads its schema file, centroid matrix and
+    cell listing as plain local files: no py4j round trip."""
+    from py4j.clientserver import ClientServerConnection
+
+    from nebuia_vector_db_spark.operators.ann import load_ivf_index, save_ivf_index
+
+    index = build_ivf_index(_emb(spark, sf_oracle), n_cells=8)
+    save_ivf_index(index, str(tmp_path / "ivf"))
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def spy(self, command, *a, **kw):
+        calls.append(command)
+        return send(self, command, *a, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", spy)
+    loaded = load_ivf_index(spark, str(tmp_path / "ivf"))
+    monkeypatch.undo()
+    assert calls == []
+    assert np.array_equal(loaded.centroids, index.centroids)
+    assert sorted(loaded.saved.files) == list(range(8))
+
+
+@pytest.mark.parametrize("uri", ["hdfs://nn/ivf", "s3a://b/ivf"])
+def test_index_files_reject_a_non_local_path(spark, tmp_path, monkeypatch, uri):
+    """Saving or loading an IVF or IVF-PQ index on a path that is not
+    local raises ``ValueError`` before anything is written or read."""
+    from nebuia_vector_db_spark.operators.ann import load_ivf_index, save_ivf_index
+    from nebuia_vector_db_spark.operators.pq import encode_pq, load_pq_index, save_pq_index
+
+    monkeypatch.chdir(tmp_path)
+    cents = np.eye(2)
+    corpus = spark.createDataFrame(
+        [(i, i % 2, [float(i % 2 == 0), float(i % 2)]) for i in range(4)],
+        "vec_id long, ivf_cell int, embedding array<double>",
+    )
+    books = np.array([[[0.0], [1.0]], [[0.0], [1.0]]])  # (m, k, dsub)
+    calls = [
+        lambda: save_ivf_index(IVFIndex(corpus, cents, "embedding"), uri),
+        lambda: load_ivf_index(spark, uri),
+        lambda: save_pq_index(encode_pq(corpus, books, cell_centroids=cents), uri),
+        lambda: load_pq_index(spark, uri),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="local path"):
+            call()
+    assert os.listdir(tmp_path) == []
+
+
+def test_file_uri_index_round_trips(spark, sf_oracle, tmp_path, on_route):
+    """An index saved to a percent-encoded ``file://`` URI lands in the
+    directory it names, and loads and searches from that URI as from
+    the plain path."""
+    from nebuia_vector_db_spark.operators.ann import load_ivf_index, save_ivf_index
+
+    emb = _emb(spark, sf_oracle)
+    index = build_ivf_index(emb, n_cells=8)
+    target = tmp_path / "my index"
+    save_ivf_index(index, target.as_uri())
+    assert sorted(os.listdir(target)) == ["cells", "centroids.npy"]
+    loaded = load_ivf_index(spark, target.as_uri())
+    assert np.array_equal(loaded.centroids, index.centroids)
+    queries = emb.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("query_vec"),
+    )
+
+    def rows(idx):
+        out = idx.search_batch(queries, 5, nprobe=2, tie_cols=["vec_id"])
+        return sorted((r.query_id, r.vec_id, r.similarity) for r in out.collect())
+
+    got = rows(loaded)
+    assert len(got) == 4 * 5 and got == rows(load_ivf_index(spark, str(target)))
+    assert got == rows(index)
+
+
 # centroid similarities [1, 0, 0, 0.6] for the query [1, 0]: cells 1
 # and 2 tie at the third place
 _TIE_CENTROIDS = np.array([[1.0, 0.0], [0.0, 1.0], [0.0, -1.0], [0.6, 0.8]])

@@ -598,6 +598,75 @@ def test_delete_decided_by_stats_makes_no_py4j_call(spark, tmp_path, monkeypatch
     assert calls == []
     assert eng.list_collections() == ["b"]
 
+
+def test_copy_on_write_delete_in_a_percent_encoded_directory(spark, tmp_path, monkeypatch):
+    """In a warehouse whose directory name holds a space, a literal
+    ``%20`` and a non-ASCII character, a copy-on-write delete still
+    finds its rows: Spark's ``input_file_name()`` encodes the name
+    (``sp%20ace%2520é``), and the one path rule decodes it before the
+    manifest paths are matched. Both a ``delete_collection`` on a file
+    that holds two collections and a ``delete_where`` with a Column."""
+    from nebuia_vector_db_spark.schemas import DOCUMENT_SCHEMA
+    from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
+
+    root = tmp_path / "sp ace%20é"
+    monkeypatch.setattr(topk_module, "_DRIVER_MAX_BYTES", 0)
+    eng = VectorEngine(spark, str(root / "wh"), dim=4)
+    chunk = ("c", [1.0, 0.0, 0.0, 0.0], (None, "n"), 0.0)
+    eng.store_dataframe(
+        spark.createDataFrame(
+            [(c, f"d{i}", "t", (None, f"d{i}"), [chunk]) for i, c in enumerate("aba")],
+            DOCUMENT_SCHEMA,
+        ).coalesce(1)
+    )
+    assert len(eng.table._snapshot(eng.table.current_version())["files"]) == 1
+    assert eng.delete_collection("a")["deleted"] is True
+    assert eng.list_collections() == ["b"]
+
+    table = SnapshotTable.create(
+        spark, str(root / "t"), spark.range(4).selectExpr("id AS k").coalesce(1)
+    )
+    head = table.current_version()
+    assert table.delete_where(F.col("k") == 2) == head + 1
+    assert sorted(r.k for r in table.read().collect()) == [0, 1, 3]
+
+
+def test_file_uri_warehouse_is_written_where_it_names(spark, tmp_path, monkeypatch):
+    """A ``file://`` warehouse (percent-encoded, as ``Path.as_uri``
+    writes it) is the directory it names: store, a driver-route search,
+    a ``where=`` search (the Spark route) and a delete all work there,
+    and nothing is written under the working directory."""
+    monkeypatch.chdir(tmp_path)
+    target = tmp_path / "uri wh"
+    uri = target.as_uri()
+    assert uri.startswith("file:///") and "%20" in uri
+    eng = VectorEngine(spark, uri, dim=4)
+    assert eng.table.path == str(target)
+    docs = _mkdocs(3, 2, 4, seed=131)
+    q = docs[0]["chunks"][0]["embedding"]
+    eng.store("a", docs)
+    eng.store("b", _mkdocs(1, 1, 4, seed=132))
+    driver = eng.search("a", q, 3)
+    assert _route(driver) == "driver" and driver.collect()[0].similarity > 0.99
+    assert len(eng.search("a", q, 3, where="position = 1").collect()) == 3
+    assert eng.delete_collection("a")["deleted"] is True
+    assert eng.list_collections() == ["b"]
+    assert VectorEngine(spark, str(target), dim=4).list_collections() == ["b"]
+    assert sorted(os.listdir(target)) == ["_snapshots", "data"]
+    assert sorted(os.listdir(tmp_path)) == ["uri wh"]
+
+
+@pytest.mark.parametrize("uri", ["s3a://bucket/wh", "hdfs://nn/wh", "file://host/wh"])
+def test_non_local_warehouse_is_rejected(spark, tmp_path, monkeypatch, uri):
+    """A warehouse that is not on local disk raises ``ValueError``
+    before any file exists, instead of a silent local copy under the
+    working directory."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local path"):
+        VectorEngine(spark, uri, dim=4)
+    assert os.listdir(tmp_path) == []
+
+
 def test_requests_build_no_python_list_relation(spark, tmp_path, monkeypatch):
     """``store``, ``search`` (a hit, a miss, an emptied collection) and
     ``delete_collection`` never hand ``createDataFrame`` a Python list:
