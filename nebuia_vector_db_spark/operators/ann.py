@@ -20,8 +20,9 @@ index as a *batch* job and keep serving batch-style too:
   URI (``snapshot.local_path``, the warehouse's rule); any other scheme
   raises ``ValueError``. Within the one driver bound
   (``topk._DRIVER_MAX_BYTES``) the driver writes the cells with pyarrow
-  after one JVM collect; otherwise Spark writes them. Either way the
-  layout is the same.
+  after one JVM collect, or none when ``assign_to_cells`` built the
+  corpus on the driver (``topk._driver_corpus`` keeps its table);
+  otherwise Spark writes them. Either way the layout is the same.
 - **Load** (``load_ivf_index``): no Spark job. The cell directories are
   listed once on the driver (cell → files and bytes, the per-partition
   metadata a coordinator keeps so a query opens only the partitions it
@@ -267,8 +268,10 @@ class IVFIndex:
           most ``topk._DRIVER_MAX_BYTES``, the driver reads exactly
           those files with pyarrow (no Spark job) and cuts them whole;
           on an index in memory, within the driver bound
-          (``topk._driver_corpus``), the JVM collects the candidate
-          rows and the driver cuts them. Either way the result is a
+          (``topk._driver_corpus``), the driver cuts the whole assigned
+          corpus, which the JVM collects once and which is then kept
+          (``assign_to_cells`` registers the table it built, so its
+          index collects nothing). Either way the result is a
           local relation (no Python worker, no window). Otherwise each
           Arrow batch is cut on the workers and the same bounded
           row_number window as ``knn_join`` applies the global cut
@@ -286,7 +289,16 @@ class IVFIndex:
             [vec_col, "ivf_cell"], sim_col, query_id_col, tie_cols, cell_queries,
         )
         saved = self.saved
-        if saved is not None:
+        if saved is None:
+            # the whole corpus, collected once and kept; the scorer
+            # skips the cells no query probed
+            assigned = self.assigned
+            table = _driver_corpus(assigned) if len(qids) else None
+            if table is not None:
+                return _driver_topk(
+                    assigned.sparkSession, table, assigned.schema, qids, k, *cut
+                )
+        else:
             probed = sum(b for c in cell_queries for _, b in saved.files.get(c, []))
             if probed <= topk._DRIVER_MAX_BYTES:
                 return _driver_topk(
@@ -357,8 +369,9 @@ def _write_cells(
     IVF corpus (``cells/``) and the IVF-PQ codes (``codes/``) are both
     written this way.
 
-    Within the driver bound (``topk._driver_corpus``) the JVM collects
-    ``df`` and the driver writes each cell with pyarrow:
+    Within the driver bound (``topk._driver_corpus``: the JVM collects
+    ``df``, or its kept table is reused) the driver writes each cell
+    with pyarrow:
     ``"overwrite"`` replaces ``subdir``, ``"append"`` adds a uniquely
     named file to each cell. Otherwise rows are shuffled by the cell so
     each cell lands in one Spark writer task."""
@@ -442,10 +455,12 @@ def assign_to_cells(
     existing index.
 
     Within the driver bound (``topk._driver_corpus``) the JVM collects
-    ``df``, the driver assigns it, and the result is a local relation,
-    so neither this nor a ``save_ivf_index`` of it starts a Python
-    worker. Above it the centroid matrix is broadcast and each Arrow
-    batch is assigned on the workers (map-side only)."""
+    ``df`` (or the driver reuses the table it kept for ``df``), the
+    driver assigns it, and the result is a local relation registered
+    with the table it was built from, so a ``save_ivf_index`` or an
+    in-memory ``search_batch`` of it collects nothing and neither
+    starts a Python worker. Above it the centroid matrix is broadcast
+    and each Arrow batch is assigned on the workers (map-side only)."""
     cents = np.ascontiguousarray(centroids, dtype=np.float64)
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField("ivf_cell", T.IntegerType())]
@@ -453,10 +468,10 @@ def assign_to_cells(
     table = _driver_corpus(df)
     if table is not None:
         cells = _nearest_cells(arrow_list_to_matrix(table.column(vec_col)), cents)
-        return df.sparkSession.createDataFrame(
-            table.append_column("ivf_cell", pa.array(cells, pa.int32())),
-            schema=out_schema,
-        )
+        table = table.append_column("ivf_cell", pa.array(cells, pa.int32()))
+        out = df.sparkSession.createDataFrame(table, schema=out_schema)
+        topk._keep(out, (), table)  # a local relation: no input file
+        return out
     bc = df.sparkSession.sparkContext.broadcast(cents)
 
     def _assign(batches):

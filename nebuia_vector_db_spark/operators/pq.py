@@ -37,7 +37,7 @@ of subspace dots against reconstructed codewords.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -125,7 +125,7 @@ class PQIndex:
 
     def __init__(
         self,
-        codes: DataFrame,
+        codes: DataFrame | None,
         codebooks: np.ndarray,  # (m, k, dsub) float64
         vec_col: str,
         id_col: str,
@@ -133,8 +133,11 @@ class PQIndex:
         cell_col: str = "ivf_cell",
         rotation: np.ndarray | None = None,  # (d, d) orthogonal (OPQ)
         encode_src: DataFrame | None = None,
+        load_codes: Callable[[], DataFrame] | None = None,
     ):
-        self.codes = codes
+        self._codes = codes
+        # a loaded index builds its codes scan on first use
+        self._load_codes = load_codes
         self.codebooks = codebooks
         self.vec_col = vec_col
         self.id_col = id_col
@@ -145,6 +148,17 @@ class PQIndex:
         # encode_pq in THIS plan (vs loaded/stored codes) — lets
         # search() fuse encode + ADC into ONE Arrow crossing (r16)
         self._encode_src = encode_src
+
+    @property
+    def codes(self) -> DataFrame:
+        """The encoded corpus; on a loaded index the codes scan."""
+        if self._codes is None:
+            self._codes = self._load_codes()
+        return self._codes
+
+    @codes.setter
+    def codes(self, df: DataFrame) -> None:
+        self._codes = df
 
     @property
     def m(self) -> int:
@@ -746,19 +760,23 @@ def load_pq_index(
     id_col: str = "vec_id",
     cell_col: str = "ivf_cell",
 ) -> PQIndex:
-    """Reload: lazy (partition-prunable) codes scan + driver-side
-    codebooks, and the cell centroids and rotation when their files
-    exist (flat and plain-PQ indexes have none). The codes scan is
-    ``ann._SavedCells``'s, the IVF index's reader: IVF-PQ codes carry
-    their saved schema, so an index of an empty corpus loads too; plain
-    PQ codes have none and Spark infers it. A damaged file raises."""
+    """Reload with no py4j call: driver-side codebooks, and the cell
+    centroids and rotation when their files exist (flat and plain-PQ
+    indexes have none); the (partition-prunable) codes scan is built on
+    first use of ``codes``, as ``load_ivf_index`` defers its cell scan.
+    The codes scan is ``ann._SavedCells``'s, the IVF index's reader:
+    IVF-PQ codes carry their saved schema, so an index of an empty
+    corpus loads too; plain PQ codes have none and Spark infers it. A
+    damaged file raises."""
     path = local_path(path)
+    codes = os.path.join(path, "codes")
     return PQIndex(
-        _SavedCells(spark, os.path.join(path, "codes"), cell_col).scan(),
+        None,
         _load_matrix(os.path.join(path, "codebooks.npy")),
         vec_col,
         id_col,
         cell_centroids=_load_matrix(os.path.join(path, "centroids.npy"), missing_ok=True),
         cell_col=cell_col,
         rotation=_load_matrix(os.path.join(path, "rotation.npy"), missing_ok=True),
+        load_codes=lambda: _SavedCells(spark, codes, cell_col).scan(),
     )

@@ -41,12 +41,26 @@ Spark-first design notes (scale):
   ``row_number`` window. A loaded IVF index hands
   :func:`_driver_topk` the probed cells' files, read by the driver, with
   no corpus collect.
+- A corpus is collected once while its inputs are unchanged:
+  :func:`_driver_corpus` keeps the table it collected for the DataFrame
+  it came from (a weak reference, so dropping the DataFrame frees it),
+  with the ``(path, size, mtime_ns)`` of each of its input files, and
+  returns it again while those match. Only plans that are deterministic
+  and read nothing but files and local relations are kept; the kept
+  tables together stay within ``_DRIVER_MAX_BYTES`` (least recently
+  used first out). So a session's second ``knn_join`` over one corpus
+  runs one Spark job, the query collect, and ``assign_to_cells``
+  registers the table it built, so ``save_ivf_index`` of it collects
+  nothing.
 """
 
 from __future__ import annotations
 
 import functools
 import os
+import threading
+import weakref
+from collections import OrderedDict
 from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
@@ -109,6 +123,15 @@ def _query_matrix(
 _DRIVER_MAX_BYTES = 64 << 20
 
 
+# The corpora _driver_corpus collected, least recently used first:
+# id(df) -> (weak reference to df, its input files' signature, table).
+# A DataFrame's death pops its entry (the reference's callback, which
+# takes no lock: it may run inside a locked region, at any allocation);
+# everything else changes it under the lock.
+_kept: OrderedDict[int, tuple[weakref.ref, tuple, pa.Table]] = OrderedDict()
+_kept_lock = threading.Lock()
+
+
 def _driver_corpus(df: DataFrame) -> pa.Table | None:
     """``df`` as an Arrow table collected by the JVM, or ``None`` when
     it may exceed ``_DRIVER_MAX_BYTES``.
@@ -124,18 +147,75 @@ def _driver_corpus(df: DataFrame) -> pa.Table | None:
     its probed cells from its own listing instead). Only ``file:``
     inputs are sized (through ``snapshot.local_path``): an input on
     another filesystem keeps the Spark route. ``toArrow()`` runs the
-    plan in the JVM: no Python worker starts."""
-    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if int(est) > _DRIVER_MAX_BYTES:
+    plan in the JVM: no Python worker starts.
+
+    The table is kept for ``df`` (:func:`_keep`) when ``df``'s plan
+    allows (:func:`_reusable`), keyed by ``df`` itself and the
+    ``(path, size, mtime_ns)`` of each input file, which the sizing
+    above stats anyway. While ``df`` lives and those files are
+    unchanged, a later call returns the kept table and runs no Spark
+    job: the rows ``df.cache()`` would give. The bound checks run
+    first, so a bound lowered since never returns a kept table."""
+    qe = df._jdf.queryExecution()
+    if int(qe.optimizedPlan().stats().sizeInBytes()) > _DRIVER_MAX_BYTES:
         return None
-    total = 0
+    total, files = 0, []
     for uri in df.inputFiles():
         if not uri.startswith("file:"):
             return None
-        total += os.path.getsize(local_path(uri))
+        path = local_path(uri)
+        st = os.stat(path)
+        total += st.st_size
         if total > _DRIVER_MAX_BYTES:
             return None
-    return df.toArrow()
+        files.append((path, st.st_size, st.st_mtime_ns))
+    files = tuple(files)
+    with _kept_lock:
+        entry = _kept.get(id(df))
+        if entry is not None and entry[0]() is df and entry[1] == files:
+            _kept.move_to_end(id(df))
+            return entry[2]
+    table = df.toArrow()
+    if _reusable(qe.analyzed()):
+        _keep(df, files, table)
+    return table
+
+
+def _reusable(plan) -> bool:
+    """Whether a collect of the analyzed ``plan`` may be kept: it is
+    deterministic (no ``uuid()``, ``rand()``, ...), not streaming, and
+    every leaf is a file relation (``LogicalRelation`` over a
+    ``HadoopFsRelation``, which input-file signatures cover) or a
+    ``LocalRelation``. RDD scans, Python and V2 data sources are
+    collected every time."""
+    if not plan.deterministic() or plan.isStreaming():
+        return False
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRelation":
+            kind = leaf.relation().getClass().getSimpleName()
+        if kind not in ("HadoopFsRelation", "LocalRelation"):
+            return False
+    return True
+
+
+def _keep(df: DataFrame, files: tuple, table: pa.Table) -> None:
+    """Keep ``table`` as ``df``'s collect while ``df`` lives and its
+    input files match ``files`` (:func:`_driver_corpus`), evicting the
+    least recently used tables until all of them hold at most
+    ``_DRIVER_MAX_BYTES``; a table larger than that is not kept."""
+    if table.nbytes > _DRIVER_MAX_BYTES:
+        return
+    key = id(df)
+    ref = weakref.ref(df, lambda _, key=key: _kept.pop(key, None))
+    with _kept_lock:
+        _kept[key] = (ref, files, table)
+        _kept.move_to_end(key)
+        kept = sum(e[2].nbytes for e in list(_kept.values()))
+        while kept > _DRIVER_MAX_BYTES and _kept:
+            kept -= _kept.popitem(last=False)[1][2].nbytes
 
 
 def _cut_schema(

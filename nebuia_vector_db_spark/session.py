@@ -7,6 +7,10 @@ environment for local testing:
 - Arrow on (vectorized Python interop for the pandas_udf fast paths).
 - ``spark.sql.shuffle.partitions`` small locally; on a real cluster
   AQE's coalescing makes the initial number mostly a ceiling.
+- ``MALLOC_ARENA_MAX=2`` in the environment the JVM (and its Python
+  workers) start with, unless the caller set it: glibc otherwise gives
+  each thread that mallocs its own arena, and the JVM's native memory
+  (its Arrow collects among it) grows in arenas it never returns.
 """
 
 from __future__ import annotations
@@ -38,6 +42,8 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + (os.pathsep + pypath if pypath else "")
         )
+    # few glibc malloc arenas in the JVM about to launch (module docstring)
+    os.environ.setdefault("MALLOC_ARENA_MAX", "2")
     builder = (
         SparkSession.builder.appName(app_name)
         .config(

@@ -468,13 +468,24 @@ def test_save_routes_write_the_same_cells(spark, sf_oracle, tmp_path, monkeypatc
     """Within the driver bound save_ivf_index writes the cells with
     pyarrow (no Spark write) in Spark's ``partitionBy`` layout, with
     the same rows per cell as the Spark route, and load_ivf_index runs
-    no Spark job on either index."""
+    no Spark job on either index. An index whose cells
+    ``assign_to_cells`` built on the driver saves with no Spark job at
+    all (the driver kept the table it built) and writes the same
+    cells."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from nebuia_vector_db_spark.operators import topk
-    from nebuia_vector_db_spark.operators.ann import load_ivf_index, save_ivf_index
+    from nebuia_vector_db_spark.operators.ann import (
+        assign_to_cells,
+        load_ivf_index,
+        save_ivf_index,
+    )
 
-    index = build_ivf_index(_emb(spark, sf_oracle), n_cells=8)
+    emb = _emb(spark, sf_oracle)
+    index = build_ivf_index(emb, n_cells=8)
+    assigned = IVFIndex(assign_to_cells(emb, index.centroids), index.centroids, "embedding")
+    _, jobs, _ = spark_jobs(lambda: save_ivf_index(assigned, str(tmp_path / "assigned")))
+    assert jobs == 0
     writes = []
     parquet = DataFrameWriter.parquet
     monkeypatch.setattr(
@@ -490,6 +501,7 @@ def test_save_routes_write_the_same_cells(spark, sf_oracle, tmp_path, monkeypatc
     driver = _cell_rows(spark, str(tmp_path / "driver"))
     sparked = _cell_rows(spark, str(tmp_path / "spark"))
     assert len(driver) == 8 and driver == sparked
+    assert _cell_rows(spark, str(tmp_path / "assigned")) == driver
     for route in ("driver", "spark"):
         path = str(tmp_path / route)
         loaded, jobs, _ = spark_jobs(lambda: load_ivf_index(spark, path))

@@ -8,6 +8,7 @@ and again, in ``TestSparkRoute``, on the Spark (``mapInArrow``) one."""
 from __future__ import annotations
 
 import inspect
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -384,6 +385,133 @@ def test_cross_join_inflated_corpus_keeps_mapinarrow(spark, sf_oracle):
     assert topk._driver_corpus(inflated) is None
     out = knn_join(_queries(emb, [0]), inflated, k=3, tie_cols=["vec_id", "vec_id2"], method="arrow")
     assert "MapInArrow" in explain_str(out)
+
+
+def _parquet_corpus(spark, root, n=64, d=4, files=2):
+    """``n`` rows of (vec_id, embedding) in ``files`` parquet files
+    under ``root``, read back by Spark as one file scan."""
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(7)
+    os.makedirs(root)
+    for f in range(files):
+        ids = np.arange(f, n, files)
+        pq.write_table(
+            pa.table({"vec_id": ids, "embedding": rng.normal(size=(len(ids), d)).tolist()}),
+            os.path.join(root, f"part-{f}.parquet"),
+        )
+    return spark.read.parquet(root)
+
+
+def _list_queries(spark, vecs):
+    """A Python-list query DataFrame: its collect is one Spark job."""
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "query_id long, query_vec array<double>",
+    )
+
+
+def test_second_knn_join_reuses_the_kept_corpus(spark, tmp_path, spark_jobs):
+    """The corpus of knn_join(method='arrow') is collected once while
+    its input files are unchanged: a second call over the same
+    DataFrame runs one Spark job (the query collect) and returns the
+    same rows; a new mtime on one input file forces a fresh collect."""
+    corpus = _parquet_corpus(spark, str(tmp_path / "c"))
+    queries = _list_queries(spark, [[1.0, 0, 0, 0], [0, 0.5, 0.5, 0]])
+
+    def run():
+        return knn_join(queries, corpus, k=5, tie_cols=["vec_id"], method="arrow").collect()
+
+    first, jobs, _ = spark_jobs(run)
+    assert jobs == 2 and len(first) == 10
+    again, jobs, _ = spark_jobs(run)
+    assert (again, jobs) == (first, 1)
+    part = str(tmp_path / "c" / "part-0.parquet")
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    fresh, jobs, _ = spark_jobs(run)
+    assert (fresh, jobs) == (first, 2)
+    assert spark_jobs(run)[1] == 1
+
+
+def test_rdd_and_nondeterministic_corpora_are_collected_every_time(spark, spark_jobs):
+    """A corpus read from an RDD, or one whose plan is not
+    deterministic, is never kept: each call collects it again."""
+    key = "spark.sql.defaultSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 20))  # lets the driver bound size an RDD
+    try:
+        rdd = spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(8)], "vec_id long, embedding array<double>"
+        )
+        assert spark_jobs(lambda: topk._driver_corpus(rdd))[1] == 1
+        assert spark_jobs(lambda: topk._driver_corpus(rdd))[1] == 1
+    finally:
+        spark.conf.set(key, old)
+    assert id(rdd) not in topk._kept
+    local = spark.createDataFrame(pa.table({"vec_id": [1, 2]}))
+    for expr in ("uuid()", "rand()"):
+        minted = local.withColumn("u", F.expr(expr))
+        assert spark_jobs(lambda: topk._driver_corpus(minted).num_rows)[0] == 2
+        assert id(minted) not in topk._kept
+    topk._driver_corpus(local)
+    assert id(local) in topk._kept
+
+
+def test_kept_tables_stay_within_the_driver_bound(spark, monkeypatch):
+    """The kept tables together never hold more than the driver bound:
+    the least recently used go first. Dropping a DataFrame frees its
+    entry."""
+    import gc
+
+    tables = [pa.table({"vec_id": np.arange(500) + 500 * i, "x": np.ones(500)}) for i in range(4)]
+    one = tables[0].nbytes
+    monkeypatch.setattr(topk, "_DRIVER_MAX_BYTES", int(2.5 * one))
+    dfs = [spark.createDataFrame(t) for t in tables]
+
+    def kept_bytes():
+        return sum(e[2].nbytes for e in topk._kept.values())
+
+    for df in dfs:
+        assert topk._driver_corpus(df).equals(df.toArrow())
+        assert kept_bytes() <= topk._DRIVER_MAX_BYTES
+    assert [id(df) in topk._kept for df in dfs] == [False, False, True, True]
+    topk._driver_corpus(dfs[2])  # now the most recently used
+    topk._driver_corpus(dfs[0])
+    assert [id(df) in topk._kept for df in dfs] == [True, False, True, False]
+    key = id(dfs[0])
+    del df, dfs[0]
+    gc.collect()
+    assert key not in topk._kept and kept_bytes() <= one
+
+
+def test_threads_share_one_kept_corpus(spark, tmp_path):
+    """Eight threads (more than the cores) running
+    knn_join(method='arrow') on one corpus DataFrame, fresh or kept,
+    with fast thread switches, get the same answer as the SQL kernel,
+    and the kept tables stay within the driver bound."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    corpus = _parquet_corpus(spark, str(tmp_path / "c"), n=200, d=8, files=3)
+    queries = _list_queries(spark, np.eye(8)[:3])
+
+    def run(method):
+        return _ranked(knn_join(queries, corpus, k=7, tie_cols=["vec_id"], method=method))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:  # the first eight race to collect
+            answers = list(pool.map(run, ["arrow"] * 16, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(answers) == 16 and all(got == answers[0] for got in answers)
+    assert sum(e[2].nbytes for e in topk._kept.values()) <= topk._DRIVER_MAX_BYTES
+    assert id(corpus) in topk._kept
+    want = run("sql")
+    assert len(want) == 21
+    _assert_same_ranking(answers[0], want)
 
 
 class TestSparkRoute:

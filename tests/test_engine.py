@@ -471,6 +471,26 @@ def test_driver_store_reads_back_like_store_dataframe(spark, tmp_path):
     assert len(set(ids)) == 3 and all(len(i) == 36 for i in ids)
 
 
+def test_bulk_load_without_doc_ids_mints_new_ids_each_time(spark, tmp_path):
+    """``store_dataframe`` of one DataFrame without ``doc_id``, run
+    twice on the driver route, mints distinct ids: the ``uuid()`` plan
+    is collected every time, never kept (``topk._driver_corpus``)."""
+    import pyarrow as pa
+
+    from nebuia_vector_db_spark.engine import _DOCUMENT_ARROW
+
+    docs = [
+        {"collection": "a", "doc_id": None, "text": f"d{i}", "metadata": None, "chunks": []}
+        for i in range(3)
+    ]
+    bulk = spark.createDataFrame(pa.Table.from_pylist(docs, schema=_DOCUMENT_ARROW)).drop("doc_id")
+    eng = VectorEngine(spark, str(tmp_path / "wh"), dim=2)
+    eng.store_dataframe(bulk)
+    eng.store_dataframe(bulk)
+    ids = [r.doc_id for r in eng.documents().collect()]
+    assert len(ids) == 6 == len(set(ids))
+
+
 def test_bulk_load_within_the_bound_writes_one_file_per_collection(
     spark, tmp_path, monkeypatch, spark_jobs
 ):

@@ -289,8 +289,6 @@ def test_search_rejects_tie_columns_outside_the_codes(pq_index):
 def test_load_pq_index_raises_on_damaged_centroid_file(spark, sf_oracle, tmp_path, on_route):
     """A damaged saved matrix is an error, never a silent fall back to
     a flat (centroid-less) index."""
-    from py4j.protocol import Py4JJavaError
-
     from nebuia_vector_db_spark.operators.ann import build_ivf_index
     from nebuia_vector_db_spark.operators.pq import load_pq_index, save_pq_index
 
@@ -306,9 +304,38 @@ def test_load_pq_index_raises_on_damaged_centroid_file(spark, sf_oracle, tmp_pat
 
     cents = path / "centroids.npy"
     cents.write_bytes(cents.read_bytes()[: cents.stat().st_size // 2])
-    # the Hadoop checksum catches it first; without a .crc, np.load does
-    with pytest.raises((Py4JJavaError, ValueError)):
+    with pytest.raises(ValueError):  # np.load of a truncated .npy
         load_pq_index(spark, str(path))
+
+
+def test_load_pq_index_makes_no_py4j_call(spark, sf_oracle, tmp_path, monkeypatch):
+    """Loading an IVF-PQ index reads its matrices on the driver and
+    builds the codes scan on first use, so the load itself makes no
+    py4j round trip; the scan then holds the saved codes."""
+    from py4j.clientserver import ClientServerConnection
+
+    from nebuia_vector_db_spark.operators.ann import build_ivf_index
+    from nebuia_vector_db_spark.operators.pq import load_pq_index, save_pq_index
+
+    emb = load_table(spark, sf_oracle, "embeddings")
+    ivf = build_ivf_index(emb, n_cells=4)
+    books = train_pq(ivf.assigned, m=8, k=16, sample=2_000, cell_centroids=ivf.centroids)
+    idx = encode_pq(ivf.assigned, books, cell_centroids=ivf.centroids)
+    save_pq_index(idx, str(tmp_path / "pq"))
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def spy(self, command, *a, **kw):
+        calls.append(command)
+        return send(self, command, *a, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", spy)
+    loaded = load_pq_index(spark, str(tmp_path / "pq"))
+    monkeypatch.undo()
+    assert calls == []
+    assert np.array_equal(loaded.codebooks, books)
+    want = sorted((r["vec_id"], tuple(r["codes"])) for r in idx.codes.collect())
+    assert sorted((r["vec_id"], tuple(r["codes"])) for r in loaded.codes.collect()) == want
 
 
 def test_pq_search_batch_matches_per_query_search(spark, sf_oracle):

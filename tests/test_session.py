@@ -26,3 +26,19 @@ def test_arrow_and_rdd_jobs_share_one_worker_daemon(spark):
         .collect()[0]
     )
     assert arrow_daemon == rdd_daemon
+
+
+def test_jvm_starts_with_few_malloc_arenas(spark, monkeypatch):
+    """get_spark launches the JVM with ``MALLOC_ARENA_MAX`` set (2
+    unless the caller set it), and a value the caller set is kept."""
+    from nebuia_vector_db_spark.session import get_spark
+
+    jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{jvm}/environ", "rb") as fh:
+        env = dict(v.split(b"=", 1) for v in fh.read().split(b"\0") if b"=" in v)
+    assert env[b"MALLOC_ARENA_MAX"] == os.environ["MALLOC_ARENA_MAX"].encode()
+    monkeypatch.setenv("MALLOC_ARENA_MAX", "4")
+    assert get_spark() is spark and os.environ["MALLOC_ARENA_MAX"] == "4"
+    monkeypatch.delenv("MALLOC_ARENA_MAX")
+    get_spark()
+    assert os.environ["MALLOC_ARENA_MAX"] == "2"

@@ -11,16 +11,20 @@ driver, the JVM and each Python worker process, the proportional set
 size (PSS, shared pages split among the processes that map them) and
 the peak resident size (VmHWM), and the Python total.
 
-Then it prints the route each path took: ``driver`` when its corpus
-fits the driver bound (``topk._driver_corpus``: the JVM collects it and
-the driver scores it, or, for the saved index's ``search_batch``, the
+Then it prints the route each path took and the Spark jobs one more
+batch of it runs (the call and the collect of its result). The route
+is ``driver`` when the corpus fits the driver bound
+(``topk._driver_corpus``: the JVM collects it once and the driver keeps
+it and scores it, or, for the saved index's ``search_batch``, the
 driver reads the probed cells' files itself, so no Python worker runs
 the kernel) or ``spark`` (a ``mapInArrow`` kernel on Python workers).
-The Python workers that remain on the driver route only unpickle the
-query rows of the Python-list query DataFrame. Beside the routes it
-prints the Spark jobs, stages and wall time of each set-up step:
-``store`` (``store_dataframe``), ``build``
-(``build_ivf_index_deterministic``), ``save`` and ``load``.
+On the driver route each path runs one job per batch, the query
+collect; its Python workers only unpickle the query rows of the
+Python-list query DataFrame. Beside the routes it prints the Spark
+jobs, stages and wall time of each set-up step: ``store``
+(``store_dataframe``), ``build`` (``build_ivf_index_deterministic``),
+``save`` (0 jobs: ``assign_to_cells`` kept the table it built) and
+``load``.
 
 Last, it prints the GEMM work per batch of each path, in GFLOP
 (2 · rows · d · queries, summed over the products the kernel runs):
@@ -147,22 +151,37 @@ def print_setup(spark, wall: dict[str, float]) -> None:
 
 
 def print_routes(wl) -> None:
+    import time
+
     import workloads
 
     from nebuia_vector_db_spark.operators.topk import knn_join
 
+    spark = wl.ctx.spark
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
     qs = wl.queries(0, 0)
-    qdf = wl.ctx.spark.createDataFrame(
+    qdf = spark.createDataFrame(
         [(i, q.tolist()) for i, q in enumerate(qs)], "query_id long, query_vec array<double>"
     )
-    ties = ["doc_id", "position"]
-    print("route per path")
-    for name, df in (
-        ("knn_join", knn_join(qdf, wl.corpus_df, k=workloads.K, tie_cols=ties, method="arrow")),
-        ("ann_search", wl.index.search_batch(qdf, workloads.K, wl.size["nprobe"], tie_cols=ties)),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        print(f"  {name:<28}{'spark' if 'MapInArrow' in plan else 'driver'}")
+    k, ties = workloads.K, ["doc_id", "position"]
+    paths = {
+        "knn_join": lambda: knn_join(qdf, wl.corpus_df, k=k, tie_cols=ties, method="arrow"),
+        "ann_search": lambda: wl.index.search_batch(qdf, k, wl.size["nprobe"], tie_cols=ties),
+    }
+    plans = {}
+    for name, path in paths.items():
+        sc.setJobGroup(f"route-{name}", name)
+        try:
+            df = path()
+            df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+    time.sleep(1.0)  # let the listener see the last jobs
+    print(f"{'route per path':<30}{'jobs per batch':>14}")
+    for name, plan in plans.items():
+        route = "spark" if "MapInArrow" in plan else "driver"
+        print(f"  {name:<12}{route:<16}{len(tracker.getJobIdsForGroup(f'route-{name}')):>14}")
 
 
 def print_gemm(wl, batches: int) -> None:
